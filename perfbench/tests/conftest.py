@@ -1,0 +1,25 @@
+import os
+import sys
+
+import pytest
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__)))))
+
+
+@pytest.fixture(scope="session")
+def spark():
+    from pyspark.sql import SparkSession
+
+    s = (
+        SparkSession.builder.master("local[2]")
+        .appName("perfbench-tests")
+        .config("spark.sql.shuffle.partitions", "2")
+        .config("spark.sql.adaptive.enabled", "false")
+        .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
+        .getOrCreate()
+    )
+    s.sparkContext.setLogLevel("ERROR")
+    yield s
+    s.stop()
