@@ -97,11 +97,11 @@ def _seg_searcher(spark: SparkSession, sf_dir: str) -> SegmentSearcher:
 
 
 def _engine_wand_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Block-max WAND over the compressed segment index — the full
-    boolean mix: MUST conjunction (BlockMaxConjunctionScorer path) +
-    SHOULD term + SHOULD exact phrase (phrases run INSIDE the pruned
-    traversal since round 3) + MUST_NOT exclusion; A/B-identical to
-    exhaustive scoring (pytest-gated); bit-exact DuckDB oracle."""
+    """BM25 top-k over the compressed segment index (the row keeps its
+    historic name) — the full boolean mix: MUST conjunction + SHOULD
+    term + SHOULD exact phrase + MUST_NOT exclusion, compiled into one
+    tree and evaluated per segment by the compiled-tree leaf;
+    bit-exact DuckDB oracle."""
     s = _seg_searcher(spark, sf_dir)
     q = BooleanQuery.of(must=[TermQuery("spark")],
                         should=[TermQuery("vector"),

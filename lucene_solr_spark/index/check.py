@@ -29,8 +29,8 @@ Two entry points, one per index layout:
   ascending across a term's blocks), a full decode pass re-deriving
   every block's metadata from its encoded buffers, and the
   competitive-impact contract (every posting's (tf, norm) dominated
-  by some stored impact — what makes block-max WAND upper bounds
-  sound, CompetitiveImpactAccumulator.java:31-90).
+  by some stored impact — what makes block-max upper bounds sound,
+  CompetitiveImpactAccumulator.java:31-90).
 """
 from __future__ import annotations
 

@@ -14,8 +14,9 @@ Spark-first rendering of Lucene's Lucene50 postings codec:
   * Per block we keep only the pareto-optimal (freq, norm) *impacts* —
     pairs not dominated by another pair with freq >= and norm-length <=
     (``codecs/CompetitiveImpactAccumulator.java:31-90``) — which upper-
-    bound the block's BM25 contribution for block-max WAND
-    (``search/ImpactsDISI.java:36-90``, ``search/MaxScoreCache.java:61-105``).
+    bound the block's BM25 contribution for block-max skipping
+    (``search/ImpactsDISI.java:36-90``, ``search/MaxScoreCache.java:61-105``;
+    stored and verified by CheckIndex, not yet read at query time).
   * Positions are per-doc delta-encoded then concatenated in doc order
     (``Lucene50PostingsWriter.java:405-431``); ``tfs`` give the split
     points. Norm bytes ride along uncompressed (1 byte/doc — the role

@@ -10,7 +10,7 @@ are two PHYSICAL bindings of the same schema:
     a built index as an Iceberg table via Spark's DataFrameWriterV2
     (`writeTo(...).createOrReplace()`), with `blocks` partitioned by
     `segment` — the same partition pruning the directory layout gives
-    the per-segment WAND leaves, now tracked by Iceberg manifests
+    the per-segment search leaves, now tracked by Iceberg manifests
     instead of directory listings. At 10^12 files this is the point:
     Iceberg manifest pruning replaces O(files) object-store LISTs
     with O(manifests) metadata reads.

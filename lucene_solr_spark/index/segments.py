@@ -3,8 +3,8 @@ per-chunk checkpoints, lineage and metrics tables.
 
 Layout model = Lucene's segment model (index/SegmentInfos.java): a
 *segment* owns a contiguous docID range and holds ALL terms' postings
-for its docs, sorted by (term, docid) — the shape block-max WAND top-k
-needs (each Spark task scores one leaf, SURVEY §3.1). This complements
+for its docs, sorted by (term, docid) — the shape per-segment BM25
+top-k needs (each Spark task scores one leaf, SURVEY §3.1). This complements
 the v1 term-bucketed `postings/` layout (builder.py), which serves
 dictionary-side access (prefix/fuzzy expansion, analytics joins);
 Lucene similarly keeps postings + docvalues as different orderings of

@@ -98,11 +98,10 @@ class ShardedSearcher:
                 out[t] = out.get(t, 0) + df
         return out
 
-    def search_many(self, queries: dict[str, Query], k: int = 10,
-                    use_wand: bool = True) -> dict[str, list[TopDoc]]:
+    def search_many(self, queries: dict[str, Query], k: int = 10
+                    ) -> dict[str, list[TopDoc]]:
         """Batched scatter-gather: ONE batched job per shard (the
-        shard-side tree-batch leaf amortizes decodes across the whole
-        batch), exact-stats mode resolves the batch's full term set in
+        shard-side leaf amortizes decodes across the whole batch), exact-stats mode resolves the batch's full term set in
         one global round, merge per query with the TopDocs.merge
         comparator."""
         stats = None
@@ -121,8 +120,7 @@ class ShardedSearcher:
             # override (like search_df's) — never by mutating the
             # shared _df_map, which is both non-reentrant and the
             # multi-term rewrite dictionary
-            res = s.search_many(queries, k, use_wand=use_wand,
-                                stats=stats)
+            res = s.search_many(queries, k, stats=stats)
             per_shard.append(res)
         out: dict[str, list[TopDoc]] = {}
         for qid in qid_list:
@@ -135,13 +133,11 @@ class ShardedSearcher:
                         for score, si, docid in merged]
         return out
 
-    def search(self, q: Query, k: int = 10,
-               use_wand: bool = True) -> list[TopDoc]:
+    def search(self, q: Query, k: int = 10) -> list[TopDoc]:
         stats = self._global_dfs(q) if self.stats_mode == "exact" else None
         per_shard: list[list[TopDoc]] = []
         for s in self.shards:
-            rows = s.search_df(q, k, use_wand=use_wand,
-                               stats=stats).collect()
+            rows = s.search_df(q, k, stats=stats).collect()
             per_shard.append([TopDoc(r["docid"], r["score"]) for r in rows])
         # TopDocs.merge comparator: score desc, shard index asc,
         # local docid asc — then remap to global ids

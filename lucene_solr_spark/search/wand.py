@@ -1,34 +1,35 @@
-"""Block-max WAND top-k over the compressed segment index (codec v2).
+"""BM25 top-k over the compressed segment index (codec v2).
 
-Spark rendering of Lucene's dynamic-pruning read path (SURVEY §4.2):
+One evaluator serves every query shape and every entry point: the
+driver compiles each (rewritten) query into a plain-tuple tree with
+its BM25 weights resolved (``SegmentSearcher._compile_general``), and
+a per-segment leaf evaluates the trees over whole decoded posting
+lists (``_eval_node``) — vectorized, exhaustive within a segment (a
+BulkScorer without dynamic pruning), so results are rank- and
+score-identical to IndexSearcher/OracleIndex by construction.
 
-  * leaves = segments (contiguous docID ranges). The query scans ONLY
-    the block rows of the query's terms (Parquet predicate pushdown on
-    `term` + column pruning keep the scan proportional to the query,
-    not the index), shuffles that small set by segment, and runs one
+Distributed rendering (``search_df`` / ``search_many_df``):
+
+  * leaves = segments (contiguous docID ranges). A query batch scans
+    ONLY the block rows of its terms (Parquet predicate pushdown on
+    `term` + column pruning keep the scan proportional to the batch,
+    not the index), optionally drops Bloom-excluded segment
+    partitions, shuffles that small set by segment, and runs one
     Arrow-batched ``applyInPandas`` per segment = Lucene's per-leaf
-    ``BulkScorer`` (search/IndexSearcher.java:634-656).
-  * inside a leaf, candidate windows advance block-at-a-time; a window
-    is skipped without decoding when the sum of the overlapping blocks'
-    max scores is below the current k-th score — the role of
-    WANDScorer + ImpactsDISI + MaxScoreCache
-    (search/WANDScorer.java:228-299, search/ImpactsDISI.java:36-90,
-    search/MaxScoreCache.java:61-105). Block max scores come from the
-    stored competitive impacts and are computed with the *same* float32
-    arithmetic as scoring, so the bound is exact (tight ≥, never <).
-  * pruning is an optimization, not a semantics change: results are
-    rank- and score-identical to exhaustive evaluation (A/B enforced in
-    tests — the oracle SURVEY §4.2 calls for). The skip test is strict
-    (`ub < θ`); docs scoring exactly θ are still evaluated and then
-    lose the (score desc, docid asc) tie-break (HitQueue.java:76-81)
-    because windows advance in docID order.
-  * per-leaf top-k arrays then one global
-    ``orderBy(score desc, docid asc).limit(k)`` = TopDocs.merge
-    (TopDocs.java:188-230).
+    ``BulkScorer`` (search/IndexSearcher.java:634-656). Inside it
+    every scanned (term, segment) is decoded once in one vectorized
+    pass (``_bulk_fill_all``), then each query's tree is evaluated,
+    deleted docs masked, and cut to per-segment top-k.
+  * merge = TopDocs.merge (TopDocs.java:188-230) by (score desc,
+    docid asc): one ``orderBy.limit(k)`` for a single query, a
+    per-query window for a batch.
+
+Driver-local rendering (``search_local``): the same compiled tree and
+``_eval_node`` over a bytes-capped cache of block rows — no Spark job
+once a query's terms are hot.
 
 Scoring float discipline: per-term float32 scores, per-doc sums
-accumulated in float64 and cast to float32 once (WANDScorer.java:445-453)
-— implemented with ``np.bincount(…, weights=float64)``.
+accumulated in float64 and cast to float32 once (WANDScorer.java:445-453).
 """
 
 from __future__ import annotations
@@ -36,8 +37,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-
-from dataclasses import dataclass
 
 from ..index import codec
 from ..index.segments import FIELD_SEP, SegmentIndex
@@ -76,45 +75,22 @@ def _cache_for(cache, qterm: str):
     return cache
 
 
-@dataclass(frozen=True)
-class _SegPlan:
-    """Flattened term-level boolean plan (SegmentSearcher._flatten)."""
-
-    scoring: list  # [(term, boost)] — MUST + SHOULD clauses
-    must: frozenset  # MUST subset of the scoring terms
-    filters: frozenset  # FILTER terms (match, no score)
-    excludes: frozenset  # MUST_NOT terms
-    need: int  # resolved minimum SHOULD matches
-    #: phrase clauses: (terms, offsets, slop, boost, occur) — exact and
-    #: sloppy phrases run inside the compressed traversal too
-    phrases: tuple = ()
-
-    @property
-    def all_terms(self) -> set:
-        return ({t for t, _ in self.scoring} | set(self.filters)
-                | set(self.excludes)
-                | {t for p in self.phrases for t in p[0]})
-
-
 class _TermBlocks:
-    """Decoded block metadata for one term within one segment.
+    """Block rows of one term within one segment, with memoized
+    whole-list decodes.
 
-    Weight-free: upper bounds and decoded scores are the unit
-    tf-partials (weight 1); a query's float32 weight multiplies in
-    afterwards. Exactness is preserved because float32 multiplication
-    by a positive weight is monotone, so max(w*x) == w*max(x) in
-    float32 — the block bound stays the same value WANDScorer computes
-    — and BM25Scorer.partial's discipline is weight * float32(tf_part)
-    in float32 either way. This makes one decode shareable across a
-    whole query batch (the batched WAND path)."""
+    Weight-free: decoded scores are the unit tf-partials (weight 1); a
+    query's float32 weight multiplies in afterwards, which is
+    BM25Scorer.partial's discipline (weight * float32(tf_part) in
+    float32). This makes one decode shareable across a whole query
+    batch."""
 
     __slots__ = ("first", "last", "n", "dbufs", "tbufs", "nbufs", "pbufs",
-                 "_ub", "_imp_tfs", "_imp_norms", "nblocks", "cache",
-                 "_all", "_raw_all")
+                 "nblocks", "cache", "_all", "_raw_all")
 
     def __init__(self, rows: pd.DataFrame, cache: np.ndarray):
         self.cache = cache
-        self._all = None      # memoized decode_all (batched paths)
+        self._all = None      # memoized decode_all
         self._raw_all = None  # memoized decode_raw_all
         rows = rows.sort_values("block_ord")
         self.first = rows["first_docid"].to_numpy(dtype=np.int64)
@@ -128,14 +104,9 @@ class _TermBlocks:
         self.pbufs = (rows["positions"].tolist()
                       if "positions" in rows.columns else None)
         self.nblocks = len(rows)
-        has_imp = "imp_tfs" in rows.columns
-        self._imp_tfs = rows["imp_tfs"].tolist() if has_imp else None
-        self._imp_norms = rows["imp_norms"].tolist() if has_imp else None
-        self._ub = None  # lazy: only the pruning traversal needs bounds
 
     @classmethod
-    def from_slices(cls, first, last, n, dbufs, tbufs, nbufs, pbufs,
-                    imp_tfs, imp_norms, cache):
+    def from_slices(cls, first, last, n, dbufs, tbufs, nbufs, pbufs, cache):
         """Zero-pandas constructor from pre-sliced per-term arrays
         (_SegGroups) — the per-term ``sort_values`` + column boxing of
         the DataFrame path cost ~0.2 ms per term, which dominated
@@ -152,40 +123,16 @@ class _TermBlocks:
         tb.nbufs = nbufs
         tb.pbufs = pbufs
         tb.nblocks = len(dbufs)
-        tb._imp_tfs = imp_tfs
-        tb._imp_norms = imp_norms
-        tb._ub = None
         return tb
 
-    @property
-    def ub_unit(self) -> np.ndarray:
-        """Per-block max unit scores from the stored competitive
-        impacts — computed LAZILY: the batched exhaustive leaf never
-        prunes, so it never pays the per-block impact decode."""
-        if self._ub is None:
-            ubs = np.empty(self.nblocks, dtype=np.float32)
-            one = np.float32(1.0)
-            for i in range(self.nblocks):
-                # impact buffers carry the standard sequence header byte
-                tfs = codec.decode_seq(self._imp_tfs[i], 0).astype(np.int64)
-                nbs = codec.decode_seq(self._imp_norms[i], 0).astype(np.int64)
-                sc = bm25.score_terms(tfs, nbs, one, self.cache)
-                ubs[i] = sc.max() if sc.size else 0.0
-            self._ub = ubs
-        return self._ub
-
-    def decode(self, i: int, cache: np.ndarray | None = None
-               ) -> tuple[np.ndarray, np.ndarray]:
-        """(docids, per-doc float32 UNIT scores) of block i; scores use
-        the cache the blocks were constructed with (the term's FIELD
-        cache) unless overridden."""
-        if cache is None:
-            cache = self.cache
+    def decode(self, i: int) -> tuple[np.ndarray, np.ndarray]:
+        """(docids, per-doc float32 UNIT scores) of block i, scored with
+        the term's FIELD cache."""
         n = int(self.n[i])
         docids = codec.decode_docids(int(self.first[i]), self.dbufs[i], n)
         tfs = codec.decode_seq(self.tbufs[i], n).astype(np.int64)
         norms = np.frombuffer(self.nbufs[i], dtype=np.uint8).astype(np.int64)
-        scores = bm25.score_terms(tfs, norms, np.float32(1.0), cache)
+        scores = bm25.score_terms(tfs, norms, np.float32(1.0), self.cache)
         return docids, scores
 
     def decode_all(self) -> tuple[np.ndarray, np.ndarray]:
@@ -225,16 +172,6 @@ class _TermBlocks:
             self._raw_all = (np.concatenate(ds), np.concatenate(ts),
                              np.concatenate(ns), ps)
         return self._raw_all
-
-    def decode_raw(self, i: int) -> tuple[np.ndarray, np.ndarray, list]:
-        """(docids, norm bytes, per-doc position arrays) of block i —
-        the phrase-matching view (positions column required)."""
-        n = int(self.n[i])
-        docids = codec.decode_docids(int(self.first[i]), self.dbufs[i], n)
-        tfs = codec.decode_seq(self.tbufs[i], n).astype(np.int64)
-        norms = np.frombuffer(self.nbufs[i], dtype=np.uint8).astype(np.int64)
-        poss = codec.decode_positions(self.pbufs[i], tfs)
-        return docids, norms, poss
 
 
 def _bulk_fill_all(tbs: list["_TermBlocks"]) -> None:
@@ -310,8 +247,8 @@ class _SegGroups:
     per-term pandas groupby/sort_values machinery in the leaves
     (measured: ~0.2 ms/term of frame overhead at ~1 block/term)."""
 
-    __slots__ = ("terms", "first", "last", "n", "dbufs", "tbufs",
-                 "nbufs", "pbufs", "imp_tfs", "imp_norms", "slices")
+    __slots__ = ("first", "last", "n", "dbufs", "tbufs", "nbufs",
+                 "pbufs", "slices")
 
     def __init__(self, pdf: pd.DataFrame):
         pdf = pdf.sort_values(["term", "block_ord"], kind="stable")
@@ -324,12 +261,6 @@ class _SegGroups:
         self.nbufs = pdf["norms"].tolist()
         self.pbufs = (pdf["positions"].tolist()
                       if "positions" in pdf.columns else None)
-        # impact columns ride only when the scan carried them (the
-        # pruning WAND path); the batched exhaustive leaf prunes them
-        # from the scan entirely — block-max bounds are never needed
-        has_imp = "imp_tfs" in pdf.columns
-        self.imp_tfs = pdf["imp_tfs"].tolist() if has_imp else None
-        self.imp_norms = pdf["imp_norms"].tolist() if has_imp else None
         nrows = len(terms)
         if nrows:
             starts = np.flatnonzero(
@@ -349,8 +280,6 @@ class _SegGroups:
             self.first[st:en], self.last[st:en], self.n[st:en],
             self.dbufs[st:en], self.tbufs[st:en], self.nbufs[st:en],
             self.pbufs[st:en] if self.pbufs is not None else None,
-            self.imp_tfs[st:en] if self.imp_tfs is not None else None,
-            self.imp_norms[st:en] if self.imp_norms is not None else None,
             cache)
 
 
@@ -401,422 +330,31 @@ def _phrase_freqs(pos_lists: list[list[np.ndarray]], offs, slop: int) -> np.ndar
     return np.bincount(cand // stride, minlength=nd).astype(np.float64)
 
 
-def segment_topk(
-    seg_blocks,
-    weights: dict[str, float],
-    cache: np.ndarray,
-    k: int,
-    min_should_match: int = 0,
-    use_wand: bool = True,
-    deleted: np.ndarray | None = None,
-    tb_cache: dict | None = None,
-    dec_cache: dict | None = None,
-    must: frozenset[str] | set[str] = frozenset(),
-    filters: frozenset[str] | set[str] = frozenset(),
-    excludes: frozenset[str] | set[str] = frozenset(),
-    phrases=(),
-) -> tuple[np.ndarray, np.ndarray]:
-    """Exact top-k (docids, float32 scores) for a scored boolean over
-    one segment's block rows. Returns arrays sorted by
-    (score desc, docid asc), length ≤ k.
-
-    ``weights`` holds the SCORING clauses (MUST + SHOULD; terms listed
-    in ``must`` are the MUST subset). ``filters`` are non-scoring
-    required terms (FILTER occur), ``excludes`` are MUST_NOT terms.
-    Match semantics mirror IndexSearcher._compile_boolean exactly: a
-    doc matches iff it matches EVERY must term, EVERY filter term, at
-    least ``min_should_match`` SHOULD terms (caller pre-computes the
-    BooleanQuery "SHOULD required only when nothing else is" rule into
-    this value), and NO exclude term; score = float32(Σ float64 of the
-    float32 scoring partials) — FILTER contributes 0.
-
-    Conjunctions run under block-max pruning too, Lucene's
-    BlockMaxConjunctionScorer / Boolean2ScorerSupplier.java:93-164
-    role: a candidate window is skipped without decoding when (a) any
-    must/filter term has no block overlapping it — no doc in the
-    window can satisfy the conjunction — or (b) the sum of the
-    overlapping scoring blocks' max impacts is below the k-th score.
-    Windows advance block-at-a-time in docID order (boundary = min
-    last_docid over required+optional current blocks), so pruning
-    never changes results, only decode work.
-
-    ``phrases`` holds resolved phrase clauses, each
-    (terms, offsets, slop, weight_or_None, occur): exact/sloppy phrases
-    run INSIDE the compressed traversal (Lucene runs phrases under
-    dynamic pruning too — PhraseScorer's ImpactsDISI over the
-    conjunction, search/PhraseScorer.java + ImpactsDISI.java). Each
-    phrase keeps its own cursor per member term; member streams join
-    the window boundary like any other required stream; a window where
-    a MUST/FILTER phrase's member has no overlapping block is skipped
-    (gap ⇒ no phrase match possible). The phrase's block upper bound is
-    weight × min over members of the block-max unit partial — sound
-    because phrase freq ≤ min member tf and the unit partial is
-    monotone in freq (sloppy freq = Σ 1/(1+len) ≤ #matches ≤ min tf).
-    Scoring matches the uncompressed engine: weight from summed member
-    idfs, freq from ExactPhraseMatcher/SloppyPhraseMatcher semantics
-    (_phrase_freqs), norm = the doc's single field norm.
-
-    seg_blocks: the segment's block rows (DataFrame), or a prebuilt
-    {term: rows} mapping. tb_cache/dec_cache (optional, per segment)
-    share _TermBlocks construction and block decodes across the
-    queries of one batch; without dec_cache, decoded blocks are
-    dropped as the traversal passes them (bounded memory)."""
-    if isinstance(seg_blocks, (dict, _SegGroups)):
-        groups = seg_blocks
-    else:
-        groups = _SegGroups(seg_blocks)
-
-    def get_tb(term: str) -> _TermBlocks | None:
-        tb = tb_cache.get(term) if tb_cache is not None else None
-        if tb is None:
-            if isinstance(groups, _SegGroups):
-                tb = groups.get(term, _cache_for(cache, term))
-            else:
-                rows = groups.get(term)
-                tb = (None if rows is None or not len(rows)
-                      else _TermBlocks(rows, _cache_for(cache, term)))
-            if tb is None:
-                return None
-            if tb_cache is not None:
-                tb_cache[term] = tb
-        return tb
-
-    empty = (np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.float32))
-    n_must = len(must)
-    n_filt = len(filters)
-    need = int(min_should_match)
-
-    terms: list[_TermBlocks] = []   # scoring clauses present in segment
-    wts: list[np.float32] = []
-    is_must: list[bool] = []
-    n_should_present = 0
-    for term, w in weights.items():
-        tb = get_tb(term)
-        if tb is None:
-            if term in must:
-                return empty  # required term absent → segment matches nothing
-            continue
-        if term not in must and not w and need == 0:
-            # zero-weight SHOULD can neither score nor satisfy msm
-            continue
-        terms.append(tb)
-        wts.append(np.float32(w))
-        is_must.append(term in must)
-        n_should_present += term not in must
-    filt_tbs: list[_TermBlocks] = []
-    for term in sorted(filters):
-        tb = get_tb(term)
-        if tb is None:
-            return empty
-        filt_tbs.append(tb)
-    excl_tbs: list[_TermBlocks] = []
-    for term in sorted(excludes):
-        tb = get_tb(term)
-        if tb is not None:
-            excl_tbs.append(tb)
-
-    # phrase clauses: one cursor per member term; _TermBlocks shared
-    # with the scoring/filter streams via tb_cache (decode once)
-    ph: list[dict] = []
-    n_must_ph = n_filt_ph = 0
-    for terms_p, offs_p, slop_p, w_p, occ in phrases:
-        tbs = [get_tb(t) for t in terms_p]
-        if any(tb is None for tb in tbs):
-            if occ in ("MUST", "FILTER"):
-                return empty  # required phrase member absent in segment
-            continue  # SHOULD/MUST_NOT phrase that can't match: drop
-        ph.append({"tbs": tbs, "ptr": [0] * len(tbs),
-                   "offs": tuple(offs_p), "slop": int(slop_p),
-                   "w": None if w_p is None else np.float32(w_p),
-                   "occ": occ, "dead": False,
-                   "cache": _cache_for(cache, terms_p[0])})
-        if occ == "MUST":
-            n_must_ph += 1
-        elif occ == "FILTER":
-            n_filt_ph += 1
-        elif occ == "SHOULD":
-            n_should_present += 1
-
-    if sum(is_must) < n_must:        # a MUST term had weight 0 / df 0
-        return empty
-    if not terms and not filt_tbs and not ph:
-        return empty
-    if need > n_should_present:      # msm unsatisfiable in this segment
-        return empty
-
-    T = len(terms)
-    NF = len(filt_tbs)
-    NX = len(excl_tbs)
-    ptr = [0] * T
-    fptr = [0] * NF
-    xptr = [0] * NX
-    decoded = dec_cache if dec_cache is not None else {}
-    local_dec = dec_cache is None
-    pure_disjunction = n_must == 0 and NF == 0 and NX == 0 and not ph
-    total_must = n_must + n_must_ph   # MUST terms + MUST phrases
-    total_filt = NF + n_filt_ph       # FILTER terms + FILTER phrases
-
-    top_d = np.zeros(0, dtype=np.int64)
-    top_s = np.zeros(0, dtype=np.float32)
-    theta = None  # k-th best float32 score once the heap is full
-    cursor = -1  # every docid <= cursor has been evaluated or pruned
-
-    while True:
-        active = [t for t in range(T) if ptr[t] < terms[t].nblocks]
-        f_active = [i for i in range(NF) if fptr[i] < filt_tbs[i].nblocks]
-        # a required stream exhausting ends the traversal: no doc past
-        # its last block can complete the conjunction
-        if any(not (ptr[t] < terms[t].nblocks)
-               for t in range(T) if is_must[t]):
-            break
-        if len(f_active) < NF:
-            break
-        stop = False
-        for p in ph:
-            if p["dead"]:
-                continue
-            if any(p["ptr"][i] >= p["tbs"][i].nblocks
-                   for i in range(len(p["tbs"]))):
-                if p["occ"] in ("MUST", "FILTER"):
-                    stop = True  # required phrase exhausted: done
-                    break
-                p["dead"] = True
-        if stop:
-            break
-        ph_live = [p for p in ph if not p["dead"]]
-        if not active and not f_active and not ph_live:
-            break
-        bounds = [int(terms[t].last[ptr[t]]) for t in active]
-        bounds += [int(filt_tbs[i].last[fptr[i]]) for i in f_active]
-        for p in ph_live:
-            bounds += [int(p["tbs"][i].last[p["ptr"][i]])
-                       for i in range(len(p["tbs"]))]
-        boundary = min(bounds)
-        overlap = [t for t in active
-                   if int(terms[t].first[ptr[t]]) <= boundary]
-        f_overlap = [i for i in f_active
-                     if int(filt_tbs[i].first[fptr[i]]) <= boundary]
-        ph_overlap = [p for p in ph_live
-                      if all(int(p["tbs"][i].first[p["ptr"][i]]) <= boundary
-                             for i in range(len(p["tbs"])))]
-
-        # conjunction skip: a required term with no block in the window
-        # means no doc in the window matches (gap in its posting list)
-        conj_miss = (
-            sum(is_must[t] for t in overlap) < n_must
-            or len(f_overlap) < NF
-            or sum(p["occ"] == "MUST" for p in ph_overlap) < n_must_ph
-            or sum(p["occ"] == "FILTER" for p in ph_overlap) < n_filt_ph
-        )
-        skip = conj_miss
-        if not skip and use_wand and theta is not None and need <= 1:
-            ubs = [np.float32(wts[t] * terms[t].ub_unit[ptr[t]])
-                   for t in overlap]
-            # phrase bound: weight × min member block-max unit partial
-            # (phrase freq ≤ min member tf; unit partial monotone in tf)
-            ubs += [np.float32(p["w"] * min(
-                        float(p["tbs"][i].ub_unit[p["ptr"][i]])
-                        for i in range(len(p["tbs"]))))
-                    for p in ph_overlap if p["w"] is not None]
-            ub_sum = float(np.sum(np.asarray(ubs, dtype=np.float64)))
-            skip = ub_sum < float(theta)
-
-        def eval_phrase(p) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-            """(docids, float64 freqs, norm bytes) of the phrase's
-            matches inside the current window."""
-            none = (np.zeros(0, dtype=np.int64),
-                    np.zeros(0, dtype=np.float64),
-                    np.zeros(0, dtype=np.int64))
-            cand = None
-            per_term = []
-            for i, tb in enumerate(p["tbs"]):
-                key = (id(tb), p["ptr"][i], 1)
-                if key not in decoded:
-                    decoded[key] = tb.decode_raw(p["ptr"][i])
-                d, nb, poss = decoded[key]
-                m = (d > cursor) & (d <= boundary)
-                dm = d[m]
-                per_term.append((d, nb, poss))
-                cand = dm if cand is None else cand[
-                    np.isin(cand, dm, assume_unique=True)]
-                if cand.size == 0:
-                    return none
-            pos_lists = []
-            norms0 = None
-            for i, (d, nb, poss) in enumerate(per_term):
-                idx = np.searchsorted(d, cand)
-                pos_lists.append([poss[j] for j in idx])
-                if i == 0:
-                    norms0 = nb[idx]
-            freqs = _phrase_freqs(pos_lists, p["offs"], p["slop"])
-            hit = freqs > 0
-            return cand[hit], freqs[hit], norms0[hit]
-
-        if not skip and (overlap or f_overlap or ph_overlap):
-            all_d: list[np.ndarray] = []
-            all_s: list[np.ndarray] = []
-            all_m: list[np.ndarray] = []   # 1 when the row is a MUST match
-            all_sh: list[np.ndarray] = []  # 1 when the row is a SHOULD match
-            all_f: list[np.ndarray] = []   # 1 when the row is a FILTER match
-            for t in overlap:
-                key = (id(terms[t]), ptr[t])
-                if key not in decoded:
-                    decoded[key] = terms[t].decode(ptr[t])
-                d, u = decoded[key]
-                m = (d > cursor) & (d <= boundary)
-                dm = d[m]
-                all_d.append(dm)
-                all_s.append((wts[t] * u[m]).astype(np.float32))
-                one = np.ones(dm.size, dtype=np.int64)
-                zero = np.zeros(dm.size, dtype=np.int64)
-                all_m.append(one if is_must[t] else zero)
-                all_sh.append(zero if is_must[t] else one)
-                all_f.append(zero)
-            for i in f_overlap:
-                tb = filt_tbs[i]
-                key = (id(tb), fptr[i])
-                if key not in decoded:
-                    decoded[key] = tb.decode(fptr[i])
-                d, _u = decoded[key]
-                m = (d > cursor) & (d <= boundary)
-                dm = d[m]
-                all_d.append(dm)
-                all_s.append(np.zeros(dm.size, dtype=np.float32))
-                z = np.zeros(dm.size, dtype=np.int64)
-                all_m.append(z)
-                all_sh.append(z)
-                all_f.append(np.ones(dm.size, dtype=np.int64))
-            for p in ph_overlap:
-                if p["occ"] == "MUST_NOT":
-                    continue  # applied in the exclusion step below
-                dm, freqs, nbs = eval_phrase(p)
-                if not dm.size:
-                    continue
-                if p["occ"] == "FILTER":
-                    s = np.zeros(dm.size, dtype=np.float32)
-                else:
-                    s = bm25.score_terms(freqs, nbs, p["w"], p["cache"])
-                all_d.append(dm)
-                all_s.append(s)
-                one = np.ones(dm.size, dtype=np.int64)
-                zero = np.zeros(dm.size, dtype=np.int64)
-                all_m.append(one if p["occ"] == "MUST" else zero)
-                all_sh.append(one if p["occ"] == "SHOULD" else zero)
-                all_f.append(one if p["occ"] == "FILTER" else zero)
-            if not all_d:
-                d_cat = np.zeros(0, dtype=np.int64)
-                s_cat = np.zeros(0, dtype=np.float32)
-            else:
-                d_cat = np.concatenate(all_d)
-                s_cat = np.concatenate(all_s)
-            live = None
-            if deleted is not None and deleted.size and d_cat.size:
-                live = ~np.isin(d_cat, deleted)  # liveDocs mask (.liv role)
-                d_cat, s_cat = d_cat[live], s_cat[live]
-            if d_cat.size:
-                uds, inv = np.unique(d_cat, return_inverse=True)
-                sums = np.bincount(inv, weights=s_cat.astype(np.float64))
-                scores = sums.astype(np.float32)
-                if pure_disjunction:
-                    if need > 1:
-                        hits = np.bincount(inv)
-                        keep = hits >= need
-                        uds, scores = uds[keep], scores[keep]
-                else:
-                    m_cat = np.concatenate(all_m)
-                    sh_cat = np.concatenate(all_sh)
-                    f_cat = np.concatenate(all_f)
-                    if live is not None:
-                        m_cat, sh_cat, f_cat = (m_cat[live], sh_cat[live],
-                                                f_cat[live])
-                    keep = np.ones(uds.size, dtype=bool)
-                    if total_must:
-                        keep &= np.bincount(inv, weights=m_cat) == total_must
-                    if total_filt:
-                        keep &= np.bincount(inv, weights=f_cat) == total_filt
-                    if need:
-                        keep &= np.bincount(inv, weights=sh_cat) >= need
-                    uds, scores = uds[keep], scores[keep]
-                mn_ph = [p for p in ph_overlap if p["occ"] == "MUST_NOT"]
-                if uds.size and (NX or mn_ph):
-                    # exclusion: decode MUST_NOT blocks overlapping the
-                    # window (ReqExclScorer.java role)
-                    ex: list[np.ndarray] = []
-                    for i in range(NX):
-                        tb = excl_tbs[i]
-                        while (xptr[i] < tb.nblocks
-                               and int(tb.last[xptr[i]]) <= cursor):
-                            xptr[i] += 1
-                        j = xptr[i]
-                        while (j < tb.nblocks
-                               and int(tb.first[j]) <= boundary):
-                            key = (id(tb), j)
-                            if key not in decoded:
-                                decoded[key] = tb.decode(j)
-                            ex.append(decoded[key][0])
-                            j += 1
-                    for p in mn_ph:
-                        dm, _freqs, _nbs = eval_phrase(p)
-                        if dm.size:
-                            ex.append(dm)
-                    if ex:
-                        excl_d = np.concatenate(ex)
-                        live = ~np.isin(uds, excl_d)
-                        uds, scores = uds[live], scores[live]
-                if uds.size:
-                    cd = np.concatenate([top_d, uds])
-                    cs = np.concatenate([top_s, scores])
-                    order = np.lexsort((cd, -cs.astype(np.float64)))[:k]
-                    top_d, top_s = cd[order], cs[order]
-                    if top_d.size == k:
-                        theta = top_s[-1]
-
-        # advance every current block fully covered by this window
-        cursor = boundary
-        for t in active:
-            if int(terms[t].last[ptr[t]]) <= boundary:
-                if local_dec:
-                    decoded.pop((id(terms[t]), ptr[t]), None)
-                ptr[t] += 1
-        for i in f_active:
-            if int(filt_tbs[i].last[fptr[i]]) <= boundary:
-                if local_dec:
-                    decoded.pop((id(filt_tbs[i]), fptr[i]), None)
-                fptr[i] += 1
-        for p in ph_live:
-            for i, tb in enumerate(p["tbs"]):
-                j = p["ptr"][i]
-                if j < tb.nblocks and int(tb.last[j]) <= boundary:
-                    if local_dec:
-                        decoded.pop((id(tb), j, 1), None)
-                    p["ptr"][i] = j + 1
-
-    return top_d, top_s
-
-
 class SegmentSearcher:
     """IndexSearcher over the compressed segment index — the 100-TB
     query path.
 
-    Execution strategies (all rank/score-identical to
-    IndexSearcher/OracleIndex):
+    One evaluator, rank/score-identical to IndexSearcher/OracleIndex:
+    every query (term/phrase booleans, DisjunctionMax/edismax, nested
+    booleans, constant-score, synonyms, multi-phrase, spans,
+    intervals, automatons) is rewritten, compiled driver-side into a
+    plain-tuple tree (``_compile``) and evaluated per segment over
+    whole decoded posting lists (``_eval_node``). Two renderings:
 
-    * term/phrase boolean algebra → block-max WAND traversal
-      (``segment_topk``: windows advance block-at-a-time, impact
-      bounds skip decodes) — the latency path for single queries;
-    * everything else (DisjunctionMax/edismax, nested booleans,
-      constant-score, synonyms, multi-phrase, spans, intervals) →
-      driver-compiled plain-tuple trees evaluated exhaustively per
-      segment over the same term-pruned block scan;
-    * batches of ``BATCH_TREE_MIN``+ queries → the compiled-tree leaf
-      with memoized whole-list decodes (each (term, segment) decodes
-      once per batch) — the throughput path;
-    * multi-term queries (prefix/wildcard/regexp/fuzzy/range/set and
-      span wrappers) rewrite against the v2 dictionary first
-      (``rewrite()``), sharing the exact refinement with v1/oracle.
+    * distributed — ``search_df``/``search_many_df`` share one plan
+      (``_plan``: term-pruned block scan + Bloom segment exclusion)
+      and one per-segment leaf (``segment_eval_topk``: each (term,
+      segment) decodes once per batch); only the merge differs —
+      ``orderBy.limit(k)`` for one query, a per-query window for a
+      batch;
+    * driver-local — ``search_local`` evaluates the same compiled tree
+      over a bytes-capped block cache, no Spark job once hot.
 
+    Multi-term queries (prefix/wildcard/regexp/fuzzy/range/set and
+    span wrappers) rewrite against the v2 dictionary first
+    (``rewrite()``), sharing the exact refinement with v1/oracle.
     Per-field postings/norms/stats (manifest ``field_stats``) give
-    every strategy per-field BM25 scorers and caches."""
+    per-field BM25 scorers and caches."""
 
     #: driver-side term→df cache cap: a real-corpus vocabulary can be
     #: billions of terms — beyond this the searcher falls back to the
@@ -842,7 +380,7 @@ class SegmentSearcher:
                 self.scorers[f] = bm25.BM25Scorer(
                     max(int(st["doc_count"]), 1),
                     max(int(st["sum_ttf"]), 1))
-        #: cache arg for segment_topk: plain ndarray on single-field
+        #: norm caches for the leaves: plain ndarray on single-field
         #: indexes (bit-stable historic path), {field: cache} otherwise
         self.caches = (self.scorer.cache if len(self.scorers) == 1
                        else {f: sc.cache for f, sc in self.scorers.items()})
@@ -912,110 +450,6 @@ class SegmentSearcher:
             return {t: self._df_map[t] for t in terms if t in self._df_map}
         rows = self.dict.where(_str_in("term", terms)).collect()
         return {r["term"]: int(r["df"]) for r in rows}
-
-    @staticmethod
-    def _flatten(q: Query) -> "_SegPlan":
-        """Term/phrase-level boolean plan for the compressed path:
-        scoring (MUST+SHOULD) clauses with boosts, the MUST subset,
-        FILTER and MUST_NOT term sets, phrase clauses, and the resolved
-        minimum-SHOULD-match ("SHOULD required only when nothing else
-        is", BooleanQuery semantics — same rule as
-        IndexSearcher._compile_boolean)."""
-        if isinstance(q, TermQuery):
-            return _SegPlan([(_qual(q.field, q.term), q.boost)],
-                            frozenset(), frozenset(), frozenset(), 0)
-        if isinstance(q, PhraseQuery):
-            return _SegPlan(
-                [], frozenset(), frozenset(), frozenset(), 0,
-                ((tuple(_qual(q.field, t) for t in q.terms),
-                  q.effective_positions(), int(q.slop),
-                  q.boost, "MUST"),))
-        if isinstance(q, BooleanQuery):
-            scoring: list[tuple[str, float]] = []
-            must: set[str] = set()
-            filters: set[str] = set()
-            excludes: set[str] = set()
-            phrases: list[tuple] = []
-            n_should = 0
-            req_other = False  # a required clause besides SHOULD exists
-            for c in q.clauses:
-                if isinstance(c.query, PhraseQuery):
-                    pq = c.query
-                    phrases.append(
-                        (tuple(_qual(pq.field, t) for t in pq.terms),
-                         pq.effective_positions(),
-                         int(pq.slop), pq.boost * q.boost, c.occur))
-                    if c.occur == "SHOULD":
-                        n_should += 1
-                    elif c.occur in ("MUST", "FILTER"):
-                        req_other = True
-                    continue
-                if not isinstance(c.query, TermQuery):
-                    raise TypeError(
-                        "SegmentSearcher supports term/phrase boolean "
-                        "algebra (MUST/SHOULD/FILTER/MUST_NOT over terms "
-                        "and phrases); use IndexSearcher for other "
-                        "nested/compound clauses"
-                    )
-                t = _qual(c.query.field, c.query.term)
-                if c.occur in ("MUST", "SHOULD"):
-                    if any(t == s for s, _ in scoring):
-                        raise TypeError(
-                            "duplicate scoring term across clauses; use "
-                            "IndexSearcher")
-                    scoring.append((t, c.query.boost * q.boost))
-                    if c.occur == "MUST":
-                        must.add(t)
-                    else:
-                        n_should += 1
-                elif c.occur == "FILTER":
-                    filters.add(t)
-                elif c.occur == "MUST_NOT":
-                    excludes.add(t)
-                else:
-                    raise TypeError(f"unknown occur {c.occur}")
-            msm = q.minimum_should_match
-            # n_should == 0 with msm > 0: Lucene yields no hits
-            # (BooleanWeight.java:396, 0 optional scorers < msm) — keep
-            # need = msm so the per-doc SHOULD count (always 0) fails
-            need = (msm if (must or filters or req_other)
-                    else max(msm, 1)) if n_should else msm
-            return _SegPlan(scoring, frozenset(must), frozenset(filters),
-                            frozenset(excludes), need, tuple(phrases))
-        raise TypeError(f"unsupported query {type(q)}")
-
-    def _resolve(self, plan: _SegPlan, stats: dict[str, int] | None = None):
-        """(clause weights, resolved phrases) for a plan; None when the
-        query can match nothing (a required term/phrase member absent
-        from the dictionary — empty scorer kills the conjunction).
-        Phrase weight sums member idfs (BM25Similarity.java:172-181),
-        exactly like IndexSearcher._phrase_leaf."""
-        if stats is None:
-            stats = self._stats({t for t, _ in plan.scoring}
-                                | {t for p in plan.phrases for t in p[0]})
-        weights: dict[str, float] = {}
-        for t, b in plan.scoring:
-            df = stats.get(t, 0)
-            if not df:
-                if t in plan.must:
-                    return None
-                continue
-            weights[t] = float(self.field_scorer(_field_of(t)).weight(df, b))
-        rphrases: list[tuple] = []
-        for terms_p, offs_p, slop_p, boost_p, occ in plan.phrases:
-            if any(stats.get(t, 0) == 0 for t in terms_p):
-                if occ in ("MUST", "FILTER"):
-                    return None  # required phrase can never match
-                continue  # SHOULD scores nothing / MUST_NOT excludes nothing
-            w = None
-            if occ in ("MUST", "SHOULD"):
-                fsc = self.field_scorer(_field_of(terms_p[0]))
-                idfs = [fsc.idf(stats[t]) for t in terms_p]
-                idf_sum = np.float32(np.sum(np.asarray(idfs,
-                                                       dtype=np.float64)))
-                w = float(fsc.weight_from_idf_sum(idf_sum, boost_p))
-            rphrases.append((terms_p, offs_p, slop_p, w, occ))
-        return weights, tuple(rphrases)
 
     # -- multi-term rewrite (dictionary expansion on the v2 dict) -------
     #: driver-safety valve for degenerate expansions (IndexSearcher's
@@ -1188,26 +622,6 @@ class SegmentSearcher:
             "rewrite it first (IndexSearcher.rewrite) or use "
             "IndexSearcher")
 
-    @staticmethod
-    def _general_has_phrase(q: Query) -> bool:
-        from .intervals import IntervalQuery
-        from .spans import SpanQuery
-
-        from .term_automaton import TermAutomatonQuery
-
-        if isinstance(q, (PhraseQuery, MultiPhraseQuery, SpanQuery,
-                          IntervalQuery, TermAutomatonQuery)):
-            return True
-        if isinstance(q, BooleanQuery):
-            return any(SegmentSearcher._general_has_phrase(c.query)
-                       for c in q.clauses)
-        if isinstance(q, DisjunctionMaxQuery):
-            return any(SegmentSearcher._general_has_phrase(d)
-                       for d in q.disjuncts)
-        if isinstance(q, ConstantScoreQuery):
-            return SegmentSearcher._general_has_phrase(q.query)
-        return False
-
     def _compile_general(self, q: Query, boost: float,
                          stats: dict[str, int]):
         """Driver-side weight resolution of a general query tree into a
@@ -1350,130 +764,94 @@ class SegmentSearcher:
         raise TypeError(
             f"SegmentSearcher cannot evaluate {type(q).__name__}")
 
-    def _search_general_df(self, q: Query, k: int,
-                           stats: dict[str, int] | None = None) -> DataFrame:
-        spark = self.index.spark
-        term_set = self._general_terms(q)
+    # -- one evaluator: plan, leaf, two merge tails ---------------------
+    def _compile(self, queries: list[Query],
+                 stats: dict[str, int] | None = None) -> list:
+        """Rewrite → term stats → compiled tree, one per query. The
+        batch's term set resolves in ONE stats lookup; ``stats`` is the
+        optional (term → df) override of the distributed ExactStatsCache
+        hook (search/sharded.py injects GLOBAL term stats so a shard
+        scores with corpus-wide weights)."""
+        queries = [self.rewrite(q) for q in queries]
         if stats is None:
+            term_set: set[str] = set()
+            for q in queries:
+                term_set |= self._general_terms(q)
             stats = self._stats(term_set)
-        tree = self._compile_general(q, 1.0, stats)
-        if tree[0] == "none":
-            return spark.createDataFrame([], "docid long, score float")
-        caches = self.caches
-        deleted = self.deleted if self.deleted.size else None
-        kk = None if k is None else int(k)
-        norm_fields = sorted(_tree_norm_fields(tree))
+        return [self._compile_general(q, 1.0, stats) for q in queries]
 
-        def leaf(pdf: pd.DataFrame) -> pd.DataFrame:
-            nm = None
-            if norm_fields:
-                nm = _norm_maps_from_rows(pdf, norm_fields)
-                pdf = pdf[pdf["kind"] == 0]
-            d, sc = segment_eval_topk(pdf, tree, caches, kk,
-                                      deleted=deleted, norm_maps=nm)
-            return pd.DataFrame({"docid": d.astype(np.int64),
-                                 "score": sc.astype(np.float32)})
+    def _plan(self, queries: list[Query], k: int | None,
+              stats: dict[str, int] | None = None) -> DataFrame | None:
+        """Per-segment top-k rows (qidx, docid, score) of a batch of
+        queries — None when no query can match anything.
 
-        pos_cols = (["positions"]
-                    if self._general_has_phrase(q) else [])
+        The scan reads ONLY the block rows of the compiled trees' terms
+        (Parquet predicate pushdown on ``term`` + column pruning): the
+        positions column rides only when a tree needs positions, per-doc
+        norm rows only for cross-field spans. With Bloom filters
+        present, a segment partition is dropped when EVERY query
+        excludes it. The rows are grouped by segment into one
+        :func:`segment_eval_topk` task per segment."""
+        trees = self._compile(queries, stats)
+        live = [t for t in trees if t[0] != "none"]
+        if not live:
+            return None
+        terms: set[str] = set()
+        norm_fields: set[str] = set()
+        for t in live:
+            terms |= _tree_terms(t)
+            norm_fields |= _tree_norm_fields(t)
+        norm_fields = sorted(norm_fields)
+        pos_cols = ["positions"] if any(map(_tree_has_phrase, live)) else []
         cols = ["segment", "term", "block_ord", "n", "first_docid",
                 "last_docid", "docids", "tfs", "norms", *pos_cols]
+        term_pred = _str_in("term", sorted(terms))
         if norm_fields:
             # cross-field span: the scan additionally carries the
             # masked-to fields' per-doc norm rows (kind=1 for content,
             # kind=2 keyed by field name) — a byte per (doc, field)
             raw = self.index.spark.read.parquet(self.index.blocks_path)
-            pred = _norm_rows_pred(
-                norm_fields,
-                (F.col("kind") == 0) & _str_in("term", sorted(term_set)))
-            filtered = raw.where(pred).select("kind", *cols)
+            pred = _norm_rows_pred(norm_fields,
+                                   (F.col("kind") == 0) & term_pred)
+            scan = raw.where(pred).select("kind", *cols)
         else:
-            filtered = self.blocks.where(
-                _str_in("term", sorted(term_set))).select(*cols)
+            scan = self.blocks.where(term_pred).select(*cols)
         if self.blooms is not None:
-            must_like, should_set = _tree_bloom_sets(tree)
-            excl = self.blooms.excluded_segments(must_like, should_set)
+            excl: set[int] | None = None
+            for t in live:
+                e = set(self.blooms.excluded_segments(*_tree_bloom_sets(t)))
+                excl = e if excl is None else (excl & e)
+                if not excl:
+                    break
             if excl:
-                filtered = filtered.where(
-                    ~F.col("segment").isin(sorted(excl)))
-        per_seg = filtered.groupBy("segment").applyInPandas(
-            leaf, "docid long, score float")
-        ordered = per_seg.orderBy(F.desc("score"), F.asc("docid"))
-        return ordered if kk is None else ordered.limit(kk)
-
-    # -- execution ------------------------------------------------------
-    def search_df(self, q: Query, k: int = 10, use_wand: bool = True,
-                  stats: dict[str, int] | None = None) -> DataFrame:
-        """``stats``: optional (term → df) override — the distributed
-        ExactStatsCache hook (search/sharded.py injects GLOBAL term
-        stats so a shard scores with corpus-wide weights).
-
-        Term/phrase boolean algebra runs the block-max WAND traversal;
-        any other supported shape (DisjunctionMax — the edismax front
-        end — nested booleans, constant-score, synonyms) falls through
-        to the compiled-tree per-segment evaluator (same scan pruning,
-        no dynamic pruning — rank/score identity unchanged)."""
-        q = self.rewrite(q)
-        if k is None:
-            # all-hits mode (collapse/rescore two-phase components):
-            # exhaustive compiled-tree evaluation, no truncation
-            return self._search_general_df(q, None, stats=stats)
-        try:
-            plan = self._flatten(q)
-        except TypeError:
-            return self._search_general_df(q, k, stats=stats)
-        resolved = self._resolve(plan, stats=stats)
-        spark = self.index.spark
-        if resolved is None:
-            return spark.createDataFrame([], "docid long, score float")
-        weights, rphrases = resolved
-        if not weights and not plan.filters and not rphrases:
-            return spark.createDataFrame([], "docid long, score float")
-        cache = self.caches
-        need = plan.need
-        must, filters, excludes = plan.must, plan.filters, plan.excludes
-
+                scan = scan.where(~F.col("segment").isin(sorted(excl)))
+        caches = self.caches
         deleted = self.deleted if self.deleted.size else None
 
         def leaf(pdf: pd.DataFrame) -> pd.DataFrame:
-            d, s = segment_topk(pdf, weights, cache, k,
-                                min_should_match=need, use_wand=use_wand,
-                                deleted=deleted, must=must, filters=filters,
-                                excludes=excludes, phrases=rphrases)
-            return pd.DataFrame({"docid": d.astype(np.int64),
-                                 "score": s.astype(np.float32)})
+            return segment_eval_topk(pdf, trees, caches, k, deleted=deleted,
+                                     norm_fields=norm_fields)
 
-        scan_terms = sorted(set(weights) | set(filters) | set(excludes)
-                            | {t for p in rphrases for t in p[0]})
-        # positions column only rides the scan when the query needs it
-        pos_cols = ["positions"] if rphrases else []
-        filtered = self.blocks.where(
-            _str_in("term", scan_terms)
-        ).select("segment", "term", "block_ord", "n", "first_docid",
-                 "last_docid", "docids", "tfs", "norms", *pos_cols,
-                 "imp_tfs", "imp_norms")
-        if self.blooms is not None:
-            # segment skipping: a segment missing a required term (or,
-            # with no required terms, missing EVERY scoring term)
-            # cannot match — drop its partition before Spark lists it.
-            # False positives only add segments; excludes never prune.
-            must_like = (set(must) | set(filters)
-                         | {t for p in rphrases
-                            if p[4] in ("MUST", "FILTER")
-                            for t in p[0]})
-            should_set = ((set(weights) - must_like)
-                          | {t for p in rphrases if p[4] == "SHOULD"
-                             for t in p[0]})
-            excl = self.blooms.excluded_segments(must_like, should_set)
-            if excl:
-                filtered = filtered.where(~F.col("segment").isin(excl))
-        per_seg = filtered.groupBy("segment").applyInPandas(
-            leaf, "docid long, score float"
-        )
-        return per_seg.orderBy(F.desc("score"), F.asc("docid")).limit(k)
+        return scan.groupBy("segment").applyInPandas(leaf, _LEAF_SCHEMA)
 
-    def search(self, q: Query, k: int = 10, use_wand: bool = True) -> list[TopDoc]:
-        rows = self.search_df(q, k, use_wand=use_wand).collect()
+    def search_df(self, q: Query, k: int = 10,
+                  stats: dict[str, int] | None = None) -> DataFrame:
+        """Top-k (docid, score) of one query: the per-segment leaf rows
+        then ONE global ``orderBy(score desc, docid asc).limit(k)`` =
+        TopDocs.merge (TopDocs.java:188-230). ``k=None`` is all-hits
+        mode (collapse/rescore two-phase components): every match, no
+        truncation. ``stats``: see :meth:`_compile`."""
+        kk = None if k is None else int(k)
+        per_seg = self._plan([q], kk, stats)
+        if per_seg is None:
+            return self.index.spark.createDataFrame(
+                [], "docid long, score float")
+        ordered = per_seg.select("docid", "score").orderBy(
+            F.desc("score"), F.asc("docid"))
+        return ordered if kk is None else ordered.limit(kk)
+
+    def search(self, q: Query, k: int = 10) -> list[TopDoc]:
+        rows = self.search_df(q, k).collect()
         return [TopDoc(r["docid"], r["score"]) for r in rows]
 
     def search_after(self, q: Query, after: TopDoc,
@@ -1489,147 +867,6 @@ class SegmentSearcher:
         rows = (scored.where(pred)
                 .orderBy(F.desc("score"), F.asc("docid")).limit(k).collect())
         return [TopDoc(r["docid"], r["score"]) for r in rows]
-
-    #: batch size at which search_many switches from per-query WAND
-    #: traversals to the compiled-tree exhaustive leaf. Rationale: in a
-    #: large batch every hot term's blocks get decoded anyway (shared
-    #: dec cache), so dynamic pruning saves nothing — while the Python
-    #: window loop costs ~1 ms/(query x segment). The tree leaf decodes
-    #: each (term, segment) once (memoized decode_all) and scores each
-    #: query in a handful of whole-list numpy ops (~0.15 ms). Results
-    #: are rank/score-identical (pruning is an optimization, not a
-    #: semantics change — A/B-tested).
-    BATCH_TREE_MIN = 16
-
-    def _search_many_tree_df(self, queries: dict[str, Query], k: int = 10,
-                             _raw: bool = False,
-                             stats: dict[str, int] | None = None) -> DataFrame:
-        """Batched compiled-tree evaluation (see BATCH_TREE_MIN). Also
-        lifts the batch path's query-algebra limit: any search_df-able
-        query (dismax/nested boolean/constant-score/synonym) batches.
-        ``stats``: optional qualified-term → global df override (the
-        distributed ExactStatsCache hook, like search_df's)."""
-        spark = self.index.spark
-        queries = {qid: self.rewrite(q) for qid, q in queries.items()}
-        qid_list = list(queries)
-        term_set: set[str] = set()
-        for q in queries.values():
-            term_set |= self._general_terms(q)
-        if stats is None:
-            stats = self._stats(term_set)
-        else:
-            stats = {t: stats[t] for t in term_set if t in stats}
-        trees = []
-        scan_term_set: set[str] = set()
-        any_phrases = False
-        norm_fields: set[str] = set()
-        for qid in qid_list:
-            t = self._compile_general(queries[qid], 1.0, stats)
-            trees.append(t)
-            if t[0] != "none":
-                scan_term_set |= _tree_terms(t)
-                any_phrases = any_phrases or _tree_has_phrase(t)
-                norm_fields |= _tree_norm_fields(t)
-        norm_fields = sorted(norm_fields)
-        terms_present = sorted(scan_term_set)
-        if not terms_present:
-            return spark.createDataFrame(
-                [], ("qidx int" if _raw else "qid string")
-                    + ", docid long, score float, rn int")
-        caches = self.caches
-        deleted = self.deleted if self.deleted.size else None
-        kk = int(k)
-
-        def leaf(pdf: pd.DataFrame) -> pd.DataFrame:
-            from lucene_solr_spark.util.env import retain_malloc
-
-            retain_malloc()
-            nm = None
-            if norm_fields:
-                nm = _norm_maps_from_rows(pdf, norm_fields)
-                pdf = pdf[pdf["kind"] == 0]
-            groups = _SegGroups(pdf)
-            # materialize every scanned term's blocks up front and
-            # decode them ALL in one vectorized pass (ForUtil.java:41
-            # bulk-decode role) — the per-(term, segment) decode loop's
-            # fixed numpy-call overhead dominated 500-query leaves
-            tb_cache: dict = {t: groups.get(t, _cache_for(caches, t))
-                              for t in groups.slices}
-            _bulk_fill_all(list(tb_cache.values()))
-
-            def get_tb(term: str) -> _TermBlocks | None:
-                return tb_cache.get(term)
-
-            out_q, out_d, out_s = [], [], []
-            for qi, tree in enumerate(trees):
-                if tree[0] == "none":
-                    continue
-                d, sc = _eval_node(tree, get_tb, caches,
-                                   nm.get if nm is not None else None)
-                if deleted is not None and d.size:
-                    live = ~np.isin(d, deleted)
-                    d, sc = d[live], sc[live]
-                d, sc = _topk_arrays(d, sc, kk)
-                if d.size:
-                    out_q.append(np.full(d.size, qi, dtype=np.int32))
-                    out_d.append(d)
-                    out_s.append(sc)
-            if not out_q:
-                return pd.DataFrame({
-                    "qidx": pd.Series([], dtype="int32"),
-                    "docid": pd.Series([], dtype="int64"),
-                    "score": pd.Series([], dtype="float32")})
-            return pd.DataFrame({
-                "qidx": np.concatenate(out_q),
-                "docid": np.concatenate(out_d),
-                "score": pd.Series(np.concatenate(out_s), dtype="float32")})
-
-        pos_cols = ["positions"] if any_phrases else []
-        # NO impact columns: the exhaustive leaf never computes block
-        # bounds, so the scan sheds the two impact streams entirely
-        cols = ["segment", "term", "block_ord", "n", "first_docid",
-                "last_docid", "docids", "tfs", "norms", *pos_cols]
-        if norm_fields:
-            # cross-field span in the batch: carry the masked-to
-            # fields' per-doc norm rows (see _search_general_df)
-            raw = spark.read.parquet(self.index.blocks_path)
-            pred = _norm_rows_pred(
-                norm_fields,
-                (F.col("kind") == 0) & _str_in("term", terms_present))
-            filtered = raw.where(pred).select("kind", *cols)
-        else:
-            filtered = self.blocks.where(
-                _str_in("term", terms_present)).select(*cols)
-        if self.blooms is not None:
-            excl_batch: set[int] | None = None
-            for tree in trees:
-                if tree[0] == "none":
-                    continue
-                must_like, should_set = _tree_bloom_sets(tree)
-                e = set(self.blooms.excluded_segments(must_like,
-                                                      should_set))
-                excl_batch = e if excl_batch is None else (excl_batch & e)
-                if not excl_batch:
-                    break
-            if excl_batch:
-                filtered = filtered.where(
-                    ~F.col("segment").isin(sorted(excl_batch)))
-        per_seg = filtered.groupBy("segment").applyInPandas(
-            leaf, "qidx int, docid long, score float")
-        from pyspark.sql.window import Window
-
-        win = Window.partitionBy("qidx").orderBy(
-            F.desc("score"), F.asc("docid"))
-        topk = (per_seg.select(
-            "qidx", "docid", "score", F.row_number().over(win).alias("rn"))
-            .where(F.col("rn") <= kk))
-        if _raw:
-            return topk
-        qmap_df = spark.createDataFrame(pd.DataFrame(
-            {"qidx": pd.array(range(len(qid_list)), dtype="int32"),
-             "qid": qid_list}))
-        return (topk.join(F.broadcast(qmap_df), "qidx")
-                .select("qid", "docid", "score", "rn"))
 
     def term_vector(self, docid: int,
                     field: str = "content") -> list[tuple[str, int]]:
@@ -1742,21 +979,10 @@ class SegmentSearcher:
         of the distributed paths (a Solr core serving reads from its
         own block cache the same way); the distributed paths remain
         the throughput/batch answer. Rank/score-identical: the same
-        compiled tree + _eval_node the executors run.
-
-        Measured design choice (round 5): evaluation stays EXHAUSTIVE
-        per segment rather than block-max WAND. On a hot bounded
-        cache the whole-list decode memos make repeat queries nearly
-        free (same-host A/B at 120k docs, 40-query mix: memoized
-        exhaustive ≈ 1020 QPS vs per-query block-max traversal
-        ≈ 210 QPS — pruning re-decodes blocks per query and pays the
-        traversal loop, i.e. it only wins cold). Block-max pruning
-        remains the distributed/batch paths' tool, where decodes are
-        per-job anyway."""
-        q = self.rewrite(q)
-        term_set = self._general_terms(q)
-        stats = self._stats(term_set)
-        tree = self._compile_general(q, 1.0, stats)
+        compile step (:meth:`_compile`) and _eval_node the executors
+        run. On a hot bounded cache the whole-list decode memos make
+        repeat queries nearly free."""
+        tree = self._compile([q])[0]
         if tree[0] == "none":
             return []
         per_term = self._local_tbs(_tree_terms(tree))
@@ -1794,26 +1020,24 @@ class SegmentSearcher:
 
     # -- batched execution ---------------------------------------------
     def search_many_df(self, queries: dict[str, Query], k: int = 10,
-                       use_wand: bool = True, _raw: bool = False,
+                       _raw: bool = False,
                        stats: dict[str, int] | None = None) -> DataFrame:
         """Evaluate MANY queries in ONE job over the compressed index —
-        the flagship throughput path (north-star workload: block-max
-        WAND BM25 top-k over compressed postings).
+        the throughput path.
 
-        Execution shape: one bucket/term-pruned scan of the block
-        rows for the batch's whole term set, one shuffle of those
-        (compressed — a few bytes per posting) rows by segment, then
-        per segment ONE applyInPandas task runs every query's WAND
-        traversal back-to-back, sharing _TermBlocks metadata and block
-        decodes across queries (decode-once-per-term). Per-leaf top-k
-        arrays then a global per-query window merge (TopDocs.merge,
-        TopDocs.java:188-230) of <= segments * |queries| * k rows.
+        Execution shape: the same plan and leaf as :meth:`search_df`
+        — one term-pruned scan of the block rows for the batch's whole
+        term set, one shuffle of those (compressed — a few bytes per
+        posting) rows by segment, then per segment ONE applyInPandas
+        task decodes every (term, segment) once and evaluates every
+        query's compiled tree. Per-leaf top-k arrays then a global
+        per-query window merge (TopDocs.merge, TopDocs.java:188-230) of
+        <= segments * |queries| * k rows.
 
-        Scaling: task = (segment x whole batch) — minutes of pure
-        numpy decode/score CPU per task at real batch sizes, no big
-        shuffle, no driver loop; parallelism = segment count, which
-        the builder sizes to O(corpus / docs_per_segment) independent
-        of executor count."""
+        Scaling: task = (segment x whole batch) — pure numpy
+        decode/score CPU per task, no big shuffle, no driver loop;
+        parallelism = segment count, which the builder sizes to
+        O(corpus / docs_per_segment) independent of executor count."""
         spark = self.index.spark
         qid_list = list(queries)
         # compiled-plan cache (the queryResultCache role, at plan
@@ -1826,8 +1050,7 @@ class SegmentSearcher:
         cache_key = None
         if stats is None:
             try:
-                cache_key = (tuple(queries.items()), int(k),
-                             bool(use_wand), bool(_raw))
+                cache_key = (tuple(queries.items()), int(k), bool(_raw))
             except TypeError:
                 cache_key = None  # unhashable custom query: no cache
         if cache_key is not None:
@@ -1839,118 +1062,12 @@ class SegmentSearcher:
             if hit is not None:
                 self._batch_plan_cache.move_to_end(cache_key)
                 return hit
-        if len(qid_list) >= self.BATCH_TREE_MIN:
-            out = self._search_many_tree_df(queries, k, _raw=_raw,
-                                            stats=stats)
-            self._plan_cache_put(cache_key, out)
-            return out
-        queries = {qid: self.rewrite(q) for qid, q in queries.items()}
-        try:
-            flat = {qid: self._flatten(q) for qid, q in queries.items()}
-        except TypeError:
-            # a query outside the term/phrase algebra (rewritten
-            # multi-term, dismax, ...) — the compiled-tree leaf covers
-            # the full algebra at any batch size
-            return self._search_many_tree_df(queries, k, _raw=_raw,
-                                             stats=stats)
-        term_set = {t for p in flat.values() for t, _ in p.scoring}
-        term_set |= {t for p in flat.values()
-                     for ph in p.phrases for t in ph[0]}
-        if stats is None:
-            stats = self._stats(term_set)
-        else:
-            # injected global stats (ExactStatsCache hook — see
-            # search_df): restrict to present keys, matching _stats
-            stats = {t: stats[t] for t in term_set if t in stats}
-        plans: list[tuple[dict[str, float], _SegPlan, tuple] | None] = []
-        scan_term_set: set[str] = set()
-        any_phrases = False
-        for qid in qid_list:
-            p = flat[qid]
-            resolved = self._resolve(p, stats=stats)
-            if resolved is None:
-                plans.append(None)
-                continue
-            w, rphrases = resolved
-            if not w and not p.filters and not rphrases:
-                plans.append(None)
-                continue
-            plans.append((w, p, rphrases))
-            scan_term_set |= (set(w) | set(p.filters) | set(p.excludes)
-                              | {t for ph in rphrases for t in ph[0]})
-            any_phrases = any_phrases or bool(rphrases)
-        terms_present = sorted(scan_term_set)
-        if not terms_present:
+        kk = int(k)
+        per_seg = self._plan(list(queries.values()), kk, stats)
+        if per_seg is None:
             return spark.createDataFrame(
                 [], ("qidx int" if _raw else "qid string")
                     + ", docid long, score float, rn int")
-        cache = self.caches
-        deleted = self.deleted if self.deleted.size else None
-        kk = int(k)
-
-        def leaf(pdf: pd.DataFrame) -> pd.DataFrame:
-            from lucene_solr_spark.util.env import retain_malloc
-
-            retain_malloc()
-            groups = _SegGroups(pdf)
-            tb_cache: dict = {}
-            dec_cache: dict = {}
-            out_q, out_d, out_s = [], [], []
-            for qi, entry in enumerate(plans):
-                if entry is None:
-                    continue
-                w, p, rphrases = entry
-                d, s = segment_topk(
-                    groups, w, cache, kk, min_should_match=p.need,
-                    use_wand=use_wand, deleted=deleted,
-                    tb_cache=tb_cache, dec_cache=dec_cache,
-                    must=p.must, filters=p.filters, excludes=p.excludes,
-                    phrases=rphrases)
-                if d.size:
-                    out_q.append(np.full(d.size, qi, dtype=np.int32))
-                    out_d.append(d)
-                    out_s.append(s)
-            if not out_q:
-                return pd.DataFrame({
-                    "qidx": pd.Series([], dtype="int32"),
-                    "docid": pd.Series([], dtype="int64"),
-                    "score": pd.Series([], dtype="float32")})
-            return pd.DataFrame({
-                "qidx": np.concatenate(out_q),
-                "docid": np.concatenate(out_d),
-                "score": pd.Series(np.concatenate(out_s), dtype="float32")})
-
-        pos_cols = ["positions"] if any_phrases else []
-        filtered = self.blocks.where(
-            _str_in("term", terms_present)
-        ).select("segment", "term", "block_ord", "n", "first_docid",
-                 "last_docid", "docids", "tfs", "norms", *pos_cols,
-                 "imp_tfs", "imp_norms")
-        if self.blooms is not None:
-            # batch segment skipping: drop a partition only when EVERY
-            # query of the batch excludes it (intersection)
-            excl_batch: set[int] | None = None
-            for entry in plans:
-                if entry is None:
-                    continue
-                w, p, rphrases = entry
-                must_like = (set(p.must) | set(p.filters)
-                             | {t for ph in rphrases
-                                if ph[4] in ("MUST", "FILTER")
-                                for t in ph[0]})
-                should_set = ((set(w) - must_like)
-                              | {t for ph in rphrases
-                                 if ph[4] == "SHOULD" for t in ph[0]})
-                e = set(self.blooms.excluded_segments(must_like,
-                                                      should_set))
-                excl_batch = e if excl_batch is None else (excl_batch & e)
-                if not excl_batch:
-                    break
-            if excl_batch:
-                filtered = filtered.where(
-                    ~F.col("segment").isin(sorted(excl_batch)))
-        per_seg = filtered.groupBy("segment").applyInPandas(
-            leaf, "qidx int, docid long, score float")
         from pyspark.sql.window import Window
 
         win = Window.partitionBy("qidx").orderBy(
@@ -1970,11 +1087,10 @@ class SegmentSearcher:
         return out
 
     def search_many(self, queries: dict[str, Query], k: int = 10,
-                    use_wand: bool = True,
                     stats: dict[str, int] | None = None
                     ) -> dict[str, list[TopDoc]]:
-        rows = self.search_many_df(queries, k, use_wand=use_wand,
-                                   _raw=True, stats=stats).collect()
+        rows = self.search_many_df(queries, k, _raw=True,
+                                   stats=stats).collect()
         qid_list = list(queries)
         out: dict[str, list[TopDoc]] = {qid: [] for qid in queries}
         for r in sorted(rows, key=lambda r: (r["qidx"], r["rn"])):
@@ -1983,16 +1099,12 @@ class SegmentSearcher:
 
 
 # ---------------------------------------------------------------------------
-# General compiled-tree evaluation over the v2 codec — the per-segment
-# rendering of the full query algebra (dismax / nested booleans /
-# constant-score / synonyms), which the windowed WAND traversal above
-# does not cover. Exhaustive within a segment (no dynamic pruning —
-# a BulkScorer without ImpactsDISI), so results are rank- and
-# score-identical to IndexSearcher/OracleIndex by construction; the
-# scan still reads ONLY the query's terms' blocks (term pushdown +
-# column pruning), one Arrow task per segment, global TopDocs.merge.
-# This is what lets edismax — DisjunctionMax over per-field clauses —
-# run on the compressed 100-TB path (per-field postings/norms/stats).
+# Compiled-tree evaluation over the v2 codec — the per-segment rendering
+# of the full query algebra. Exhaustive within a segment (no dynamic
+# pruning — a BulkScorer without ImpactsDISI), so results are rank- and
+# score-identical to IndexSearcher/OracleIndex by construction. Any
+# future block-skip belongs inside _eval_node, driven by the impact
+# columns the codec already stores.
 
 def _tree_terms(node) -> set:
     """Qualified terms a compiled node will actually scan."""
@@ -2025,7 +1137,7 @@ def _tree_terms(node) -> set:
 def _norm_rows_pred(norm_fields, term_pred):
     """Widen a kind==0 term predicate with the per-doc norm rows of
     the given fields (kind=1 for content, kind=2 keyed by field
-    name) — shared by the general and tree-batch scans."""
+    name) — the scan of a plan with cross-field span nodes."""
     pred = term_pred
     for f in norm_fields:
         pred = pred | ((F.col("kind") == 1) if f == "content"
@@ -2090,7 +1202,10 @@ def _tree_bloom_sets(node) -> tuple[set, set]:
     skipping — conservative: anything not provably required counts as
     SHOULD (false inclusions only add segments, never drop matches)."""
     kind = node[0]
-    if kind in ("term", "syn", "phrase", "dismax", "const",
+    if kind == "phrase":
+        # every phrase match holds every member term
+        return set(node[1]), set()
+    if kind in ("term", "syn", "dismax", "const",
                 "mphrase", "span", "automaton"):
         # sound as SHOULD terms: every match of any of these shapes
         # contains at least one of the node's terms (matches are
@@ -2428,35 +1543,53 @@ def _eval_node(node, get_tb, caches, get_norms=None):
     raise TypeError(f"unknown compiled node {kind}")
 
 
-def segment_eval_topk(seg_blocks, tree, caches, k: int | None,
-                      deleted: np.ndarray | None = None,
-                      norm_maps: dict | None = None):
-    """Top-k (docids, scores) of a compiled general query tree over one
-    segment's block rows. ``norm_maps``: {field: {docid: norm_byte}}
-    for cross-field span nodes (see _tree_norm_fields)."""
-    if isinstance(seg_blocks, (dict, _SegGroups)):
-        groups = seg_blocks
-    else:
-        groups = _SegGroups(seg_blocks)
-    tb_cache: dict = {}
+#: output rows of the per-segment leaf (qidx = position in the batch)
+_LEAF_SCHEMA = "qidx int, docid long, score float"
 
-    def get_tb(term: str) -> _TermBlocks | None:
-        tb = tb_cache.get(term)
-        if tb is None:
-            if isinstance(groups, _SegGroups):
-                tb = groups.get(term, _cache_for(caches, term))
-            else:
-                rows = groups.get(term)
-                tb = (None if rows is None or not len(rows)
-                      else _TermBlocks(rows, _cache_for(caches, term)))
-            if tb is None:
-                return None
-            tb_cache[term] = tb
-        return tb
 
-    d, sc = _eval_node(tree, get_tb, caches,
-                       norm_maps.get if norm_maps is not None else None)
-    if deleted is not None and deleted.size and d.size:
-        live = ~np.isin(d, deleted)
-        d, sc = d[live], sc[live]
-    return _topk_arrays(d, sc, k)
+def segment_eval_topk(pdf: pd.DataFrame, trees: list, caches,
+                      k: int | None, deleted: np.ndarray | None = None,
+                      norm_fields=()) -> pd.DataFrame:
+    """The per-segment leaf: top-k rows (qidx, docid, score) of every
+    compiled tree over one segment's scanned block rows.
+
+    Every scanned (term, segment) is decoded ONCE in one vectorized
+    pass (ForUtil.java:41 bulk-decode role), then each tree is
+    evaluated, deleted docs (tombstones) are masked BEFORE the top-k
+    cut — masking after the per-segment truncation would drop docs
+    that should be promoted — and the survivors cut to k by (score
+    desc, docid asc); ``k=None`` keeps every hit. ``norm_fields``
+    names the fields whose per-doc norm rows (kind 1/2) ride in
+    ``pdf`` for cross-field span nodes (see _tree_norm_fields)."""
+    from lucene_solr_spark.util.env import retain_malloc
+
+    retain_malloc()
+    get_norms = None
+    if norm_fields:
+        get_norms = _norm_maps_from_rows(pdf, norm_fields).get
+        pdf = pdf[pdf["kind"] == 0]
+    groups = _SegGroups(pdf)
+    tbs = {t: groups.get(t, _cache_for(caches, t)) for t in groups.slices}
+    _bulk_fill_all(list(tbs.values()))
+    out_q, out_d, out_s = [], [], []
+    for qi, tree in enumerate(trees):
+        if tree[0] == "none":
+            continue
+        d, sc = _eval_node(tree, tbs.get, caches, get_norms)
+        if deleted is not None and d.size:
+            live = ~np.isin(d, deleted)
+            d, sc = d[live], sc[live]
+        d, sc = _topk_arrays(d, sc, k)
+        if d.size:
+            out_q.append(np.full(d.size, qi, dtype=np.int32))
+            out_d.append(d)
+            out_s.append(sc)
+    if not out_q:
+        return pd.DataFrame({
+            "qidx": pd.Series([], dtype="int32"),
+            "docid": pd.Series([], dtype="int64"),
+            "score": pd.Series([], dtype="float32")})
+    return pd.DataFrame({
+        "qidx": np.concatenate(out_q),
+        "docid": np.concatenate(out_d),
+        "score": pd.Series(np.concatenate(out_s), dtype="float32")})

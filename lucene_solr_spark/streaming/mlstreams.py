@@ -271,14 +271,14 @@ i{it} AS MATERIALIZED (SELECT sum(1.0/(1.0+exp(-({zi}))) - y) AS g0,
   {", ".join(f"sum((1.0/(1.0+exp(-({zi}))) - y) * x{j}) AS g{j + 1}"
              for j in range(k))},
   sum(abs(1.0/(1.0+exp(-({zi}))) - y)) AS total_error,
-  sum(CASE WHEN y = 1 AND 1.0/(1.0+exp(-({zi}))) >= 0.5 THEN 1 ELSE 0
-      END) AS tp,
-  sum(CASE WHEN y = 0 AND 1.0/(1.0+exp(-({zi}))) >= 0.5 THEN 1 ELSE 0
-      END) AS fp,
-  sum(CASE WHEN y = 0 AND 1.0/(1.0+exp(-({zi}))) < 0.5 THEN 1 ELSE 0
-      END) AS tn,
-  sum(CASE WHEN y = 1 AND 1.0/(1.0+exp(-({zi}))) < 0.5 THEN 1 ELSE 0
-      END) AS fn
+  CAST(sum(CASE WHEN y = 1 AND 1.0/(1.0+exp(-({zi}))) >= 0.5 THEN 1
+      ELSE 0 END) AS BIGINT) AS tp,
+  CAST(sum(CASE WHEN y = 0 AND 1.0/(1.0+exp(-({zi}))) >= 0.5 THEN 1
+      ELSE 0 END) AS BIGINT) AS fp,
+  CAST(sum(CASE WHEN y = 0 AND 1.0/(1.0+exp(-({zi}))) < 0.5 THEN 1
+      ELSE 0 END) AS BIGINT) AS tn,
+  CAST(sum(CASE WHEN y = 1 AND 1.0/(1.0+exp(-({zi}))) < 0.5 THEN 1
+      ELSE 0 END) AS BIGINT) AS fn
   FROM fx)""")
         neww = [f"(({w[i]}) - {_TLOGIT_ALPHA} * (SELECT g{i} FROM i{it}))"
                 for i in range(k + 1)]

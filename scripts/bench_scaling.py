@@ -7,8 +7,8 @@ two-cluster-size protocol per driver instruction).
 Each parallelism level runs in its OWN subprocess (fresh JVM — Spark
 can't change master in-process), measuring:
   * index-build throughput (docs/sec), codec v2 segment build
-  * batched BM25 query throughput (queries/sec): block-max WAND over
-    the v2 compressed index, whole batch in ONE job (the north-star
+  * batched BM25 query throughput (queries/sec): compiled-tree search
+    over the v2 compressed index, whole batch in ONE job (the north-star
     query path), in-child median of 5 runs after 2 warmups
 
 Prints one JSON object and appends a row to BENCH_SCALING.json.
@@ -140,9 +140,8 @@ def child(cpus: int, docs: int, queries: int) -> None:
     out["build_v1_sec"] = round(time.time() - t0, 2)
     out["v1_docs"] = int(n_q)
 
-    # -- query scaling metric: batched block-max WAND over the v2
-    # compressed index just built (the north-star query path:
-    # "block-max WAND top-k evaluation over the compressed postings").
+    # -- query scaling metric: batched BM25 top-k over the v2
+    # compressed index just built (the north-star query path).
     # One job evaluates the whole batch; leaf tasks are
     # (segment-bucket x batch) pure-numpy decode/score work. 128
     # output partitions at BOTH levels keep per-task segment counts

@@ -31,7 +31,7 @@ asymmetry.
 Metrics (identical jobs to scripts/bench_scaling.py):
   * build: codec-v2 compressed segment build docs/sec
     (build_segment_index, fixed docs_per_segment=2048)
-  * query: batched block-max WAND QPS over the index just built
+  * query: batched BM25 top-k QPS over the index just built
     (SegmentSearcher.search_many, one job per batch)
 
 Usage: python scripts/bench_scaling_sim.py [--low 2] [--high 8]

@@ -38,7 +38,7 @@ def main() -> int:
     ap.add_argument("--output", required=True, help="index root")
     ap.add_argument("--codec", choices=["v1", "v2"], default="v2",
                     help="v1 = term-bucketed uncompressed postings; "
-                         "v2 = doc-segmented compressed blocks (WAND path)")
+                         "v2 = doc-segmented compressed blocks (SegmentSearcher)")
     ap.add_argument("--docs-per-segment", type=int, default=65536)
     ap.add_argument("--segments-per-chunk", type=int, default=64)
     ap.add_argument("--term-buckets", type=int, default=32, help="v1 only")

@@ -17,9 +17,37 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
-from pyspark.sql import SparkSession
 
-import __spark_entry__ as entrymod
+
+def oracle_type_problems(con, sql: str, spark_dtypes) -> list[str]:
+    """Column-type divergences between an oracle query and the Spark
+    frame's ``dtypes`` that fail the driver's gate.
+
+    The driver's value hash is TYPE-sensitive (arrow buffers): an
+    un-CAST integer sum() types HUGEINT in DuckDB and hash-mismatches
+    an int64 Spark column even when values are identical. Types come
+    from ``DESCRIBE <sql>``: DB-API ``description`` reports 'NUMBER'
+    for every numeric column, so a HUGEINT never shows there."""
+    dtypes = {row[0].lower(): str(row[1]).upper()
+              for row in con.execute(f"DESCRIBE {sql}").fetchall()}
+    stypes = {c.lower(): t for c, t in spark_dtypes}
+    problems = []
+    for col, dt in dtypes.items():
+        if "HUGEINT" in dt:
+            problems.append(
+                f"oracle col {col} is {dt} — CAST(... AS BIGINT) it")
+            continue
+        st = stypes.get(col)
+        if st is None:
+            continue
+        d_int = "INT" in dt
+        s_int = st in ("tinyint", "smallint", "int", "bigint", "long")
+        d_flt = any(x in dt for x in ("DOUBLE", "FLOAT", "DECIMAL"))
+        s_flt = st in ("float", "double") or st.startswith("decimal")
+        if (d_int and s_flt) or (d_flt and s_int):
+            problems.append(f"type divergence on {col}: spark {st} vs "
+                            f"oracle {dt}")
+    return problems
 
 
 def norm_cell(v):
@@ -67,6 +95,10 @@ def normalize_exact(rows, cols):
 
 
 def main():
+    from pyspark.sql import SparkSession
+
+    import __spark_entry__ as entrymod
+
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     name_filter = sys.argv[2] if len(sys.argv) > 2 else ""
 
@@ -118,27 +150,8 @@ def main():
             print(f"FAIL  {name}: duckdb error: {e}")
             bad += 1
             continue
-        problems = []
-        # The driver's value hash is TYPE-sensitive (arrow buffers): an
-        # un-CAST integer sum() types HUGEINT in DuckDB and hash-mismatches
-        # an int64 Spark column even when values are identical (round-3
-        # lesson — six rows). Catch type divergence pre-driver.
-        dtypes = {d[0].lower(): str(d[1]).upper() for d in res.description}
-        stypes = {c.lower(): t for c, t in sdf.dtypes}
-        for col, dt in dtypes.items():
-            if "HUGEINT" in dt:
-                problems.append(
-                    f"oracle col {col} is {dt} — CAST(... AS BIGINT) it")
-            st = stypes.get(col)
-            if st is None:
-                continue
-            d_int = any(x in dt for x in ("INT",)) and "HUGE" not in dt
-            s_int = st in ("tinyint", "smallint", "int", "bigint", "long")
-            d_flt = any(x in dt for x in ("DOUBLE", "FLOAT", "DECIMAL"))
-            s_flt = st in ("float", "double") or st.startswith("decimal")
-            if (d_int and s_flt) or (d_flt and s_int):
-                problems.append(f"type divergence on {col}: spark {st} vs "
-                                f"oracle {dt}")
+        # catch type divergence pre-driver (FAILs, not warnings)
+        problems = oracle_type_problems(con, oracles[name], sdf.dtypes)
         if sorted(c.lower() for c in scols) != sorted(c.lower() for c in dcols):
             problems.append(f"cols {scols} vs {dcols}")
         if len(srows) != len(drows):

@@ -57,9 +57,9 @@ def built(spark, tmp_path_factory):
     return idx, searcher, oracle
 
 
-def _identical(searcher, oracle, q, k=10, **kw):
+def _identical(searcher, oracle, q, k=10):
     exp = oracle.search(q, k)
-    got = searcher.search(q, k, **kw)
+    got = searcher.search(q, k)
     assert [(d.docid, np.float32(d.score)) for d in got] == [
         (d.docid, np.float32(d.score)) for d in exp], q
 
@@ -91,16 +91,14 @@ def test_per_field_term_scoring(built):
     _identical(searcher, oracle, TermQuery("python", field="content"))
 
 
-def test_cross_field_boolean_wand_ab(built):
+def test_cross_field_boolean_identical_to_oracle(built):
     _idx, searcher, oracle = built
     q = BooleanQuery.of(should=[TermQuery("python", field="title"),
                                 TermQuery("return", field="content")])
-    _identical(searcher, oracle, q, use_wand=True)
-    _identical(searcher, oracle, q, use_wand=False)
+    _identical(searcher, oracle, q)
     q2 = BooleanQuery.of(must=[TermQuery("file", field="title")],
                          should=[TermQuery("def", field="content")])
-    _identical(searcher, oracle, q2, use_wand=True)
-    _identical(searcher, oracle, q2, use_wand=False)
+    _identical(searcher, oracle, q2)
 
 
 def test_title_phrase(built):
@@ -195,8 +193,8 @@ def test_field_masking_span_on_v2(built):
         loc = searcher.search_local(q, 10)
         assert [(d.docid, np.float32(d.score)) for d in loc] == [
             (d.docid, np.float32(d.score)) for d in exp], q
-    # batched tree leaf (>= BATCH_TREE_MIN): cross-field span mixed
-    # with plain fielded terms in one batch
+    # batched leaf: cross-field span mixed with plain fielded terms
+    # in one batch
     batch = {"near": q_near, "or": q_or}
     for i in range(16):
         batch[f"t{i}"] = TermQuery("file" if i % 2 else "python",

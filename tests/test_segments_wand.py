@@ -1,5 +1,6 @@
-"""Codec-v2 segment index + block-max WAND: rank/score identity vs the
-pure-Python oracle, WAND on/off A/B identity (SURVEY §4.2 oracle), and
+"""Codec-v2 segment index + compiled-tree search: rank/score identity
+vs the pure-Python oracle (SURVEY §4.2 oracle) for solo, batched and
+driver-local evaluation, the single-query plan shape, and
 kill-and-resume resumability (BASELINE.md resumability row)."""
 
 import numpy as np
@@ -90,19 +91,36 @@ def test_disjunction_topk_identical_to_oracle(built):
         (d.docid, np.float32(d.score)) for d in exp]
 
 
-def test_wand_ab_identical(built):
+def test_k_sweep_identical_to_oracle(built):
     _, searcher, oracle, _ = built
     terms = _terms_by_df(oracle, 5)
     q = BooleanQuery.of(should=[TermQuery(t) for t in terms[:5]])
     for k in (1, 3, 10, 50):
-        a = searcher.search(q, k, use_wand=True)
-        b = searcher.search(q, k, use_wand=False)
+        a = searcher.search(q, k)
+        b = oracle.search(q, k)
         assert [(d.docid, np.float32(d.score)) for d in a] == [
             (d.docid, np.float32(d.score)) for d in b], k
 
 
+def test_single_query_plan_has_no_window(built):
+    """A single query merges with ONE orderBy.limit(k), not the batch
+    path's per-query window (a batch of one through the window merge
+    measured 10-14% slower per query); k=None returns every hit."""
+    _, searcher, oracle, _ = built
+    terms = _terms_by_df(oracle, 4)
+    q = BooleanQuery.of(should=[TermQuery(t) for t in terms[:4]])
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    assert "Window" not in plan(searcher.search_df(q, 10))
+    assert "Window" in plan(searcher.search_many_df({"q": q}, 10))
+    every = searcher.search_df(q, None).collect()
+    assert len(every) == len(oracle.search(q, N_DOCS))
+
+
 def test_search_many_identical_to_solo(built):
-    """Batched WAND (one job, shared decodes) must be rank/score-
+    """Batched search (one job, shared decodes) must be rank/score-
     identical to per-query search for every query in the batch."""
     _, searcher, oracle, _ = built
     terms = _terms_by_df(oracle, 6)
@@ -168,10 +186,9 @@ def test_kill_and_resume_identical(spark, tmp_path_factory, built):
 
 
 def test_boolean_mixes_identical_to_oracle(built):
-    """MUST/FILTER/MUST_NOT on the compressed path (block-max
-    conjunction, Boolean2ScorerSupplier.java:93-164 /
-    BlockMaxConjunctionScorer.java role): rank/score identity vs the
-    pure-Python oracle AND vs exhaustive (WAND off) evaluation."""
+    """MUST/FILTER/MUST_NOT on the compressed path
+    (Boolean2ScorerSupplier.java:93-164 role): rank/score identity vs
+    the pure-Python oracle."""
     _, searcher, oracle, _ = built
     t = _terms_by_df(oracle, 6)
     cases = {
@@ -204,12 +221,9 @@ def test_boolean_mixes_identical_to_oracle(built):
     }
     for name, q in cases.items():
         exp = oracle.search(q, 12)
-        got = searcher.search(q, 12, use_wand=True)
-        exhaustive = searcher.search(q, 12, use_wand=False)
+        got = searcher.search(q, 12)
         assert [(d.docid, np.float32(d.score)) for d in got] == [
             (d.docid, np.float32(d.score)) for d in exp], name
-        assert [(d.docid, np.float32(d.score)) for d in got] == [
-            (d.docid, np.float32(d.score)) for d in exhaustive], name
 
 
 def test_boolean_mixes_batched_identical(built):
@@ -266,7 +280,7 @@ def _bigram(pdf):
 def test_phrase_identical_to_oracle(built):
     """Exact + sloppy phrases on the compressed path (standalone and
     inside boolean mixes): rank/score identity vs the pure-Python
-    oracle AND vs exhaustive (WAND off) evaluation."""
+    oracle."""
     from lucene_solr_spark.search.queries import PhraseQuery
 
     _, searcher, oracle, pdf = built
@@ -295,12 +309,9 @@ def test_phrase_identical_to_oracle(built):
     }
     for name, q in cases.items():
         exp = oracle.search(q, 12)
-        got = searcher.search(q, 12, use_wand=True)
-        exhaustive = searcher.search(q, 12, use_wand=False)
+        got = searcher.search(q, 12)
         assert [(d.docid, np.float32(d.score)) for d in got] == [
             (d.docid, np.float32(d.score)) for d in exp], name
-        assert [(d.docid, np.float32(d.score)) for d in got] == [
-            (d.docid, np.float32(d.score)) for d in exhaustive], name
 
 
 def test_phrase_batched_identical(built):
@@ -359,18 +370,17 @@ def test_concurrent_chunks_bit_identical(spark, tmp_path_factory):
         (d.docid, np.float32(d.score)) for d in b]
 
 
-def test_batch_tree_path_identical_to_wand(built):
-    """Batches >= BATCH_TREE_MIN run the compiled-tree exhaustive
-    leaf; results must be rank/score-identical to the per-query WAND
-    traversal (pruning and batching are optimizations, never
-    semantics)."""
+def test_batch_identical_to_solo_and_oracle(built):
+    """A 20-query batch of mixed shapes (term, disjunction, MUST +
+    MUST_NOT, MUST + SHOULD phrase) is rank/score-identical to solo
+    search and to the oracle: batching shares decodes, never changes
+    semantics."""
     from lucene_solr_spark.search.queries import PhraseQuery
-    from lucene_solr_spark.search.wand import SegmentSearcher
 
     idx, searcher, oracle, pdf = built
     terms = _terms_by_df(oracle, 8)
     qs = {}
-    for i in range(max(SegmentSearcher.BATCH_TREE_MIN, 20)):
+    for i in range(20):
         a, b = terms[i % len(terms)], terms[(i * 3 + 1) % len(terms)]
         if i % 4 == 0:
             qs[f"q{i}"] = TermQuery(a)
@@ -384,12 +394,13 @@ def test_batch_tree_path_identical_to_wand(built):
             qs[f"q{i}"] = BooleanQuery.of(
                 must=[TermQuery(a)],
                 should=[PhraseQuery((b, a)), TermQuery(b)])
-    assert len(qs) >= SegmentSearcher.BATCH_TREE_MIN
     batched = searcher.search_many(qs, 10)
     for qid, q in qs.items():
-        solo = searcher.search(q, 10)  # WAND traversal (or general path)
-        assert [(d.docid, np.float32(d.score)) for d in batched[qid]] == [
-            (d.docid, np.float32(d.score)) for d in solo], qid
+        got = [(d.docid, np.float32(d.score)) for d in batched[qid]]
+        solo = searcher.search(q, 10)
+        assert got == [(d.docid, np.float32(d.score)) for d in solo], qid
+        exp = oracle.search(q, 10)
+        assert got == [(d.docid, np.float32(d.score)) for d in exp], qid
 
 
 def test_multi_phrase_on_v2(built):
@@ -447,7 +458,7 @@ def test_multiterm_rewrite_on_v2(built):
         exp = oracle.search(q, 10)
         assert [(d.docid, np.float32(d.score)) for d in got] == [
             (d.docid, np.float32(d.score)) for d in exp], q
-    # batched (small batch routes through the tree fallback)
+    # batched
     qs = {f"q{i}": q for i, q in enumerate(queries[:4])}
     batched = searcher.search_many(qs, 10)
     for qid, q in qs.items():

@@ -155,7 +155,7 @@ def test_exact_stats_multifield_batched(sharded_mf):
     s = ShardedSearcher(roots, spark, stats="exact", cache=True)
     by_df = _probes(oracle)
     qs = {}
-    for i in range(18):  # >= BATCH_TREE_MIN: tree-batch leaf
+    for i in range(18):
         qs[f"q{i}"] = BooleanQuery.of(
             must=[TermQuery(["python", "java", "go"][i % 3], field="title")],
             should=[TermQuery(by_df[-(1 + i % 7)])])

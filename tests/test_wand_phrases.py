@@ -1,9 +1,8 @@
-"""Phrases on the compressed block-max WAND path (VERDICT round-2
-next-round #4, phrase part): exact + sloppy PhraseQuery, standalone and
-as MUST/SHOULD/FILTER/MUST_NOT clauses of a BooleanQuery, evaluated
-inside segment_topk's windowed traversal — identity vs a naive
-exhaustive evaluator over a synthetic codec-v2 segment (no Spark), with
-WAND pruning on AND off.
+"""Phrases on the compressed (codec v2) path: exact + sloppy
+PhraseQuery, standalone and as MUST/SHOULD/FILTER/MUST_NOT clauses of a
+BooleanQuery, compiled by SegmentSearcher._compile_general and evaluated
+by the per-segment leaf (segment_eval_topk) — identity vs a naive
+exhaustive evaluator over a synthetic codec-v2 segment (no Spark).
 
 Scoring parity target: the same float32 discipline as the uncompressed
 engine's _phrase_verify_fn (weight from summed member idfs,
@@ -16,8 +15,17 @@ import pytest
 
 from lucene_solr_spark.index import codec
 from lucene_solr_spark.search import bm25
+from lucene_solr_spark.search.queries import (
+    BooleanQuery,
+    PhraseQuery,
+    TermQuery,
+)
 from lucene_solr_spark.search.sloppy import sloppy_freq
-from lucene_solr_spark.search.wand import _phrase_freqs, segment_topk
+from lucene_solr_spark.search.wand import (
+    SegmentSearcher,
+    _phrase_freqs,
+    segment_eval_topk,
+)
 from lucene_solr_spark.util.smallfloat import int_to_byte4
 
 RNG = np.random.default_rng(7)
@@ -65,11 +73,6 @@ def _encode_segment(docs, segment=0):
                 "norms": norms.tobytes(),
                 "positions": codec.encode_positions(
                     [np.array(by_doc[d], dtype=np.int64) for d in blk]),
-                # impacts: every (tf, norm) pair — sound (max is exact)
-                "imp_tfs": codec.encode_seq(tfs.astype(np.uint64),
-                                            prefer_packed=False),
-                "imp_norms": codec.encode_seq(norms.astype(np.uint64),
-                                              prefer_packed=False),
             })
     return pd.DataFrame(rows)
 
@@ -157,91 +160,115 @@ def _naive(docs, scorer, df, term_weights=(), phrase_specs=(),
             [np.float32(out_s[i]) for i in order])
 
 
-def _run(seg, term_weights=(), phrase_specs=(), must=(), filters=(),
-         excludes=(), need=0, k=10, use_wand=True):
+def _compile(scorer, df, q):
+    """The driver's compile step over the synthetic segment's stats."""
+    searcher = SegmentSearcher.__new__(SegmentSearcher)
+    searcher.scorers = {"content": scorer}
+    return searcher._compile_general(q, 1.0, df)
+
+
+def _run(seg, *queries, k=10):
+    """Compile ``queries`` and evaluate them as ONE batch through the
+    per-segment leaf; (docids, float32 scores) per query."""
     docs, blocks, scorer, df = seg
-    d, s = segment_topk(
-        blocks, dict(term_weights), scorer.cache, k,
-        min_should_match=need, use_wand=use_wand,
-        must=frozenset(must), filters=frozenset(filters),
-        excludes=frozenset(excludes), phrases=tuple(phrase_specs))
-    return list(d), [np.float32(x) for x in s]
+    trees = [_compile(scorer, df, q) for q in queries]
+    out = segment_eval_topk(blocks, trees, scorer.cache, k)
+    res = []
+    for qi in range(len(trees)):
+        rows = out[out["qidx"] == qi]
+        res.append((rows["docid"].tolist(),
+                    [np.float32(x) for x in rows["score"]]))
+    return res
 
 
 PHRASE = ("alpha", "beta")
 
 
-def test_exact_phrase_standalone(seg):
+def _cases(seg):
+    """(name, query, naive-reference kwargs) for every phrase shape."""
     docs, blocks, scorer, df = seg
     w = _phrase_weight(scorer, df, PHRASE)
-    spec = [(PHRASE, (0, 1), 0, w, "MUST")]
-    for use_wand in (True, False):
-        got = _run(seg, phrase_specs=spec, use_wand=use_wand)
-        exp = _naive(docs, scorer, df, phrase_specs=spec)
-        assert got == exp
+    gap = ("alpha", "gamma")
+    gamma = [("gamma", float(scorer.weight(df["gamma"])))]
+    delta = [("delta", float(scorer.weight(df["delta"])))]
+    return [
+        ("exact", PhraseQuery(PHRASE),
+         dict(phrase_specs=[(PHRASE, (0, 1), 0, w, "MUST")])),
+        ("sloppy", PhraseQuery(PHRASE, slop=2, boost=1.3),
+         dict(phrase_specs=[(PHRASE, (0, 1), 2,
+                             _phrase_weight(scorer, df, PHRASE, boost=1.3),
+                             "MUST")])),
+        # stopword hole: "alpha _ gamma" = positions (0, 2)
+        ("gap", PhraseQuery(gap, positions=(0, 2)),
+         dict(phrase_specs=[(gap, (0, 2), 0,
+                             _phrase_weight(scorer, df, gap), "MUST")])),
+        ("must_phrase_should_term",
+         BooleanQuery.of(must=[PhraseQuery(PHRASE)],
+                         should=[TermQuery("gamma")]),
+         dict(term_weights=gamma,
+              phrase_specs=[(PHRASE, (0, 1), 0, w, "MUST")])),
+        ("should_msm2",
+         BooleanQuery.of(should=[TermQuery("delta"), PhraseQuery(PHRASE)],
+                         minimum_should_match=2),
+         dict(term_weights=delta,
+              phrase_specs=[(PHRASE, (0, 1), 0, w, "SHOULD")], need=2)),
+        ("filter",
+         BooleanQuery.of(must=[TermQuery("gamma")],
+                         filter=[PhraseQuery(PHRASE)]),
+         dict(term_weights=gamma, must={"gamma"},
+              phrase_specs=[(PHRASE, (0, 1), 0, None, "FILTER")])),
+        ("must_not",
+         BooleanQuery.of(must=[TermQuery("gamma")],
+                         must_not=[PhraseQuery(("beta", "alpha"))]),
+         dict(term_weights=gamma, must={"gamma"},
+              phrase_specs=[(("beta", "alpha"), (0, 1), 0, None,
+                             "MUST_NOT")])),
+    ]
+
+
+def _check(seg, name):
+    docs, blocks, scorer, df = seg
+    (case,) = [c for c in _cases(seg) if c[0] == name]
+    _name, q, ref = case
+    (got,) = _run(seg, q)
+    assert got == _naive(docs, scorer, df, **ref), name
+    assert got[0], f"{name}: no hits — the case checks nothing"
+
+
+def test_exact_phrase_standalone(seg):
+    _check(seg, "exact")
 
 
 def test_sloppy_phrase_standalone(seg):
-    docs, blocks, scorer, df = seg
-    w = _phrase_weight(scorer, df, PHRASE, boost=1.3)
-    spec = [(PHRASE, (0, 1), 2, w, "MUST")]
-    for use_wand in (True, False):
-        got = _run(seg, phrase_specs=spec, use_wand=use_wand)
-        exp = _naive(docs, scorer, df, phrase_specs=spec)
-        assert got == exp
+    _check(seg, "sloppy")
 
 
 def test_phrase_with_position_gap(seg):
-    """PhraseQuery with explicit positions (stopword hole): "alpha _
-    gamma" = positions (0, 2)."""
-    docs, blocks, scorer, df = seg
-    terms = ("alpha", "gamma")
-    w = _phrase_weight(scorer, df, terms)
-    spec = [(terms, (0, 2), 0, w, "MUST")]
-    got = _run(seg, phrase_specs=spec)
-    exp = _naive(docs, scorer, df, phrase_specs=spec)
-    assert got == exp
+    _check(seg, "gap")
 
 
 def test_phrase_must_plus_term_should(seg):
-    docs, blocks, scorer, df = seg
-    w = _phrase_weight(scorer, df, PHRASE)
-    tw = [("gamma", float(scorer.weight(df["gamma"])))]
-    spec = [(PHRASE, (0, 1), 0, w, "MUST")]
-    for use_wand in (True, False):
-        got = _run(seg, term_weights=tw, phrase_specs=spec,
-                   use_wand=use_wand)
-        exp = _naive(docs, scorer, df, term_weights=tw, phrase_specs=spec)
-        assert got == exp
+    _check(seg, "must_phrase_should_term")
 
 
 def test_phrase_should_msm(seg):
     """Two SHOULD clauses (term + phrase), minimum_should_match=2."""
-    docs, blocks, scorer, df = seg
-    w = _phrase_weight(scorer, df, PHRASE)
-    tw = [("delta", float(scorer.weight(df["delta"])))]
-    spec = [(PHRASE, (0, 1), 0, w, "SHOULD")]
-    got = _run(seg, term_weights=tw, phrase_specs=spec, need=2)
-    exp = _naive(docs, scorer, df, term_weights=tw, phrase_specs=spec,
-                 need=2)
-    assert got == exp
+    _check(seg, "should_msm2")
 
 
 def test_phrase_filter_and_mustnot(seg):
-    docs, blocks, scorer, df = seg
-    tw = [("gamma", float(scorer.weight(df["gamma"])))]
-    filt = [(PHRASE, (0, 1), 0, None, "FILTER")]
-    got = _run(seg, term_weights=tw, phrase_specs=filt,
-               must={"gamma"})
-    exp = _naive(docs, scorer, df, term_weights=tw, phrase_specs=filt,
-                 must={"gamma"})
-    assert got == exp
+    _check(seg, "filter")
+    _check(seg, "must_not")
 
-    mn = [(("beta", "alpha"), (0, 1), 0, None, "MUST_NOT")]
-    got = _run(seg, term_weights=tw, phrase_specs=mn, must={"gamma"})
-    exp = _naive(docs, scorer, df, term_weights=tw, phrase_specs=mn,
-                 must={"gamma"})
-    assert got == exp
+
+def test_phrase_cases_batched(seg):
+    """All seven cases in ONE leaf call (shared decodes across the
+    batch) give the same results as the naive reference."""
+    docs, blocks, scorer, df = seg
+    cases = _cases(seg)
+    got = _run(seg, *(q for _n, q, _r in cases))
+    for (name, _q, ref), g in zip(cases, got):
+        assert g == _naive(docs, scorer, df, **ref), name
 
 
 def test_phrase_freqs_matches_naive_exact():
