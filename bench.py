@@ -1,10 +1,12 @@
 """Benchmark harness (driver-run per round; also used locally).
 
 Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
-line: {"metric", "value" (total sec), "unit", "queries" (per-query
-sec), "sf", plus extras: index-build docs/sec and closed-loop BM25
-QPS for the flagship engine}.
+/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the CPUs
+this process may run on) with a $LSS_DRIVER_MEM driver heap (default:
+half of MemAvailable) and prints ONE JSON line: {"metric", "value"
+(total sec), "unit", "queries" (per-query sec), "sf", "cpus",
+"driver_memory", plus extras: index-build docs/sec and closed-loop
+BM25 QPS for the flagship engine}.
 
 Flagship numbers (BASELINE.md protocol): the inverted-index build over
 the deterministic synthetic source-code corpus (corpus.py) and a
@@ -35,6 +37,27 @@ N_BUILD_DOCS = int(os.environ.get("LSS_BENCH_DOCS", "120000"))
 N_QUERIES = int(os.environ.get("LSS_BENCH_QUERIES", "40"))
 
 
+def host_cpus() -> int:
+    """$SPARK_GRAFT_CPUS, else the CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS")
+               or len(os.sched_getaffinity(0)))
+
+
+def driver_mem() -> str:
+    """$LSS_DRIVER_MEM, else half of MemAvailable (at least 1 GiB): the
+    other half stays free for the Python workers, which hold decoded
+    postings and Arrow batches outside the JVM heap."""
+    env = os.environ.get("LSS_DRIVER_MEM")
+    if env:
+        return env
+    avail_kb = 0
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemAvailable:"):
+                avail_kb = int(line.split()[1])
+    return f"{max(1024, avail_kb // 1024 // 2)}m"
+
+
 def make_spark(cpus: int):
     from pyspark.sql import SparkSession
 
@@ -49,7 +72,7 @@ def make_spark(cpus: int):
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("LSS_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_mem())
         # throughput collector for a batch workload: measured 38% less
         # total task CPU than G1 on the index build (G1 write barriers
         # tax the mutators; pauses are irrelevant to batch jobs) — on a
@@ -296,7 +319,7 @@ def bench_engine(spark) -> tuple[dict[str, float], dict[str, float]]:
 
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = host_cpus()
     sf = float(sf_dir.rstrip("/").split("sf")[-1]) if "sf" in sf_dir else 0.0
 
     spark = make_spark(cpus)
@@ -318,6 +341,7 @@ def main():
         "queries": queries,
         "sf": sf,
         "cpus": cpus,
+        "driver_memory": spark.conf.get("spark.driver.memory"),
         "build_docs": N_BUILD_DOCS,
         "n_bm25_queries": N_QUERIES,
         **extras,

@@ -491,8 +491,9 @@ def add_indexes(dst_root: str, src_root: str,
     addIndexes them — each fold is one columnar rewrite of the shard's
     blocks plus a dict merge, never a global re-sort.
 
-    Both indexes must share the analyzer config (same contract as
-    Lucene). Tombstones carry over shifted. Returns the new manifest.
+    Both indexes must share the analyzer config and field list (same
+    contract as Lucene); collection stats, per-field ones included,
+    add up. Tombstones carry over shifted. Returns the new manifest.
     Crash mid-fold: rerun with the same src — staged dirs are named by
     a src-derived token and replaced wholesale (the production seam is
     one Iceberg append commit).
@@ -506,7 +507,7 @@ def add_indexes(dst_root: str, src_root: str,
     dst = SegmentIndex(dst_root, spark)
     src_idx = SegmentIndex(src_root, spark)
     man_d, man_s = dst.manifest(), src_idx.manifest()
-    for k in ("stop_words", "max_token_length", "block_size"):
+    for k in ("stop_words", "max_token_length", "block_size", "fields"):
         if man_d.get(k) != man_s.get(k):
             raise ValueError(f"addIndexes config mismatch on {k!r}: "
                              f"{man_d.get(k)} vs {man_s.get(k)}")
@@ -612,6 +613,16 @@ def add_indexes(dst_root: str, src_root: str,
     stats_root = os.path.join(dst_root, "stats")
     shutil.rmtree(stats_root)
     os.rename(os.path.join(dst_root, "stats.tmp"), stats_root)
+    fs_d = man_d.get("field_stats") or {}
+    fs_s = man_s.get("field_stats") or {}
+    if fs_d or fs_s:
+        # per-field collection stats sum like the flat ones; a field
+        # no doc of one side carries has no entry there
+        man_d["field_stats"] = {
+            f: {key: sum(int(fs.get(f, {}).get(key, 0))
+                         for fs in (fs_d, fs_s))
+                for key in ("doc_count", "sum_ttf")}
+            for f in {**fs_d, **fs_s}}
     man_d.update(doc_count=new_count, sum_ttf=new_sttf,
                  n_segments=S + int(man_s["n_segments"]),
                  updated_wall=round(time.time(), 3))

@@ -3,10 +3,15 @@
 One evaluator serves every query shape and every entry point: the
 driver compiles each (rewritten) query into a plain-tuple tree with
 its BM25 weights resolved (``SegmentSearcher._compile_general``), and
-a per-segment leaf evaluates the trees over whole decoded posting
-lists (``_eval_node``) — vectorized, exhaustive within a segment (a
-BulkScorer without dynamic pruning), so results are rank- and
-score-identical to IndexSearcher/OracleIndex by construction.
+a per-segment step (``_segment_topk``) evaluates the trees over whole
+decoded posting lists (``_eval_node``) — vectorized, exhaustive within
+a segment (a BulkScorer without dynamic pruning), so results are rank-
+and score-identical to IndexSearcher/OracleIndex by construction.
+
+One decoded-segment structure feeds it: ``_SegGroups`` decodes a
+segment's block rows in one vectorized pass into per-term arrays
+(docids, unit scores, tfs, norms; positions on first use). Two
+renderings read through it.
 
 Distributed rendering (``search_df`` / ``search_many_df``):
 
@@ -17,16 +22,17 @@ Distributed rendering (``search_df`` / ``search_many_df``):
     partitions, shuffles that small set by segment, and runs one
     Arrow-batched ``applyInPandas`` per segment = Lucene's per-leaf
     ``BulkScorer`` (search/IndexSearcher.java:634-656). Inside it
-    every scanned (term, segment) is decoded once in one vectorized
-    pass (``_bulk_fill_all``), then each query's tree is evaluated,
-    deleted docs masked, and cut to per-segment top-k.
+    the segment's rows decode once (``_SegGroups``), then each query's
+    tree is evaluated, deleted docs masked, and cut to per-segment
+    top-k (``_segment_topk``).
   * merge = TopDocs.merge (TopDocs.java:188-230) by (score desc,
     docid asc): one ``orderBy.limit(k)`` for a single query, a
     per-query window for a batch.
 
-Driver-local rendering (``search_local``): the same compiled tree and
-``_eval_node`` over a bytes-capped cache of block rows — no Spark job
-once a query's terms are hot.
+Driver-local rendering (``search_local``): a bytes-capped per-term
+cache filled from ``_SegGroups`` decodes of one pushed-down scan, the
+same ``_segment_topk`` per segment, and a local cross-segment merge —
+no Spark job once a query's terms are hot.
 
 Scoring float discipline: per-term float32 scores, per-doc sums
 accumulated in float64 and cast to float32 once (WANDScorer.java:445-453).
@@ -75,212 +81,105 @@ def _cache_for(cache, qterm: str):
     return cache
 
 
-class _TermBlocks:
-    """Block rows of one term within one segment, with memoized
-    whole-list decodes.
+class _SegGroups(dict):
+    """One segment's postings, decoded ONCE: {qterm: entry}. The only
+    decoded-postings structure — the Spark leaf
+    (:func:`segment_eval_topk`) evaluates over one per segment, and the
+    serving cache (``SegmentSearcher._local_tbs``) is filled from them.
 
-    Weight-free: decoded scores are the unit tf-partials (weight 1); a
-    query's float32 weight multiplies in afterwards, which is
+    Construction sorts the scanned block rows by (term, block_ord) and
+    decodes them in one vectorized pass — the leaf-level counterpart of
+    Lucene's bulk block decode (ForUtil.java:41): one
+    codec.bulk_decode_seqs call decodes every docid-delta plane, one
+    decodes every tf plane, one frombuffer covers all norm bytes, and
+    one score_terms call per field cache scores everything; docids come
+    from a single segmented cumsum (block starts corrected by first -
+    previous-last, which the block metadata carries).
+
+    Each term's entry is a list of slices of those arrays::
+
+        [docids asc, unit scores, tfs, norm bytes,
+         block ns, block position buffers, positions]
+
+    Scores are weight-free unit tf-partials (weight 1); a query's
+    float32 weight multiplies in afterwards, which is
     BM25Scorer.partial's discipline (weight * float32(tf_part) in
-    float32). This makes one decode shareable across a whole query
-    batch."""
+    float32), so one decode serves a whole query batch. Positions
+    decode on first use (:func:`_positions`); the buffers are None when
+    the scan did not carry the positions column, which the plan adds
+    whenever a tree has a positional node."""
 
-    __slots__ = ("first", "last", "n", "dbufs", "tbufs", "nbufs", "pbufs",
-                 "nblocks", "cache", "_all", "_raw_all")
-
-    def __init__(self, rows: pd.DataFrame, cache: np.ndarray):
-        self.cache = cache
-        self._all = None      # memoized decode_all
-        self._raw_all = None  # memoized decode_raw_all
-        rows = rows.sort_values("block_ord")
-        self.first = rows["first_docid"].to_numpy(dtype=np.int64)
-        self.last = rows["last_docid"].to_numpy(dtype=np.int64)
-        self.n = rows["n"].to_numpy(dtype=np.int64)
-        self.dbufs = rows["docids"].tolist()
-        self.tbufs = rows["tfs"].tolist()
-        self.nbufs = rows["norms"].tolist()
-        # present only when the scan carried the positions column
-        # (phrase queries in the batch — column-pruned away otherwise)
-        self.pbufs = (rows["positions"].tolist()
-                      if "positions" in rows.columns else None)
-        self.nblocks = len(rows)
-
-    @classmethod
-    def from_slices(cls, first, last, n, dbufs, tbufs, nbufs, pbufs, cache):
-        """Zero-pandas constructor from pre-sliced per-term arrays
-        (_SegGroups) — the per-term ``sort_values`` + column boxing of
-        the DataFrame path cost ~0.2 ms per term, which dominated
-        853-term batched leaves."""
-        tb = cls.__new__(cls)
-        tb.cache = cache
-        tb._all = None
-        tb._raw_all = None
-        tb.first = first
-        tb.last = last
-        tb.n = n
-        tb.dbufs = dbufs
-        tb.tbufs = tbufs
-        tb.nbufs = nbufs
-        tb.pbufs = pbufs
-        tb.nblocks = len(dbufs)
-        return tb
-
-    def decode(self, i: int) -> tuple[np.ndarray, np.ndarray]:
-        """(docids, per-doc float32 UNIT scores) of block i, scored with
-        the term's FIELD cache."""
-        n = int(self.n[i])
-        docids = codec.decode_docids(int(self.first[i]), self.dbufs[i], n)
-        tfs = codec.decode_seq(self.tbufs[i], n).astype(np.int64)
-        norms = np.frombuffer(self.nbufs[i], dtype=np.uint8).astype(np.int64)
-        scores = bm25.score_terms(tfs, norms, np.float32(1.0), self.cache)
-        return docids, scores
-
-    def decode_all(self) -> tuple[np.ndarray, np.ndarray]:
-        """Whole-posting-list decode: (docids asc, unit scores) —
-        memoized, so a query batch decodes each (term, segment) ONCE
-        no matter how many queries touch the term."""
-        if self._all is None:
-            if not self.nblocks:
-                self._all = (np.zeros(0, dtype=np.int64),
-                             np.zeros(0, dtype=np.float32))
-            else:
-                ds, ss = zip(*(self.decode(i) for i in range(self.nblocks)))
-                self._all = (np.concatenate(ds), np.concatenate(ss))
-        return self._all
-
-    def decode_raw_all(self) -> tuple[np.ndarray, np.ndarray, np.ndarray, list]:
-        """Whole-list raw decode: (docids, tfs, norm bytes, positions)
-        — memoized like :meth:`decode_all`."""
-        if self._raw_all is not None:
-            return self._raw_all
-        ds, ts, ns, ps = [], [], [], []
-        for i in range(self.nblocks):
-            n = int(self.n[i])
-            d = codec.decode_docids(int(self.first[i]), self.dbufs[i], n)
-            tfs = codec.decode_seq(self.tbufs[i], n).astype(np.int64)
-            nb = np.frombuffer(self.nbufs[i], dtype=np.uint8).astype(np.int64)
-            ds.append(d)
-            ts.append(tfs)
-            ns.append(nb)
-            if self.pbufs is not None:
-                ps.extend(codec.decode_positions(self.pbufs[i], tfs))
-        if not ds:
-            self._raw_all = (np.zeros(0, dtype=np.int64),
-                             np.zeros(0, dtype=np.int64),
-                             np.zeros(0, dtype=np.int64), [])
-        else:
-            self._raw_all = (np.concatenate(ds), np.concatenate(ts),
-                             np.concatenate(ns), ps)
-        return self._raw_all
-
-
-def _bulk_fill_all(tbs: list["_TermBlocks"]) -> None:
-    """Populate ``_all`` (and, when no positions column rides,
-    ``_raw_all``) for MANY _TermBlocks in one vectorized pass — the
-    leaf-level counterpart of Lucene's bulk block decode
-    (ForUtil.java:41). One codec.bulk_decode_seqs call decodes every
-    term's docid-delta planes, one decodes every tf plane, one
-    frombuffer covers all norm bytes, and one score_terms call per
-    field cache scores everything; docids come from a single segmented
-    cumsum (block starts corrected by first - previous-last, which the
-    block metadata carries). Value-identical to per-term decode_all:
-    same decode functions, same float32 elementwise scoring."""
-    work = [tb for tb in tbs
-            if tb is not None and tb._all is None and tb.nblocks]
-    if not work:
-        return
-    dbufs: list = []
-    tbufs: list = []
-    nbufs: list = []
-    ns_parts, first_parts, last_parts = [], [], []
-    counts = np.empty(len(work), dtype=np.int64)
-    for i, tb in enumerate(work):
-        dbufs += tb.dbufs
-        tbufs += tb.tbufs
-        nbufs += tb.nbufs
-        ns_parts.append(tb.n)
-        first_parts.append(tb.first)
-        last_parts.append(tb.last)
-        counts[i] = int(tb.n.sum())
-    ns = np.concatenate(ns_parts)
-    firsts = np.concatenate(first_parts)
-    lasts = np.concatenate(last_parts)
-    deltas = codec.bulk_decode_seqs(dbufs, ns).astype(np.int64)
-    # segmented cumsum: each block's encoded delta[0] is 0; replacing
-    # it with (first - previous block's last) makes ONE global cumsum
-    # yield every block's absolute docids
-    starts = np.cumsum(ns) - ns
-    deltas[starts] = firsts - np.concatenate(([0], lasts[:-1]))
-    docids_flat = np.cumsum(deltas)
-    tfs_flat = codec.bulk_decode_seqs(tbufs, ns).astype(np.int64)
-    norms_flat = np.frombuffer(b"".join(nbufs), dtype=np.uint8) \
-        .astype(np.int64)
-    # one scoring call per distinct field cache (usually one)
-    scores_flat = np.empty(docids_flat.size, dtype=np.float32)
-    offs = np.cumsum(counts) - counts
-    by_cache: dict[int, list[int]] = {}
-    caches_seen: dict[int, np.ndarray] = {}
-    for i, tb in enumerate(work):
-        by_cache.setdefault(id(tb.cache), []).append(i)
-        caches_seen[id(tb.cache)] = tb.cache
-    one = np.float32(1.0)
-    for cid, idxs in by_cache.items():
-        if len(idxs) == len(work):
-            scores_flat[:] = bm25.score_terms(
-                tfs_flat, norms_flat, one, caches_seen[cid])
-            break
-        sl = np.concatenate([
-            np.arange(offs[i], offs[i] + counts[i]) for i in idxs])
-        scores_flat[sl] = bm25.score_terms(
-            tfs_flat[sl], norms_flat[sl], one, caches_seen[cid])
-    for i, tb in enumerate(work):
-        sl = slice(int(offs[i]), int(offs[i] + counts[i]))
-        d = docids_flat[sl]
-        tb._all = (d, scores_flat[sl])
-        if tb.pbufs is None:
-            tb._raw_all = (d, tfs_flat[sl], norms_flat[sl], [])
-
-
-class _SegGroups:
-    """One segment's scanned block rows, sorted ONCE by (term,
-    block_ord) and sliced per term with numpy — replaces the
-    per-term pandas groupby/sort_values machinery in the leaves
-    (measured: ~0.2 ms/term of frame overhead at ~1 block/term)."""
-
-    __slots__ = ("first", "last", "n", "dbufs", "tbufs", "nbufs",
-                 "pbufs", "slices")
-
-    def __init__(self, pdf: pd.DataFrame):
+    def __init__(self, pdf: pd.DataFrame, caches):
+        super().__init__()
+        if not len(pdf):
+            return
         pdf = pdf.sort_values(["term", "block_ord"], kind="stable")
         terms = pdf["term"].to_numpy()
-        self.first = pdf["first_docid"].to_numpy(dtype=np.int64)
-        self.last = pdf["last_docid"].to_numpy(dtype=np.int64)
-        self.n = pdf["n"].to_numpy(dtype=np.int64)
-        self.dbufs = pdf["docids"].tolist()
-        self.tbufs = pdf["tfs"].tolist()
-        self.nbufs = pdf["norms"].tolist()
-        self.pbufs = (pdf["positions"].tolist()
-                      if "positions" in pdf.columns else None)
-        nrows = len(terms)
-        if nrows:
-            starts = np.flatnonzero(
-                np.r_[True, terms[1:] != terms[:-1]])
-            ends = np.r_[starts[1:], nrows]
-            self.slices = {terms[st]: (int(st), int(en))
-                           for st, en in zip(starts, ends)}
+        ns = pdf["n"].to_numpy(dtype=np.int64)
+        firsts = pdf["first_docid"].to_numpy(dtype=np.int64)
+        lasts = pdf["last_docid"].to_numpy(dtype=np.int64)
+        deltas = codec.bulk_decode_seqs(pdf["docids"].tolist(), ns) \
+            .astype(np.int64)
+        # segmented cumsum: each block's encoded delta[0] is 0; replacing
+        # it with (first - previous block's last) makes ONE global cumsum
+        # yield every block's absolute docids
+        starts = np.cumsum(ns) - ns
+        deltas[starts] = firsts - np.r_[0, lasts[:-1]]
+        docids = np.cumsum(deltas)
+        tfs = codec.bulk_decode_seqs(pdf["tfs"].tolist(), ns) \
+            .astype(np.int64)
+        norms = np.frombuffer(b"".join(pdf["norms"].tolist()),
+                              dtype=np.uint8).astype(np.int64)
+        pbufs = (pdf["positions"].tolist()
+                 if "positions" in pdf.columns else None)
+        # per-term row range [r0, r1) and posting range [p0, p1)
+        r0 = np.flatnonzero(np.r_[True, terms[1:] != terms[:-1]])
+        r1 = np.r_[r0[1:], terms.size]
+        p0 = starts[r0]
+        p1 = np.r_[p0[1:], docids.size]
+        uterms = terms[r0].tolist()
+        # one scoring call per field cache (usually one)
+        by_field: dict[str, list[int]] = {}
+        for i, t in enumerate(uterms):
+            by_field.setdefault(_field_of(t), []).append(i)
+        one = np.float32(1.0)
+        if len(by_field) == 1:
+            scores = bm25.score_terms(tfs, norms, one,
+                                      _cache_for(caches, uterms[0]))
         else:
-            self.slices = {}
+            scores = np.empty(docids.size, dtype=np.float32)
+            for idxs in by_field.values():
+                sl = np.concatenate([np.arange(p0[i], p1[i])
+                                     for i in idxs])
+                scores[sl] = bm25.score_terms(
+                    tfs[sl], norms[sl], one,
+                    _cache_for(caches, uterms[idxs[0]]))
+        for t, a, b, ra, rb in zip(uterms, p0.tolist(), p1.tolist(),
+                                   r0.tolist(), r1.tolist()):
+            self[t] = [docids[a:b], scores[a:b], tfs[a:b], norms[a:b],
+                       ns[ra:rb],
+                       pbufs[ra:rb] if pbufs is not None else None, None]
 
-    def get(self, term: str, cache) -> "_TermBlocks | None":
-        se = self.slices.get(term)
-        if se is None:
-            return None
-        st, en = se
-        return _TermBlocks.from_slices(
-            self.first[st:en], self.last[st:en], self.n[st:en],
-            self.dbufs[st:en], self.tbufs[st:en], self.nbufs[st:en],
-            self.pbufs[st:en] if self.pbufs is not None else None,
-            cache)
+
+def _positions(e: list) -> list:
+    """Per-doc position arrays of a :class:`_SegGroups` term entry,
+    decoded block by block (codec.decode_positions) the first time a
+    positional node asks, then memoized in the entry."""
+    if e[6] is None:
+        ps: list = []
+        off = 0
+        for n, buf in zip(e[4].tolist(), e[5]):
+            ps.extend(codec.decode_positions(buf, e[2][off:off + n]))
+            off += n
+        e[6] = ps
+    return e[6]
+
+
+def _own(e: list) -> list:
+    """A term entry holding COPIES of its group's array slices, so a
+    term evicted from the serving cache frees its decoded arrays
+    instead of pinning the whole segment's."""
+    return [a.copy() for a in e[:5]] + e[5:]
 
 
 def _phrase_freqs(pos_lists: list[list[np.ndarray]], offs, slop: int) -> np.ndarray:
@@ -339,7 +238,10 @@ class SegmentSearcher:
     booleans, constant-score, synonyms, multi-phrase, spans,
     intervals, automatons) is rewritten, compiled driver-side into a
     plain-tuple tree (``_compile``) and evaluated per segment over
-    whole decoded posting lists (``_eval_node``). Two renderings:
+    whole decoded posting lists (``_eval_node``). One decoded-segment
+    structure (``_SegGroups``: one bulk decode per segment) and one
+    per-segment evaluate → tombstone mask → top-k step
+    (``_segment_topk``) serve two renderings:
 
     * distributed — ``search_df``/``search_many_df`` share one plan
       (``_plan``: term-pruned block scan + Bloom segment exclusion)
@@ -347,8 +249,9 @@ class SegmentSearcher:
       segment) decodes once per batch); only the merge differs —
       ``orderBy.limit(k)`` for one query, a per-query window for a
       batch;
-    * driver-local — ``search_local`` evaluates the same compiled tree
-      over a bytes-capped block cache, no Spark job once hot.
+    * driver-local — ``search_local`` reads a bytes-capped per-term
+      cache filled from ``_SegGroups`` decodes and merges across
+      segments in the driver, no Spark job once hot.
 
     Multi-term queries (prefix/wildcard/regexp/fuzzy/range/set and
     span wrappers) rewrite against the v2 dictionary first
@@ -906,16 +809,18 @@ class SegmentSearcher:
     #: serving-mode block cache budget, in bytes of ENCODED posting
     #: buffers (a Solr serving core's block cache is bounded/LRU the
     #: same way — an unbounded cache would accumulate the postings of
-    #: every term ever queried for the searcher's lifetime). Decode
-    #: memos (_TermBlocks._all/_raw_all) are dropped with their term
-    #: on eviction; evict-and-refetch is one pushed-down scan.
+    #: every term ever queried for the searcher's lifetime). Each term's
+    #: decoded arrays are its own copies and die with it on eviction;
+    #: evict-and-refetch is one pushed-down scan.
     LOCAL_CACHE_BYTES = 256 << 20
 
     def _local_tbs(self, qterms: set[str]) -> dict:
-        """Fetch (and cache) the given terms' block rows driver-side:
-        {qterm: {segment: _TermBlocks}}. One pushed-down scan per cache
-        miss batch; bytes-capped LRU over terms (LOCAL_CACHE_BYTES) —
-        the live query's own terms are never evicted."""
+        """Fetch (and cache) the given terms' decoded postings
+        driver-side: {qterm: {segment: _SegGroups entry}}. One
+        pushed-down scan per cache-miss batch, decoded per segment by
+        :class:`_SegGroups`; bytes-capped LRU over terms
+        (LOCAL_CACHE_BYTES) — the live query's own terms are never
+        evicted."""
         if not hasattr(self, "_local_cache"):
             import collections
 
@@ -924,22 +829,20 @@ class SegmentSearcher:
         cache = self._local_cache
         missing = sorted(t for t in qterms if t not in cache)
         if missing:
+            bufs = ["docids", "tfs", "norms", "positions"]
             pdf = (self.blocks.where(_str_in("term", missing))
                    .select("segment", "term", "block_ord", "n",
-                           "first_docid", "last_docid", "docids", "tfs",
-                           "norms", "positions").toPandas())
+                           "first_docid", "last_docid", *bufs).toPandas())
             maps: dict[str, dict] = {t: {} for t in missing}
-            sizes: dict[str, int] = {t: 0 for t in missing}
-            for (t, seg), sub in pdf.groupby(["term", "segment"]):
-                maps[t][int(seg)] = _TermBlocks(
-                    sub, _cache_for(self.caches, t))
-                sizes[t] += int(sum(
-                    len(b) for col in ("docids", "tfs", "norms",
-                                       "positions")
-                    for b in sub[col] if b is not None))
+            for seg, sub in pdf.groupby("segment"):
+                for t, e in _SegGroups(sub, self.caches).items():
+                    maps[t][int(seg)] = _own(e)
+            sizes = sum(pdf[c].map(lambda b: 0 if b is None else len(b))
+                        for c in bufs).groupby(pdf["term"]).sum()
             for t in missing:
-                cache[t] = (sizes[t], maps[t])
-                self._local_cache_bytes += sizes[t]
+                sz = int(sizes.get(t, 0))
+                cache[t] = (sz, maps[t])
+                self._local_cache_bytes += sz
         # LRU touch, then evict cold terms beyond the budget
         for t in qterms:
             if t in cache:
@@ -954,59 +857,53 @@ class SegmentSearcher:
 
     def _local_norms(self, field: str) -> dict:
         """Driver-cached {docid: norm_byte} of one field's per-doc
-        norm rows (cross-field span serving path). One byte per
-        (doc, field) — the .nvd-file role; cached for the searcher's
-        lifetime like a Solr core's norms reader."""
+        norm rows (cross-field span serving path) — the same rows and
+        reader the leaf scan uses (``_norm_rows_pred`` /
+        ``_norm_maps_from_rows``). One byte per (doc, field) — the
+        .nvd-file role; cached for the searcher's lifetime like a Solr
+        core's norms reader."""
         if not hasattr(self, "_local_norm_cache"):
             self._local_norm_cache: dict = {}
         nm = self._local_norm_cache.get(field)
         if nm is None:
             raw = self.index.spark.read.parquet(self.index.blocks_path)
-            pred = ((F.col("kind") == 1) if field == "content"
-                    else ((F.col("kind") == 2)
-                          & (F.col("term") == field)))
-            pdf = raw.where(pred).select("first_docid", "norms") \
-                .toPandas()
-            nm = {int(d): nb[0] for d, nb in
-                  zip(pdf["first_docid"].to_numpy(), pdf["norms"])}
+            pdf = (raw.where(_norm_rows_pred([field], F.lit(False)))
+                   .select("kind", "term", "first_docid", "norms")
+                   .toPandas())
+            nm = _norm_maps_from_rows(pdf, [field])[field]
             self._local_norm_cache[field] = nm
         return nm
 
     def search_local(self, q: Query, k: int = 10) -> list[TopDoc]:
         """Single-query SERVING path: evaluate entirely in the driver
-        over cached compressed blocks — no Spark job once the query's
+        over cached decoded postings — no Spark job once the query's
         terms are hot. This is the latency answer to the per-job floor
         of the distributed paths (a Solr core serving reads from its
         own block cache the same way); the distributed paths remain
         the throughput/batch answer. Rank/score-identical: the same
-        compile step (:meth:`_compile`) and _eval_node the executors
-        run. On a hot bounded cache the whole-list decode memos make
-        repeat queries nearly free."""
+        compile step (:meth:`_compile`), decoded-segment structure
+        (:class:`_SegGroups`) and per-segment evaluation
+        (:func:`_segment_topk`) the leaf runs; only the cross-segment
+        merge is local."""
         tree = self._compile([q])[0]
         if tree[0] == "none":
             return []
         per_term = self._local_tbs(_tree_terms(tree))
         norm_maps = {f: self._local_norms(f)
                      for f in _tree_norm_fields(tree)}
-        segs = sorted({s for m in per_term.values() for s in m})
+        get_norms = norm_maps.get if norm_maps else None
         deleted = self.deleted if self.deleted.size else None
-        top_d = np.zeros(0, dtype=np.int64)
-        top_s = np.zeros(0, dtype=np.float32)
-        for seg in segs:
-            tbs = {t: m.get(seg) for t, m in per_term.items()}
-
-            def get_tb(t, _tbs=tbs):
-                return _tbs.get(t)
-
-            d, sc = _eval_node(tree, get_tb, self.caches,
-                               norm_maps.get if norm_maps else None)
-            if deleted is not None and d.size:
-                live = ~np.isin(d, deleted)
-                d, sc = d[live], sc[live]
-            if d.size:
-                cd = np.concatenate([top_d, d])
-                cs = np.concatenate([top_s, sc])
-                top_d, top_s = _topk_arrays(cd, cs, k)
+        ds, ss = [], []
+        for seg in {s for m in per_term.values() for s in m}:
+            seg_terms = {t: m[seg] for t, m in per_term.items() if seg in m}
+            for _qi, d, sc in _segment_topk([tree], seg_terms.get,
+                                            self.caches, k, deleted,
+                                            get_norms):
+                ds.append(d)
+                ss.append(sc)
+        if not ds:
+            return []
+        top_d, top_s = _topk_arrays(np.concatenate(ds), np.concatenate(ss), k)
         return [TopDoc(int(d), float(sv))
                 for d, sv in zip(top_d, top_s)]
 
@@ -1247,7 +1144,8 @@ def _topk_arrays(d: np.ndarray, s: np.ndarray, k: int):
 
 def _eval_node(node, get_tb, caches, get_norms=None):
     """Evaluate one compiled node over a segment: (docids unique asc,
-    float32 scores). ``get_tb(qterm) -> _TermBlocks | None``;
+    float32 scores). ``get_tb(qterm)`` returns the term's
+    :class:`_SegGroups` entry, or None when it has no postings here;
     ``get_norms(field) -> {docid: norm_byte}`` serves cross-field span
     nodes (None when the plan carries no such node)."""
     empty = (np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.float32))
@@ -1257,11 +1155,10 @@ def _eval_node(node, get_tb, caches, get_norms=None):
 
     if kind == "term":
         _, qterm, w = node
-        tb = get_tb(qterm)
-        if tb is None:
+        e = get_tb(qterm)
+        if e is None:
             return empty
-        d, u = tb.decode_all()
-        return d, (np.float32(w) * u).astype(np.float32)
+        return e[0], (np.float32(w) * e[1]).astype(np.float32)
 
     if kind == "syn":
         # pseudo-term: freq = Σ member tf, ONE similarity call
@@ -1269,13 +1166,12 @@ def _eval_node(node, get_tb, caches, get_norms=None):
         _, qterms, w = node
         ds, ts, ns = [], [], []
         for t in qterms:
-            tb = get_tb(t)
-            if tb is None:
+            e = get_tb(t)
+            if e is None:
                 continue
-            d, tfs, nb, _ = tb.decode_raw_all()
-            ds.append(d)
-            ts.append(tfs)
-            ns.append(nb)
+            ds.append(e[0])
+            ts.append(e[2])
+            ns.append(e[3])
         if not ds:
             return empty
         d_cat = np.concatenate(ds)
@@ -1292,11 +1188,11 @@ def _eval_node(node, get_tb, caches, get_norms=None):
         cand = None
         per_term = []
         for t in qterms:
-            tb = get_tb(t)
-            if tb is None:
+            e = get_tb(t)
+            if e is None:
                 return empty
-            d, tfs, nb, poss = tb.decode_raw_all()
-            per_term.append((d, nb, poss))
+            d = e[0]
+            per_term.append((d, e[3], _positions(e)))
             cand = d if cand is None else cand[
                 np.isin(cand, d, assume_unique=True)]
             if cand.size == 0:
@@ -1324,11 +1220,11 @@ def _eval_node(node, get_tb, caches, get_norms=None):
             m: dict = {}
             any_present = False
             for t in slot:
-                tb = get_tb(t)
-                if tb is None:
+                e = get_tb(t)
+                if e is None:
                     continue
                 any_present = True
-                d, _tfs, nb, poss = tb.decode_raw_all()
+                d, nb, poss = e[0], e[3], _positions(e)
                 for j in range(d.size):
                     did = int(d[j])
                     prev = m.get(did)
@@ -1363,10 +1259,10 @@ def _eval_node(node, get_tb, caches, get_norms=None):
         by_doc: dict = {}
         norm_map: dict = {}
         for f, t in pairs:
-            tb = get_tb(_qual(f, t))
-            if tb is None:
+            e = get_tb(_qual(f, t))
+            if e is None:
                 continue
-            d, _tfs, nb, poss = tb.decode_raw_all()
+            d, nb, poss = e[0], e[3], _positions(e)
             key = t if bare_keys else (f, t)
             for j in range(d.size):
                 did = int(d[j])
@@ -1415,12 +1311,12 @@ def _eval_node(node, get_tb, caches, get_norms=None):
         for tid, qt in id_terms:
             if qt is None:
                 continue
-            tb = get_tb(qt)
-            if tb is None:
+            e = get_tb(qt)
+            if e is None:
                 continue
             if cache0 is None:
                 cache0 = _cache_for(caches, qt)
-            d, _tfs, nb, poss = tb.decode_raw_all()
+            d, nb, poss = e[0], e[3], _positions(e)
             for j in range(d.size):
                 did = int(d[j])
                 by_doc.setdefault(did, []).extend(
@@ -1547,20 +1443,38 @@ def _eval_node(node, get_tb, caches, get_norms=None):
 _LEAF_SCHEMA = "qidx int, docid long, score float"
 
 
+def _segment_topk(trees: list, get_tb, caches, k: int | None,
+                  deleted: np.ndarray | None, get_norms=None) -> list:
+    """Per-segment evaluate → tombstone mask → top-k of every compiled
+    tree: [(qidx, docids, scores)] for the trees with hits. Deleted
+    docs are masked BEFORE the cut — masking after the per-segment
+    truncation would drop docs that should be promoted — and the
+    survivors are cut to k by (score desc, docid asc); ``k=None`` keeps
+    every hit."""
+    out = []
+    for qi, tree in enumerate(trees):
+        if tree[0] == "none":
+            continue
+        d, sc = _eval_node(tree, get_tb, caches, get_norms)
+        if deleted is not None and d.size:
+            live = ~np.isin(d, deleted)
+            d, sc = d[live], sc[live]
+        d, sc = _topk_arrays(d, sc, k)
+        if d.size:
+            out.append((qi, d, sc))
+    return out
+
+
 def segment_eval_topk(pdf: pd.DataFrame, trees: list, caches,
                       k: int | None, deleted: np.ndarray | None = None,
                       norm_fields=()) -> pd.DataFrame:
     """The per-segment leaf: top-k rows (qidx, docid, score) of every
     compiled tree over one segment's scanned block rows.
 
-    Every scanned (term, segment) is decoded ONCE in one vectorized
-    pass (ForUtil.java:41 bulk-decode role), then each tree is
-    evaluated, deleted docs (tombstones) are masked BEFORE the top-k
-    cut — masking after the per-segment truncation would drop docs
-    that should be promoted — and the survivors cut to k by (score
-    desc, docid asc); ``k=None`` keeps every hit. ``norm_fields``
-    names the fields whose per-doc norm rows (kind 1/2) ride in
-    ``pdf`` for cross-field span nodes (see _tree_norm_fields)."""
+    The rows decode ONCE into a :class:`_SegGroups`, then
+    :func:`_segment_topk` evaluates, masks and cuts every tree.
+    ``norm_fields`` names the fields whose per-doc norm rows (kind 1/2)
+    ride in ``pdf`` for cross-field span nodes (see _tree_norm_fields)."""
     from lucene_solr_spark.util.env import retain_malloc
 
     retain_malloc()
@@ -1568,28 +1482,16 @@ def segment_eval_topk(pdf: pd.DataFrame, trees: list, caches,
     if norm_fields:
         get_norms = _norm_maps_from_rows(pdf, norm_fields).get
         pdf = pdf[pdf["kind"] == 0]
-    groups = _SegGroups(pdf)
-    tbs = {t: groups.get(t, _cache_for(caches, t)) for t in groups.slices}
-    _bulk_fill_all(list(tbs.values()))
-    out_q, out_d, out_s = [], [], []
-    for qi, tree in enumerate(trees):
-        if tree[0] == "none":
-            continue
-        d, sc = _eval_node(tree, tbs.get, caches, get_norms)
-        if deleted is not None and d.size:
-            live = ~np.isin(d, deleted)
-            d, sc = d[live], sc[live]
-        d, sc = _topk_arrays(d, sc, k)
-        if d.size:
-            out_q.append(np.full(d.size, qi, dtype=np.int32))
-            out_d.append(d)
-            out_s.append(sc)
-    if not out_q:
+    hits = _segment_topk(trees, _SegGroups(pdf, caches).get, caches, k,
+                         deleted, get_norms)
+    if not hits:
         return pd.DataFrame({
             "qidx": pd.Series([], dtype="int32"),
             "docid": pd.Series([], dtype="int64"),
             "score": pd.Series([], dtype="float32")})
     return pd.DataFrame({
-        "qidx": np.concatenate(out_q),
-        "docid": np.concatenate(out_d),
-        "score": pd.Series(np.concatenate(out_s), dtype="float32")})
+        "qidx": np.concatenate([np.full(d.size, qi, dtype=np.int32)
+                                for qi, d, _s in hits]),
+        "docid": np.concatenate([d for _qi, d, _s in hits]),
+        "score": pd.Series(np.concatenate([sc for _qi, _d, sc in hits]),
+                           dtype="float32")})

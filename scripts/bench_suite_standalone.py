@@ -27,13 +27,14 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default=os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get(
-        "SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int,
+                    help="default: $SPARK_GRAFT_CPUS, else CPU affinity")
     args = ap.parse_args()
 
     sys.path.insert(0, REPO)
     import bench
 
+    args.cpus = args.cpus or bench.host_cpus()
     spark = bench.make_spark(args.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     t0 = time.time()

@@ -108,3 +108,54 @@ def test_config_mismatch_rejected(spark, tmp_path_factory):
                         stop_words=frozenset({"xyz"}))
     with pytest.raises(ValueError, match="config mismatch"):
         add_indexes(a, b, spark)
+
+
+def _with_title(pdf):
+    return pdf.assign(title=[
+        "%s file of %s" % (lang, path.split("/")[-1].split(".")[0])
+        for lang, path in zip(pdf["lang"], pdf["path"])])
+
+
+def test_multifield_fold_matches_full_build(spark, tmp_path_factory):
+    """Per-field collection stats (manifest ``field_stats``) fold like
+    the flat ones: a two-half multi-field fold scores title-field
+    queries exactly as one build over the whole corpus."""
+    pdf = _with_title(corpus_pandas(120).sort_values(
+        ["repo", "path", "commit"]).reset_index(drop=True))
+    kw = dict(stop_words=ENGLISH_STOP_WORDS, docs_per_segment=32,
+              fields=("content", "title"))
+    roots = {n: str(tmp_path_factory.mktemp(f"addmf_{n}"))
+             for n in ("full", "dst", "src")}
+    build_segment_index(spark.createDataFrame(pdf), roots["full"], **kw)
+    build_segment_index(spark.createDataFrame(pdf.iloc[:60]), roots["dst"],
+                        **kw)
+    build_segment_index(spark.createDataFrame(pdf.iloc[60:]), roots["src"],
+                        **kw)
+    man = add_indexes(roots["dst"], roots["src"], spark)
+    full = SegmentSearcher(SegmentIndex(roots["full"], spark), cache=True)
+    assert man["field_stats"] == full.manifest()["field_stats"]
+    folded = SegmentSearcher(SegmentIndex(roots["dst"], spark), cache=True)
+    langs = sorted(set(pdf["lang"]))
+    queries = [TermQuery(t, field="title") for t in ["file", *langs]]
+    queries.append(BooleanQuery.of(should=[
+        TermQuery("file", field="title"), TermQuery(langs[0], field="title"),
+        TermQuery("class")]))
+    for q in queries:
+        exp = [(d.docid, np.float32(d.score)) for d in full.search(q, 15)]
+        assert exp, q
+        got = [(d.docid, np.float32(d.score)) for d in folded.search(q, 15)]
+        assert got == exp, q
+
+
+def test_fields_mismatch_rejected(spark, tmp_path_factory):
+    pdf = _with_title(corpus_pandas(40).sort_values(
+        ["repo", "path", "commit"]).reset_index(drop=True))
+    a = str(tmp_path_factory.mktemp("fields_a"))
+    b = str(tmp_path_factory.mktemp("fields_b"))
+    build_segment_index(spark.createDataFrame(pdf.iloc[:20]), a,
+                        stop_words=ENGLISH_STOP_WORDS,
+                        fields=("content", "title"))
+    build_segment_index(spark.createDataFrame(pdf.iloc[20:]), b,
+                        stop_words=ENGLISH_STOP_WORDS)
+    with pytest.raises(ValueError, match="config mismatch on 'fields'"):
+        add_indexes(a, b, spark)
