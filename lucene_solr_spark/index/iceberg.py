@@ -16,9 +16,9 @@ are two PHYSICAL bindings of the same schema:
     with O(manifests) metadata reads.
   * `IcebergSegmentIndex(namespace, spark)` is a drop-in
     `SegmentIndex`: same accessors, reading `spark.table(...)` instead
-    of `spark.read.parquet(dir)`. `SegmentSearcher` takes either —
-    nothing downstream changes (the seam the round-3 VERDICT asked to
-    close).
+    of `spark.read.parquet(dir)` (`segment_files()`: the `files`
+    metadata table). `SegmentSearcher` takes either — nothing
+    downstream changes (the seam the round-3 VERDICT asked to close).
   * Commit points / time travel: `create_snapshot`'s hardlink
     generations map onto Iceberg's native snapshot log —
     `read_snapshot(namespace, snapshot_id)` uses `VERSION AS OF` /
@@ -120,6 +120,14 @@ class IcebergSegmentIndex:
 
     def summaries(self) -> DataFrame:
         return self._table("blocks").where(F.col("kind") == 1)
+
+    def segment_files(self) -> dict[int, list[str]]:
+        """{segment: [data file paths]} from Iceberg's ``files`` table."""
+        out: dict[int, list[str]] = {}
+        for r in (self._table("blocks.files").where(F.col("content") == 0)
+                  .select("file_path", "partition.segment").collect()):
+            out.setdefault(int(r["segment"]), []).append(r["file_path"])
+        return out
 
     def docmap(self) -> DataFrame:
         return self._table("docmap")

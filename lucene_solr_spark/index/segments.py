@@ -46,6 +46,7 @@ merge SegmentMerger.java:96-177, commit SegmentInfos/IndexCommit.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
@@ -343,6 +344,15 @@ class SegmentIndex:
 
     def summaries(self) -> DataFrame:
         return self.spark.read.parquet(self.blocks_path).where(F.col("kind") == 1)
+
+    def segment_files(self) -> dict[int, list[str]]:
+        """{segment: [parquet paths]} — ``blocks/segment=N/*.parquet``."""
+        out: dict[int, list[str]] = {}
+        for f in sorted(glob.glob(os.path.join(
+                os.path.abspath(self.blocks_path), "segment=*", "*.parquet"))):
+            seg = os.path.basename(os.path.dirname(f))[len("segment="):]
+            out.setdefault(int(seg), []).append(f)
+        return out
 
     def docmap(self) -> DataFrame:
         return self.spark.read.parquet(self.docmap_path)

@@ -8,31 +8,27 @@ decoded posting lists (``_eval_node``) — vectorized, exhaustive within
 a segment (a BulkScorer without dynamic pruning), so results are rank-
 and score-identical to IndexSearcher/OracleIndex by construction.
 
-One decoded-segment structure feeds it: ``_SegGroups`` decodes a
-segment's block rows in one vectorized pass into per-term arrays
-(docids, unit scores, tfs, norms; positions on first use). Two
-renderings read through it.
+One reader feeds it: ``_read_segment`` reads a segment's block rows
+of the wanted terms straight from its Parquet files (pyarrow, no
+Spark), and ``_SegGroups`` decodes them in one vectorized pass into
+per-term arrays (docids, unit scores, tfs, norms; positions on first
+use). Two renderings read through them.
 
 Distributed rendering (``search_df`` / ``search_many_df``):
 
-  * leaves = segments (contiguous docID ranges). A query batch scans
-    ONLY the block rows of its terms (Parquet predicate pushdown on
-    `term` + column pruning keep the scan proportional to the batch,
-    not the index), optionally drops Bloom-excluded segment
-    partitions, shuffles that small set by segment, and runs one
-    Arrow-batched ``applyInPandas`` per segment = Lucene's per-leaf
-    ``BulkScorer`` (search/IndexSearcher.java:634-656). Inside it
-    the segment's rows decode once (``_SegGroups``), then each query's
-    tree is evaluated, deleted docs masked, and cut to per-segment
-    top-k (``_segment_topk``).
+  * leaves = segments (contiguous docID ranges). After Bloom
+    exclusion, one ``mapInPandas`` task per live segment — no exchange
+    under the leaf — reads, decodes, evaluates, masks deleted docs
+    and cuts to per-segment top-k (``_segment_topk``) = Lucene's
+    per-leaf ``BulkScorer`` (search/IndexSearcher.java:634-656).
   * merge = TopDocs.merge (TopDocs.java:188-230) by (score desc,
     docid asc): one ``orderBy.limit(k)`` for a single query, a
     per-query window for a batch.
 
 Driver-local rendering (``search_local``): a bytes-capped per-term
-cache filled from ``_SegGroups`` decodes of one pushed-down scan, the
+cache filled per segment by the same reader and ``_SegGroups``, the
 same ``_segment_topk`` per segment, and a local cross-segment merge —
-no Spark job once a query's terms are hot.
+no Spark job, cold or hot.
 
 Scoring float discipline: per-term float32 scores, per-doc sums
 accumulated in float64 and cast to float32 once (WANDScorer.java:445-453).
@@ -244,14 +240,16 @@ class SegmentSearcher:
     (``_segment_topk``) serve two renderings:
 
     * distributed — ``search_df``/``search_many_df`` share one plan
-      (``_plan``: term-pruned block scan + Bloom segment exclusion)
-      and one per-segment leaf (``segment_eval_topk``: each (term,
-      segment) decodes once per batch); only the merge differs —
-      ``orderBy.limit(k)`` for one query, a per-query window for a
-      batch;
+      (``_plan``: Bloom segment exclusion, one ``segment_eval_topk``
+      task per live segment reading its own files); only the merge
+      differs — ``orderBy.limit(k)`` for one query, a per-query
+      window for a batch;
     * driver-local — ``search_local`` reads a bytes-capped per-term
-      cache filled from ``_SegGroups`` decodes and merges across
-      segments in the driver, no Spark job once hot.
+      cache filled through the same reader and merges across
+      segments in the driver, with no Spark job.
+
+    ``cache=True`` only loads the dictionary's term → df map into the
+    driver (the dictionary stays persisted).
 
     Multi-term queries (prefix/wildcard/regexp/fuzzy/range/set and
     span wrappers) rewrite against the v2 dictionary first
@@ -287,7 +285,7 @@ class SegmentSearcher:
         #: indexes (bit-stable historic path), {field: cache} otherwise
         self.caches = (self.scorer.cache if len(self.scorers) == 1
                        else {f: sc.cache for f, sc in self.scorers.items()})
-        self.blocks = index.blocks()
+        self.seg_files = index.segment_files()  # listed once: snapshot-bound
         self.dict = index.dict()
         # tombstones, masked inside each leaf BEFORE its top-k cut
         # (masking after the per-segment truncation would drop docs
@@ -297,14 +295,12 @@ class SegmentSearcher:
         self.deleted = index.deleted_docids()
         # per-segment term Bloom filters (BloomFilteringPostingsFormat
         # role, index/bloom.py) — present only after
-        # build_segment_blooms; prunes segment PARTITIONS driver-side
+        # build_segment_blooms; prunes live segment ids driver-side
         from ..index.bloom import SegmentBlooms
 
         self.blooms = SegmentBlooms.load(index)
         self._df_map: dict[str, int] | None = None
         if cache:
-            self.blocks.persist()
-            self.blocks.count()
             self.dict.persist()
             if self.dict.count() <= self.DICT_CACHE_MAX:
                 pdf = self.dict.select("term", "df").toPandas()
@@ -688,16 +684,25 @@ class SegmentSearcher:
         """Per-segment top-k rows (qidx, docid, score) of a batch of
         queries — None when no query can match anything.
 
-        The scan reads ONLY the block rows of the compiled trees' terms
-        (Parquet predicate pushdown on ``term`` + column pruning): the
-        positions column rides only when a tree needs positions, per-doc
-        norm rows only for cross-field spans. With Bloom filters
-        present, a segment partition is dropped when EVERY query
-        excludes it. The rows are grouped by segment into one
-        :func:`segment_eval_topk` task per segment."""
+        A segment is dropped when EVERY query's Bloom sets exclude it.
+        Each live segment is one :func:`segment_eval_topk` task (a
+        ``mapInPandas`` partition of ``spark.range`` — no exchange) that
+        reads ONLY its block rows of the trees' terms, with positions
+        only for positional trees and norm rows only for cross-field
+        spans (:func:`_read_segment`)."""
         trees = self._compile(queries, stats)
         live = [t for t in trees if t[0] != "none"]
         if not live:
+            return None
+        excl: set[int] = set()
+        if self.blooms is not None:
+            for i, t in enumerate(live):
+                e = set(self.blooms.excluded_segments(*_tree_bloom_sets(t)))
+                excl = e if i == 0 else (excl & e)
+                if not excl:
+                    break
+        files = [f for s, f in sorted(self.seg_files.items()) if s not in excl]
+        if not files:
             return None
         terms: set[str] = set()
         norm_fields: set[str] = set()
@@ -706,36 +711,19 @@ class SegmentSearcher:
             norm_fields |= _tree_norm_fields(t)
         norm_fields = sorted(norm_fields)
         pos_cols = ["positions"] if any(map(_tree_has_phrase, live)) else []
-        cols = ["segment", "term", "block_ord", "n", "first_docid",
-                "last_docid", "docids", "tfs", "norms", *pos_cols]
-        term_pred = _str_in("term", sorted(terms))
-        if norm_fields:
-            # cross-field span: the scan additionally carries the
-            # masked-to fields' per-doc norm rows (kind=1 for content,
-            # kind=2 keyed by field name) — a byte per (doc, field)
-            raw = self.index.spark.read.parquet(self.index.blocks_path)
-            pred = _norm_rows_pred(norm_fields,
-                                   (F.col("kind") == 0) & term_pred)
-            scan = raw.where(pred).select("kind", *cols)
-        else:
-            scan = self.blocks.where(term_pred).select(*cols)
-        if self.blooms is not None:
-            excl: set[int] | None = None
-            for t in live:
-                e = set(self.blooms.excluded_segments(*_tree_bloom_sets(t)))
-                excl = e if excl is None else (excl & e)
-                if not excl:
-                    break
-            if excl:
-                scan = scan.where(~F.col("segment").isin(sorted(excl)))
+        cols = [*_BLOCK_COLS, *pos_cols]
         caches = self.caches
         deleted = self.deleted if self.deleted.size else None
 
-        def leaf(pdf: pd.DataFrame) -> pd.DataFrame:
-            return segment_eval_topk(pdf, trees, caches, k, deleted=deleted,
-                                     norm_fields=norm_fields)
+        def leaf(batches):
+            for b in batches:
+                for i in b["id"].tolist():
+                    pdf = _read_segment(files[i], terms, cols, norm_fields)
+                    yield segment_eval_topk(pdf, trees, caches, k, deleted,
+                                            norm_fields)
 
-        return scan.groupBy("segment").applyInPandas(leaf, _LEAF_SCHEMA)
+        return (self.index.spark.range(len(files), numPartitions=len(files))
+                .mapInPandas(leaf, _LEAF_SCHEMA))
 
     def search_df(self, q: Query, k: int = 10,
                   stats: dict[str, int] | None = None) -> DataFrame:
@@ -774,25 +762,21 @@ class SegmentSearcher:
     def term_vector(self, docid: int,
                     field: str = "content") -> list[tuple[str, int]]:
         """(term, tf) pairs of ONE document — the term-vectors read
-        (TermVectorsReader role) the v2 codec serves by scanning the
-        doc's OWN segment partition only: docmap resolves the segment,
-        the block scan prunes to it, and only blocks whose docid range
-        covers the doc decode (a few per term region). Feeds
-        MoreLikeThis on the compressed path."""
+        (TermVectorsReader role) the v2 codec serves by reading the
+        doc's OWN segment only: docmap resolves the segment, the read
+        keeps only blocks whose docid range covers the doc, and only
+        those decode (a few per term region). Feeds MoreLikeThis on
+        the compressed path."""
         seg_row = (self.index.docmap().where(F.col("docid") == docid)
                    .select("segment").collect())
         if not seg_row:
             return []
-        seg = int(seg_row[0]["segment"])
+        cols = ["term", "n", "first_docid", "docids", "tfs"]
+        pdf = _read_segment(self.seg_files[int(seg_row[0]["segment"])],
+                            None, cols, docid=docid)
         pfx = "" if field == "content" else field + FIELD_SEP
-        scope = (F.col("term").startswith(pfx) if pfx
-                 else ~F.col("term").contains(FIELD_SEP))
-        pdf = (self.blocks
-               .where((F.col("segment") == seg) & scope
-                      & (F.col("first_docid") <= docid)
-                      & (F.col("last_docid") >= docid))
-               .select("term", "n", "first_docid", "docids", "tfs")
-               .toPandas())
+        pdf = pdf[pdf["term"].str.startswith(pfx) if pfx
+                  else ~pdf["term"].str.contains(FIELD_SEP, regex=False)]
         out = []
         for r in pdf.itertuples(index=False):
             n = int(r.n)
@@ -811,14 +795,15 @@ class SegmentSearcher:
     #: same way — an unbounded cache would accumulate the postings of
     #: every term ever queried for the searcher's lifetime). Each term's
     #: decoded arrays are its own copies and die with it on eviction;
-    #: evict-and-refetch is one pushed-down scan.
+    #: evict-and-refetch is one filtered read per segment.
     LOCAL_CACHE_BYTES = 256 << 20
 
     def _local_tbs(self, qterms: set[str]) -> dict:
         """Fetch (and cache) the given terms' decoded postings
-        driver-side: {qterm: {segment: _SegGroups entry}}. One
-        pushed-down scan per cache-miss batch, decoded per segment by
-        :class:`_SegGroups`; bytes-capped LRU over terms
+        driver-side: {qterm: {segment: _SegGroups entry}}. A cache-miss
+        batch reads each segment's rows of the missing terms
+        (:func:`_read_segment`) and decodes them by
+        :class:`_SegGroups` — no Spark job; bytes-capped LRU over terms
         (LOCAL_CACHE_BYTES) — the live query's own terms are never
         evicted."""
         if not hasattr(self, "_local_cache"):
@@ -830,19 +815,18 @@ class SegmentSearcher:
         missing = sorted(t for t in qterms if t not in cache)
         if missing:
             bufs = ["docids", "tfs", "norms", "positions"]
-            pdf = (self.blocks.where(_str_in("term", missing))
-                   .select("segment", "term", "block_ord", "n",
-                           "first_docid", "last_docid", *bufs).toPandas())
             maps: dict[str, dict] = {t: {} for t in missing}
-            for seg, sub in pdf.groupby("segment"):
-                for t, e in _SegGroups(sub, self.caches).items():
-                    maps[t][int(seg)] = _own(e)
-            sizes = sum(pdf[c].map(lambda b: 0 if b is None else len(b))
-                        for c in bufs).groupby(pdf["term"]).sum()
+            sizes = dict.fromkeys(missing, 0)
+            for seg, fs in self.seg_files.items():
+                pdf = _read_segment(fs, missing, [*_BLOCK_COLS, "positions"])
+                for t, e in _SegGroups(pdf, self.caches).items():
+                    maps[t][seg] = _own(e)
+                nbytes = pdf[bufs].map(len, na_action="ignore").sum(axis=1)
+                for t, sz in nbytes.groupby(pdf["term"]).sum().items():
+                    sizes[t] += int(sz)
             for t in missing:
-                sz = int(sizes.get(t, 0))
-                cache[t] = (sz, maps[t])
-                self._local_cache_bytes += sz
+                cache[t] = (sizes[t], maps[t])
+                self._local_cache_bytes += sizes[t]
         # LRU touch, then evict cold terms beyond the budget
         for t in qterms:
             if t in cache:
@@ -858,7 +842,7 @@ class SegmentSearcher:
     def _local_norms(self, field: str) -> dict:
         """Driver-cached {docid: norm_byte} of one field's per-doc
         norm rows (cross-field span serving path) — the same rows and
-        reader the leaf scan uses (``_norm_rows_pred`` /
+        reader the leaf uses (:func:`_read_segment` /
         ``_norm_maps_from_rows``). One byte per (doc, field) — the
         .nvd-file role; cached for the searcher's lifetime like a Solr
         core's norms reader."""
@@ -866,11 +850,11 @@ class SegmentSearcher:
             self._local_norm_cache: dict = {}
         nm = self._local_norm_cache.get(field)
         if nm is None:
-            raw = self.index.spark.read.parquet(self.index.blocks_path)
-            pdf = (raw.where(_norm_rows_pred([field], F.lit(False)))
-                   .select("kind", "term", "first_docid", "norms")
-                   .toPandas())
-            nm = _norm_maps_from_rows(pdf, [field])[field]
+            nm = {}
+            for files in self.seg_files.values():
+                pdf = _read_segment(files, (), ["term", "first_docid",
+                                                "norms"], [field])
+                nm.update(_norm_maps_from_rows(pdf, [field])[field])
             self._local_norm_cache[field] = nm
         return nm
 
@@ -923,16 +907,16 @@ class SegmentSearcher:
         the throughput path.
 
         Execution shape: the same plan and leaf as :meth:`search_df`
-        — one term-pruned scan of the block rows for the batch's whole
-        term set, one shuffle of those (compressed — a few bytes per
-        posting) rows by segment, then per segment ONE applyInPandas
-        task decodes every (term, segment) once and evaluates every
-        query's compiled tree. Per-leaf top-k arrays then a global
-        per-query window merge (TopDocs.merge, TopDocs.java:188-230) of
-        <= segments * |queries| * k rows.
+        — per live segment ONE ``mapInPandas`` task reads that
+        segment's block rows for the batch's whole term set from its
+        own files, decodes every (term, segment) once and evaluates
+        every query's compiled tree; no block row crosses an exchange.
+        Per-leaf top-k arrays then a global per-query window merge
+        (TopDocs.merge, TopDocs.java:188-230) of <= segments *
+        |queries| * k rows.
 
         Scaling: task = (segment x whole batch) — pure numpy
-        decode/score CPU per task, no big shuffle, no driver loop;
+        decode/score CPU per task, no block-row shuffle, no driver loop;
         parallelism = segment count, which the builder sizes to
         O(corpus / docs_per_segment) independent of executor count."""
         spark = self.index.spark
@@ -941,8 +925,8 @@ class SegmentSearcher:
         # granularity): a re-submitted identical batch skips rewrite +
         # tree compile + Catalyst planning entirely — the driver-side
         # serial fraction of steady-state repeated workloads. Safe
-        # because this searcher is snapshot-bound (blocks/deletes are
-        # read at construction); a new snapshot means a new searcher,
+        # because this searcher is snapshot-bound (segment files/deletes
+        # are listed at construction); a new snapshot means a new searcher,
         # exactly Solr's cache-per-searcher lifecycle.
         cache_key = None
         if stats is None:
@@ -1016,31 +1000,55 @@ def _tree_terms(node) -> set:
         return {_qual(f, t) for f, t in node[2]}
     if kind == "automaton":
         return {qt for _tid, qt in node[3] if qt is not None}
-    if kind == "bool":
-        out = set()
-        for _occ, c in node[1]:
-            out |= _tree_terms(c)
-        return out
-    if kind == "dismax":
-        out = set()
-        for c in node[1]:
-            out |= _tree_terms(c)
-        return out
-    if kind == "const":
-        return _tree_terms(node[1])
-    return set()
+    return set().union(*map(_tree_terms, _children(node)))
 
 
-def _norm_rows_pred(norm_fields, term_pred):
-    """Widen a kind==0 term predicate with the per-doc norm rows of
-    the given fields (kind=1 for content, kind=2 keyed by field
-    name) — the scan of a plan with cross-field span nodes."""
-    pred = term_pred
+def _children(node) -> list:
+    """Sub-trees of a compiled bool/dismax/const node ([] otherwise)."""
+    if node[0] == "bool":
+        return [c for _occ, c in node[1]]
+    if node[0] == "dismax":
+        return list(node[1])
+    return [node[1]] if node[0] == "const" else []
+
+
+#: block-row columns every query read carries
+_BLOCK_COLS = ["term", "block_ord", "n", "first_docid", "last_docid",
+               "docids", "tfs", "norms"]
+
+
+def _read_segment(files: list[str], terms, cols: list[str],
+                  norm_fields=(), docid: int | None = None) -> pd.DataFrame:
+    """One segment's block rows from its Parquet files (paths or URIs):
+    kind=0 rows of ``terms`` (all when None; only blocks covering
+    ``docid`` when given) OR the norm rows of ``norm_fields`` (kind=1
+    content, kind=2 keyed by field name; ``kind`` kept then). Columns
+    are read one at a time, single-threaded, and cut to the matching
+    rows, so the reader (the driver, when serving) never holds a whole
+    decoded segment."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    kind, term = ds.field("kind"), ds.field("term")
+    pred = kind == 0
+    if terms is not None:
+        pred &= term.isin(pa.array(sorted(terms), pa.string()))
+    if docid is not None:
+        pred &= ((ds.field("first_docid") <= docid)
+                 & (ds.field("last_docid") >= docid))
     for f in norm_fields:
-        pred = pred | ((F.col("kind") == 1) if f == "content"
-                       else ((F.col("kind") == 2)
-                             & (F.col("term") == f)))
-    return pred
+        pred |= (kind == 1) if f == "content" else (kind == 2) & (term == f)
+    keys = ["kind", "term", "first_docid", "last_docid"]
+    parts = []
+    for f in files:
+        pf = pq.ParquetFile(f)
+        t = pf.read(columns=keys, use_threads=False)
+        t = t.append_column("row", pa.array(np.arange(len(t)))).filter(pred)
+        parts.append(pa.table({c: t[c] if c in keys else pf.read(
+            columns=[c], use_threads=False)[c].take(t["row"])
+            for c in (["kind", *cols] if norm_fields else cols)}))
+    return pa.concat_tables(parts).to_pandas()
 
 
 def _norm_maps_from_rows(pdf: pd.DataFrame, fields) -> dict:
@@ -1063,35 +1071,14 @@ def _tree_norm_fields(node) -> set:
     by cross-field span nodes (FieldMaskingSpanQuery), whose scoring
     norms come from the masked-to field rather than the term
     postings."""
-    kind = node[0]
-    if kind == "span":
+    if node[0] == "span":
         return {node[5]} if node[5] is not None else set()
-    if kind == "bool":
-        out: set = set()
-        for _occ, c in node[1]:
-            out |= _tree_norm_fields(c)
-        return out
-    if kind == "dismax":
-        out = set()
-        for c in node[1]:
-            out |= _tree_norm_fields(c)
-        return out
-    if kind == "const":
-        return _tree_norm_fields(node[1])
-    return set()
+    return set().union(*map(_tree_norm_fields, _children(node)))
 
 
 def _tree_has_phrase(node) -> bool:
-    kind = node[0]
-    if kind in ("phrase", "mphrase", "span", "automaton"):
-        return True
-    if kind == "bool":
-        return any(_tree_has_phrase(c) for _occ, c in node[1])
-    if kind == "dismax":
-        return any(_tree_has_phrase(c) for c in node[1])
-    if kind == "const":
-        return _tree_has_phrase(node[1])
-    return False
+    return (node[0] in ("phrase", "mphrase", "span", "automaton")
+            or any(map(_tree_has_phrase, _children(node))))
 
 
 def _tree_bloom_sets(node) -> tuple[set, set]:

@@ -150,11 +150,8 @@ class IncrementalIndexer:
         shutil.rmtree(tmp)
 
         idx = SegmentIndex(self.root, spark)
-        new_segments = sorted(
-            r["segment"] for r in
-            out.sparkSession.read.parquet(os.path.join(self.root, "blocks"))
-            .select("segment").where(
-                F.col("segment") >= base_segment).distinct().collect())
+        new_segments = sorted(s for s in idx.segment_files()
+                              if s >= base_segment)
         self._refresh_derived(idx, batch_id=batch_id, new_segments=new_segments)
         if parent is not None:
             parent.unpersist()
@@ -262,8 +259,7 @@ class IncrementalIndexer:
             n_segments = max(int(self._load_state().get("n_segments", 0)) - 1,
                              max(new_segments))
         else:
-            n_segments = idx.blocks().agg(
-                F.max("segment").alias("m")).collect()[0]["m"]
+            n_segments = max(idx.segment_files())
         spark.createDataFrame(
             [(int(agg["c"]), int(agg["s"] or 0))], "doc_count long, sum_ttf long"
         ).coalesce(1).write.mode("overwrite").parquet(os.path.join(self.root, "stats"))
@@ -671,5 +667,4 @@ def compact_segments(idx: SegmentIndex, min_fill: float = 0.5,
         # + manifest counts (Lucene: merged segments lose deletions and
         # docCount drops to numDocs)
         IncrementalIndexer(idx.root)._refresh_derived(idx)
-    return len({int(r["segment"]) for r in
-                idx.blocks().select("segment").distinct().collect()})
+    return len(idx.segment_files())

@@ -105,7 +105,11 @@ def test_k_sweep_identical_to_oracle(built):
 def test_single_query_plan_has_no_window(built):
     """A single query merges with ONE orderBy.limit(k), not the batch
     path's per-query window (a batch of one through the window merge
-    measured 10-14% slower per query); k=None returns every hit."""
+    measured 10-14% slower per query); k=None returns every hit. Both
+    paths run the leaf as MapInPandas with no Exchange below it and no
+    Spark-side parquet scan: each task reads its own segment's files."""
+    import re
+
     _, searcher, oracle, _ = built
     terms = _terms_by_df(oracle, 4)
     q = BooleanQuery.of(should=[TermQuery(t) for t in terms[:4]])
@@ -113,8 +117,28 @@ def test_single_query_plan_has_no_window(built):
     def plan(df):
         return df._jdf.queryExecution().executedPlan().toString()
 
-    assert "Window" not in plan(searcher.search_df(q, 10))
-    assert "Window" in plan(searcher.search_many_df({"q": q}, 10))
+    def below(text, node):
+        """Plan lines of ``node``'s subtree (deeper-indented lines
+        after it, up to its next sibling or ancestor)."""
+        lines = text.splitlines()
+        depth = [re.match(r"[\s:+\-]*", ln).end() for ln in lines]
+        i = next(i for i, ln in enumerate(lines) if node in ln)
+        sub = []
+        for ln, d in zip(lines[i + 1:], depth[i + 1:]):
+            if d <= depth[i]:
+                break
+            sub.append(ln)
+        return sub
+
+    single = plan(searcher.search_df(q, 10))
+    batch = plan(searcher.search_many_df({"q": q}, 10))
+    assert "Window" not in single
+    assert "Window" in batch
+    for text in (single, batch):
+        assert "MapInPandas" in text, text
+        under = below(text, "MapInPandas")
+        assert not any("Exchange" in ln for ln in under), text
+        assert "FileScan" not in text, text
     every = searcher.search_df(q, None).collect()
     assert len(every) == len(oracle.search(q, N_DOCS))
 
@@ -584,9 +608,11 @@ def test_term_automaton_on_v2(built):
 
 
 def test_search_local_serving_path(built):
-    """Driver-local serving evaluation (hot block cache): identical
-    results to the distributed path across the full algebra, and the
-    second evaluation of a term set runs without any Spark job."""
+    """Driver-local serving evaluation: identical results to the
+    distributed path across the full algebra, and no Spark job either
+    hot (cached term set) or cold (a fresh searcher's first term,
+    boolean and phrase queries read the segment files directly)."""
+    from lucene_solr_spark.index.segments import SegmentIndex
     from lucene_solr_spark.search.queries import PhraseQuery, PrefixQuery
 
     idx, searcher, oracle, pdf = built
@@ -611,13 +637,33 @@ def test_search_local_serving_path(built):
     # hot repeat: no further Spark jobs for the cached term set
     import time
 
-    sc_ids_before = searcher.index.spark.sparkContext.statusTracker() \
-        .getJobIdsForGroup(None)
+    spark = searcher.index.spark
+    mark = _newest_job(spark)
     t0 = time.time()
     for _ in range(20):
         searcher.search_local(queries[0], 10)
     hot = (time.time() - t0) / 20
+    assert _newest_job(spark) == mark, "hot serving eval ran a Spark job"
     assert hot < 0.05, f"hot serving eval took {hot:.3f}s"
+    # cold: a fresh searcher fills its cache from the segment files,
+    # still without a Spark job
+    fresh = SegmentSearcher(SegmentIndex(idx.root, spark), cache=True)
+    for q in queries[:3]:
+        mark = _newest_job(spark)
+        got = fresh.search_local(q, 10)
+        assert _newest_job(spark) == mark, f"cold serving eval ran a job: {q}"
+        exp = oracle.search(q, 10)
+        assert [(d.docid, np.float32(d.score)) for d in got] == [
+            (d.docid, np.float32(d.score)) for d in exp], q
+
+
+def _newest_job(spark) -> int:
+    """Id of the newest Spark job so far (-1 when none), once the
+    listener bus has delivered every job event."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = jsc.statusStore().jobsList(None)  # newest first
+    return int(jobs.apply(0).jobId()) if jobs.size() else -1
 
 
 def test_search_local_cache_bounded_lru(built):
