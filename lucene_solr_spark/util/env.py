@@ -1,46 +1,20 @@
-"""Process-environment tuning for the Arrow/numpy hot path.
+"""Worker-process allocator tuning for the Arrow/numpy hot path.
 
-DEPRECATED DEFAULT (round-2 finding): retaining every freed page
-(``MALLOC_TRIM_THRESHOLD_=-1``) interacts badly with THP — long-lived
-workers accumulate huge dirty arenas that khugepaged keeps
-collapsing/splitting, and repeated builds in one JVM degrade
-monotonically (42 s → 155 s by build 3 at 8 cores). The effective fix
-for worker-churn cost is the warm daemon
-(``spark.python.daemon.module=lucene_solr_spark.warm_daemon``), which
-makes forked workers inherit pandas/pyarrow/numpy copy-on-write; no
-benchmark or test path calls :func:`configure_allocator` anymore. The
-knobs remain for hosts where page-fault latency (not THP churn)
-dominates — measure before enabling.
+Retention is scoped to the workers that call :func:`retain_malloc`:
+retaining every freed page in all workers interacts badly with THP —
+long-lived workers accumulate huge dirty arenas that khugepaged keeps
+collapsing/splitting, and repeated builds in one JVM degraded
+monotonically (42 s → 155 s by build 3 at 8 cores).
 """
 
 from __future__ import annotations
-
-import os
-
-ALLOCATOR_ENV = {
-    # never give pages back to the OS on free()
-    "MALLOC_TRIM_THRESHOLD_": "-1",
-    # serve large allocations from the retained arena, not fresh mmaps
-    "MALLOC_MMAP_THRESHOLD_": str(1 << 30),
-}
-
-
-def configure_allocator() -> None:
-    for k, v in ALLOCATOR_ENV.items():
-        os.environ.setdefault(k, v)
-
-
-def spark_executor_env_conf() -> dict[str, str]:
-    """The same knobs as --conf entries for cluster deployments."""
-    return {f"spark.executorEnv.{k}": v for k, v in ALLOCATOR_ENV.items()}
-
 
 _malloc_retained = False
 
 
 def retain_malloc() -> None:
-    """Runtime (ctypes mallopt) version of ALLOCATOR_ENV, scoped to the
-    calling worker process; idempotent.
+    """Keep freed pages and serve large allocations from the retained
+    glibc arena (ctypes ``mallopt``) in the calling worker; idempotent.
 
     This host intermittently stalls ~0.75 s on FRESH large mmaps (THP
     madvise policy + khugepaged compaction; measured: 2/30 fresh 6 MB
