@@ -26,11 +26,8 @@ Two entry points, one per index layout:
   (``segments.py::build_segment_index``): docmap/summary/dict/stats
   reconciliation, block-structure discipline (ordinals contiguous,
   non-last blocks exactly BLOCK_SIZE, docid ranges disjoint and
-  ascending across a term's blocks), a full decode pass re-deriving
-  every block's metadata from its encoded buffers, and the
-  competitive-impact contract (every posting's (tf, norm) dominated
-  by some stored impact — what makes block-max upper bounds sound,
-  CompetitiveImpactAccumulator.java:31-90).
+  ascending across a term's blocks), and a full decode pass
+  re-deriving every block's metadata from its encoded buffers.
 """
 from __future__ import annotations
 
@@ -206,18 +203,15 @@ def check_index(tables: IndexTables, corpus: DataFrame | None = None,
 # v2: compressed segment index
 # ---------------------------------------------------------------------------
 
-_DECODE_REPORT = ("bad_docids long, bad_tfs long, bad_norms long, "
-                  "bad_positions long, bad_impacts long")
+_DECODE_CHECKS = ("bad_docids", "bad_tfs", "bad_norms", "bad_positions")
+_DECODE_REPORT = ", ".join(f"{c} long" for c in _DECODE_CHECKS)
 
 
 def _decode_check(batches):
     """mapInPandas pass: re-derive every block's metadata from its
     encoded buffers (the CheckIndex 'checks every byte' discipline,
-    CheckIndex.java:507) and verify the competitive-impact domination
-    contract that makes block-max upper bounds sound."""
-    bad = dict.fromkeys(
-        ("bad_docids", "bad_tfs", "bad_norms", "bad_positions",
-         "bad_impacts"), 0)
+    CheckIndex.java:507)."""
+    bad = dict.fromkeys(_DECODE_CHECKS, 0)
     for pdf in batches:
         for row in pdf.itertuples(index=False):
             n = int(row.n)
@@ -255,27 +249,6 @@ def _decode_check(batches):
                     bad["bad_positions"] += 1
             except Exception:
                 bad["bad_positions"] += 1
-            # impacts: pareto order (norm asc, tf strictly asc) and the
-            # domination contract — for every posting there is an
-            # impact with tf' >= tf and norm' <= norm
-            # (CompetitiveImpactAccumulator.java:31-90)
-            try:
-                itf = codec.decode_seq(row.imp_tfs, 0).astype(np.int64)
-                inorm = codec.decode_seq(row.imp_norms, 0).astype(np.int64)
-                ok = (len(itf) == len(inorm) and len(itf) >= 1
-                      and (np.diff(itf) > 0).all()
-                      and (np.diff(inorm) > 0).all()
-                      and int(itf.max()) == int(tfs.max()))
-                if ok:
-                    # impacts sorted by norm asc with tf asc: the best
-                    # tf available at norm <= x is the last idx <= x
-                    idx = np.searchsorted(inorm, norms.astype(np.int64),
-                                          side="right") - 1
-                    ok = (idx >= 0).all() and (itf[idx] >= tfs).all()
-                if not ok:
-                    bad["bad_impacts"] += 1
-            except Exception:
-                bad["bad_impacts"] += 1
     yield pd.DataFrame([bad])
 
 
@@ -391,13 +364,10 @@ def check_segment_index(idx: SegmentIndex, decode: bool = True,
     # --- full decode pass ------------------------------------------------------
     if decode:
         rep = (blocks.select("n", "first_docid", "last_docid", "sum_tf",
-                             "docids", "tfs", "norms", "positions",
-                             "imp_tfs", "imp_norms")
+                             "docids", "tfs", "norms", "positions")
                .mapInPandas(_decode_check, schema=_DECODE_REPORT)
-               .agg(*[F.sum(c).alias(c) for c in
-                      ("bad_docids", "bad_tfs", "bad_norms",
-                       "bad_positions", "bad_impacts")]).collect()[0])
-        for c in ("bad_docids", "bad_tfs", "bad_norms", "bad_positions",
-                  "bad_impacts"):
+               .agg(*[F.sum(c).alias(c) for c in _DECODE_CHECKS])
+               .collect()[0])
+        for c in _DECODE_CHECKS:
             st.checks[f"decode_{c[4:]}"] = int(rep[c] or 0)
     return st

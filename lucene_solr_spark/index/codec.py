@@ -1,5 +1,4 @@
-"""Posting-block codec: delta + varbyte / FOR encoding with per-block
-competitive impacts.
+"""Posting-block codec: delta + varbyte / FOR encoding.
 
 Spark-first rendering of Lucene's Lucene50 postings codec:
 
@@ -11,12 +10,6 @@ Spark-first rendering of Lucene's Lucene50 postings codec:
     path stored as a single value (``ForUtil.java:91-93``,
     ``ALL_VALUES_EQUAL``). Tail blocks (< 128 entries) use the vInt
     (varbyte) tail encoding (``Lucene50PostingsWriter.java:361-377``).
-  * Per block we keep only the pareto-optimal (freq, norm) *impacts* —
-    pairs not dominated by another pair with freq >= and norm-length <=
-    (``codecs/CompetitiveImpactAccumulator.java:31-90``) — which upper-
-    bound the block's BM25 contribution for block-max skipping
-    (``search/ImpactsDISI.java:36-90``, ``search/MaxScoreCache.java:61-105``;
-    stored and verified by CheckIndex, not yet read at query time).
   * Positions are per-doc delta-encoded then concatenated in doc order
     (``Lucene50PostingsWriter.java:405-431``); ``tfs`` give the split
     points. Norm bytes ride along uncompressed (1 byte/doc — the role
@@ -95,34 +88,7 @@ def grouped_varbyte(values: np.ndarray, group_starts: np.ndarray,
 def varbyte_encode(values: np.ndarray) -> bytes:
     """LEB128-style varbyte: 7 bits per byte, high bit = continuation.
     Matches Lucene's vInt byte layout (store/DataOutput.writeVInt)."""
-    v = np.asarray(values, dtype=np.uint64)
-    if v.size == 0:
-        return b""
-    # number of 7-bit groups per value (>=1)
-    nbits = np.zeros(v.shape, dtype=np.int64)
-    tmp = v.copy()
-    while True:
-        alive = tmp > 0
-        if not alive.any():
-            break
-        nbits[alive] += 1
-        tmp >>= np.uint64(7)
-    nbytes = np.maximum(nbits, 1)
-    ends = np.cumsum(nbytes)
-    total = int(ends[-1])
-    out = np.zeros(total, dtype=np.uint8)
-    starts = ends - nbytes
-    # write 7-bit groups, little-endian groups (low bits first), max 10 rounds
-    max_rounds = int(nbytes.max())
-    tmp = v.copy()
-    for k in range(max_rounds):
-        alive = nbytes > k
-        idx = starts[alive] + k
-        chunk = (tmp[alive] & np.uint64(0x7F)).astype(np.uint8)
-        cont = (nbytes[alive] > k + 1).astype(np.uint8) << 7
-        out[idx] = chunk | cont
-        tmp[alive] >>= np.uint64(7)
-    return out.tobytes()
+    return varbyte_encode_all(values)[0]
 
 
 def varbyte_decode(buf: bytes, n: int | None = None) -> np.ndarray:
@@ -184,15 +150,15 @@ _H_VARBYTE = 0xFF
 _H_ALL_EQUAL = 0x00
 
 
-def encode_seq(values: np.ndarray, prefer_packed: bool = True) -> bytes:
-    """Encode one int sequence. Full blocks prefer FOR packing; the
+def encode_seq(values: np.ndarray) -> bytes:
+    """Encode one int sequence. Full blocks use FOR packing; the
     all-equal fast path collapses to a single value (ForUtil.java:91-93)."""
     v = np.asarray(values, dtype=np.uint64)
     if v.size == 0:
         return bytes([_H_VARBYTE])
-    if v.size and (v == v[0]).all():
+    if (v == v[0]).all():
         return bytes([_H_ALL_EQUAL]) + varbyte_encode(np.array([v[0], v.size], dtype=np.uint64))
-    if prefer_packed and v.size == BLOCK_SIZE:
+    if v.size == BLOCK_SIZE:
         w = _bit_width(v)
         return bytes([w]) + pack_fixed(v, w)
     return bytes([_H_VARBYTE]) + varbyte_encode(v)
@@ -325,44 +291,3 @@ def decode_positions(buf: bytes, tfs: np.ndarray) -> list[np.ndarray]:
         out.append(np.cumsum(seg))
         off += tf
     return out
-
-
-def competitive_impacts(tfs: np.ndarray, norms: np.ndarray) -> list[tuple[int, int]]:
-    """Pareto-optimal (freq, norm) pairs: keep a pair unless another has
-    freq >= AND decoded-length <= (CompetitiveImpactAccumulator.java:31-90).
-
-    Norm bytes order by *decoded length*; SmallFloat.byte4ToInt is
-    monotone in the byte value treated as unsigned, so sorting by the
-    unsigned byte is sorting by length.
-    """
-    tf = np.asarray(tfs, dtype=np.int64)
-    nb = np.asarray(norms, dtype=np.int64) & 0xFF
-    # unique (norm) -> max tf; then sweep norms ascending keeping strictly
-    # increasing max-tf (a larger norm is only competitive with larger tf)
-    order = np.lexsort((tf, nb))
-    out: list[tuple[int, int]] = []
-    best_tf = -1
-    # group by norm ascending, track max tf per norm
-    uniq_norms, idx_start = np.unique(nb[order], return_index=True)
-    for i, nrm in enumerate(uniq_norms):
-        lo = idx_start[i]
-        hi = idx_start[i + 1] if i + 1 < len(idx_start) else len(order)
-        max_tf = int(tf[order[lo:hi]].max())
-        if max_tf > best_tf:
-            out.append((max_tf, int(nrm)))
-            best_tf = max_tf
-    return out
-
-
-def block_max_score(impacts: list[tuple[int, int]], weight_f32: np.float32,
-                    cache_f32: np.ndarray) -> np.float32:
-    """Exact float32 max of the BM25 contribution over the block's
-    (freq, norm) pairs (MaxScoreCache.java:61-105 role). Scores are
-    computed with the same arithmetic as scoring itself, so the bound
-    is tight and exact."""
-    from ..search import bm25
-
-    tf = np.array([i[0] for i in impacts], dtype=np.int64)
-    nb = np.array([i[1] for i in impacts], dtype=np.int64)
-    s = bm25.score_terms(tf, nb, np.float32(weight_f32), cache_f32)
-    return np.float32(s.max()) if s.size else np.float32(0.0)

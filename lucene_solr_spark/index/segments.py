@@ -21,11 +21,10 @@ through Parquet twice):
   stage 1  blocks/   per chunk of segments: filter the pinned frame,
            ONE exchange keyed by segment (only that chunk's content
            moves), applyInPandas → tokenize, aggregate,
-           delta+varbyte/FOR encode 128-doc posting blocks with
-           competitive impacts (codec.py). Each chunk commit appends
-           a checkpoint row; a killed build resumes by skipping
-           completed chunks (partial segment dirs of an uncheckpointed
-           chunk are removed first).
+           delta+varbyte/FOR encode 128-doc posting blocks
+           (codec.py). Each chunk commit appends a checkpoint row; a
+           killed build resumes by skipping completed chunks (partial
+           segment dirs of an uncheckpointed chunk are removed first).
   stage 2  docs/ dict/ stats/ — derived without joins: summary rows
            carry the doc metadata, so docs/ is a select over blocks;
            dict = blocks.groupBy(term).agg (map-side partial agg; hot
@@ -70,7 +69,6 @@ BLOCKS_SCHEMA = (
     "segment int, kind int, term string, block_ord int, n int, "
     "first_docid long, last_docid long, sum_tf long, "
     "docids binary, tfs binary, norms binary, positions binary, "
-    "imp_tfs binary, imp_norms binary, "
     # doc metadata, populated on kind=1 summary rows only (null on
     # block rows — RLE'd away by parquet): lets the docs table derive
     # straight from summaries with NO join back to the docmap
@@ -98,9 +96,8 @@ def _invert_segment_field(toks_col, docids_doc: np.ndarray,
     """Vectorized inversion of ONE field's token arrays over one
     segment: numpy StopFilter (position = raw token index → gaps
     preserved), factorize, ONE stable sort → posting runs → encoded
-    128-blocks with competitive impacts. Returns
-    ``(dls, norms_doc, blocks_pdf_or_None)``; block terms carry
-    ``prefix`` ("" for the content field)."""
+    128-blocks. Returns ``(dls, norms_doc, blocks_pdf_or_None)``; block
+    terms carry ``prefix`` ("" for the content field)."""
     from ..util.smallfloat import int_to_byte4_np
 
     ndocs = len(docids_doc)
@@ -200,26 +197,6 @@ def _invert_segment_field(toks_col, docids_doc: np.ndarray,
         docid_bufs[bi] = codec.encode_seq(ddelta[s:e].astype(np.uint64))
         tf_bufs[bi] = codec.encode_seq(tf[s:e].astype(np.uint64))
 
-    # --- competitive impacts (vectorized pareto) -------------------
-    blk_of_post = np.cumsum(new_block) - 1
-    io = np.lexsort((tf, post_norm, blk_of_post))
-    b_s2, n_s2, t_s2 = blk_of_post[io], post_norm[io], tf[io]
-    grp_new = np.empty(nposts, dtype=bool)
-    grp_new[0] = True
-    grp_new[1:] = (b_s2[1:] != b_s2[:-1]) | (n_s2[1:] != n_s2[:-1])
-    grp_last = np.append(np.flatnonzero(grp_new)[1:] - 1, nposts - 1)
-    gb, gn, gt = b_s2[grp_last], n_s2[grp_last], t_s2[grp_last]
-    # pareto: within block (norm asc) keep strictly-increasing max tf
-    big = int(gt.max()) + 1
-    shifted = gt + gb * big
-    prev = np.concatenate(([-1], np.maximum.accumulate(shifted)[:-1]))
-    keep = shifted > prev
-    imp_b, imp_n, imp_t = gb[keep], gn[keep], gt[keep]
-    imp_starts = np.flatnonzero(
-        np.diff(imp_b, prepend=-1) != 0)  # every block has >= 1 impact
-    imp_tf_bufs = codec.grouped_varbyte(imp_t.astype(np.uint64), imp_starts)
-    imp_norm_bufs = codec.grouped_varbyte(imp_n.astype(np.uint64), imp_starts)
-
     terms_out = uniq[post_code[blk_starts]]
     if prefix:
         terms_out = np.array([prefix + t for t in terms_out], dtype=object)
@@ -233,7 +210,6 @@ def _invert_segment_field(toks_col, docids_doc: np.ndarray,
         "sum_tf": blk_sumtf,
         "docids": docid_bufs, "tfs": tf_bufs, "norms": norm_bufs,
         "positions": pos_bufs,
-        "imp_tfs": imp_tf_bufs, "imp_norms": imp_norm_bufs,
         "repo": None, "path": None, "commit": None, "lang": None,
     })
     return dls, norms_doc, blocks
@@ -262,9 +238,9 @@ def _segment_builder(docs_per_segment: int,
     gaps are preserved and BM25 dl counts survivors only —
     FilteringTokenFilter.java:47-57), then ONE stable sort produces
     the (term, docid, position) stream; posting/block boundaries, tfs,
-    docid/position deltas, pareto impacts and the varbyte streams are
-    all whole-segment numpy passes (grouped_varbyte slices one encoded
-    stream into per-block buffers). Per-block Python touches only full
+    docid/position deltas and the varbyte streams are all whole-segment
+    numpy passes (grouped_varbyte slices one encoded stream into
+    per-block buffers). Per-block Python touches only full
     128-blocks (FOR bit-packing, a small minority).
     """
     stop_arr = np.asarray(sorted(stop_words), dtype=object) if stop_words else None
@@ -284,7 +260,7 @@ def _segment_builder(docs_per_segment: int,
             "n": dls, "first_docid": docids_doc, "last_docid": docids_doc,
             "sum_tf": dls, "docids": b"", "tfs": b"",
             "norms": [bytes([b]) for b in norms_doc],
-            "positions": b"", "imp_tfs": b"", "imp_norms": b"",
+            "positions": b"",
             "repo": pdf["repo"].to_numpy(),
             "path": pdf["path"].to_numpy(),
             "commit": pdf["commit"].to_numpy(),
@@ -313,7 +289,7 @@ def _segment_builder(docs_per_segment: int,
                 "last_docid": docids_doc[present],
                 "sum_tf": fdls[present], "docids": b"", "tfs": b"",
                 "norms": [bytes([b]) for b in fnorms[present]],
-                "positions": b"", "imp_tfs": b"", "imp_norms": b"",
+                "positions": b"",
                 "repo": None, "path": None, "commit": None, "lang": None,
             }))
             if fblocks is not None:

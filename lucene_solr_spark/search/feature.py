@@ -22,11 +22,10 @@ Spark rendering: feature postings are ordinary rows of the postings
 table (field = the features field, term = feature name, tf = encoded
 value) appended by :func:`lucene_solr_spark.index.features.add_features`,
 so a FeatureQuery leaf is the same bucket-pruned postings scan as a
-TermQuery — no separate storage, and a future block-max traversal can
-skip uncompetitive feature blocks exactly like Lucene does. Scoring is
-one Arrow-batched pandas UDF with the reference's float disciplines:
-satu is all-float32 arithmetic, log/sigm compute in float64 and cast
-once (FeatureField.java:246-249, 318-321, 371-380).
+TermQuery — no separate storage. Scoring is one Arrow-batched pandas
+UDF with the reference's float disciplines: satu is all-float32
+arithmetic, log/sigm compute in float64 and cast once
+(FeatureField.java:246-249, 318-321, 371-380).
 """
 
 from __future__ import annotations

@@ -983,9 +983,7 @@ class SegmentSearcher:
 # Compiled-tree evaluation over the v2 codec — the per-segment rendering
 # of the full query algebra. Exhaustive within a segment (no dynamic
 # pruning — a BulkScorer without ImpactsDISI), so results are rank- and
-# score-identical to IndexSearcher/OracleIndex by construction. Any
-# future block-skip belongs inside _eval_node, driven by the impact
-# columns the codec already stores.
+# score-identical to IndexSearcher/OracleIndex by construction.
 
 def _tree_terms(node) -> set:
     """Qualified terms a compiled node will actually scan."""

@@ -7,7 +7,6 @@ import glob
 import os
 import shutil
 
-import numpy as np
 import pandas as pd
 import pytest
 
@@ -91,7 +90,7 @@ def test_v2_clean(spark, v2_root):
               "stats_sum_ttf", "block_ordinals_contiguous",
               "block_full_size", "block_docid_ranges_ascend",
               "decode_docids", "decode_tfs", "decode_norms",
-              "decode_positions", "decode_impacts"):
+              "decode_positions"):
         assert k in st.checks, k
 
 
@@ -201,28 +200,3 @@ def test_v2_detects_corrupt_buffer(spark, v2_root, tmp_path):
     _mutate_blocks(root, truncate_docids)
     st = check_segment_index(SegmentIndex(root, spark))
     assert st.checks["decode_docids"] >= 1
-
-
-def test_v2_detects_impact_violation(spark, v2_root, tmp_path):
-    root = _copy(v2_root, tmp_path, "v2_imp")
-    from lucene_solr_spark.index import codec
-
-    def weaken_impacts(pdf):
-        m = pdf["kind"] == 0
-        # find a block whose max tf > 1 so an understated impact is a
-        # real domination violation
-        for i in pdf.index[m]:
-            tfs = codec.decode_seq(pdf.loc[i, "tfs"],
-                                   int(pdf.loc[i, "n"])).astype(np.int64)
-            if tfs.max() > 1:
-                itf = codec.decode_seq(pdf.loc[i, "imp_tfs"], 0)
-                itf = np.maximum(itf.astype(np.int64) - 1, 1).astype(
-                    np.uint64)
-                pdf.loc[i, "imp_tfs"] = (
-                    b"\xff" + codec.varbyte_encode(np.unique(itf)))
-                return pdf
-        raise AssertionError("no block with tf > 1")
-
-    _mutate_blocks(root, weaken_impacts)
-    st = check_segment_index(SegmentIndex(root, spark))
-    assert st.checks["decode_impacts"] >= 1

@@ -72,30 +72,6 @@ def test_positions_roundtrip():
         assert np.array_equal(np.asarray(a, dtype=np.int64), b)
 
 
-def test_competitive_impacts_pareto():
-    # (tf, norm): norm byte orders by doc length (SmallFloat monotone)
-    tfs = np.array([3, 5, 2, 5, 1])
-    norms = np.array([10, 20, 10, 30, 5])
-    imp = codec.competitive_impacts(tfs, norms)
-    # norm 5: max tf 1 -> keep; norm 10: max tf 3 > 1 -> keep;
-    # norm 20: tf 5 > 3 -> keep; norm 30: tf 5 not > 5 -> dominated
-    assert imp == [(1, 5), (3, 10), (5, 20)]
-
-
-def test_block_max_score_is_exact_max():
-    from lucene_solr_spark.search import bm25
-
-    rng = np.random.default_rng(3)
-    tfs = rng.integers(1, 50, 128)
-    norms = rng.integers(0, 255, 128)
-    scorer = bm25.BM25Scorer(doc_count=1000, sum_total_term_freq=50000)
-    w = scorer.weight(37)
-    actual = bm25.score_terms(tfs, norms, w, scorer.cache)
-    imp = codec.competitive_impacts(tfs, norms)
-    ub = codec.block_max_score(imp, w, scorer.cache)
-    assert ub == np.float32(actual.max())
-
-
 def test_bulk_decode_seqs_identity():
     """bulk_decode_seqs == concatenated per-buffer decode_seq across
     all three encoding classes (FOR widths, varbyte tails, ALL_EQUAL),

@@ -196,8 +196,7 @@ def test_kill_and_resume_identical(spark, tmp_path_factory, built):
         docs_per_segment=48, segments_per_chunk=2, resume=True,
     )
     cols = ["segment", "kind", "term", "block_ord", "n", "first_docid",
-            "last_docid", "sum_tf", "docids", "tfs", "norms", "positions",
-            "imp_tfs", "imp_norms"]
+            "last_docid", "sum_tf", "docids", "tfs", "norms", "positions"]
     a = sorted(map(tuple, idx_full.spark.read.parquet(idx_full.blocks_path)
                    .select(cols).collect()))
     b = sorted(map(tuple, idx2.spark.read.parquet(idx2.blocks_path)

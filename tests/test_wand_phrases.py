@@ -67,9 +67,8 @@ def _encode_segment(docs, segment=0):
                 "segment": segment, "term": term, "block_ord": ord_,
                 "n": blk.size,
                 "first_docid": int(blk[0]), "last_docid": int(blk[-1]),
-                "docids": codec.encode_seq(ddelta, prefer_packed=False),
-                "tfs": codec.encode_seq(tfs.astype(np.uint64),
-                                        prefer_packed=False),
+                "docids": codec.encode_seq(ddelta),
+                "tfs": codec.encode_seq(tfs.astype(np.uint64)),
                 "norms": norms.tobytes(),
                 "positions": codec.encode_positions(
                     [np.array(by_doc[d], dtype=np.int64) for d in blk]),
