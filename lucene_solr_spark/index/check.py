@@ -24,10 +24,11 @@ Two entry points, one per index layout:
   content-sha256 invariant from BASELINE's input contract.
 * :func:`check_segment_index` — the v2 compressed segment index
   (``segments.py::build_segment_index``): docmap/summary/dict/stats
-  reconciliation, block-structure discipline (ordinals contiguous,
-  non-last blocks exactly BLOCK_SIZE, docid ranges disjoint and
-  ascending across a term's blocks), and a full decode pass
-  re-deriving every block's metadata from its encoded buffers.
+  and manifest-count reconciliation, block-structure discipline
+  (ordinals contiguous, non-last blocks exactly BLOCK_SIZE, docid
+  ranges disjoint and ascending across a term's blocks), and a full
+  decode pass re-deriving every block's metadata from its encoded
+  buffers.
 """
 from __future__ import annotations
 
@@ -305,18 +306,22 @@ def check_segment_index(idx: SegmentIndex, decode: bool = True,
                | (F.col("ttf") != F.col("ttf2"))).count())
 
     # --- collection stats ----------------------------------------------------
+    # both copies: stats/ and the manifest's, which is what
+    # SegmentSearcher scores with
     sum_dl = int(docs.agg(F.sum("dl")).collect()[0][0] or 0)
     st.checks["stats_doc_count"] = _bool(int(stats["doc_count"]) == n_docs)
     st.checks["stats_sum_ttf"] = _bool(int(stats["sum_ttf"] or 0) == sum_dl)
+    st.checks["manifest_doc_count"] = _bool(
+        int(manifest["doc_count"]) == n_docs)
+    st.checks["manifest_sum_ttf"] = _bool(int(manifest["sum_ttf"]) == sum_dl)
 
     # --- per-field collection stats (multi-field codec) ---------------------
     # manifest field_stats must equal the kind=2 per-(doc, field) rows'
     # aggregates (doc_count = rows, sum_ttf = Σ dl) — the FieldInfos
     # reconciliation for the per-field delegation
-    manifest = idx.manifest()
     fstats = manifest.get("field_stats")
     if fstats:
-        k2 = (idx.spark.read.parquet(idx.blocks_path)
+        k2 = (idx.block_rows()
               .where(F.col("kind") == 2)
               .groupBy("term")
               .agg(F.count("*").alias("dc"), F.sum("n").alias("st")))

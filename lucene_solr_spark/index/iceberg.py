@@ -76,7 +76,7 @@ def publish_index(idx: SegmentIndex, namespace: str,
     spark = idx.spark
     spark.sql(f"CREATE NAMESPACE IF NOT EXISTS {catalog}.{namespace}")
     raw = {
-        "blocks": spark.read.parquet(idx.blocks_path),  # all kinds
+        "blocks": idx.block_rows(),  # all kinds
         "docmap": idx.docmap(),
         "docs": spark.read.parquet(idx.root + "/docs"),
         "dict": idx.dict(),
@@ -115,11 +115,14 @@ class IcebergSegmentIndex:
         return self.spark.table(ident)
 
     # ---- SegmentIndex accessor surface --------------------------------
+    def block_rows(self) -> DataFrame:
+        return self._table("blocks")
+
     def blocks(self) -> DataFrame:
-        return self._table("blocks").where(F.col("kind") == 0)
+        return self.block_rows().where(F.col("kind") == 0)
 
     def summaries(self) -> DataFrame:
-        return self._table("blocks").where(F.col("kind") == 1)
+        return self.block_rows().where(F.col("kind") == 1)
 
     def segment_files(self) -> dict[int, list[str]]:
         """{segment: [data file paths]} from Iceberg's ``files`` table."""

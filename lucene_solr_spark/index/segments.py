@@ -25,11 +25,15 @@ through Parquet twice):
            (codec.py). Each chunk commit appends a checkpoint row; a
            killed build resumes by skipping completed chunks (partial
            segment dirs of an uncheckpointed chunk are removed first).
-  stage 2  docs/ dict/ stats/ — derived without joins: summary rows
-           carry the doc metadata, so docs/ is a select over blocks;
-           dict = blocks.groupBy(term).agg (map-side partial agg; hot
-           terms reduce to one row per segment before the exchange, so
-           no salting needed here); stats = one row.
+  stage 2  docs/ dict/ stats/ + the manifest's collection stats —
+           _derive_tables, the one derive step every index write
+           (build, streaming flush, compaction, split, addIndexes)
+           ends in: docs/ is a select over the kind=1 summary rows
+           (they carry the doc metadata, so no join), dict =
+           blocks.groupBy(term).agg (map-side partial agg; hot terms
+           reduce to one row per segment before the exchange, so no
+           salting needed here), stats/ and per-field stats = one
+           aggregate over the kind=1/kind=2 rows.
 
 At 10^12-file scale: docs_per_segment is the DWPT RAM-budget knob
 (IndexWriterConfig.java:93 — 16 MB buffer ≙ segment sized to executor
@@ -46,6 +50,7 @@ merge SegmentMerger.java:96-177, commit SegmentInfos/IndexCommit.
 from __future__ import annotations
 
 import glob
+import hashlib
 import json
 import os
 import shutil
@@ -315,11 +320,18 @@ class SegmentIndex:
     def docmap_path(self):
         return os.path.join(self.root, "docmap")
 
+    def block_rows(self) -> DataFrame:
+        """Every ``blocks/`` row, all kinds, read with the pinned
+        BLOCKS_SCHEMA: older files' extra columns are never read, and
+        ``segment`` comes from the directories, whatever file Spark
+        would sample for an inferred schema."""
+        return self.spark.read.schema(BLOCKS_SCHEMA).parquet(self.blocks_path)
+
     def blocks(self) -> DataFrame:
-        return self.spark.read.parquet(self.blocks_path).where(F.col("kind") == 0)
+        return self.block_rows().where(F.col("kind") == 0)
 
     def summaries(self) -> DataFrame:
-        return self.spark.read.parquet(self.blocks_path).where(F.col("kind") == 1)
+        return self.block_rows().where(F.col("kind") == 1)
 
     def segment_files(self) -> dict[int, list[str]]:
         """{segment: [parquet paths]} — ``blocks/segment=N/*.parquet``."""
@@ -370,6 +382,149 @@ class SegmentIndex:
     def manifest(self) -> dict:
         with open(os.path.join(self.root, "manifest.json")) as f:
             return json.load(f)
+
+
+def _swap(stage: str, final: str) -> None:
+    """Replace directory ``final`` by ``stage`` — a name swap, so files
+    a commit point hardlinks are never rewritten in place."""
+    if os.path.exists(final):
+        shutil.rmtree(final)
+    os.rename(stage, final)
+
+
+def _move_in(stage: str, table_root: str, token=None) -> None:
+    """Move a staged Spark output into ``table_root`` so that a re-run
+    replaces what an earlier attempt left: partition dirs (``k=v``)
+    replace their namesakes; with a ``token``, flat part files are
+    renamed under a fixed-width tag of it (fixed width: no tag is a
+    prefix of another's) after every file carrying that tag is
+    removed."""
+    os.makedirs(table_root, exist_ok=True)
+    tag = None
+    if token is not None:
+        tag = "t" + hashlib.sha1(str(token).encode()).hexdigest()[:16] + "-"
+        for name in os.listdir(table_root):
+            if name.startswith(tag):
+                os.remove(os.path.join(table_root, name))
+    for name in os.listdir(stage):
+        src = os.path.join(stage, name)
+        if "=" in name:
+            _swap(src, os.path.join(table_root, name))
+        elif tag and name.endswith(".parquet"):
+            os.rename(src, os.path.join(table_root, tag + name))
+    shutil.rmtree(stage)
+
+
+def _commit_manifest(root: str, manifest: dict) -> None:
+    """Write ``manifest.json`` through a temp name (the commit record;
+    replacing the name keeps a hardlinked commit point's copy)."""
+    tmp = os.path.join(root, "manifest.json.tmp")
+    with open(tmp, "w") as f:
+        json.dump(manifest, f, indent=1)
+    os.replace(tmp, os.path.join(root, "manifest.json"))
+
+
+def _derive_tables(idx: SegmentIndex, manifest: dict, token=None,
+                  segments=None) -> dict:
+    """The one derive step: ``docs/``, ``dict/``, ``stats/`` and the
+    manifest's ``doc_count``/``sum_ttf``/``field_stats`` follow from
+    ``blocks/`` — Lucene recomputing SegmentInfos/FieldInfos on flush,
+    merge and addIndexes. Every index write ends here.
+
+    Full form (``token=None``): recompute all of them from every block
+    row — the build, each split part, the compaction refresh.
+
+    Delta form: apply only ``segments``' rows on top of the committed
+    counts in ``manifest``, keyed by ``token`` (a streaming batch id,
+    an addIndexes fold token). The token's docs files replace whatever
+    an earlier attempt under it left, and ``dict/`` records the token
+    it last merged, so a re-run after a crash before the manifest
+    commit never merges a token twice. A ``docs/`` still in the older
+    ``batch=<id>`` partition layout gets the full form (rewritten
+    flat).
+
+    Collection stats are per field: content from the kind=1 rows,
+    every extra field from its kind=2 per-(doc, field) rows —
+    doc_count = docs with the field, sum_ttf = Σ dl
+    (BM25Similarity.java:79). ``field_stats`` is kept when the
+    manifest lists ``fields``. Returns ``manifest`` updated; the
+    caller commits it (:func:`_commit_manifest`)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root = idx.root
+    docs_root = os.path.join(root, "docs")
+    dict_root = os.path.join(root, "dict")
+    delta = token is not None and not (
+        os.path.isdir(docs_root)
+        and any(n.startswith("batch=") for n in os.listdir(docs_root)))
+    rows = idx.block_rows()
+    if delta:
+        rows = rows.where(F.col("segment").isin([int(s) for s in segments]))
+    kind = F.col("kind")
+
+    # docs: a select over the summary rows, which carry the doc metadata
+    stage = os.path.join(root, "docs.tmp")
+    rows.where(kind == 1).select(
+        F.col("first_docid").alias("docid"), *PK, "lang", "segment",
+        F.col("n").alias("dl"),
+        F.conv(F.hex(F.col("norms")), 16, 10).cast("int").alias("norm"),
+        F.col("term").alias("content_sha256"),
+    ).write.mode("overwrite").parquet(stage)
+    if delta:
+        _move_in(stage, docs_root, token)
+    else:
+        _swap(stage, docs_root)
+
+    # dict: df = Σ n, ttf = Σ sum_tf per term over the block rows
+    marker = os.path.join(dict_root, "_delta_token")
+    merged = None
+    if delta and os.path.exists(marker):
+        with open(marker) as f:
+            merged = f.read()
+    if merged != str(token):
+        post = rows.where(kind == 0).select("term", "n", "sum_tf")
+        if delta and os.path.isdir(dict_root):
+            # the committed dict joins as pre-aggregated rows
+            post = post.unionByName(idx.dict().select(
+                "term", F.col("df").alias("n"), F.col("ttf").alias("sum_tf")))
+        stage = os.path.join(root, "dict.tmp")
+        post.groupBy("term").agg(
+            F.sum("n").alias("df"), F.sum("sum_tf").alias("ttf")
+        ).write.mode("overwrite").parquet(stage)
+        if delta:
+            with open(os.path.join(stage, "_delta_token"), "w") as f:
+                f.write(str(token))
+        _swap(stage, dict_root)
+
+    # collection stats: one aggregate over the kind=1/kind=2 rows
+    prev = manifest if delta else {}
+    acc = {f: [int(v["doc_count"]), int(v["sum_ttf"])]
+           for f, v in (prev.get("field_stats") or {}).items()}
+    acc["content"] = [int(prev.get("doc_count", 0)),
+                      int(prev.get("sum_ttf", 0))]
+    field = F.when(kind == 1, F.lit("content")).otherwise(F.col("term"))
+    for r in (rows.where(kind > 0).groupBy(field.alias("field"))
+              .agg(F.count("*").alias("dc"), F.sum("n").alias("st"))
+              .collect()):
+        a = acc.setdefault(r["field"], [0, 0])
+        a[0] += int(r["dc"])
+        a[1] += int(r["st"] or 0)
+    doc_count, sum_ttf = acc["content"]
+    stage = os.path.join(root, "stats.tmp")
+    if os.path.exists(stage):
+        shutil.rmtree(stage)
+    os.makedirs(stage)
+    pq.write_table(
+        pa.table({"doc_count": pa.array([doc_count], pa.int64()),
+                  "sum_ttf": pa.array([sum_ttf], pa.int64())}),
+        os.path.join(stage, "part-0.parquet"))
+    _swap(stage, os.path.join(root, "stats"))
+    manifest.update(doc_count=doc_count, sum_ttf=sum_ttf)
+    if manifest.get("fields"):
+        manifest["field_stats"] = {
+            f: {"doc_count": dc, "sum_ttf": st} for f, (dc, st) in acc.items()}
+    return manifest
 
 
 #: table dirs a commit point pins (analyzed_spill/checkpoints are
@@ -475,14 +630,17 @@ def add_indexes(dst_root: str, src_root: str,
     This is the 100-TB build topology: shard the corpus, build every
     shard's index in parallel (separate jobs, zero coordination), then
     addIndexes them — each fold is one columnar rewrite of the shard's
-    blocks plus a dict merge, never a global re-sort.
+    blocks plus the delta form of :func:`_derive_tables`, never a
+    global re-sort.
 
     Both indexes must share the analyzer config and field list (same
     contract as Lucene); collection stats, per-field ones included,
     add up. Tombstones carry over shifted. Returns the new manifest.
-    Crash mid-fold: rerun with the same src — staged dirs are named by
-    a src-derived token and replaced wholesale (the production seam is
-    one Iceberg append commit).
+    Crash mid-fold: rerun with the same src. Every output of the fold
+    is keyed by a token of (src, the destination's committed
+    doc_count) and replaced as a whole, and the dict records the token
+    it merged, so the re-run leaves exactly what one fold leaves (the
+    production seam is one Iceberg append commit).
 
     Reopen contract: searchers opened BEFORE the fold keep serving the
     pre-fold view through their persisted scans (Lucene's stale-reader
@@ -499,46 +657,27 @@ def add_indexes(dst_root: str, src_root: str,
                              f"{man_d.get(k)} vs {man_s.get(k)}")
     D = int(man_d["doc_count"])
     S = int(man_d["n_segments"])
-    token = "addidx-" + os.path.basename(os.path.normpath(src_root))
+    token = f"addidx-{os.path.basename(os.path.normpath(src_root))}-{D}"
 
     # -- blocks: shift headers, new segment ids; stage then move ------
-    sb = spark.read.parquet(src_idx.blocks_path)
-    shifted = (sb.withColumn("segment", (F.col("segment") + S).cast("int"))
+    shifted = (src_idx.block_rows()
+               .withColumn("segment", (F.col("segment") + S).cast("int"))
                .withColumn("first_docid", F.col("first_docid") + D)
                .withColumn("last_docid", F.col("last_docid") + D))
     stage = os.path.join(dst_root, f"{token}.blocks.tmp")
     shifted.write.mode("overwrite").partitionBy("segment").parquet(stage)
-    for name in os.listdir(stage):
-        if not name.startswith("segment="):
-            continue
-        tgt = os.path.join(dst.blocks_path, name)
-        if os.path.exists(tgt):          # crashed earlier fold: replace
-            shutil.rmtree(tgt)
-        os.rename(os.path.join(stage, name), tgt)
-    shutil.rmtree(stage)
+    _move_in(stage, dst.blocks_path)
 
     # -- docmap (lineage): match the destination's layout -------------
     sm = (src_idx.docmap()
           .withColumn("docid", F.col("docid") + D)
           .withColumn("segment", (F.col("segment") + S).cast("int")))
     stage = os.path.join(dst_root, f"{token}.docmap.tmp")
-    partitioned = any(n.startswith("segment=")
-                      for n in os.listdir(dst.docmap_path))
-    if partitioned:
-        sm.write.mode("overwrite").partitionBy("segment").parquet(stage)
-        for name in os.listdir(stage):
-            if name.startswith("segment="):
-                tgt = os.path.join(dst.docmap_path, name)
-                if os.path.exists(tgt):
-                    shutil.rmtree(tgt)
-                os.rename(os.path.join(stage, name), tgt)
-    else:
-        sm.write.mode("overwrite").parquet(stage)
-        for name in os.listdir(stage):
-            if name.endswith(".parquet"):
-                os.rename(os.path.join(stage, name),
-                          os.path.join(dst.docmap_path, f"{token}-{name}"))
-    shutil.rmtree(stage)
+    writer = sm.write.mode("overwrite")
+    if any(n.startswith("segment=") for n in os.listdir(dst.docmap_path)):
+        writer = writer.partitionBy("segment")
+    writer.parquet(stage)
+    _move_in(stage, dst.docmap_path, token)
 
     # -- deletes: shifted tombstones ----------------------------------
     sdel = src_idx.deletes()
@@ -557,63 +696,12 @@ def add_indexes(dst_root: str, src_root: str,
                 pa.table({"docid": pa.array(sorted(ids), pa.int64())}),
                 fold_del)
 
-    # -- docs delta: shifted rows, layout-matched ----------------------
-    docs_root = os.path.join(dst_root, "docs")
-    sdocs = (spark.read.parquet(os.path.join(src_root, "docs"))
-             .drop("batch"))
-    sdocs = (sdocs.withColumn("docid", F.col("docid") + D)
-             .withColumn("segment", (F.col("segment") + S).cast("int")))
-    stage = os.path.join(dst_root, f"{token}.docs.tmp")
-    sdocs.write.mode("overwrite").parquet(stage)
-    if any(n.startswith("batch=") for n in os.listdir(docs_root)):
-        # streaming layout: negative batch ids never collide with the
-        # stream's monotonic ids (-1 is the full-recompute base)
-        used = [int(n.split("=", 1)[1]) for n in os.listdir(docs_root)
-                if n.startswith("batch=")]
-        tgt = os.path.join(docs_root, f"batch={min(min(used), -1) - 1}")
-        if os.path.exists(tgt):
-            shutil.rmtree(tgt)
-        os.rename(stage, tgt)
-    else:
-        for name in os.listdir(stage):
-            if name.endswith(".parquet"):
-                os.rename(os.path.join(stage, name),
-                          os.path.join(docs_root, f"{token}-{name}"))
-        shutil.rmtree(stage)
-
-    # -- dict merge + stats + manifest (the commit) --------------------
-    merged = (dst.dict().unionByName(src_idx.dict())
-              .groupBy("term").agg(F.sum("df").alias("df"),
-                                   F.sum("ttf").alias("ttf")))
-    dtmp = os.path.join(dst_root, "dict.tmp")
-    merged.write.mode("overwrite").parquet(dtmp)
-    dict_root = os.path.join(dst_root, "dict")
-    shutil.rmtree(dict_root)
-    os.rename(dtmp, dict_root)
-    new_count = D + int(man_s["doc_count"])
-    new_sttf = int(man_d["sum_ttf"]) + int(man_s["sum_ttf"])
-    spark.createDataFrame(
-        [(new_count, new_sttf)], "doc_count long, sum_ttf long"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(dst_root, "stats.tmp"))
-    stats_root = os.path.join(dst_root, "stats")
-    shutil.rmtree(stats_root)
-    os.rename(os.path.join(dst_root, "stats.tmp"), stats_root)
-    fs_d = man_d.get("field_stats") or {}
-    fs_s = man_s.get("field_stats") or {}
-    if fs_d or fs_s:
-        # per-field collection stats sum like the flat ones; a field
-        # no doc of one side carries has no entry there
-        man_d["field_stats"] = {
-            f: {key: sum(int(fs.get(f, {}).get(key, 0))
-                         for fs in (fs_d, fs_s))
-                for key in ("doc_count", "sum_ttf")}
-            for f in {**fs_d, **fs_s}}
-    man_d.update(doc_count=new_count, sum_ttf=new_sttf,
-                 n_segments=S + int(man_s["n_segments"]),
+    # -- docs/dict/stats delta + manifest (the commit) -----------------
+    man_d.update(n_segments=S + int(man_s["n_segments"]),
                  updated_wall=round(time.time(), 3))
-    with open(os.path.join(dst_root, "manifest.json"), "w") as f:
-        json.dump(man_d, f, indent=1)
+    _derive_tables(dst, man_d, token=token,
+                  segments=[s + S for s in src_idx.segment_files()])
+    _commit_manifest(dst_root, man_d)
     return man_d
 
 
@@ -628,13 +716,14 @@ def split_index(src_root: str, out_roots: list[str],
     dense 0..n-1 by subtracting the part's base — the same header-only
     columnar rewrite as :func:`add_indexes`, no posting re-encode.
 
-    Per-part dict/stats are RECOMPUTED from the part's blocks (a
-    standalone index owns its own global term statistics — a
-    split-then-search gives each shard its local BM25 stats, exactly
-    like independent Lucene indexes; distributed-search stat merging
-    is the shard-merge path in search/wand.py). Tombstones land in the
-    part owning the docid. Inverse of add_indexes:
-    ``add_indexes(split(A)...)`` reproduces A's results."""
+    Per-part docs/dict/stats are RECOMPUTED from the part's blocks by
+    the full form of :func:`_derive_tables` (a standalone index owns its
+    own global term statistics — a split-then-search gives each shard
+    its local BM25 stats, exactly like independent Lucene indexes;
+    distributed-search stat merging is the shard-merge path in
+    search/wand.py). Tombstones land in the part owning the docid.
+    Inverse of add_indexes: ``add_indexes(split(A)...)`` reproduces
+    A's results."""
     src_idx = SegmentIndex(src_root, spark)
     man = src_idx.manifest()
     n_parts = len(out_roots)
@@ -663,7 +752,7 @@ def split_index(src_root: str, out_roots: list[str],
         n_docs = int(sum(r["n"] for r in segs))
         os.makedirs(out_root, exist_ok=True)
         pred = F.col("segment").isin(seg_ids)
-        blocks = (spark.read.parquet(src_idx.blocks_path).where(pred)
+        blocks = (src_idx.block_rows().where(pred)
                   .withColumn("segment",
                               (F.col("segment") - seg_off).cast("int"))
                   .withColumn("first_docid", F.col("first_docid") - base)
@@ -674,50 +763,17 @@ def split_index(src_root: str, out_roots: list[str],
          .withColumn("docid", F.col("docid") - base)
          .withColumn("segment", (F.col("segment") - seg_off).cast("int"))
          .write.mode("overwrite").parquet(os.path.join(out_root, "docmap")))
-        part_idx = SegmentIndex(out_root, spark)
-        # per-part derived tables from the part's own blocks
-        docs = part_idx.summaries().select(
-            F.col("first_docid").alias("docid"),
-            "repo", "path", "commit", "lang", "segment",
-            F.col("n").alias("dl"),
-            F.conv(F.hex(F.col("norms")), 16, 10).cast("int").alias("norm"),
-            F.col("term").alias("content_sha256"))
-        docs.write.mode("overwrite").parquet(os.path.join(out_root, "docs"))
-        (part_idx.blocks().groupBy("term")
-         .agg(F.sum("n").alias("df"), F.sum("sum_tf").alias("ttf"))
-         .write.mode("overwrite").parquet(os.path.join(out_root, "dict")))
-        agg = part_idx.docs().agg(
-            F.count("*").alias("c"), F.sum("dl").alias("s")).collect()[0]
-        spark.createDataFrame(
-            [(int(agg["c"]), int(agg["s"] or 0))],
-            "doc_count long, sum_ttf long").coalesce(1).write.mode(
-            "overwrite").parquet(os.path.join(out_root, "stats"))
         lo_d, hi_d = base, base + n_docs
         part_dels = sorted(d - base for d in deletes if lo_d <= d < hi_d)
         if part_dels:
             append_deletes(out_root, part_dels)
         pman = dict(man)
-        if man.get("field_stats"):
-            # per-part per-field collection stats (a standalone part
-            # owns LOCAL stats — same recompute as the flat dict/stats
-            # above; kind=2 rows are per-(doc, field))
-            fs = {"content": {"doc_count": n_docs,
-                              "sum_ttf": int(agg["s"] or 0)}}
-            k2 = (spark.read.parquet(src_idx.blocks_path)
-                  .where(pred & (F.col("kind") == 2)))
-            for r in k2.groupBy("term").agg(
-                    F.count("*").alias("dc"),
-                    F.sum("n").alias("st")).collect():
-                fs[r["term"]] = {"doc_count": int(r["dc"]),
-                                 "sum_ttf": int(r["st"] or 0)}
-            pman["field_stats"] = fs
-        pman.update(doc_count=n_docs, sum_ttf=int(agg["s"] or 0),
-                    n_segments=len(seg_ids),
+        pman.pop("last_batch_id", None)
+        pman.update(n_segments=len(seg_ids),
                     split_from=os.path.basename(os.path.normpath(src_root)),
                     updated_wall=round(time.time(), 3))
-        pman.pop("last_batch_id", None)
-        with open(os.path.join(out_root, "manifest.json"), "w") as f:
-            json.dump(pman, f, indent=1)
+        _derive_tables(SegmentIndex(out_root, spark), pman)
+        _commit_manifest(out_root, pman)
         outs.append(pman)
     return outs
 
@@ -942,11 +998,7 @@ def build_segment_index(
         # staging area or segment dir (segment ranges are disjoint)
         tmp = os.path.join(out_root, f"blocks.chunk-{chunk}.tmp")
         out.write.mode("overwrite").partitionBy("segment").parquet(tmp)
-        for d in os.listdir(tmp):
-            if d.startswith("segment="):
-                os.rename(os.path.join(tmp, d),
-                          os.path.join(idx.blocks_path, d))
-        shutil.rmtree(tmp)
+        _move_in(tmp, idx.blocks_path)
         wall = time.time() - tc
         chunk_docs = min(hi_doc, n_docs_total) - lo_doc
         _append_checkpoint(
@@ -970,73 +1022,21 @@ def build_segment_index(
         with ThreadPoolExecutor(max_workers=workers) as pool:
             list(pool.map(run_chunk, pending))
 
-    # ---- stage 2: derived tables --------------------------------------
-    # docs derives straight from summary rows (they carry the doc
-    # metadata) — no join back to the docmap, no extra shuffle
-    idx.summaries().select(
-        F.col("first_docid").alias("docid"), *PK, "lang", "segment",
-        F.col("n").alias("dl"),
-        F.conv(F.hex(F.col("norms")), 16, 10).cast("int").alias("norm"),
-        F.col("term").alias("content_sha256"),
-    ).write.mode("overwrite").parquet(os.path.join(out_root, "docs"))
-
-    blocks = idx.blocks()
-    blocks.groupBy("term").agg(
-        F.sum("n").alias("df"), F.sum("sum_tf").alias("ttf")
-    ).write.mode("overwrite").parquet(os.path.join(out_root, "dict"))
-
-    # collection stats without another corpus-wide scan: doc_count is
-    # already known, sum_ttf = Σ dict.ttf (both count post-stop tokens)
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    # content-field stats only: qualified (<field>\x1f<term>) entries
-    # belong to their own field's collection stats, not content's
-    ttf_dict = idx.dict()
-    if extra_fields:
-        ttf_dict = ttf_dict.where(~F.col("term").contains(FIELD_SEP))
-    ttf_row = ttf_dict.agg(F.sum("ttf").alias("s")).collect()[0]
-    stats_dir = os.path.join(out_root, "stats")
-    if os.path.exists(stats_dir):
-        shutil.rmtree(stats_dir)
-    os.makedirs(stats_dir)
-    pq.write_table(
-        pa.table({"doc_count": pa.array([int(n_docs_total)], pa.int64()),
-                  "sum_ttf": pa.array([int(ttf_row["s"] or 0)], pa.int64())}),
-        os.path.join(stats_dir, "part-0.parquet"))
-
-    st = idx.stats()
-    field_stats = None
-    if extra_fields:
-        # per-field collection stats, v1 convention (builder.py:483-489):
-        # doc_count = docs WITH the field, sum_ttf = Σ dl over them
-        # (BM25Similarity.java:79); content counts every doc (NULL
-        # content indexes as "" — the single-field v2 semantics)
-        field_stats = {"content": {"doc_count": int(st["doc_count"]),
-                                   "sum_ttf": int(st["sum_ttf"] or 0)}}
-        k2 = spark.read.parquet(idx.blocks_path).where(F.col("kind") == 2)
-        for r in k2.groupBy("term").agg(
-                F.count("*").alias("dc"),
-                F.sum("n").alias("st")).collect():
-            field_stats[r["term"]] = {"doc_count": int(r["dc"]),
-                                      "sum_ttf": int(r["st"] or 0)}
+    # ---- stage 2: derived tables + manifest -----------------------------
     manifest = {
         "format_version": 2,
-        "doc_count": st["doc_count"],
-        "sum_ttf": int(st["sum_ttf"] or 0),
         "docs_per_segment": docs_per_segment,
         "n_segments": n_segments,
         "n_chunks": n_chunks,
         "block_size": codec.BLOCK_SIZE,
         "stop_words": sorted(stop_words),
         "max_token_length": max_token_length,
-        "build_wall_sec": round(time.time() - t0, 3),
     }
-    if field_stats is not None:
+    if extra_fields:
         manifest["fields"] = list(fields)
-        manifest["field_stats"] = field_stats
-    with open(os.path.join(out_root, "manifest.json"), "w") as f:
-        json.dump(manifest, f, indent=1)
+    _derive_tables(idx, manifest)
+    manifest["build_wall_sec"] = round(time.time() - t0, 3)
+    _commit_manifest(out_root, manifest)
     shutil.rmtree(spill_path, ignore_errors=True)  # build-scoped spill
     return idx
 
@@ -1083,10 +1083,7 @@ def pk_split_index(src_root: str, out_pass: str, out_fail: str,
             man = json.load(f)
         man.update(pk_split_from=os.path.basename(os.path.normpath(src_root)),
                    pk_split_side=tag, updated_wall=round(time.time(), 3))
-        # hardlinked manifest must not mutate the source's inode:
-        # replace the name, never the content (the commit-point rule)
-        os.unlink(man_path)
-        with open(man_path, "w") as f:
-            json.dump(man, f, indent=1)
+        # the hardlinked manifest's name is replaced, never its content
+        _commit_manifest(out_root, man)
         outs.append(man)
     return tuple(outs)

@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 
 from pyspark.sql import DataFrame, functions as F
@@ -41,8 +42,12 @@ from ..index.builder import PK
 from ..index.segments import (
     BLOCKS_SCHEMA,
     SegmentIndex,
+    _commit_manifest,
+    _move_in,
     _segment_builder,
+    _swap,
     append_deletes,
+    _derive_tables,
 )
 
 
@@ -125,11 +130,7 @@ class IncrementalIndexer:
         # place (segment ids are batch-exclusive — each batch starts at
         # the manifest's n_segments — so a move never interleaves rows
         # from two batches; a retry replaces its own partial dirs)
-        import shutil
-
         tmp = os.path.join(self.root, f"batch-{batch_id}.tmp")
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)
         out.write.mode("overwrite").partitionBy("segment").parquet(
             os.path.join(tmp, "blocks"))
         # docmap (lineage) — segment-pure files, matching the batch
@@ -137,140 +138,34 @@ class IncrementalIndexer:
         with_ids.repartition(F.col("segment")).write.mode("overwrite").partitionBy(
             "segment").parquet(os.path.join(tmp, "docmap"))
         for name in ("blocks", "docmap"):
-            dst_root = os.path.join(self.root, name)
-            os.makedirs(dst_root, exist_ok=True)
-            src_root = os.path.join(tmp, name)
-            for d in os.listdir(src_root):
-                if not d.startswith("segment="):
-                    continue
-                dst = os.path.join(dst_root, d)
-                if os.path.exists(dst):  # partial dir from a crashed try
-                    shutil.rmtree(dst)
-                os.rename(os.path.join(src_root, d), dst)
+            _move_in(os.path.join(tmp, name), os.path.join(self.root, name))
         shutil.rmtree(tmp)
 
         idx = SegmentIndex(self.root, spark)
         new_segments = sorted(s for s in idx.segment_files()
                               if s >= base_segment)
-        self._refresh_derived(idx, batch_id=batch_id, new_segments=new_segments)
+        self._refresh_derived(idx, batch_id, new_segments)
         if parent is not None:
             parent.unpersist()
 
-    def _docs_select(self, summaries: DataFrame) -> DataFrame:
-        return summaries.select(
-            F.col("first_docid").alias("docid"), *PK, "lang", "segment",
-            F.col("n").alias("dl"),
-            F.conv(F.hex(F.col("norms")), 16, 10).cast("int").alias("norm"),
-            F.col("term").alias("content_sha256"),
-        )
-
-    def _refresh_derived(self, idx: SegmentIndex, batch_id: int | None = None,
-                         new_segments: list[int] | None = None) -> None:
-        """Refresh docs/dict/stats + manifest (the 'reopen').
-
-        Incremental when possible: the docs delta (only the NEW
-        segments' summaries) lands in a batch-scoped partition dir, and
-        the dict is a merge of the existing dict with the new segments'
-        term aggregate — per-batch cost is O(batch + vocabulary), not
-        O(index) (round-1 quadratic-ingest finding). Idempotence: the
-        dict dir carries a ``_delta_batch`` marker, and the docs delta
-        dir is replaced wholesale on a retried batch. Falls back to a
-        full recompute from blocks when no prior derived tables exist
-        (first batch) or no segment list was provided (compaction)."""
-        import shutil
-
-        spark = idx.spark
-        docs_root = os.path.join(self.root, "docs")
-        dict_root = os.path.join(self.root, "dict")
-        marker = os.path.join(dict_root, "_delta_batch")
-
-        incremental = bool(
-            batch_id is not None and new_segments
-            and os.path.exists(docs_root) and os.path.exists(dict_root))
-        if incremental:
-            seg_pred = F.col("segment").isin([int(s) for s in new_segments])
-            # docs delta → docs/batch=<id>/ (replace-on-retry)
-            tmp = os.path.join(self.root, "docs.delta.tmp")
-            self._docs_select(idx.summaries().where(seg_pred)).write.mode(
-                "overwrite").parquet(tmp)
-            dst = os.path.join(docs_root, f"batch={batch_id}")
-            if os.path.exists(dst):
-                shutil.rmtree(dst)
-            os.rename(tmp, dst)
-            # dict merge (skip if this batch's delta is already in)
-            applied = -1
-            if os.path.exists(marker):
-                with open(marker) as f:
-                    applied = int(f.read().strip() or -1)
-            if applied != batch_id:
-                delta = idx.blocks().where(seg_pred).groupBy("term").agg(
-                    F.sum("n").alias("df"), F.sum("sum_tf").alias("ttf"))
-                old = spark.read.parquet(dict_root)
-                merged = old.unionByName(delta).groupBy("term").agg(
-                    F.sum("df").alias("df"), F.sum("ttf").alias("ttf"))
-                dtmp = os.path.join(self.root, "dict.tmp")
-                merged.write.mode("overwrite").parquet(dtmp)
-                with open(os.path.join(dtmp, "_delta_batch"), "w") as f:
-                    f.write(str(batch_id))
-                shutil.rmtree(dict_root)
-                os.rename(dtmp, dict_root)
-        else:
-            # full recompute from blocks; docs live under batch=<id> so
-            # later incremental deltas can append partition dirs
-            self._docs_select(idx.summaries()).write.mode("overwrite").parquet(
-                os.path.join(self.root, "docs.tmp"))
-            idx.blocks().groupBy("term").agg(
-                F.sum("n").alias("df"), F.sum("sum_tf").alias("ttf")
-            ).write.mode("overwrite").parquet(os.path.join(self.root, "dict.tmp"))
-            for name in ("docs", "dict"):
-                final = os.path.join(self.root, name)
-                tmp = os.path.join(self.root, name + ".tmp")
-                if os.path.exists(final):
-                    shutil.rmtree(final)
-                if name == "docs":
-                    os.makedirs(final, exist_ok=True)
-                    os.rename(tmp, os.path.join(
-                        final, f"batch={-1 if batch_id is None else batch_id}"))
-                else:
-                    os.rename(tmp, final)
-
-        if incremental:
-            # O(batch) stats maintenance: aggregate ONLY the delta and
-            # add to the manifest's committed running counters (the
-            # manifest is written atomically with last_batch_id below,
-            # so a retried half-applied batch always adds its delta to
-            # the PRE-batch committed base — never double-counts).
-            # Tombstoned docs keep counting until compaction (Lucene
-            # docCount-vs-liveDocs), so additive deltas stay exact;
-            # the compaction path below recomputes from scratch.
-            committed = self._load_state()
-            dagg = (spark.read.parquet(os.path.join(docs_root,
-                                                    f"batch={batch_id}"))
-                    .agg(F.count("*").alias("c"),
-                         F.sum("dl").alias("s")).collect()[0])
-            agg = {"c": int(committed.get("doc_count", 0)) + int(dagg["c"]),
-                   "s": (int(committed.get("sum_ttf", 0))
-                         + int(dagg["s"] or 0))}
-        else:
-            docs = idx.docs()
-            agg = docs.agg(F.count("*").alias("c"),
-                           F.sum("dl").alias("s")).collect()[0]
-        if new_segments:
-            n_segments = max(int(self._load_state().get("n_segments", 0)) - 1,
-                             max(new_segments))
-        else:
-            n_segments = max(idx.segment_files())
-        spark.createDataFrame(
-            [(int(agg["c"]), int(agg["s"] or 0))], "doc_count long, sum_ttf long"
-        ).coalesce(1).write.mode("overwrite").parquet(os.path.join(self.root, "stats"))
+    def _refresh_derived(self, idx: SegmentIndex, batch_id: int,
+                         new_segments: list[int]) -> None:
+        """The reopen after a flush: the delta form of
+        :func:`..index.segments._derive_tables` keyed by ``batch_id``
+        (docs/dict/stats cost O(batch + vocabulary), not O(index)), then
+        the manifest commit. What is streaming's own is the commit
+        record: the running counters the delta adds to are the
+        committed manifest's, and ``last_batch_id`` lands in the same
+        atomic write, so a retried half-applied batch adds its delta to
+        the PRE-batch base — never twice. Tombstoned docs keep counting
+        until compaction (Lucene docCount-vs-liveDocs)."""
         state = self._load_state()
-        state.update(doc_count=int(agg["c"]), sum_ttf=int(agg["s"] or 0),
-                     n_segments=int(n_segments) + 1,
+        state.update(n_segments=max(int(state["n_segments"]),
+                                    max(new_segments) + 1),
+                     last_batch_id=int(batch_id),
                      updated_wall=round(time.time(), 3))
-        if batch_id is not None:
-            state["last_batch_id"] = int(batch_id)  # the commit record
-        with open(self.manifest_path, "w") as f:
-            json.dump(state, f, indent=1)
+        _derive_tables(idx, state, token=batch_id, segments=new_segments)
+        _commit_manifest(self.root, state)
 
     # -- updates / deletes ----------------------------------------------
     def delete_by_key(self, spark, keys_df: DataFrame,
@@ -564,9 +459,10 @@ def compact_segments(idx: SegmentIndex, min_fill: float = 0.5,
     exists only because Lucene docids are per-segment). Tombstoned docs
     inside the merged segments are physically dropped (deletes applied
     at merge, FreqProxTermsWriter applyDeletes role) and their
-    tombstones retired; derived tables + manifest stats refresh when
-    deletes were applied. Returns the segment count after compaction."""
-    spark = idx.spark
+    tombstones retired. Every compaction that rewrites segments ends in
+    the full form of :func:`..index.segments._derive_tables` (docs/dict/
+    stats + manifest counts). Returns the segment count after
+    compaction."""
     m = idx.manifest()
     dps = int(m["docs_per_segment"])
     seg_sizes = {
@@ -634,16 +530,11 @@ def compact_segments(idx: SegmentIndex, min_fill: float = 0.5,
     tmp = os.path.join(idx.root, "blocks.compact.tmp")
     out.write.mode("overwrite").partitionBy("segment").parquet(tmp)
     # swap: drop old small segment dirs, move in compacted ones
-    import shutil
-
     for s in small:
         p = os.path.join(idx.blocks_path, f"segment={s}")
         if os.path.exists(p):
             shutil.rmtree(p)
-    for d in os.listdir(tmp):
-        if d.startswith("segment="):
-            os.rename(os.path.join(tmp, d), os.path.join(idx.blocks_path, d))
-    shutil.rmtree(tmp)
+    _move_in(tmp, idx.blocks_path)
     # docmap segment column is stale for moved docs; rebuild it
     new_map = docmap.drop("segment").join(
         idx.summaries().select(F.col("first_docid").alias("docid"),
@@ -652,8 +543,7 @@ def compact_segments(idx: SegmentIndex, min_fill: float = 0.5,
     )
     new_map.repartition(F.col("segment")).write.mode("overwrite").partitionBy(
         "segment").parquet(os.path.join(idx.root, "docmap.tmp"))
-    shutil.rmtree(idx.docmap_path)
-    os.rename(os.path.join(idx.root, "docmap.tmp"), idx.docmap_path)
+    _swap(os.path.join(idx.root, "docmap.tmp"), idx.docmap_path)
 
     if applied_del_ids:
         # retire the tombstones that were physically applied; keep the
@@ -663,8 +553,11 @@ def compact_segments(idx: SegmentIndex, min_fill: float = 0.5,
         shutil.rmtree(idx.deletes_path)
         if remaining:
             append_deletes(idx.root, remaining)
-        # deleted docs are gone from postings: refresh docs/dict/stats
-        # + manifest counts (Lucene: merged segments lose deletions and
-        # docCount drops to numDocs)
-        IncrementalIndexer(idx.root)._refresh_derived(idx)
+    # the refresh: docs/dict/stats + manifest counts recomputed from the
+    # rewritten blocks (Lucene: merged segments lose deletions and
+    # docCount drops to numDocs; docs rows follow their new segment)
+    m.update(n_segments=max(idx.segment_files()) + 1,
+             updated_wall=round(time.time(), 3))
+    _derive_tables(idx, m)
+    _commit_manifest(idx.root, m)
     return len(idx.segment_files())

@@ -4,11 +4,15 @@ merged index must be BIT-identical (scores + docids) to one index
 built over the whole corpus, because the split is a PK-prefix split
 and the codec's delta blocks are shift-invariant."""
 
+import os
+import shutil
+
 import numpy as np
 import pytest
 
 from lucene_solr_spark.analysis import ENGLISH_STOP_WORDS, StandardAnalyzer
 from lucene_solr_spark.corpus import corpus_df, corpus_pandas
+from lucene_solr_spark.index import check_segment_index
 from lucene_solr_spark.index.segments import (
     SegmentIndex,
     add_indexes,
@@ -48,6 +52,8 @@ def test_manifest_sums(merged):
     assert man["doc_count"] == N_DOCS
     assert searcher.doc_count == oracle.doc_count == N_DOCS
     assert searcher.sum_ttf == oracle.sum_ttf
+    st = check_segment_index(searcher.index, decode=False)
+    assert st.clean, st.failed()
 
 
 def test_merged_is_bit_identical_to_full_build(merged):
@@ -159,3 +165,48 @@ def test_fields_mismatch_rejected(spark, tmp_path_factory):
                         stop_words=ENGLISH_STOP_WORDS)
     with pytest.raises(ValueError, match="config mismatch on 'fields'"):
         add_indexes(a, b, spark)
+
+
+def test_fold_rerun_after_crash_is_safe(spark, tmp_path_factory):
+    """A fold that crashed before its manifest commit is re-run with
+    the same src: the re-run must leave exactly what one fold leaves —
+    no doubled docs/docmap rows, no dict counted twice."""
+    pdf = (corpus_pandas(N_DOCS)
+           .sort_values(["repo", "path", "commit"]).reset_index(drop=True))
+    roots = {n: str(tmp_path_factory.mktemp(f"rerun_{n}"))
+             for n in ("full", "dst", "src")}
+    build_segment_index(spark.createDataFrame(pdf), roots["full"],
+                        stop_words=ENGLISH_STOP_WORDS, docs_per_segment=48)
+    build_segment_index(spark.createDataFrame(pdf.iloc[:SPLIT]), roots["dst"],
+                        stop_words=ENGLISH_STOP_WORDS, docs_per_segment=48)
+    build_segment_index(spark.createDataFrame(pdf.iloc[SPLIT:]), roots["src"],
+                        stop_words=ENGLISH_STOP_WORDS, docs_per_segment=32)
+    man_path = os.path.join(roots["dst"], "manifest.json")
+    shutil.copy(man_path, man_path + ".pre")
+    add_indexes(roots["dst"], roots["src"], spark)
+    os.replace(man_path + ".pre", man_path)   # crash before the commit
+    man = add_indexes(roots["dst"], roots["src"], spark)
+
+    idx = SegmentIndex(roots["dst"], spark)
+    st = check_segment_index(idx, decode=False)
+    assert st.clean, st.failed()
+    assert idx.docs().count() == idx.docmap().count() == N_DOCS
+    full = SegmentSearcher(SegmentIndex(roots["full"], spark), cache=True)
+    assert {k: man[k] for k in ("doc_count", "sum_ttf")} == {
+        k: full.manifest()[k] for k in ("doc_count", "sum_ttf")}
+    assert idx.stats() == SegmentIndex(roots["full"], spark).stats()
+    assert sorted(map(tuple, idx.dict().collect())) == sorted(
+        map(tuple, full.index.dict().collect()))
+    folded = SegmentSearcher(idx, cache=True)
+    oracle = OracleIndex(
+        analyzer=StandardAnalyzer(stop_words=ENGLISH_STOP_WORDS))
+    oracle.add_all(pdf["content"])
+    by_df = sorted((t for _f, t in oracle.postings),
+                   key=lambda t: (oracle.doc_freq(t), t))
+    for q in [TermQuery(by_df[len(by_df) // 2]), TermQuery(by_df[-1]),
+              BooleanQuery.of(should=[TermQuery(by_df[-1]),
+                                      TermQuery(by_df[-2])])]:
+        exp = [(d.docid, np.float32(d.score)) for d in full.search(q, 15)]
+        assert exp, q
+        got = [(d.docid, np.float32(d.score)) for d in folded.search(q, 15)]
+        assert got == exp, q

@@ -4,6 +4,7 @@ the invariant that guards them (CheckIndex.java:496-734 discipline:
 recorded stats must equal enumerated reality)."""
 
 import glob
+import json
 import os
 import shutil
 
@@ -87,7 +88,8 @@ def test_v2_clean(spark, v2_root):
     for k in ("docmap_docid_unique", "docmap_docid_contiguous",
               "docs_count", "docs_keys_match_docmap",
               "docs_norm_encoding", "dict_df_ttf", "stats_doc_count",
-              "stats_sum_ttf", "block_ordinals_contiguous",
+              "stats_sum_ttf", "manifest_doc_count", "manifest_sum_ttf",
+              "block_ordinals_contiguous",
               "block_full_size", "block_docid_ranges_ascend",
               "decode_docids", "decode_tfs", "decode_norms",
               "decode_positions"):
@@ -200,3 +202,17 @@ def test_v2_detects_corrupt_buffer(spark, v2_root, tmp_path):
     _mutate_blocks(root, truncate_docids)
     st = check_segment_index(SegmentIndex(root, spark))
     assert st.checks["decode_docids"] >= 1
+
+
+def test_v2_detects_manifest_stats_drift(spark, v2_root, tmp_path):
+    """SegmentSearcher scores with the manifest's doc_count/sum_ttf,
+    not stats/: a drifted manifest copy is flagged on its own."""
+    root = _copy(v2_root, tmp_path, "v2_manifest")
+    path = os.path.join(root, "manifest.json")
+    with open(path) as f:
+        man = json.load(f)
+    man["sum_ttf"] += 1
+    with open(path, "w") as f:
+        json.dump(man, f)
+    st = check_segment_index(SegmentIndex(root, spark), decode=False)
+    assert st.failed() == {"manifest_sum_ttf": 1}

@@ -7,6 +7,7 @@ import pytest
 
 from lucene_solr_spark.analysis import ENGLISH_STOP_WORDS, StandardAnalyzer
 from lucene_solr_spark.corpus import corpus_pandas
+from lucene_solr_spark.index import check_segment_index
 from lucene_solr_spark.index.segments import (
     SegmentIndex,
     add_indexes,
@@ -56,6 +57,8 @@ def test_part_bit_identical_to_fresh_build(split, spark):
         s = SegmentSearcher(SegmentIndex(root, spark), cache=True)
         assert s.doc_count == oracle.doc_count
         assert s.sum_ttf == oracle.sum_ttf
+        st = check_segment_index(s.index, decode=False)
+        assert st.clean, (root, st.failed())
         for t in _probe_terms(oracle):
             exp = oracle.search(TermQuery(t), 12)
             got = s.search(TermQuery(t), 12)
@@ -97,6 +100,33 @@ def test_tombstones_route_to_owning_part(spark, tmp_path_factory):
     d1 = set(SegmentIndex(p1, spark).deleted_docids().tolist())
     assert d0 == {3}
     assert d1 == {97 - b}
+
+
+def test_multifield_parts_match_fresh_builds(spark, tmp_path_factory):
+    """Each part of a split multi-field index owns the per-field
+    collection stats a fresh build over its docs would have."""
+    pdf = (corpus_pandas(120)
+           .sort_values(["repo", "path", "commit"]).reset_index(drop=True))
+    pdf = pdf.assign(title=[
+        "%s file of %s" % (lang, path.split("/")[-1].split(".")[0])
+        for lang, path in zip(pdf["lang"], pdf["path"])])
+    kw = dict(stop_words=ENGLISH_STOP_WORDS, docs_per_segment=32,
+              fields=("content", "title"))
+    src = str(tmp_path_factory.mktemp("splitmf_src"))
+    build_segment_index(spark.createDataFrame(pdf), src, **kw)
+    parts = [str(tmp_path_factory.mktemp(f"splitmf_p{i}")) for i in (0, 1)]
+    mans = split_index(src, parts, spark)
+    lo = 0
+    for root, man in zip(parts, mans):
+        hi = lo + man["doc_count"]
+        fresh = str(tmp_path_factory.mktemp("splitmf_fresh"))
+        build_segment_index(spark.createDataFrame(pdf.iloc[lo:hi]), fresh,
+                            **kw)
+        assert man["field_stats"] == (
+            SegmentIndex(fresh, spark).manifest()["field_stats"])
+        st = check_segment_index(SegmentIndex(root, spark), decode=False)
+        assert st.clean, (root, st.failed())
+        lo = hi
 
 
 # ---- PKIndexSplitter: predicate split ------------------------------------

@@ -2,11 +2,15 @@
 the same searchable state as a one-shot batch build (Lucene NRT
 reopen semantics), and tiered compaction must preserve results."""
 
+import glob
+import os
+
 import numpy as np
 import pytest
 
 from lucene_solr_spark.analysis import ENGLISH_STOP_WORDS
 from lucene_solr_spark.corpus import corpus_df
+from lucene_solr_spark.index import check_segment_index
 from lucene_solr_spark.index.segments import SegmentIndex, build_segment_index
 from lucene_solr_spark.search.queries import BooleanQuery, TermQuery
 from lucene_solr_spark.search.wand import SegmentSearcher
@@ -60,6 +64,8 @@ def test_streamed_equals_batch(spark, streamed, tmp_path_factory):
     sm, bm = streamed.manifest(), batch_idx.manifest()
     assert sm["doc_count"] == bm["doc_count"] == N_DOCS
     assert sm["sum_ttf"] == bm["sum_ttf"]
+    st = check_segment_index(streamed, decode=False)
+    assert st.clean, st.failed()
     a = {(r["term"], r["df"], r["ttf"]) for r in streamed.dict().collect()}
     b = {(r["term"], r["df"], r["ttf"]) for r in batch_idx.dict().collect()}
     assert a == b
@@ -91,6 +97,8 @@ def test_compaction_preserves_results(spark, streamed):
     assert before == after
     # doc set unchanged
     assert streamed.docs().count() == N_DOCS
+    st = check_segment_index(streamed, decode=False)
+    assert st.clean, st.failed()
 
 
 def test_tiered_merge_plan_pure():
@@ -117,3 +125,24 @@ def test_tiered_compaction_preserves_results(spark, streamed):
     after = _topdocs_by_sha(spark, streamed, q, N_DOCS)
     assert before == after
     assert streamed.docs().count() == N_DOCS
+
+
+def test_older_docs_layout_flushes_clean(spark, tmp_path):
+    """Older streaming indexes keep docs under ``docs/batch=<id>/``;
+    the next flush rewrites docs flat from blocks, and the index
+    counts every doc once."""
+    root = str(tmp_path / "idx")
+    corpus = corpus_df(spark, 60, partitions=2)
+    indexer = IncrementalIndexer(root, stop_words=ENGLISH_STOP_WORDS,
+                                 docs_per_segment=24)
+    indexer.process_batch(corpus.where("pmod(crc32(path), 2) = 0"), 0)
+    older = os.path.join(root, "docs", "batch=0")
+    os.makedirs(older)
+    for f in glob.glob(os.path.join(root, "docs", "*.parquet")):
+        os.rename(f, os.path.join(older, os.path.basename(f)))
+    indexer.process_batch(corpus.where("pmod(crc32(path), 2) = 1"), 1)
+    idx = SegmentIndex(root, spark)
+    assert not glob.glob(os.path.join(root, "docs", "batch=*"))
+    assert idx.manifest()["doc_count"] == idx.docs().count() == 60
+    st = check_segment_index(idx, decode=False)
+    assert st.clean, st.failed()
