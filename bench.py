@@ -21,6 +21,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import statistics
 import sys
 import tempfile
 import time
@@ -35,6 +36,9 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 # 120k keeps the bench under ~3 min while reporting steady-state rate.
 N_BUILD_DOCS = int(os.environ.get("LSS_BENCH_DOCS", "120000"))
 N_QUERIES = int(os.environ.get("LSS_BENCH_QUERIES", "40"))
+#: timed runs per build row; the row reports their median, the raw
+#: runs ride along as ``<row>_reps``
+BUILD_REPS = 3
 
 
 def host_cpus() -> int:
@@ -143,9 +147,13 @@ def bench_sorted_index(spark, sf_dir: str) -> dict[str, float]:
             (F.col("id") * 7919 % 1_000_000).alias("size"),
             F.sha2(F.col("id").cast("string"), 256).alias("payload"),
         )
-        t0 = time.time()
-        build_sorted_index(rows, root, "size", num_segments=32)
-        out["sorted_index_build"] = round(time.time() - t0, 3)
+        secs = []
+        for _ in range(BUILD_REPS):
+            t0 = time.time()
+            build_sorted_index(rows, root, "size", num_segments=32)
+            secs.append(time.time() - t0)
+        out["sorted_index_build"] = round(statistics.median(secs), 3)
+        out["sorted_index_build_reps"] = [round(s, 3) for s in secs]
         idx = SortedIndex(root, spark)
         flt = F.col("payload").startswith("a")   # ~1/16 of rows
         t0 = time.time()
@@ -191,12 +199,15 @@ def bench_engine(spark) -> tuple[dict[str, float], dict[str, float]]:
         # codec v2: compressed segment build (the flagship write path);
         # FIXED docs_per_segment — segment count scales with the
         # corpus, segment size (= per-task memory) never does
-        t0 = time.time()
-        segidx = build_segment_index(corpus, root2,
-                                     docs_per_segment=2048,
-                                     segments_per_chunk=10**9)
-        v2_sec = time.time() - t0
+        secs = []
+        for _ in range(BUILD_REPS):
+            t0 = time.time()
+            segidx = build_segment_index(corpus, root2,
+                                         docs_per_segment=2048)
+            secs.append(time.time() - t0)
+        v2_sec = statistics.median(secs)
         timings["index_build_v2"] = round(v2_sec, 3)
+        extras["index_build_v2_reps"] = [round(s, 3) for s in secs]
         extras["build_v2_docs_per_sec"] = round(N_BUILD_DOCS / v2_sec, 1)
 
         wand = SegmentSearcher(segidx, cache=True)
@@ -300,10 +311,8 @@ def bench_engine(spark) -> tuple[dict[str, float], dict[str, float]]:
                 t0 = time.time()
                 fn()
                 rep_secs[tk].append(time.time() - t0)
-        import statistics as _st
-
         for tk, ek, _fn, n in regimes:
-            med = _st.median(rep_secs[tk])
+            med = statistics.median(rep_secs[tk])
             timings[tk] = round(med, 3)
             extras[ek] = round(n / med, 2)
             extras[ek + "_reps"] = [round(n / s, 1)

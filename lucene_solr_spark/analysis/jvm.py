@@ -19,10 +19,10 @@ length counts only surviving tokens.
 
 Rows the ASCII grammar cannot handle exactly — any non-ASCII character
 (full Unicode word-break classes) or a 256+ run of token characters
-(StandardAnalyzer's 255-char chop, StandardAnalyzer.java:61-69) — are
-routed through the Python analyzer via ``mapInPandas``, coalesced to a
-few partitions so the (normally empty) branch does not spin up one
-Python worker per corpus partition. Golden tests pin the two paths to
+(StandardAnalyzer's 255-char chop, StandardAnalyzer.java:61-69) — keep
+their content, and the Python task that consumes them (a segment
+builder) runs them through the Python analyzer
+(:func:`finish_python_rows`). Golden tests pin the two paths to
 byte-identical output on the shared domain.
 """
 
@@ -30,15 +30,11 @@ from __future__ import annotations
 
 import hashlib
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from .tokenizer import _A_WORD, MAX_TOKEN_LENGTH, standard_tokenize
-
-#: output columns added by :func:`analyzed_columns`
-ANALYZED_COLS = ("tokens", "content_sha256")
-
-#: partitions for the python-fallback branch (usually ~zero rows)
-_FALLBACK_PARTITIONS = 4
 
 
 def _needs_python(content, raw_tokens, max_token_length: int):
@@ -52,35 +48,36 @@ def _needs_python(content, raw_tokens, max_token_length: int):
         raw_tokens, lambda t: F.length(t) > max_token_length)
 
 
-def _python_analyzed(df: DataFrame, max_token_length: int,
-                     content_col: str, tokens_col: str,
-                     with_sha: bool) -> DataFrame:
-    """The exact-semantics fallback (full Unicode + 255-chop): lowered,
-    UNFILTERED token stream — position = list index, like the JVM
-    branch."""
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + f", {tokens_col} array<string>"
-    if with_sha:
-        out_schema += ", content_sha256 string"
+def python_tokens(content: str, max_token_length: int) -> list[str]:
+    """One document's token stream from the Python analyzer (full
+    Unicode + 255-chop): lowered, UNFILTERED — position = list index,
+    like the JVM branch."""
+    return [t.lower() for t in standard_tokenize(content, max_token_length)]
 
-    def analyze(batches):
-        for pdf in batches:
-            toks_l, sha_l = [], []
-            for content in pdf[content_col].fillna(""):
-                toks = standard_tokenize(content, max_token_length)
-                toks_l.append([t.lower() for t in toks])
-                if with_sha:
-                    sha_l.append(
-                        hashlib.sha256(content.encode("utf-8")).hexdigest())
-            out = pdf.copy()
-            out[tokens_col] = toks_l
+
+def finish_python_rows(pdf: pd.DataFrame, passes,
+                       max_token_length: int = MAX_TOKEN_LENGTH
+                       ) -> pd.DataFrame:
+    """Finish, in the pandas batch of the task consuming them, the rows
+    :func:`analyzed_deferred` left to the Python analyzer: per
+    ``(tokens_col, py_content_col, with_sha)`` pass, each row with
+    retained content gets :func:`python_tokens` of it (and with
+    ``with_sha`` its ``content_sha256``). Passes whose column is absent
+    are skipped; the retained-content columns are dropped."""
+    for tokens_col, py_col, with_sha in passes:
+        if py_col not in pdf.columns:
+            continue
+        texts = pdf[py_col].to_numpy()
+        toks = pdf[tokens_col].to_numpy(copy=True)
+        shas = pdf["content_sha256"].to_numpy(copy=True) if with_sha else None
+        for i in np.flatnonzero(pd.notna(texts)):
+            toks[i] = python_tokens(texts[i], max_token_length)
             if with_sha:
-                out["content_sha256"] = sha_l
-            yield out
-
-    return df.coalesce(_FALLBACK_PARTITIONS).mapInPandas(
-        analyze, schema=out_schema)
+                shas[i] = hashlib.sha256(texts[i].encode("utf-8")).hexdigest()
+        pdf[tokens_col] = toks
+        if with_sha:
+            pdf["content_sha256"] = shas
+    return pdf.drop(columns=[p for _t, p, _s in passes if p in pdf.columns])
 
 
 #: deferred-mode column holding the retained content of rows that need
@@ -98,25 +95,20 @@ def analyzed_deferred(df: DataFrame,
     """ONE-projection analyze (drops ``content_col``): ASCII rows get
     ``tokens_col`` (lowered, position = index) and — when ``with_sha``
     — ``content_sha256``; rows needing the full-Unicode Python analyzer
-    get NULL tokens and their content retained in ``PY_CONTENT_COL``
-    for :func:`finalize_analyzed`.
+    get NULL tokens and their content retained in ``py_content_col``
+    for :func:`finish_python_rows`.
 
-    Why this exists: :func:`analyzed_columns` is a union of two
-    filtered branches, and each filter re-evaluates the tokenize regex
-    — the physical plan runs ``regexp_extract_all`` 3x per row over 2
-    corpus scans. Here the regex and the needs-py predicate each get
-    their OWN Project so they are computed once per row: Catalyst's
-    CollapseProject refuses to merge a Project whose alias is a
-    non-cheap expression referenced more than once downstream (a
-    single-Project CASE shape measured ~1.4x MORE cpu — subexpression
-    elimination does not cover interpreted higher-order exprs).
+    The regex and the needs-py predicate each get their OWN Project so
+    they are computed once per row (a filtered-union shape ran the
+    regex 3x per row over 2 scans): Catalyst's CollapseProject refuses
+    to merge a Project whose alias is a non-cheap expression referenced
+    more than once downstream (a single-Project CASE shape measured
+    ~1.4x MORE cpu — subexpression elimination does not cover
+    interpreted higher-order exprs).
 
-    CONTRACT: the result must be MATERIALIZED (parquet spill, persist)
-    before any filter touches it — Catalyst pushes predicates through
-    Project aliases, which would re-derive the regex per filter. After
-    materialization, branch on ``PY_CONTENT_COL`` (atomic string →
-    parquet-pushable; an IsNull on the ``tokens`` ARRAY column is NOT
-    pushable and forces full scans — measured 3x on the block build).
+    CONTRACT: materialize the result (parquet spill, persist) before
+    any filter touches it — Catalyst pushes predicates through Project
+    aliases, which would re-derive the regex per filter.
     """
     content = F.coalesce(F.col(content_col), F.lit(""))
     raw_col, npy_col = f"_lss_raw_{tokens_col}", f"_lss_npy_{tokens_col}"
@@ -140,32 +132,6 @@ def analyzed_deferred(df: DataFrame,
     return step.withColumns(cols).drop(content_col, raw_col, npy_col)
 
 
-def finalize_analyzed(df: DataFrame,
-                      max_token_length: int = MAX_TOKEN_LENGTH,
-                      content_col: str = "content",
-                      tokens_col: str = "tokens",
-                      with_sha: bool = True,
-                      py_content_col: str = PY_CONTENT_COL) -> DataFrame:
-    """Complete a MATERIALIZED :func:`analyzed_deferred` frame: rows
-    with NULL ``tokens_col`` run through the Python analyzer (content
-    retained in ``PY_CONTENT_COL``); the output schema matches
-    :func:`analyzed_columns` minus the content column. Push any
-    row-subset filter (e.g. the per-chunk segment range) onto ``df``
-    BEFORE calling, so the Python branch analyzes each rare row exactly
-    once across downstream jobs. Branches split on ``PY_CONTENT_COL``
-    (atomic → parquet-pushable; the Python branch's IsNotNull skips
-    every all-null row group, so on an all-ASCII corpus it is a
-    metadata-only scan)."""
-    jvm = df.where(F.col(py_content_col).isNull()).drop(py_content_col)
-    py_in = df.where(F.col(py_content_col).isNotNull()).drop(tokens_col)
-    if with_sha:
-        py_in = py_in.drop("content_sha256")
-    py_in = py_in.withColumnRenamed(py_content_col, content_col)
-    py = _python_analyzed(py_in, max_token_length, content_col,
-                          tokens_col, with_sha).drop(content_col)
-    return jvm.unionByName(py)
-
-
 def analyzed_columns(df: DataFrame,
                      max_token_length: int = MAX_TOKEN_LENGTH,
                      content_col: str = "content",
@@ -174,25 +140,22 @@ def analyzed_columns(df: DataFrame,
                      with_sha: bool = True) -> DataFrame:
     """Add ``tokens_col`` (lowered, unfiltered, position = index) and —
     when ``with_sha`` — ``content_sha256`` (hex digest of the UTF-8
-    content bytes, the per-row invariant vs the input) to ``df``.
+    content bytes, the per-row invariant vs the input) to ``df``, in
+    one plan: :func:`analyzed_deferred` with the content kept, its
+    deferred rows finished by :func:`finish_python_rows` in a
+    ``mapInPandas``. The index builds consume the deferred form
+    directly instead.
 
     ``stop_words`` is accepted for signature compatibility and ignored:
     stop filtering happens vectorized in the consuming builder.
-    Multi-field indexes call this once per analyzed field with a
-    distinct ``tokens_col`` (sha only on the content field).
     """
-    content = F.coalesce(F.col(content_col), F.lit(""))
-    raw = F.regexp_extract_all(content, F.lit(_A_WORD), F.lit(0))
-    needs_py = _needs_python(content, raw, max_token_length)
-
-    # extract over the lowered DOCUMENT (case-symmetric ASCII grammar:
-    # identical tokens, one String alloc per doc instead of per token,
-    # no interpreted per-element transform — see analyzed_deferred)
-    jvm = df.where(~needs_py).withColumn(
-        tokens_col,
-        F.regexp_extract_all(F.lower(content), F.lit(_A_WORD), F.lit(0)))
-    if with_sha:
-        jvm = jvm.withColumn("content_sha256", F.sha2(content, 256))
-    py = _python_analyzed(df.where(needs_py), max_token_length, content_col,
-                          tokens_col, with_sha)
-    return jvm.unionByName(py)
+    src, py = f"_lss_src_{tokens_col}", f"_lss_py_{tokens_col}"
+    deferred = analyzed_deferred(
+        df.withColumn(src, F.col(content_col)), max_token_length,
+        content_col=src, tokens_col=tokens_col, with_sha=with_sha,
+        py_content_col=py)
+    passes = [(tokens_col, py, with_sha)]
+    return deferred.mapInPandas(
+        lambda batches: (finish_python_rows(b, passes, max_token_length)
+                         for b in batches),
+        deferred.drop(py).schema)

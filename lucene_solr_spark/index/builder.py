@@ -52,7 +52,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..analysis import ENGLISH_STOP_WORDS
-from ..analysis.jvm import analyzed_deferred, finalize_analyzed
+from ..analysis.jvm import analyzed_deferred, finish_python_rows
 
 PK = ["repo", "path", "commit"]
 
@@ -184,22 +184,26 @@ def _invert_field(docids, toks_col, null_mask, stop_arr):
 
 def _make_segment_fn(stop_words: frozenset[str] = frozenset(),
                      fields: tuple[str, ...] = ("content",),
-                     sha_field: str = "content"):
+                     sha_field: str = "content",
+                     max_token_length: int = 255):
     """Per-partition DWPT: pre-tokenized doc batch → aggregated posting
     rows (field, term, docid, tf, positions, norm) plus one summary
     row per (doc, present field) carrying dl/norm (sha256 rides the
     ``sha_field`` summary).
 
     Input rows carry ``tokens_<field>``/``content_sha256`` from
-    :func:`..analysis.jvm.analyzed_columns` (tokenization is
-    JVM-side); this worker is pure vectorized numpy per field
-    (see :func:`_invert_field`)."""
+    :func:`..analysis.jvm.analyzed_deferred` (tokenization is
+    JVM-side; the rare rows it defers are finished here by
+    :func:`..analysis.jvm.finish_python_rows`); the rest of this worker
+    is pure vectorized numpy per field (see :func:`_invert_field`)."""
     stop_arr = np.asarray(sorted(stop_words), dtype=object) if stop_words else None
+    passes = [(f"tokens_{f}", f"_lss_py_{f}", f == sha_field) for f in fields]
 
     def build_segment(batches):
         from ..util.smallfloat import int_to_byte4_np
 
         for pdf in batches:
+            pdf = finish_python_rows(pdf, passes, max_token_length)
             docids = pdf["docid"].to_numpy(dtype=np.int64)
             ndocs = len(pdf)
             shas = pdf["content_sha256"].to_numpy()
@@ -391,15 +395,11 @@ def build_index(
         analyzed = analyzed.withColumn(
             "content_sha256",
             F.sha2(F.coalesce(F.col(sha_field), F.lit("")), 256))
-        deferred = analyzed
-        deferred.persist(StorageLevel.MEMORY_AND_DISK)
         segment_stops: frozenset[str] = frozenset({""})
     else:
         # deferred analyze per field (ONE regex eval per row per field;
-        # see analysis/jvm.py — the union shape ran it 3x over 2
-        # scans), with the persist as the materialization barrier, then
-        # finalize the (rare) Python-analyzer rows per field on top of
-        # the cache
+        # see analysis/jvm.py); the segment fn finishes the (rare)
+        # Python-analyzer rows
         analyzed = base
         for f in fields:
             analyzed = analyzed.withColumn(f"null_{f}", F.col(f).isNull())
@@ -407,17 +407,12 @@ def build_index(
                 analyzed, max_token_length=max_token_length, content_col=f,
                 tokens_col=f"tokens_{f}", with_sha=(f == sha_field),
                 py_content_col=f"_lss_py_{f}")
-        deferred = analyzed
-        deferred.persist(StorageLevel.MEMORY_AND_DISK)
-        for f in fields:
-            analyzed = finalize_analyzed(
-                analyzed, max_token_length=max_token_length, content_col=f,
-                tokens_col=f"tokens_{f}", with_sha=(f == sha_field),
-                py_content_col=f"_lss_py_{f}")
         segment_stops = stop_words
 
+    analyzed.persist(StorageLevel.MEMORY_AND_DISK)
     segments = analyzed.mapInPandas(
-        _make_segment_fn(segment_stops, fields, sha_field), schema=SEGMENT_SCHEMA)
+        _make_segment_fn(segment_stops, fields, sha_field, max_token_length),
+        schema=SEGMENT_SCHEMA)
     segments.persist(StorageLevel.MEMORY_AND_DISK)
 
     # --- postings: merge to term-bucket layout --------------------------
@@ -506,7 +501,7 @@ def build_index(
         json.dump(manifest, f, indent=1)
 
     segments.unpersist()
-    deferred.unpersist()
+    analyzed.unpersist()
     if parent is not None:
         parent.unpersist()
     return tables

@@ -277,6 +277,11 @@ def check_segment_index(idx: SegmentIndex, decode: bool = True,
         n_docs == 0 or (int(d["lo"]) == 0
                         and int(d["hi"]) == int(d["nd"]) - 1))
     st.notes["maxDoc"] = n_docs
+    # the first unused docid (compaction leaves holes below it)
+    next_docid = int(d["hi"]) + 1 if n_docs else 0
+    if "next_docid" in manifest:
+        st.checks["manifest_next_docid"] = _bool(
+            int(manifest["next_docid"]) == next_docid)
 
     # --- docs (summaries) vs docmap ---------------------------------------
     st.checks["docs_count"] = abs(docs.count() - n_docs)
@@ -364,7 +369,7 @@ def check_segment_index(idx: SegmentIndex, decode: bool = True,
     deletes = idx.deletes()
     if deletes is not None:
         st.checks["deletes_in_range"] = deletes.where(
-            (F.col("docid") < 0) | (F.col("docid") >= n_docs)).count()
+            (F.col("docid") < 0) | (F.col("docid") >= next_docid)).count()
 
     # --- full decode pass ------------------------------------------------------
     if decode:

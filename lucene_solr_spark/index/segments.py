@@ -1,5 +1,5 @@
 """Segment-based compressed index build (codec v2) — resumable, with
-per-chunk checkpoints, lineage and metrics tables.
+per-segment checkpoints, lineage and metrics tables.
 
 Layout model = Lucene's segment model (index/SegmentInfos.java): a
 *segment* owns a contiguous docID range and holds ALL terms' postings
@@ -10,21 +10,21 @@ dictionary-side access (prefix/fuzzy expansion, analytics joins);
 Lucene similarly keeps postings + docvalues as different orderings of
 the same data.
 
-Build plan (shuffle inventory — content moves exactly twice, never
-through Parquet twice):
+Build plan (content crosses one exchange, the docid range exchange):
   stage 0  deterministic docid = rank of PK via ONE range-exchange
-           (assign_docids); result (corpus + docid + segment) pinned
-           MEMORY_AND_DISK for the whole build. Only a SLIM docmap
-           (keys + docid + segment — the lineage record) is written;
-           on resume the same with_ids is recomputed, identical
-           because ranks are input-determined, not layout-determined.
-  stage 1  blocks/   per chunk of segments: filter the pinned frame,
-           ONE exchange keyed by segment (only that chunk's content
-           moves), applyInPandas → tokenize, aggregate,
-           delta+varbyte/FOR encode 128-doc posting blocks
-           (codec.py). Each chunk commit appends a checkpoint row; a
-           killed build resumes by skipping completed chunks (partial
-           segment dirs of an uncheckpointed chunk are removed first).
+           (assign_docids); JVM analysis on top, SPILLED to Parquet
+           partitioned by segment (never cached). The slim docmap
+           (keys + docid + segment — the lineage record) projects from
+           the spill; on resume the spill is reused or recomputed
+           identically, because ranks are input-determined, not
+           layout-determined.
+  stage 1  blocks/   _write_segments, the one segment writer (Lucene's
+           per-DWPT flush): one task per segment reads its slice of
+           the spill, finishes the rare Python-analyzer rows, encodes
+           128-doc posting blocks (delta+varbyte/FOR, codec.py) and
+           writes its one file. Each task appends its checkpoint row
+           after its rename; a killed build resumes by skipping
+           checkpointed segments (the others' dirs are removed first).
   stage 2  docs/ dict/ stats/ + the manifest's collection stats —
            _derive_tables, the one derive step every index write
            (build, streaming flush, compaction, split, addIndexes)
@@ -37,10 +37,9 @@ through Parquet twice):
 
 At 10^12-file scale: docs_per_segment is the DWPT RAM-budget knob
 (IndexWriterConfig.java:93 — 16 MB buffer ≙ segment sized to executor
-memory); chunks bound the blast radius of a failure (the
-TieredMergePolicy "tier" analogue); docmap gives exactly-once docids
-across retries because ranks are input-determined, not layout-
-determined.
+memory) and the blast radius of a failure (one segment's task); docmap
+gives exactly-once docids across retries because ranks are
+input-determined, not layout-determined.
 
 Reference: write path index/DefaultIndexingChain.java:385-441, flush
 FreqProxTermsWriter.java, codec Lucene50PostingsWriter.java:223-241,
@@ -55,6 +54,7 @@ import json
 import os
 import shutil
 import time
+import uuid
 from dataclasses import dataclass
 
 import numpy as np
@@ -62,11 +62,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..analysis import ENGLISH_STOP_WORDS
-from ..analysis.jvm import (
-    PY_CONTENT_COL,
-    analyzed_deferred,
-    finalize_analyzed,
-)
+from ..analysis.jvm import PY_CONTENT_COL, analyzed_deferred, finish_python_rows
 from . import codec
 from .builder import PK, assign_docids
 
@@ -97,7 +93,7 @@ FIELD_SEP = "\x1f"
 
 
 def _invert_segment_field(toks_col, docids_doc: np.ndarray,
-                          stop_arr, seg: int, prefix: str):
+                          stop_arr, prefix: str):
     """Vectorized inversion of ONE field's token arrays over one
     segment: numpy StopFilter (position = raw token index → gaps
     preserved), factorize, ONE stable sort → posting runs → encoded
@@ -206,7 +202,7 @@ def _invert_segment_field(toks_col, docids_doc: np.ndarray,
     if prefix:
         terms_out = np.array([prefix + t for t in terms_out], dtype=object)
     blocks = pd.DataFrame({
-        "segment": seg, "kind": 0,
+        "kind": 0,
         "term": terms_out,
         "block_ord": block_ord[blk_starts],
         "n": blk_n,
@@ -220,12 +216,12 @@ def _invert_segment_field(toks_col, docids_doc: np.ndarray,
     return dls, norms_doc, blocks
 
 
-def _segment_builder(docs_per_segment: int,
-                     stop_words: frozenset[str] = frozenset(),
+def _segment_builder(stop_words: frozenset[str] = frozenset(),
                      extra_fields: tuple[str, ...] = ()):
-    """applyInPandas fn: all (pre-tokenized) docs of ONE segment →
-    encoded block rows (kind=0) + one summary row per doc (kind=1:
-    term=sha256, n=dl, norms=[normbyte]).
+    """All (pre-tokenized) docs of ONE segment → its encoded block rows
+    (kind=0) + one summary row per doc (kind=1: term=sha256, n=dl,
+    norms=[normbyte]), in the file layout (no ``segment`` column: the
+    segment's directory carries it).
 
     ``extra_fields`` adds per-field postings beyond "content"
     (Lucene70Codec.java:144-166 per-field delegation): each extra
@@ -235,9 +231,9 @@ def _segment_builder(docs_per_segment: int,
     field) carries the per-field dl/norm (term = field name) — the
     per-field norms/docvalues + collection-stats record.
 
-    Input rows carry ``tokens``/``content_sha256`` from
-    :func:`..analysis.jvm.analyzed_columns` — tokenization happened
-    JVM-side before the segment exchange, so this worker is pure
+    Input rows carry ``tokens``/``content_sha256`` from the analyzed
+    spill (:func:`_analyzed_segment`) — tokenization happened JVM-side
+    before the spill, so this worker is pure
     vectorized numpy: the StopFilter is one isin mask over the
     factorized vocabulary (position = raw token index, so stopword
     gaps are preserved and BM25 dl counts survivors only —
@@ -252,16 +248,15 @@ def _segment_builder(docs_per_segment: int,
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("docid")
-        seg = int(pdf["segment"].iloc[0])
         docids_doc = pdf["docid"].to_numpy(dtype=np.int64)
         ndocs = len(pdf)
         shas = pdf["content_sha256"].tolist()
 
         dls, norms_doc, blocks = _invert_segment_field(
-            pdf["tokens"].to_numpy(), docids_doc, stop_arr, seg, "")
+            pdf["tokens"].to_numpy(), docids_doc, stop_arr, "")
 
         summary = pd.DataFrame({
-            "segment": seg, "kind": 1, "term": shas, "block_ord": 0,
+            "kind": 1, "term": shas, "block_ord": 0,
             "n": dls, "first_docid": docids_doc, "last_docid": docids_doc,
             "sum_tf": dls, "docids": b"", "tfs": b"",
             "norms": [bytes([b]) for b in norms_doc],
@@ -282,13 +277,13 @@ def _segment_builder(docs_per_segment: int,
                          else np.zeros(ndocs, dtype=bool))
             fdls, fnorms, fblocks = _invert_segment_field(
                 pdf[f"tokens__{f}"].to_numpy(), docids_doc, stop_arr,
-                seg, f + FIELD_SEP)
+                f + FIELD_SEP)
             present = ~null_mask
             # kind=2: per-(doc, field) dl/norm — field absent (NULL) docs
             # get no row, mirroring v1's dl=-1 exclusion
             # (builder.py _invert_field; FieldInfos semantics)
             frames.append(pd.DataFrame({
-                "segment": seg, "kind": 2, "term": f, "block_ord": 0,
+                "kind": 2, "term": f, "block_ord": 0,
                 "n": fdls[present],
                 "first_docid": docids_doc[present],
                 "last_docid": docids_doc[present],
@@ -305,6 +300,149 @@ def _segment_builder(docs_per_segment: int,
         return pd.concat(frames, ignore_index=True)
 
     return build
+
+
+#: a segment's one block file (a retried write replaces it)
+_BLOCK_FILE = "part-0.parquet"
+
+#: Parquet writer properties of every block file: one row group per
+#: file; columns near-unique per row are PLAIN (a dictionary only adds
+#: bytes there, and parquet-mr falls back the same way).
+_BLOCK_WRITE = {
+    "compression": "snappy", "row_group_size": 1 << 20,
+    "dictionary_pagesize_limit": 256 << 10,
+    "use_dictionary": [c for c in (f.split()[0]
+                                   for f in BLOCKS_SCHEMA.split(","))
+                       if c not in ("segment", "term", "path", "commit")],
+}
+
+
+def _arrow_schema(ddl: str, drop=()):
+    """pyarrow schema of a Spark DDL string of atomic types."""
+    import pyarrow as pa
+
+    types = {"string": pa.string(), "int": pa.int32(), "long": pa.int64(),
+             "double": pa.float64(), "binary": pa.binary()}
+    return pa.schema([(n, types[t]) for n, t in
+                      (f.split() for f in ddl.split(",")) if n not in drop])
+
+
+def _write_segments(spark: SparkSession, blocks_dir: str, jobs, produce,
+                    checkpoint_root: str | None = None) -> None:
+    """The one block writer (build, flush, compaction, addIndexes,
+    split) — Lucene's per-DWPT flush of write-once segment files. Each
+    ``(segment, arg)`` job is one task of ``spark.range(n,
+    numPartitions=n).mapInPandas`` (no exchange) writing
+    ``produce(arg)``'s Arrow table (None for no rows) with pyarrow:
+    BLOCKS_SCHEMA minus the directory's ``segment``, a hidden temp
+    file renamed over ``segment=<s>/part-0.parquet``. With
+    ``checkpoint_root`` the task then appends its ``blocks``
+    checkpoint row (the build's resume record)."""
+    os.makedirs(blocks_dir, exist_ok=True)
+    if not jobs:
+        return
+    schema = _arrow_schema(BLOCKS_SCHEMA, drop=("segment",))
+
+    def task(batches):
+        import pyarrow.parquet as pq
+
+        for b in batches:
+            for i in b["id"].tolist():
+                seg, arg = jobs[i]
+                t0 = time.time()
+                rows = produce(arg)
+                if rows is None:
+                    continue
+                rows = rows.select(schema.names).cast(schema)
+                seg_dir = os.path.join(blocks_dir, f"segment={seg}")
+                os.makedirs(seg_dir, exist_ok=True)
+                tmp = os.path.join(seg_dir, f".{uuid.uuid4().hex}.tmp")
+                pq.write_table(rows, tmp, **_BLOCK_WRITE)
+                os.replace(tmp, os.path.join(seg_dir, _BLOCK_FILE))
+                if checkpoint_root is not None:
+                    kind = rows["kind"].to_numpy()
+                    docs = rows["first_docid"].to_numpy()[kind == 1]
+                    wall = time.time() - t0
+                    _append_checkpoint(checkpoint_root, (
+                        "blocks", seg, seg, seg + 1,
+                        int(docs.min(initial=0)), int(docs.max(initial=-1)) + 1,
+                        docs.size, int((kind == 0).sum()), round(wall, 3),
+                        round(docs.size / wall, 1) if wall > 0 else 0.0))
+                yield pd.DataFrame({"segment": [seg]})
+
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(f"write {len(jobs)} segment files")
+    try:
+        spark.range(len(jobs), numPartitions=len(jobs)).mapInPandas(
+            task, "segment int").collect()
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
+
+
+def _analyzed_segment(spill_dir: str, stop_words: frozenset[str],
+                      max_token_length: int,
+                      extra_fields: tuple[str, ...] = ()):
+    """Build-from-analyzed ``produce`` for :func:`_write_segments` (arg:
+    the segment id): read the segment's slice of an analyzed spill,
+    finish the rows the JVM analyzer deferred, encode with
+    :func:`_segment_builder`."""
+    build = _segment_builder(stop_words, extra_fields)
+    passes = [("tokens", PY_CONTENT_COL, True)] + [
+        (f"tokens__{f}", f"_lss_py_{f}", False) for f in extra_fields]
+    cols = ["docid", *PK, "lang", "content_sha256",
+            *[c for t, py, _ in passes for c in (t, py)],
+            *[f"null_{f}" for f in extra_fields]]
+
+    def produce(seg: int):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        files = sorted(glob.glob(os.path.join(
+            spill_dir, f"segment={seg}", "*.parquet")))
+        if not files:
+            return None
+        pdf = pa.concat_tables(
+            [pq.read_table(f, columns=cols) for f in files]).to_pandas()
+        return pa.Table.from_pandas(
+            build(finish_python_rows(pdf, passes, max_token_length)),
+            preserve_index=False)
+
+    return produce
+
+
+def _write_analyzed(df: DataFrame, work_dir: str, blocks_dir: str,
+                    stop_words: frozenset[str],
+                    max_token_length: int) -> list[int]:
+    """Flush and compaction: analyze ``df`` (docid, segment, content,
+    doc columns), spill it by segment under ``work_dir``, write every
+    segment through :func:`_write_segments`; returns their ids."""
+    spill = os.path.join(work_dir, "spill")
+    analyzed_deferred(df, max_token_length=max_token_length).write.mode(
+        "overwrite").partitionBy("segment").parquet(spill)
+    segs = sorted(int(d[len("segment="):]) for d in os.listdir(spill)
+                  if d.startswith("segment="))
+    _write_segments(df.sparkSession, blocks_dir, [(s, s) for s in segs],
+                    _analyzed_segment(spill, stop_words, max_token_length))
+    shutil.rmtree(spill)
+    return segs
+
+
+def _shifted_segment(arg):
+    """Copy-with-shift ``produce`` (arg: ``(files, shift)``): the pinned
+    columns of a segment's rows, docid headers shifted — payloads are
+    deltas, so nothing is re-encoded."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    files, shift = arg
+    names = _arrow_schema(BLOCKS_SCHEMA, drop=("segment",)).names
+    t = pa.concat_tables([pq.read_table(f, columns=names) for f in files])
+    for c in ("first_docid", "last_docid"):
+        t = t.set_column(t.schema.get_field_index(c), c,
+                         pc.add(t[c], shift))
+    return t
 
 
 @dataclass
@@ -427,9 +565,9 @@ def _commit_manifest(root: str, manifest: dict) -> None:
 def _derive_tables(idx: SegmentIndex, manifest: dict, token=None,
                   segments=None) -> dict:
     """The one derive step: ``docs/``, ``dict/``, ``stats/`` and the
-    manifest's ``doc_count``/``sum_ttf``/``field_stats`` follow from
-    ``blocks/`` — Lucene recomputing SegmentInfos/FieldInfos on flush,
-    merge and addIndexes. Every index write ends here.
+    manifest's ``doc_count``/``sum_ttf``/``field_stats``/``next_docid``
+    follow from ``blocks/`` — Lucene recomputing SegmentInfos/FieldInfos
+    on flush, merge and addIndexes. Every index write ends here.
 
     Full form (``token=None``): recompute all of them from every block
     row — the build, each split part, the compaction refresh.
@@ -447,8 +585,11 @@ def _derive_tables(idx: SegmentIndex, manifest: dict, token=None,
     every extra field from its kind=2 per-(doc, field) rows —
     doc_count = docs with the field, sum_ttf = Σ dl
     (BM25Similarity.java:79). ``field_stats`` is kept when the
-    manifest lists ``fields``. Returns ``manifest`` updated; the
-    caller commits it (:func:`_commit_manifest`)."""
+    manifest lists ``fields``. ``next_docid`` = max docid + 1 (delta:
+    never below the committed value) is where the next flush or fold
+    numbers from — compaction leaves holes below ``doc_count``.
+    Returns ``manifest`` updated; the caller commits it
+    (:func:`_commit_manifest`)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -503,13 +644,17 @@ def _derive_tables(idx: SegmentIndex, manifest: dict, token=None,
            for f, v in (prev.get("field_stats") or {}).items()}
     acc["content"] = [int(prev.get("doc_count", 0)),
                       int(prev.get("sum_ttf", 0))]
+    next_docid = int(prev.get("next_docid", 0))
     field = F.when(kind == 1, F.lit("content")).otherwise(F.col("term"))
     for r in (rows.where(kind > 0).groupBy(field.alias("field"))
-              .agg(F.count("*").alias("dc"), F.sum("n").alias("st"))
+              .agg(F.count("*").alias("dc"), F.sum("n").alias("st"),
+                   F.max("first_docid").alias("hi"))
               .collect()):
         a = acc.setdefault(r["field"], [0, 0])
         a[0] += int(r["dc"])
         a[1] += int(r["st"] or 0)
+        if r["field"] == "content":
+            next_docid = max(next_docid, int(r["hi"]) + 1)
     doc_count, sum_ttf = acc["content"]
     stage = os.path.join(root, "stats.tmp")
     if os.path.exists(stage):
@@ -520,11 +665,23 @@ def _derive_tables(idx: SegmentIndex, manifest: dict, token=None,
                   "sum_ttf": pa.array([sum_ttf], pa.int64())}),
         os.path.join(stage, "part-0.parquet"))
     _swap(stage, os.path.join(root, "stats"))
-    manifest.update(doc_count=doc_count, sum_ttf=sum_ttf)
+    manifest.update(doc_count=doc_count, sum_ttf=sum_ttf,
+                    next_docid=next_docid)
     if manifest.get("fields"):
         manifest["field_stats"] = {
             f: {"doc_count": dc, "sum_ttf": st} for f, (dc, st) in acc.items()}
     return manifest
+
+
+def _next_docid(idx: SegmentIndex, manifest: dict) -> int:
+    """The manifest's ``next_docid``; for a manifest written before it
+    was kept, the docmap's max docid + 1 (one read)."""
+    if "next_docid" in manifest:
+        return int(manifest["next_docid"])
+    if not os.path.exists(idx.docmap_path):
+        return 0
+    hi = idx.docmap().agg(F.max("docid")).collect()[0][0]
+    return 0 if hi is None else int(hi) + 1
 
 
 #: table dirs a commit point pins (analyzed_spill/checkpoints are
@@ -624,30 +781,30 @@ def add_indexes(dst_root: str, src_root: str,
     re-encode, exactly the reference's "efficient which transfers the
     segments as-is" contract (:2861). The codec makes the shift free:
     block payloads are docid DELTAS relative to ``first_docid``
-    (_segment_builder), so adding the destination's doc_count touches
-    only the first_docid/last_docid header columns.
+    (_segment_builder), so adding the destination's ``next_docid``
+    touches only the first_docid/last_docid header columns.
 
     This is the 100-TB build topology: shard the corpus, build every
     shard's index in parallel (separate jobs, zero coordination), then
-    addIndexes them — each fold is one columnar rewrite of the shard's
-    blocks plus the delta form of :func:`_derive_tables`, never a
-    global re-sort.
+    addIndexes them — each fold is one copy task per source segment
+    (:func:`_write_segments`) plus the delta form of
+    :func:`_derive_tables`, never a global re-sort.
 
     Both indexes must share the analyzer config and field list (same
     contract as Lucene); collection stats, per-field ones included,
     add up. Tombstones carry over shifted. Returns the new manifest.
     Crash mid-fold: rerun with the same src. Every output of the fold
     is keyed by a token of (src, the destination's committed
-    doc_count) and replaced as a whole, and the dict records the token
-    it merged, so the re-run leaves exactly what one fold leaves (the
-    production seam is one Iceberg append commit).
+    ``next_docid``) and replaced as a whole, and the dict records the
+    token it merged, so the re-run leaves exactly what one fold leaves
+    (the production seam is one Iceberg append commit).
 
-    Reopen contract: searchers opened BEFORE the fold keep serving the
-    pre-fold view through their persisted scans (Lucene's stale-reader
-    semantics); open a NEW searcher after `spark.catalog.clearCache()`
-    (or a fresh session) to see the folded index — Spark's plan cache
-    keys on the parquet path, so an old persist would otherwise be
-    reused."""
+    Reopen contract: a searcher lists its segment files when built, so
+    one opened BEFORE the fold keeps the pre-fold view (Lucene's
+    stale-reader semantics); open a NEW one to see the fold. Only
+    ``cache=True``'s dictionary is persisted: in the same session run
+    ``spark.catalog.clearCache()`` first, or Spark's cache (keyed on
+    the parquet plan) hands the new searcher the pre-fold dict."""
     dst = SegmentIndex(dst_root, spark)
     src_idx = SegmentIndex(src_root, spark)
     man_d, man_s = dst.manifest(), src_idx.manifest()
@@ -655,18 +812,17 @@ def add_indexes(dst_root: str, src_root: str,
         if man_d.get(k) != man_s.get(k):
             raise ValueError(f"addIndexes config mismatch on {k!r}: "
                              f"{man_d.get(k)} vs {man_s.get(k)}")
-    D = int(man_d["doc_count"])
+    D = _next_docid(dst, man_d)
     S = int(man_d["n_segments"])
     token = f"addidx-{os.path.basename(os.path.normpath(src_root))}-{D}"
 
-    # -- blocks: shift headers, new segment ids; stage then move ------
-    shifted = (src_idx.block_rows()
-               .withColumn("segment", (F.col("segment") + S).cast("int"))
-               .withColumn("first_docid", F.col("first_docid") + D)
-               .withColumn("last_docid", F.col("last_docid") + D))
-    stage = os.path.join(dst_root, f"{token}.blocks.tmp")
-    shifted.write.mode("overwrite").partitionBy("segment").parquet(stage)
-    _move_in(stage, dst.blocks_path)
+    # -- blocks: one copy task per source segment, headers shifted -----
+    jobs = [(s + S, (files, D))
+            for s, files in sorted(src_idx.segment_files().items())]
+    for s, _ in jobs:  # what an earlier attempt of this fold left
+        shutil.rmtree(os.path.join(dst.blocks_path, f"segment={s}"),
+                      ignore_errors=True)
+    _write_segments(spark, dst.blocks_path, jobs, _shifted_segment)
 
     # -- docmap (lineage): match the destination's layout -------------
     sm = (src_idx.docmap()
@@ -679,28 +835,14 @@ def add_indexes(dst_root: str, src_root: str,
     writer.parquet(stage)
     _move_in(stage, dst.docmap_path, token)
 
-    # -- deletes: shifted tombstones ----------------------------------
-    sdel = src_idx.deletes()
-    if sdel is not None:
-        ids = [r["docid"] + D for r in sdel.collect()]
-        # replace this fold's tombstone file on retry
-        fold_del = os.path.join(dst_root, "deletes", f"{token}.parquet")
-        if os.path.exists(fold_del):
-            os.remove(fold_del)
-        if ids:
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-
-            os.makedirs(os.path.join(dst_root, "deletes"), exist_ok=True)
-            pq.write_table(
-                pa.table({"docid": pa.array(sorted(ids), pa.int64())}),
-                fold_del)
+    # -- deletes: shifted tombstones, the fold's file replaced on retry --
+    _write_deletes(dst_root, (src_idx.deleted_docids() + D).tolist(),
+                   f"{token}.parquet")
 
     # -- docs/dict/stats delta + manifest (the commit) -----------------
     man_d.update(n_segments=S + int(man_s["n_segments"]),
                  updated_wall=round(time.time(), 3))
-    _derive_tables(dst, man_d, token=token,
-                  segments=[s + S for s in src_idx.segment_files()])
+    _derive_tables(dst, man_d, token=token, segments=[s for s, _ in jobs])
     _commit_manifest(dst_root, man_d)
     return man_d
 
@@ -712,9 +854,10 @@ def split_index(src_root: str, out_roots: list[str],
     solr SplitShardCmd): partition the index into ``len(out_roots)``
     independent indexes at SEGMENT boundaries. Segments hold
     contiguous docid ranges by construction (docid // docs_per_segment
-    — build_segment_index:664), so each part's docids renumber to a
-    dense 0..n-1 by subtracting the part's base — the same header-only
-    columnar rewrite as :func:`add_indexes`, no posting re-encode.
+    in :func:`build_segment_index`), so each part's docids renumber to
+    a dense 0..n-1 by subtracting the part's base — the same
+    copy-with-shift task per segment as :func:`add_indexes`, no posting
+    re-encode.
 
     Per-part docs/dict/stats are RECOMPUTED from the part's blocks by
     the full form of :func:`_derive_tables` (a standalone index owns its
@@ -742,6 +885,7 @@ def split_index(src_root: str, out_roots: list[str],
         bounds[part].append(r)
         acc += r["n"]
     deletes = set(src_idx.deleted_docids().tolist())
+    files = src_idx.segment_files()
     outs = []
     for out_root, segs in zip(out_roots, bounds):
         if not segs:
@@ -752,13 +896,11 @@ def split_index(src_root: str, out_roots: list[str],
         n_docs = int(sum(r["n"] for r in segs))
         os.makedirs(out_root, exist_ok=True)
         pred = F.col("segment").isin(seg_ids)
-        blocks = (src_idx.block_rows().where(pred)
-                  .withColumn("segment",
-                              (F.col("segment") - seg_off).cast("int"))
-                  .withColumn("first_docid", F.col("first_docid") - base)
-                  .withColumn("last_docid", F.col("last_docid") - base))
-        blocks.write.mode("overwrite").partitionBy("segment").parquet(
-            os.path.join(out_root, "blocks"))
+        blocks_dir = os.path.join(out_root, "blocks")
+        shutil.rmtree(blocks_dir, ignore_errors=True)
+        _write_segments(spark, blocks_dir,
+                        [(s - seg_off, (files[s], -base)) for s in seg_ids],
+                        _shifted_segment)
         (src_idx.docmap().where(pred)
          .withColumn("docid", F.col("docid") - base)
          .withColumn("segment", (F.col("segment") - seg_off).cast("int"))
@@ -781,50 +923,42 @@ def split_index(src_root: str, out_roots: list[str],
 def append_deletes(root: str, docids) -> int:
     """Append tombstone docids (driver-side pyarrow write — tombstone
     batches are small relative to the index; compaction empties them)."""
-    import uuid
+    return _write_deletes(root, docids, f"part-{uuid.uuid4().hex}.parquet")
 
+
+def _write_deletes(root: str, docids, name: str) -> int:
+    """Tombstone docids as ``deletes/<name>``, replacing what an earlier
+    write under that name left (a retried addIndexes fold)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     ids = sorted({int(d) for d in docids})
+    path = os.path.join(root, "deletes", name)
+    if os.path.exists(path):
+        os.remove(path)
     if not ids:
         return 0
-    d = os.path.join(root, "deletes")
-    os.makedirs(d, exist_ok=True)
-    pq.write_table(pa.table({"docid": pa.array(ids, pa.int64())}),
-                   os.path.join(d, f"part-{uuid.uuid4().hex}.parquet"))
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    pq.write_table(pa.table({"docid": pa.array(ids, pa.int64())}), path)
     return len(ids)
 
 
-def _append_checkpoint(spark: SparkSession, root: str, row: tuple):
-    """One checkpoint row, written driver-side with pyarrow (a Spark
-    job per tiny bookkeeping write adds fixed per-stage cost that
-    dominates small builds at high core counts). Layout-compatible
-    with spark.read.parquet over the directory."""
-    import uuid
-
+def _append_checkpoint(root: str, row: tuple):
+    """One checkpoint row (CHECKPOINT_SCHEMA), written with pyarrow
+    through a hidden temp name — by the driver, or by the writer task
+    that just finished a segment. Layout-compatible with
+    spark.read.parquet over the directory."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    names, types = [], []
-    for fld in CHECKPOINT_SCHEMA.split(","):
-        n, t = fld.strip().split()
-        names.append(n)
-        types.append({"string": pa.string(), "int": pa.int32(),
-                      "long": pa.int64(), "double": pa.float64()}[t])
-    table = pa.table(
-        {n: pa.array([v], type=t) for n, t, v in zip(names, types, row)})
+    schema = _arrow_schema(CHECKPOINT_SCHEMA)
+    table = pa.table({f.name: pa.array([v], type=f.type)
+                      for f, v in zip(schema, row)})
     d = os.path.join(root, "checkpoints")
     os.makedirs(d, exist_ok=True)
-    pq.write_table(table, os.path.join(d, f"part-{uuid.uuid4().hex}.parquet"))
-
-
-def _done_chunks(spark: SparkSession, root: str) -> set[int]:
-    path = os.path.join(root, "checkpoints")
-    if not os.path.exists(path):
-        return set()
-    rows = spark.read.parquet(path).where(F.col("stage") == "blocks").collect()
-    return {int(r["chunk"]) for r in rows}
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    pq.write_table(table, os.path.join(d, f".{name}.tmp"))
+    os.replace(os.path.join(d, f".{name}.tmp"), os.path.join(d, name))
 
 
 def build_segment_index(
@@ -833,10 +967,7 @@ def build_segment_index(
     stop_words: frozenset[str] | None = ENGLISH_STOP_WORDS,
     max_token_length: int = 255,
     docs_per_segment: int = 4096,
-    segments_per_chunk: int = 8,
     resume: bool = False,
-    fail_after_chunk: int | None = None,
-    max_concurrent_chunks: int | None = None,
     fields: tuple[str, ...] = ("content",),
 ) -> SegmentIndex:
     """Build (or resume) the compressed segment index.
@@ -849,20 +980,9 @@ def build_segment_index(
     what lets edismax / per-field similarity run on this compressed
     path.
 
-    ``fail_after_chunk`` injects a crash after N chunk commits — used by
-    the kill-and-resume test (BASELINE.md resumability row).
-
-    ``max_concurrent_chunks`` (default env LSS_CONCURRENT_CHUNKS or 2)
-    overlaps chunk jobs from driver threads — the ConcurrentMergeScheduler
-    role (index/ConcurrentMergeScheduler.java:57-63: flushes/merges run
-    on background threads, not the indexing thread). Spark's scheduler
-    backfills a later chunk's tasks into slots the earlier chunk's
-    straggler tail leaves idle, so the per-chunk barrier no longer
-    multiplies the Poisson tail by the number of chunks. Each chunk
-    commits atomically: blocks land in a chunk-private tmp dir, segment
-    dirs move into place, then the checkpoint row is written — a crash
-    between move and checkpoint is cleaned by the resume path exactly
-    like the sequential build."""
+    ``resume=True`` continues a killed build: the spill and docmap are
+    reused when complete, segments with a ``blocks`` checkpoint row
+    are kept, every other segment is rebuilt."""
     spark = corpus.sparkSession
     t0 = time.time()
     stop_words = stop_words or frozenset()
@@ -873,29 +993,21 @@ def build_segment_index(
     idx = SegmentIndex(out_root, spark)
     if not resume:
         # a fresh rebuild must drop prior blocks AND checkpoints: stale
-        # 'blocks' checkpoint rows would otherwise mark chunks done
-        # whose segment data was just deleted, silently truncating a
-        # later resume of this build
+        # 'blocks' checkpoint rows would otherwise mark segments done
+        # whose data was just deleted, silently truncating a later
+        # resume of this build
         for sub in ("blocks", "checkpoints"):
             p = os.path.join(out_root, sub)
             if os.path.exists(p):
                 shutil.rmtree(p)
 
     # ---- stage 0: docids + JVM analysis, spilled to Parquet -----------
-    # The corpus content is read ONCE and never pinned: docids attach
-    # via the range exchange, tokenization runs JVM-side on top
-    # (analysis/jvm.py), and the ANALYZED frame (slim token arrays) is
-    # SPILLED TO PARQUET and re-read, not JVM-cached: building the
-    # in-memory columnar cache of array<string> columns at high task
-    # concurrency is GC-bound (round-3 measurement, 400k docs at 32
-    # threads: cached-analyze 91 s / blocks 79 s vs parquet-spill 88 s
-    # / 37 s), and at the 100-TB target the token stream never fits
-    # executor memory anyway — disk spill with column pruning IS the
-    # scale design. The spill is build-scoped (removed after derived
-    # tables commit); the slim docmap (keys + docid + segment, the
-    # lineage record) projects straight from it. On resume the same
-    # frame is recomputed — ranks are input-determined, so the
-    # docid/segment assignment is identical.
+    # The corpus content is read ONCE: docids attach via the range
+    # exchange, tokenization runs JVM-side on top (analysis/jvm.py), and
+    # the analyzed frame is SPILLED TO PARQUET by segment, never cached
+    # (a JVM cache of array<string> columns is GC-bound at high task
+    # concurrency, and at 100 TB the token stream never fits executor
+    # memory). The spill is build-scoped; the docmap projects from it.
     base = assign_docids(corpus)
     parent = getattr(base, "_lss_persisted_parent", None)
     with_ids = base.withColumn(
@@ -907,12 +1019,9 @@ def build_segment_index(
         with_ids = (with_ids
                     .withColumn(f"null_{f}", F.col(f).isNull())
                     .withColumn(f"_lss_src_{f}", F.col(f)))
-    # DEFERRED analyze: one Project, ONE regexp_extract_all per row
-    # (subexpression elimination); rows needing the Python analyzer
-    # carry NULL tokens + retained content and are finalized per chunk
-    # AFTER the spill, so every filter below is a plain parquet
-    # pushdown, never a regex re-derivation (analyzed_columns' union
-    # shape ran the tokenize 3x per row over 2 corpus scans).
+    # DEFERRED analyze (ONE regexp_extract_all per row): rows needing
+    # the Python analyzer keep their content, and their segment's
+    # writer task finishes them
     analyzed_plan = analyzed_deferred(
         with_ids, max_token_length=max_token_length)
     for f in extra_fields:
@@ -922,7 +1031,8 @@ def build_segment_index(
             with_sha=False, py_content_col=f"_lss_py_{f}")
     spill_path = os.path.join(out_root, "analyzed_spill")
     if not (resume and os.path.exists(os.path.join(spill_path, "_SUCCESS"))):
-        analyzed_plan.write.mode("overwrite").parquet(spill_path)
+        analyzed_plan.write.mode("overwrite").partitionBy(
+            "segment").parquet(spill_path)
     spill = spark.read.parquet(spill_path)
     n_docs_total = spill.count()  # footer-only count, no scan
     if parent is not None:
@@ -933,101 +1043,32 @@ def build_segment_index(
             docmap_drop += [f"tokens__{f}", f"_lss_py_{f}", f"null_{f}"]
         spill.drop(*docmap_drop).write.mode(
             "overwrite").parquet(idx.docmap_path)
-        _append_checkpoint(spark, out_root,
+        _append_checkpoint(out_root,
                            ("docmap", -1, 0, 0, 0, 0, 0, 0,
                             round(time.time() - t0, 3), 0.0))
 
     n_segments = int(np.ceil(n_docs_total / docs_per_segment)) or 1
-    n_chunks = int(np.ceil(n_segments / segments_per_chunk))
 
-    # ---- stage 1: per-chunk block build (resumable, overlapped) -------
-    done = _done_chunks(spark, out_root) if resume else set()
-    builder = _segment_builder(docs_per_segment, stop_words, extra_fields)
-    if max_concurrent_chunks is None:
-        max_concurrent_chunks = int(
-            os.environ.get("LSS_CONCURRENT_CHUNKS", "2"))
-    # the crash-injection path commits in deterministic order
-    workers = 1 if fail_after_chunk is not None else max(
-        1, max_concurrent_chunks)
-    os.makedirs(idx.blocks_path, exist_ok=True)
-    pending = [c for c in range(n_chunks) if c not in done]
-    for chunk in pending:
-        seg_lo = chunk * segments_per_chunk
-        seg_hi = min(seg_lo + segments_per_chunk, n_segments)
-        # clean partial output of an uncheckpointed chunk (resume
-        # safety: a crash between segment-dir moves and the checkpoint
-        # row leaves moved dirs behind) and stale chunk tmp dirs
-        for seg in range(seg_lo, seg_hi):
-            part = os.path.join(idx.blocks_path, f"segment={seg}")
-            if os.path.exists(part):
-                shutil.rmtree(part)
-        tmp = os.path.join(out_root, f"blocks.chunk-{chunk}.tmp")
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)
-
-    def run_chunk(chunk: int) -> None:
-        seg_lo = chunk * segments_per_chunk
-        seg_hi = min(seg_lo + segments_per_chunk, n_segments)
-        lo_doc = seg_lo * docs_per_segment
-        hi_doc = seg_hi * docs_per_segment
-        tc = time.time()
-        # ONE exchange of (only) this chunk's content, keyed by segment;
-        # the segment-range filter lands on the parquet scan, and the
-        # (rare) Python-analyzer rows finalize inside the chunk only
-        part_df = finalize_analyzed(
-            spill.where((F.col("segment") >= seg_lo)
-                        & (F.col("segment") < seg_hi)),
-            max_token_length=max_token_length)
-        for f in extra_fields:
-            part_df = finalize_analyzed(
-                part_df, max_token_length=max_token_length,
-                content_col=f"_lss_src_{f}", tokens_col=f"tokens__{f}",
-                with_sha=False, py_content_col=f"_lss_py_{f}")
-            part_df = part_df.drop(f"_lss_src_{f}")
-        # segment-granular exchange: with shuffle.partitions = cores,
-        # ~200 segments hash into a few reduce partitions whose skewed
-        # max (Poisson tail) sets the stage wall and WORSENS with width;
-        # one reduce unit per segment keeps task granularity constant at
-        # every cluster size. Catalyst recognizes the HashPartitioning
-        # and inserts no second exchange for the groupBy.
-        n_parts = max(seg_hi - seg_lo, 1)
-        out = (part_df.repartition(n_parts, "segment")
-               .groupBy("segment").applyInPandas(builder, BLOCKS_SCHEMA))
-        # chunk-private staging dir -> atomic per-segment renames: no
-        # two concurrent chunk jobs ever touch the same committer
-        # staging area or segment dir (segment ranges are disjoint)
-        tmp = os.path.join(out_root, f"blocks.chunk-{chunk}.tmp")
-        out.write.mode("overwrite").partitionBy("segment").parquet(tmp)
-        _move_in(tmp, idx.blocks_path)
-        wall = time.time() - tc
-        chunk_docs = min(hi_doc, n_docs_total) - lo_doc
-        _append_checkpoint(
-            spark, out_root,
-            ("blocks", chunk, seg_lo, seg_hi, lo_doc, hi_doc,
-             int(chunk_docs), 0, round(wall, 3),
-             round(chunk_docs / wall, 1) if wall > 0 else 0.0),
-        )
-
-    if workers == 1 or len(pending) <= 1:
-        built = 0
-        for chunk in pending:
-            run_chunk(chunk)
-            built += 1
-            if fail_after_chunk is not None and built >= fail_after_chunk:
-                # keep the spill: a resume reuses it (input-determined)
-                raise RuntimeError(f"injected failure after chunk {chunk}")
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=workers) as pool:
-            list(pool.map(run_chunk, pending))
+    # ---- stage 1: one writer task per segment not yet checkpointed ----
+    done: set[int] = set()
+    if resume and os.path.exists(os.path.join(out_root, "checkpoints")):
+        done = {int(r["chunk"]) for r in idx.checkpoints()
+                .where(F.col("stage") == "blocks").collect()}
+    pending = [s for s in range(n_segments) if s not in done]
+    for s in pending:  # partial output of an uncheckpointed segment
+        shutil.rmtree(os.path.join(idx.blocks_path, f"segment={s}"),
+                      ignore_errors=True)
+    _write_segments(
+        spark, idx.blocks_path, [(s, s) for s in pending],
+        _analyzed_segment(spill_path, stop_words, max_token_length,
+                          extra_fields),
+        checkpoint_root=out_root)
 
     # ---- stage 2: derived tables + manifest -----------------------------
     manifest = {
         "format_version": 2,
         "docs_per_segment": docs_per_segment,
         "n_segments": n_segments,
-        "n_chunks": n_chunks,
         "block_size": codec.BLOCK_SIZE,
         "stop_words": sorted(stop_words),
         "max_token_length": max_token_length,

@@ -31,7 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from ..index.segments import SegmentIndex
+from ..index.segments import SegmentIndex, _next_docid
 from . import bm25
 from .queries import Query, TopDoc
 from .wand import SegmentSearcher
@@ -42,7 +42,7 @@ class ShardedSearcher:
 
     ``stats="exact"`` (ExactStatsCache) or ``"local"``
     (LocalStatsCache). Global docids = shard offset + local docid,
-    offsets defaulting to the cumulative doc counts (the
+    offsets the cumulative ``next_docid`` of the shards before (the
     split_index / addIndexes numbering).
     """
 
@@ -57,8 +57,8 @@ class ShardedSearcher:
         off = 0
         for s in self.shards:
             self.offsets.append(off)
-            off += s.doc_count
-        self.doc_count = off
+            off += _next_docid(s.index, s.index.manifest())
+        self.doc_count = sum(s.doc_count for s in self.shards)
         self.sum_ttf = sum(s.sum_ttf for s in self.shards)
         if stats == "exact":
             # collection-level stats merge (ExactStatsCache.java:

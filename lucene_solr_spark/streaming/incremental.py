@@ -10,12 +10,12 @@ solr/core/.../update/UpdateLog.java, io/stream/TopicStream.java).
 Spark-first rendering:
   * `readStream` over the corpus source; every micro-batch is one
     "flush": `foreachBatch` assigns the batch contiguous docids
-    starting at the current doc_count (arrival order — exactly
-    Lucene's sequential docID assignment), builds block-encoded
-    segment rows with the SAME applyInPandas builder as the batch
-    path (index/segments.py), and appends them under new segment ids.
+    starting at the manifest's `next_docid` (arrival order — exactly
+    Lucene's sequential docID assignment) and writes its new segments
+    through the SAME segment writer as the batch build
+    (index/segments.py `_write_segments`, one task per segment).
   * the checkpointLocation is the transaction log: restart resumes
-    the stream exactly-once, so docids stay gap-free.
+    the stream exactly-once, so no docid is assigned twice.
   * `compact_segments` is the TieredMergePolicy analogue: segments
     smaller than `docs_per_segment/2` are re-keyed and re-encoded into
     full segments (a SegmentMerger.java:96-177 merge — docids are
@@ -36,18 +36,17 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from ..analysis import ENGLISH_STOP_WORDS
-from ..analysis.jvm import analyzed_columns
 from ..index import codec
 from ..index.builder import PK
 from ..index.segments import (
-    BLOCKS_SCHEMA,
     SegmentIndex,
     _commit_manifest,
-    _move_in,
-    _segment_builder,
-    _swap,
-    append_deletes,
     _derive_tables,
+    _move_in,
+    _next_docid,
+    _swap,
+    _write_analyzed,
+    append_deletes,
 )
 
 
@@ -74,26 +73,27 @@ class IncrementalIndexer:
             with open(self.manifest_path) as f:
                 return json.load(f)
         return {"format_version": 2, "doc_count": 0, "sum_ttf": 0,
+                "next_docid": 0,
                 "n_segments": 0, "docs_per_segment": self.docs_per_segment,
                 "block_size": codec.BLOCK_SIZE,
                 "stop_words": sorted(self.stop_words),
                 "max_token_length": self.max_token_length,
-                "n_chunks": 0, "streaming": True}
+                "streaming": True}
 
     # -- the flush (one micro-batch = one soft commit) -------------------
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """One micro-batch = one segment flush. Idempotent under
         foreachBatch's at-least-once contract: already-committed batch
-        ids (recorded in the manifest at refresh time) are skipped, and
-        block/docmap output stages under a batch-scoped tmp dir that
-        moves into place per segment — a batch retried after a crash
-        overwrites its own segment dirs instead of appending duplicate
-        rows."""
+        ids (recorded in the manifest at refresh time) are skipped. Its
+        docids (from ``next_docid``) and segment ids (from
+        ``n_segments``) are the batch's alone, so the segment writer
+        puts its files straight into ``blocks/`` under fixed names: a
+        retried batch replaces them instead of appending rows."""
         spark = batch_df.sparkSession
         state = self._load_state()
         if batch_id <= int(state.get("last_batch_id", -1)):
             return  # retry of a committed batch (at-least-once replay)
-        base_docid = int(state["doc_count"])
+        base_docid = _next_docid(SegmentIndex(self.root, spark), state)
         base_segment = int(state["n_segments"])
         dps = int(state["docs_per_segment"])
 
@@ -121,29 +121,18 @@ class IncrementalIndexer:
                 # new segments never share ids with existing ones
                 base_segment - base_docid // dps),
         )
-        builder = _segment_builder(dps, self.stop_words)
-        analyzed = analyzed_columns(
-            with_ids, max_token_length=self.max_token_length).drop("content")
-        out = analyzed.groupBy("segment").applyInPandas(builder, BLOCKS_SCHEMA)
-
-        # stage under a batch-scoped dir, then move segment dirs into
-        # place (segment ids are batch-exclusive — each batch starts at
-        # the manifest's n_segments — so a move never interleaves rows
-        # from two batches; a retry replaces its own partial dirs)
         tmp = os.path.join(self.root, f"batch-{batch_id}.tmp")
-        out.write.mode("overwrite").partitionBy("segment").parquet(
-            os.path.join(tmp, "blocks"))
-        # docmap (lineage) — segment-pure files, matching the batch
-        # builder's layout (segments.py shuffle-free read path)
+        new_segments = _write_analyzed(
+            with_ids, tmp, os.path.join(self.root, "blocks"),
+            self.stop_words, self.max_token_length)
+        # docmap (lineage, with content for compaction) — segment-pure
+        # files, staged and moved in per segment dir
         with_ids.repartition(F.col("segment")).write.mode("overwrite").partitionBy(
             "segment").parquet(os.path.join(tmp, "docmap"))
-        for name in ("blocks", "docmap"):
-            _move_in(os.path.join(tmp, name), os.path.join(self.root, name))
+        _move_in(os.path.join(tmp, "docmap"), os.path.join(self.root, "docmap"))
         shutil.rmtree(tmp)
 
         idx = SegmentIndex(self.root, spark)
-        new_segments = sorted(s for s in idx.segment_files()
-                              if s >= base_segment)
         self._refresh_derived(idx, batch_id, new_segments)
         if parent is not None:
             parent.unpersist()
@@ -179,11 +168,11 @@ class IncrementalIndexer:
         physically dropped at the next compaction.
 
         ``max_docid`` bounds the resolution to docids < max_docid —
-        upsert_batch passes the manifest's committed doc_count so a
-        retried half-applied batch never tombstones its own rows (a
+        upsert_batch passes the manifest's committed ``next_docid`` so
+        a retried half-applied batch never tombstones its own rows (a
         crashed attempt may have moved docmap segment dirs into place
         before committing; those rows carry docids >= the committed
-        doc_count)."""
+        ``next_docid``)."""
         idx = SegmentIndex(self.root, spark)
         if not os.path.exists(idx.docmap_path):
             return 0
@@ -254,7 +243,9 @@ class IncrementalIndexer:
         version of each incoming doc, then flush the batch as new
         segments with fresh docids. Idempotent like process_batch —
         a committed batch_id is skipped entirely, and tombstone
-        resolution is bounded to docids below the COMMITTED doc_count:
+        resolution is bounded to docids below the COMMITTED
+        ``next_docid`` (not ``doc_count``, which compaction lowers
+        below surviving docids):
         a retry of a half-applied batch (crash after the docmap
         segment dirs moved into place, before the manifest commit)
         would otherwise resolve the batch's own just-ingested rows and
@@ -263,8 +254,10 @@ class IncrementalIndexer:
         state = self._load_state()
         if batch_id <= int(state.get("last_batch_id", -1)):
             return
-        self.delete_by_key(batch_df.sparkSession, batch_df, key_cols,
-                           max_docid=int(state.get("doc_count", 0)))
+        spark = batch_df.sparkSession
+        self.delete_by_key(
+            spark, batch_df, key_cols,
+            max_docid=_next_docid(SegmentIndex(self.root, spark), state))
         self.process_batch(batch_df, batch_id)
 
     def atomic_update(self, spark, ops_df: DataFrame, batch_id: int,
@@ -454,15 +447,17 @@ def compact_segments(idx: SegmentIndex, min_fill: float = 0.5,
                      segs_per_tier: int = 10) -> int:
     """Tiered-merge analogue: re-encode underfull segments into full
     ones (TieredMergePolicy.java:97-101 role). docids are global, so a
-    merge is re-keying by docid//docs_per_segment + re-encoding — no
-    docID remapping (unlike SegmentMerger.java:96-177, whose remap
-    exists only because Lucene docids are per-segment). Tombstoned docs
-    inside the merged segments are physically dropped (deletes applied
-    at merge, FreqProxTermsWriter applyDeletes role) and their
-    tombstones retired. Every compaction that rewrites segments ends in
-    the full form of :func:`..index.segments._derive_tables` (docs/dict/
-    stats + manifest counts). Returns the segment count after
-    compaction."""
+    merge packs the merged docs by docid into the fewest segments and
+    re-encodes them through the segment writer — no docID remapping
+    (unlike SegmentMerger.java:96-177, whose remap exists only because
+    Lucene docids are per-segment). Tombstoned docs inside the merged
+    segments are physically dropped (deletes applied at merge,
+    FreqProxTermsWriter applyDeletes role) and their tombstones
+    retired; their docids are never handed out again (``next_docid``).
+    The rewrite stages and swaps in, as open searchers may still read
+    the segments it replaces, and ends in the full form of
+    :func:`..index.segments._derive_tables`. Returns the segment count
+    after compaction."""
     m = idx.manifest()
     dps = int(m["docs_per_segment"])
     seg_sizes = {
@@ -495,7 +490,6 @@ def compact_segments(idx: SegmentIndex, min_fill: float = 0.5,
         return len(seg_sizes)
 
     stop = frozenset(m.get("stop_words", ()))
-    builder = _segment_builder(dps, stop)
     docmap = idx.docmap()
     if "content" not in docmap.columns:
         raise ValueError(
@@ -524,11 +518,9 @@ def compact_segments(idx: SegmentIndex, min_fill: float = 0.5,
             F.element_at(seg_ids, (F.col("_rk") / dps).cast("int") + 1))
         .drop("_rk")
     )
-    out = analyzed_columns(
-        w_ids, max_token_length=int(m["max_token_length"])
-    ).drop("content").groupBy("segment").applyInPandas(builder, BLOCKS_SCHEMA)
     tmp = os.path.join(idx.root, "blocks.compact.tmp")
-    out.write.mode("overwrite").partitionBy("segment").parquet(tmp)
+    shutil.rmtree(tmp, ignore_errors=True)  # a crashed run's staging
+    _write_analyzed(w_ids, tmp, tmp, stop, int(m["max_token_length"]))
     # swap: drop old small segment dirs, move in compacted ones
     for s in small:
         p = os.path.join(idx.blocks_path, f"segment={s}")

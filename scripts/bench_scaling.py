@@ -117,14 +117,12 @@ def child(cpus: int, docs: int, queries: int) -> None:
     # triple-build diagnostic).
     warm_root = tempfile.mkdtemp(prefix=f"lss_warm_{cpus}_", dir=tmp_base)
     warm_corpus = corpus.where("pmod(crc32(path), 4) = 0")  # quarter-size
-    build_segment_index(warm_corpus, warm_root, docs_per_segment=dps,
-                        segments_per_chunk=10**9)
+    build_segment_index(warm_corpus, warm_root, docs_per_segment=dps)
     shutil.rmtree(warm_root, ignore_errors=True)
 
     root = tempfile.mkdtemp(prefix=f"lss_scale_{cpus}_", dir=tmp_base)
     t0 = time.time()
-    seg_idx = build_segment_index(corpus, root, docs_per_segment=dps,
-                                  segments_per_chunk=10**9)  # one chunk: pure throughput
+    seg_idx = build_segment_index(corpus, root, docs_per_segment=dps)
     build_sec = time.time() - t0
     out["build_sec"] = round(build_sec, 2)
     out["build_docs_per_sec"] = round(docs / build_sec, 1)

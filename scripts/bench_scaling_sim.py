@@ -172,8 +172,7 @@ def child(cpus: int, docs: int, queries: int, sync_dir: str,
     # does not flush (measured: first in-window full build 2-3x its
     # steady state at 8 cores)
     warm_root = tempfile.mkdtemp(prefix="warm_", dir=tmp_base)
-    build_segment_index(corpus, warm_root, docs_per_segment=dps,
-                        segments_per_chunk=10**9)
+    build_segment_index(corpus, warm_root, docs_per_segment=dps)
     shutil.rmtree(warm_root, ignore_errors=True)
 
     # ---- phase lock: build
@@ -197,8 +196,7 @@ def child(cpus: int, docs: int, queries: int, sync_dir: str,
             overtime = False
         root = tempfile.mkdtemp(prefix="idx_", dir=tmp_base)
         t0 = time.time()
-        seg_idx = build_segment_index(corpus, root, docs_per_segment=dps,
-                                      segments_per_chunk=10**9)
+        seg_idx = build_segment_index(corpus, root, docs_per_segment=dps)
         t1 = time.time()
         samples.append({"start": round(t0 - go["t0"], 2),
                         "sec": round(t1 - t0, 2), "overtime": overtime})

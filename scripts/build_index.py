@@ -7,8 +7,7 @@ Cluster usage (package shipped to executors with --py-files):
     spark-submit --py-files /tmp/lss.zip scripts/build_index.py \
         --input  /path/to/corpus_parquet \
         --output /path/to/index_root \
-        --codec v2 --docs-per-segment 65536 --segments-per-chunk 64 \
-        --resume
+        --codec v2 --docs-per-segment 65536 --resume
 
 Local smoke (single JVM):
 
@@ -17,7 +16,7 @@ Local smoke (single JVM):
 
 The input must have columns (repo, path, commit, lang, content) — the
 BASELINE.json input_hint schema. `--resume` continues a killed build
-from its per-chunk checkpoints (see index/segments.py); metrics and
+from its per-segment checkpoints (see index/segments.py); metrics and
 lineage land in <output>/checkpoints/.
 """
 
@@ -40,7 +39,6 @@ def main() -> int:
                     help="v1 = term-bucketed uncompressed postings; "
                          "v2 = doc-segmented compressed blocks (SegmentSearcher)")
     ap.add_argument("--docs-per-segment", type=int, default=65536)
-    ap.add_argument("--segments-per-chunk", type=int, default=64)
     ap.add_argument("--term-buckets", type=int, default=32, help="v1 only")
     ap.add_argument("--no-stopwords", action="store_true")
     ap.add_argument("--resume", action="store_true")
@@ -77,7 +75,6 @@ def main() -> int:
         idx = build_segment_index(
             corpus, args.output, stop_words=stop,
             docs_per_segment=args.docs_per_segment,
-            segments_per_chunk=args.segments_per_chunk,
             resume=args.resume,
         )
         manifest = idx.manifest()

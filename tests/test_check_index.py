@@ -42,7 +42,7 @@ def v1_root(spark, corpus, tmp_path_factory):
 def v2_root(spark, corpus, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("chk_v2"))
     build_segment_index(corpus, root, stop_words=ENGLISH_STOP_WORDS,
-                        docs_per_segment=48, segments_per_chunk=2)
+                        docs_per_segment=48)
     return root
 
 

@@ -86,15 +86,15 @@ def test_empty_and_single_doc(spark, n):
 
 
 def test_deferred_finalize_matches_analyzed_columns(spark, tmp_path):
-    """analyzed_deferred + parquet barrier + finalize_analyzed must be
-    row-identical to analyzed_columns (minus the content column) on the
-    mixed-case corpus, including the Python-fallback rows; the deferred
-    plan must be ONE scan with no Union (the 3x-regex union shape is
-    exactly what it removes)."""
+    """analyzed_deferred + parquet barrier + finish_python_rows (the
+    builds' path) must be row-identical to analyzed_columns (minus the
+    content column) on the mixed-case corpus, including the
+    Python-fallback rows; the deferred plan must be ONE scan with no
+    Union (the 3x-regex union shape is exactly what it removes)."""
     from lucene_solr_spark.analysis.jvm import (
         PY_CONTENT_COL,
         analyzed_deferred,
-        finalize_analyzed,
+        finish_python_rows,
     )
 
     df = spark.createDataFrame(
@@ -110,11 +110,12 @@ def test_deferred_finalize_matches_analyzed_columns(spark, tmp_path):
 
     spill = str(tmp_path / "spill")
     analyzed_deferred(df).write.parquet(spill)
-    got = {r["id"]: r for r in
-           finalize_analyzed(spark.read.parquet(spill)).collect()}
+    fin = finish_python_rows(spark.read.parquet(spill).toPandas(),
+                             [("tokens", PY_CONTENT_COL, True)])
+    got = {r["id"]: r for r in fin.to_dict("records")}
     exp = {r["id"]: r for r in analyzed_columns(df).drop("content").collect()}
     assert set(got) == set(exp)
     for i in exp:
         assert list(got[i]["tokens"]) == list(exp[i]["tokens"]), i
         assert got[i]["content_sha256"] == exp[i]["content_sha256"], i
-        assert PY_CONTENT_COL not in got[i].asDict()
+        assert PY_CONTENT_COL not in got[i]

@@ -38,6 +38,8 @@ N_DOCS = 160
 SPLIT = 96
 LEGACY_COLS = ("imp_tfs", "imp_norms")
 SPARK_ROW_META = b"org.apache.spark.sql.parquet.row.metadata"
+SPARK_TYPES = {"int32": "integer", "int64": "long", "binary": "binary",
+               "string": "string"}
 
 
 def _block_files(root):
@@ -48,9 +50,9 @@ def _block_files(root):
 def _legacy_copy(src, dst):
     """Copy an index and rewrite each block file in the older layout:
     the two impact columns inserted after ``positions`` — in the
-    Parquet schema and in the Spark schema Spark keeps in the footer —
-    non-empty on block rows (kind=0) and empty on norm rows, as the
-    older writer left them."""
+    Parquet schema and in the Spark schema the older writer (Spark)
+    kept in the footer — non-empty on block rows (kind=0) and empty on
+    norm rows, as the older writer left them."""
     shutil.copytree(src, dst)
     for f in _block_files(dst):
         t = pq.read_table(f)
@@ -61,16 +63,12 @@ def _legacy_copy(src, dst):
         at = t.schema.get_field_index("positions") + 1
         for i, name in enumerate(LEGACY_COLS):
             t = t.add_column(at + i, name, col)
-        meta = dict(t.schema.metadata)
-        row = json.loads(meta[SPARK_ROW_META])
-        i = [fl["name"] for fl in row["fields"]].index("positions") + 1
-        row["fields"][i:i] = [{"name": n, "type": "binary", "nullable": True,
-                               "metadata": {}} for n in LEGACY_COLS]
+        row = {"type": "struct", "fields": [
+            {"name": fl.name, "type": SPARK_TYPES[str(fl.type)],
+             "nullable": True, "metadata": {}} for fl in t.schema]}
+        meta = dict(t.schema.metadata or {})
         meta[SPARK_ROW_META] = json.dumps(row).encode()
         pq.write_table(t.replace_schema_metadata(meta), f)
-        # the Hadoop checksum sidecar no longer matches the rewrite
-        d, name = os.path.split(f)
-        os.remove(os.path.join(d, f".{name}.crc"))
     return dst
 
 

@@ -42,7 +42,7 @@ def built(spark, tmp_path_factory):
     )
     idx = build_segment_index(
         corpus, root, stop_words=ENGLISH_STOP_WORDS,
-        docs_per_segment=32, segments_per_chunk=2,
+        docs_per_segment=32,
         fields=("content", "title"),
     )
     searcher = SegmentSearcher(idx, cache=True)

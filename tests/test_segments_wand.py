@@ -8,7 +8,7 @@ import pytest
 
 from lucene_solr_spark.analysis import ENGLISH_STOP_WORDS, StandardAnalyzer
 from lucene_solr_spark.corpus import corpus_df, corpus_pandas
-from lucene_solr_spark.index.segments import build_segment_index
+from lucene_solr_spark.index.segments import SegmentIndex, build_segment_index
 from lucene_solr_spark.oracle import OracleIndex
 from lucene_solr_spark.search.queries import BooleanQuery, TermQuery
 from lucene_solr_spark.search.wand import SegmentSearcher
@@ -22,7 +22,7 @@ def built(spark, tmp_path_factory):
     corpus = corpus_df(spark, N_DOCS, partitions=5)
     idx = build_segment_index(
         corpus, root, stop_words=ENGLISH_STOP_WORDS,
-        docs_per_segment=48, segments_per_chunk=2,
+        docs_per_segment=48,
     )
     searcher = SegmentSearcher(idx, cache=True)
     pdf = corpus_pandas(N_DOCS).sort_values(["repo", "path", "commit"]).reset_index(drop=True)
@@ -182,18 +182,43 @@ def test_msm_disjunction(built):
         (d.docid, np.float32(d.score)) for d in exp]
 
 
-def test_kill_and_resume_identical(spark, tmp_path_factory, built):
+def test_kill_and_resume_identical(spark, tmp_path_factory, built,
+                                   monkeypatch):
+    """A writer task that fails mid-job kills the build; the resumed
+    build keeps the checkpointed segments, rebuilds the rest, and ends
+    with the same blocks and exactly one checkpoint row per segment."""
+    import os
+    import shutil
+
+    from lucene_solr_spark.index import segments
+
     idx_full, _, _, _ = built
     root = str(tmp_path_factory.mktemp("segidx_resume"))
     corpus = corpus_df(spark, N_DOCS, partitions=5)
-    with pytest.raises(RuntimeError, match="injected failure"):
+    n_seg = N_DOCS // 48
+    last = os.path.join(root, "blocks", f"segment={n_seg - 1}")
+    write_segments = segments._write_segments
+
+    def plant_then_write(*args, **kw):
+        # a non-empty directory at the last segment's final file name:
+        # that task's rename fails, and the job with it
+        os.makedirs(os.path.join(last, segments._BLOCK_FILE, "x"))
+        return write_segments(*args, **kw)
+
+    monkeypatch.setattr(segments, "_write_segments", plant_then_write)
+    with pytest.raises(Exception, match="IsADirectoryError"):
         build_segment_index(
             corpus, root, stop_words=ENGLISH_STOP_WORDS,
-            docs_per_segment=48, segments_per_chunk=2, fail_after_chunk=1,
+            docs_per_segment=48,
         )
+    monkeypatch.undo()
+    cps = SegmentIndex(root, spark).checkpoints().where(
+        "stage = 'blocks'").collect()
+    assert n_seg - 1 not in {r["chunk"] for r in cps}
+    shutil.rmtree(last)
     idx2 = build_segment_index(
         corpus, root, stop_words=ENGLISH_STOP_WORDS,
-        docs_per_segment=48, segments_per_chunk=2, resume=True,
+        docs_per_segment=48, resume=True,
     )
     cols = ["segment", "kind", "term", "block_ord", "n", "first_docid",
             "last_docid", "sum_tf", "docids", "tfs", "norms", "positions"]
@@ -202,9 +227,9 @@ def test_kill_and_resume_identical(spark, tmp_path_factory, built):
     b = sorted(map(tuple, idx2.spark.read.parquet(idx2.blocks_path)
                    .select(cols).collect()))
     assert a == b
-    # checkpoints recorded lineage + metrics for every chunk exactly once
+    # checkpoints recorded lineage + metrics for every segment exactly once
     cps = idx2.checkpoints().where("stage = 'blocks'").collect()
-    assert sorted(r["chunk"] for r in cps) == list(range(len(cps)))
+    assert sorted(r["chunk"] for r in cps) == list(range(n_seg))
     assert all(r["docs_per_sec"] > 0 for r in cps)
 
 
@@ -361,36 +386,6 @@ def test_phrase_batched_identical(built):
         oexp = oracle.search(q, 12)
         assert [(d.docid, np.float32(d.score)) for d in got[qid]] == [
             (d.docid, np.float32(d.score)) for d in oexp], qid
-
-
-def test_concurrent_chunks_bit_identical(spark, tmp_path_factory):
-    """Overlapped chunk jobs (ConcurrentMergeScheduler role,
-    index/ConcurrentMergeScheduler.java:57-63) commit the exact same
-    index as the sequential build: same block bytes, same checkpoint
-    chunk set, same search results."""
-    corpus = corpus_df(spark, 200, partitions=4)
-    seq = build_segment_index(
-        corpus, str(tmp_path_factory.mktemp("seq")),
-        stop_words=ENGLISH_STOP_WORDS, docs_per_segment=32,
-        segments_per_chunk=2, max_concurrent_chunks=1)
-    con = build_segment_index(
-        corpus, str(tmp_path_factory.mktemp("con")),
-        stop_words=ENGLISH_STOP_WORDS, docs_per_segment=32,
-        segments_per_chunk=2, max_concurrent_chunks=4)
-
-    def blocks_key(idx):
-        rows = idx.blocks().collect()
-        return sorted(
-            (r["segment"], r["term"], r["block_ord"],
-             bytes(r["docids"]), bytes(r["tfs"]), bytes(r["norms"]))
-            for r in rows)
-
-    assert blocks_key(seq) == blocks_key(con)
-    q = BooleanQuery.of(should=[TermQuery("class"), TermQuery("return")])
-    a = SegmentSearcher(seq, cache=True).search(q, 10)
-    b = SegmentSearcher(con, cache=True).search(q, 10)
-    assert [(d.docid, np.float32(d.score)) for d in a] == [
-        (d.docid, np.float32(d.score)) for d in b]
 
 
 def test_batch_identical_to_solo_and_oracle(built):
@@ -611,7 +606,6 @@ def test_search_local_serving_path(built):
     distributed path across the full algebra, and no Spark job either
     hot (cached term set) or cold (a fresh searcher's first term,
     boolean and phrase queries read the segment files directly)."""
-    from lucene_solr_spark.index.segments import SegmentIndex
     from lucene_solr_spark.search.queries import PhraseQuery, PrefixQuery
 
     idx, searcher, oracle, pdf = built
@@ -670,7 +664,6 @@ def test_search_local_cache_bounded_lru(built):
     distinct-term queries must keep resident bytes under the cap,
     evict cold terms, and return identical results under eviction
     (evict-and-refetch, decode memos dropped with the term)."""
-    from lucene_solr_spark.index.segments import SegmentIndex
     from lucene_solr_spark.search.wand import SegmentSearcher
 
     idx, _shared, oracle, pdf = built
@@ -707,7 +700,6 @@ def test_batch_plan_cache_identity_and_bound(built):
     cached plan; distinct batches evict LRU past the bound; the
     sharded stats-override path never caches."""
     idx, _shared, oracle, pdf = built
-    from lucene_solr_spark.index.segments import SegmentIndex
     from lucene_solr_spark.search.wand import SegmentSearcher
 
     searcher = SegmentSearcher(SegmentIndex(idx.root, idx.spark),

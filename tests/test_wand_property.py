@@ -32,7 +32,7 @@ def built(spark, tmp_path_factory):
     corpus = corpus_df(spark, N_DOCS, partitions=3)
     idx = build_segment_index(corpus, root,
                               stop_words=ENGLISH_STOP_WORDS,
-                              docs_per_segment=32, segments_per_chunk=2)
+                              docs_per_segment=32)
     searcher = SegmentSearcher(idx, cache=True)
     pdf = (corpus_pandas(N_DOCS)
            .sort_values(["repo", "path", "commit"]).reset_index(drop=True))
