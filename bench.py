@@ -278,8 +278,8 @@ def bench_engine(spark) -> tuple[dict[str, float], dict[str, float]]:
 
         def wand_cold(qset):
             # bypass the plan cache (queryResultCache role): a cached
-            # identical batch replays via Spark's shuffle reuse, which
-            # would silently measure the cache, not decode/scoring
+            # identical batch skips rewrite, compile and Catalyst
+            # planning, which would measure the cache, not the full call
             if hasattr(wand, "_batch_plan_cache"):
                 wand._batch_plan_cache.clear()
             wand.search_many(qset, 10)
@@ -295,8 +295,8 @@ def bench_engine(spark) -> tuple[dict[str, float], dict[str, float]]:
             ("wand_batch512", "wand_batch512_qps",
              lambda: wand_cold(big), 512),
             # the CACHED regime, labeled as such: repeated identical
-            # batch served through the compiled-plan cache + shuffle
-            # reuse — the Solr queryResultCache serving pattern
+            # batch served through the compiled-plan cache (the leaf
+            # still runs) — the Solr queryResultCache serving pattern
             ("wand_batch512_cached", "wand_batch512_cached_qps",
              lambda: wand.search_many(big, 10), 512),
             ("wand_local_loop", "wand_local_qps", serving_loop,

@@ -852,19 +852,20 @@ def split_index(src_root: str, out_roots: list[str],
     """SPLITSHARD / MultiPassIndexSplitter role (misc/IndexSplitter
     .java — "copy segments as-is into separate indexes";
     solr SplitShardCmd): partition the index into ``len(out_roots)``
-    independent indexes at SEGMENT boundaries. Segments hold
-    contiguous docid ranges by construction (docid // docs_per_segment
-    in :func:`build_segment_index`), so each part's docids renumber to
-    a dense 0..n-1 by subtracting the part's base — the same
+    independent indexes at SEGMENT boundaries. Each part's docids
+    shift down by the part's base (its smallest docid) — the same
     copy-with-shift task per segment as :func:`add_indexes`, no posting
-    re-encode.
+    re-encode; a never-compacted index gives dense 0..n-1 parts.
 
     Per-part docs/dict/stats are RECOMPUTED from the part's blocks by
     the full form of :func:`_derive_tables` (a standalone index owns its
     own global term statistics — a split-then-search gives each shard
     its local BM25 stats, exactly like independent Lucene indexes;
     distributed-search stat merging is the shard-merge path in
-    search/wand.py). Tombstones land in the part owning the docid.
+    search/sharded.py). Each tombstone goes to the part whose segments
+    hold its doc (the docmap's segment column): a compaction leaves
+    docid holes and interleaves merged segments' docid ranges, so no
+    docid range can route them.
     Inverse of add_indexes: ``add_indexes(split(A)...)`` reproduces
     A's results."""
     src_idx = SegmentIndex(src_root, spark)
@@ -884,7 +885,11 @@ def split_index(src_root: str, out_roots: list[str],
             part += 1
         bounds[part].append(r)
         acc += r["n"]
-    deletes = set(src_idx.deleted_docids().tolist())
+    deletes = src_idx.deletes()
+    del_segs = [] if deletes is None else [
+        (int(r["docid"]), int(r["segment"])) for r in src_idx.docmap()
+        .join(deletes, "docid", "left_semi").select("docid", "segment")
+        .collect()]
     files = src_idx.segment_files()
     outs = []
     for out_root, segs in zip(out_roots, bounds):
@@ -893,7 +898,6 @@ def split_index(src_root: str, out_roots: list[str],
         seg_ids = [int(r["segment"]) for r in segs]
         base = int(min(r["lo"] for r in segs))
         seg_off = min(seg_ids)
-        n_docs = int(sum(r["n"] for r in segs))
         os.makedirs(out_root, exist_ok=True)
         pred = F.col("segment").isin(seg_ids)
         blocks_dir = os.path.join(out_root, "blocks")
@@ -905,8 +909,7 @@ def split_index(src_root: str, out_roots: list[str],
          .withColumn("docid", F.col("docid") - base)
          .withColumn("segment", (F.col("segment") - seg_off).cast("int"))
          .write.mode("overwrite").parquet(os.path.join(out_root, "docmap")))
-        lo_d, hi_d = base, base + n_docs
-        part_dels = sorted(d - base for d in deletes if lo_d <= d < hi_d)
+        part_dels = sorted(d - base for d, s in del_segs if s in seg_ids)
         if part_dels:
             append_deletes(out_root, part_dels)
         pman = dict(man)

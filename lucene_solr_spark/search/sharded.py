@@ -14,27 +14,30 @@ shard fan-out + merge) and the distributed-IDF stats caches in
   identical to one big index.
 
 Merge follows ``TopDocs.merge`` (lucene/search/TopDocs.java:105-117,
-188-230): score desc, then shard index, then per-shard doc id. With
-shards produced by :func:`..index.segments.split_index` (contiguous
-docid slices, shard order = slice order), the (shard, local-docid)
-tie-break is EXACTLY the monolithic docid tie-break, which is what
-makes the exact-stats mode bit-identical end-to-end.
+188-230): score desc, then shard index, then per-shard doc id — which
+is (score desc, global docid asc), global docid = shard offset + local
+docid, so one driver merge of every shard's leaf rows realizes it.
+With shards produced by :func:`..index.segments.split_index` (shard
+order = slice order), the (shard, local-docid) tie-break is EXACTLY
+the monolithic docid tie-break, which is what makes the exact-stats
+mode bit-identical end-to-end.
 
 Scale shape: the stats round is one tiny dictionary lookup per shard
-(bucket-pruned scan or driver cache hit); each shard query is the
-normal one-job compressed-path search; the merge touches k rows per
-shard on the driver. Shards never talk to each other — the same
-topology as SolrCloud's scatter-gather.
+(bucket-pruned scan or driver cache hit); each shard runs the normal
+one-job compressed-path leaf; the merge touches at most segments *
+queries * k rows per shard on the driver. Shards never talk to each
+other — the same topology as SolrCloud's scatter-gather.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import SparkSession
 
 from ..index.segments import SegmentIndex, _next_docid
 from . import bm25
 from .queries import Query, TopDoc
-from .wand import SegmentSearcher
+from .wand import SegmentSearcher, _hits_by_qid, _merge_topk
 
 
 class ShardedSearcher:
@@ -98,11 +101,26 @@ class ShardedSearcher:
                 out[t] = out.get(t, 0) + df
         return out
 
+    def _topk(self, queries: list[Query], k: int,
+              stats: dict[str, int] | None) -> tuple:
+        """Every shard's leaf rows, docids shifted to global ids, merged
+        once: (qidx, global docid, score). Global stats thread through
+        each searcher's stats override — never by mutating the shared
+        _df_map, which is both non-reentrant and the multi-term rewrite
+        dictionary."""
+        parts = [s._leaf_arrays(queries, k, stats) for s in self.shards]
+        return _merge_topk(
+            np.concatenate([p[0] for p in parts]),
+            np.concatenate([p[1] + off
+                            for p, off in zip(parts, self.offsets)]),
+            np.concatenate([p[2] for p in parts]), k)
+
     def search_many(self, queries: dict[str, Query], k: int = 10
                     ) -> dict[str, list[TopDoc]]:
         """Batched scatter-gather: ONE batched job per shard (the
-        shard-side leaf amortizes decodes across the whole batch), exact-stats mode resolves the batch's full term set in
-        one global round, merge per query with the TopDocs.merge
+        shard-side leaf amortizes decodes across the whole batch),
+        exact-stats mode resolves the batch's full term set in one
+        global round, and one driver merge with the TopDocs.merge
         comparator."""
         stats = None
         if self.stats_mode == "exact":
@@ -113,39 +131,10 @@ class ShardedSearcher:
             for s in self.shards:
                 for t, df in s._stats(term_set).items():
                     stats[t] = stats.get(t, 0) + df
-        qid_list = list(queries)
-        per_shard: list[dict[str, list[TopDoc]]] = []
-        for s in self.shards:
-            # global stats thread through the searcher's stats
-            # override (like search_df's) — never by mutating the
-            # shared _df_map, which is both non-reentrant and the
-            # multi-term rewrite dictionary
-            res = s.search_many(queries, k, stats=stats)
-            per_shard.append(res)
-        out: dict[str, list[TopDoc]] = {}
-        for qid in qid_list:
-            merged = sorted(
-                ((d.score, si, d.docid)
-                 for si, res in enumerate(per_shard)
-                 for d in res.get(qid, ())),
-                key=lambda t: (-t[0], t[1], t[2]))[:k]
-            out[qid] = [TopDoc(self.offsets[si] + docid, score)
-                        for score, si, docid in merged]
-        return out
+        return _hits_by_qid(list(queries),
+                            self._topk(list(queries.values()), k, stats))
 
     def search(self, q: Query, k: int = 10) -> list[TopDoc]:
         stats = self._global_dfs(q) if self.stats_mode == "exact" else None
-        per_shard: list[list[TopDoc]] = []
-        for s in self.shards:
-            rows = s.search_df(q, k, stats=stats).collect()
-            per_shard.append([TopDoc(r["docid"], r["score"]) for r in rows])
-        # TopDocs.merge comparator: score desc, shard index asc,
-        # local docid asc — then remap to global ids
-        merged = sorted(
-            ((d.score, si, d.docid) for si, docs in enumerate(per_shard)
-             for d in docs),
-            key=lambda t: (-t[0], t[1], t[2]))[:k]
-        return [TopDoc(self.offsets[si] + docid, score)
-                for score, si, docid in merged]
-
-
+        _qi, d, sc = self._topk([q], k, stats)
+        return [TopDoc(di, si) for di, si in zip(d.tolist(), sc.tolist())]

@@ -14,7 +14,7 @@ Spark), and ``_SegGroups`` decodes them in one vectorized pass into
 per-term arrays (docids, unit scores, tfs, norms; positions on first
 use). Two renderings read through them.
 
-Distributed rendering (``search_df`` / ``search_many_df``):
+Distributed rendering (``search`` / ``search_many`` / ``search_df``):
 
   * leaves = segments (contiguous docID ranges). After Bloom
     exclusion, one ``mapInPandas`` task per live segment — no exchange
@@ -22,12 +22,14 @@ Distributed rendering (``search_df`` / ``search_many_df``):
     and cuts to per-segment top-k (``_segment_topk``) = Lucene's
     per-leaf ``BulkScorer`` (search/IndexSearcher.java:634-656).
   * merge = TopDocs.merge (TopDocs.java:188-230) by (score desc,
-    docid asc): one ``orderBy.limit(k)`` for a single query, a
-    per-query window for a batch.
+    docid asc): ``search``/``search_many`` collect the leaf rows as
+    Arrow in one job and merge them in the driver (``_merge_topk``);
+    ``search_df`` is the lazy DataFrame form (``orderBy.limit(k)``)
+    that components join against.
 
 Driver-local rendering (``search_local``): a bytes-capped per-term
 cache filled per segment by the same reader and ``_SegGroups``, the
-same ``_segment_topk`` per segment, and a local cross-segment merge —
+same ``_segment_topk`` per segment, and the same ``_merge_topk`` —
 no Spark job, cold or hot.
 
 Scoring float discipline: per-term float32 scores, per-doc sums
@@ -35,6 +37,8 @@ accumulated in float64 and cast to float32 once (WANDScorer.java:445-453).
 """
 
 from __future__ import annotations
+
+import collections
 
 import numpy as np
 import pandas as pd
@@ -239,14 +243,14 @@ class SegmentSearcher:
     per-segment evaluate → tombstone mask → top-k step
     (``_segment_topk``) serve two renderings:
 
-    * distributed — ``search_df``/``search_many_df`` share one plan
-      (``_plan``: Bloom segment exclusion, one ``segment_eval_topk``
-      task per live segment reading its own files); only the merge
-      differs — ``orderBy.limit(k)`` for one query, a per-query
-      window for a batch;
+    * distributed — one plan (``_plan``: Bloom segment exclusion, one
+      ``segment_eval_topk`` task per live segment reading its own
+      files); ``search``/``search_many`` collect its rows in one job
+      and merge them in the driver (``_merge_topk``), ``search_df``
+      keeps them as a DataFrame ordered by ``orderBy.limit(k)``;
     * driver-local — ``search_local`` reads a bytes-capped per-term
       cache filled through the same reader and merges across
-      segments in the driver, with no Spark job.
+      segments with the same ``_merge_topk``, with no Spark job.
 
     ``cache=True`` only loads the dictionary's term → df map into the
     driver (the dictionary stays persisted).
@@ -300,6 +304,14 @@ class SegmentSearcher:
 
         self.blooms = SegmentBlooms.load(index)
         self._df_map: dict[str, int] | None = None
+        # compiled leaf plans by (queries, k) — the queryResultCache
+        # role at plan granularity: a re-submitted identical batch skips
+        # rewrite, tree compile and Catalyst planning. Safe because the
+        # searcher is snapshot-bound (segment files and deletes are
+        # listed above); a new snapshot means a new searcher, Solr's
+        # cache-per-searcher lifecycle.
+        self._batch_plan_cache: collections.OrderedDict = (
+            collections.OrderedDict())
         if cache:
             self.dict.persist()
             if self.dict.count() <= self.DICT_CACHE_MAX:
@@ -663,7 +675,7 @@ class SegmentSearcher:
         raise TypeError(
             f"SegmentSearcher cannot evaluate {type(q).__name__}")
 
-    # -- one evaluator: plan, leaf, two merge tails ---------------------
+    # -- one evaluator: plan, leaf, one driver merge ---------------------
     def _compile(self, queries: list[Query],
                  stats: dict[str, int] | None = None) -> list:
         """Rewrite → term stats → compiled tree, one per query. The
@@ -725,15 +737,15 @@ class SegmentSearcher:
         return (self.index.spark.range(len(files), numPartitions=len(files))
                 .mapInPandas(leaf, _LEAF_SCHEMA))
 
-    def search_df(self, q: Query, k: int = 10,
-                  stats: dict[str, int] | None = None) -> DataFrame:
-        """Top-k (docid, score) of one query: the per-segment leaf rows
-        then ONE global ``orderBy(score desc, docid asc).limit(k)`` =
+    def search_df(self, q: Query, k: int = 10) -> DataFrame:
+        """Top-k (docid, score) of one query as a lazy DataFrame, for
+        components that join against it: the per-segment leaf rows then
+        ONE global ``orderBy(score desc, docid asc).limit(k)`` =
         TopDocs.merge (TopDocs.java:188-230). ``k=None`` is all-hits
         mode (collapse/rescore two-phase components): every match, no
-        truncation. ``stats``: see :meth:`_compile`."""
+        truncation."""
         kk = None if k is None else int(k)
-        per_seg = self._plan([q], kk, stats)
+        per_seg = self._plan([q], kk)
         if per_seg is None:
             return self.index.spark.createDataFrame(
                 [], "docid long, score float")
@@ -741,9 +753,32 @@ class SegmentSearcher:
             F.desc("score"), F.asc("docid"))
         return ordered if kk is None else ordered.limit(kk)
 
+    def _leaf_arrays(self, queries: list[Query], k: int | None,
+                     stats: dict[str, int] | None = None) -> tuple:
+        """The batch's per-segment top-k rows as numpy arrays (qidx,
+        docid, score), collected from :meth:`_plan` with ``toArrow`` —
+        one Spark job, no exchange. Plans are cached per (queries, k)
+        unless ``stats`` overrides the term stats (see :meth:`_compile`)."""
+        k = None if k is None else int(k)
+        key = (tuple(queries), k) if stats is None else None
+        try:
+            plan = self._batch_plan_cache.pop(key, None)
+        except TypeError:  # unhashable custom query: no cache
+            key = plan = None
+        if plan is None:
+            plan = self._plan(queries, k, stats)
+            if plan is None:  # no query can match: no rows
+                return _segment_topk([], None, None, k, None)
+        if key is not None:  # (re)insert as the most recent, LRU 32
+            self._batch_plan_cache[key] = plan
+            while len(self._batch_plan_cache) > 32:
+                self._batch_plan_cache.popitem(last=False)
+        t = plan.toArrow()
+        return tuple(t.column(c).to_numpy() for c in ("qidx", "docid", "score"))
+
     def search(self, q: Query, k: int = 10) -> list[TopDoc]:
-        rows = self.search_df(q, k).collect()
-        return [TopDoc(r["docid"], r["score"]) for r in rows]
+        _qi, d, s = _merge_topk(*self._leaf_arrays([q], k), k)
+        return [TopDoc(di, si) for di, si in zip(d.tolist(), s.tolist())]
 
     def search_after(self, q: Query, after: TopDoc,
                      k: int = 10) -> list[TopDoc]:
@@ -807,8 +842,6 @@ class SegmentSearcher:
         (LOCAL_CACHE_BYTES) — the live query's own terms are never
         evicted."""
         if not hasattr(self, "_local_cache"):
-            import collections
-
             self._local_cache: dict = collections.OrderedDict()
             self._local_cache_bytes = 0
         cache = self._local_cache
@@ -867,8 +900,8 @@ class SegmentSearcher:
         the throughput/batch answer. Rank/score-identical: the same
         compile step (:meth:`_compile`), decoded-segment structure
         (:class:`_SegGroups`) and per-segment evaluation
-        (:func:`_segment_topk`) the leaf runs; only the cross-segment
-        merge is local."""
+        (:func:`_segment_topk`) the leaf runs, and the same merge
+        (:func:`_merge_topk`)."""
         tree = self._compile([q])[0]
         if tree[0] == "none":
             return []
@@ -877,106 +910,46 @@ class SegmentSearcher:
                      for f in _tree_norm_fields(tree)}
         get_norms = norm_maps.get if norm_maps else None
         deleted = self.deleted if self.deleted.size else None
-        ds, ss = [], []
+        parts = []
         for seg in {s for m in per_term.values() for s in m}:
             seg_terms = {t: m[seg] for t, m in per_term.items() if seg in m}
-            for _qi, d, sc in _segment_topk([tree], seg_terms.get,
-                                            self.caches, k, deleted,
-                                            get_norms):
-                ds.append(d)
-                ss.append(sc)
-        if not ds:
+            parts.append(_segment_topk([tree], seg_terms.get, self.caches,
+                                       k, deleted, get_norms))
+        if not parts:
             return []
-        top_d, top_s = _topk_arrays(np.concatenate(ds), np.concatenate(ss), k)
-        return [TopDoc(int(d), float(sv))
-                for d, sv in zip(top_d, top_s)]
-
-    def _plan_cache_put(self, cache_key, out) -> None:
-        """Store a compiled batch plan, evicting LRU beyond 32."""
-        if cache_key is None:
-            return
-        self._batch_plan_cache[cache_key] = out
-        while len(self._batch_plan_cache) > 32:
-            self._batch_plan_cache.popitem(last=False)
+        _qi, d, s = _merge_topk(*map(np.concatenate, zip(*parts)), k)
+        return [TopDoc(di, si) for di, si in zip(d.tolist(), s.tolist())]
 
     # -- batched execution ---------------------------------------------
-    def search_many_df(self, queries: dict[str, Query], k: int = 10,
-                       _raw: bool = False,
-                       stats: dict[str, int] | None = None) -> DataFrame:
-        """Evaluate MANY queries in ONE job over the compressed index —
-        the throughput path.
-
-        Execution shape: the same plan and leaf as :meth:`search_df`
-        — per live segment ONE ``mapInPandas`` task reads that
-        segment's block rows for the batch's whole term set from its
-        own files, decodes every (term, segment) once and evaluates
-        every query's compiled tree; no block row crosses an exchange.
-        Per-leaf top-k arrays then a global per-query window merge
-        (TopDocs.merge, TopDocs.java:188-230) of <= segments *
-        |queries| * k rows.
-
-        Scaling: task = (segment x whole batch) — pure numpy
-        decode/score CPU per task, no block-row shuffle, no driver loop;
-        parallelism = segment count, which the builder sizes to
-        O(corpus / docs_per_segment) independent of executor count."""
-        spark = self.index.spark
-        qid_list = list(queries)
-        # compiled-plan cache (the queryResultCache role, at plan
-        # granularity): a re-submitted identical batch skips rewrite +
-        # tree compile + Catalyst planning entirely — the driver-side
-        # serial fraction of steady-state repeated workloads. Safe
-        # because this searcher is snapshot-bound (segment files/deletes
-        # are listed at construction); a new snapshot means a new searcher,
-        # exactly Solr's cache-per-searcher lifecycle.
-        cache_key = None
-        if stats is None:
-            try:
-                cache_key = (tuple(queries.items()), int(k), bool(_raw))
-            except TypeError:
-                cache_key = None  # unhashable custom query: no cache
-        if cache_key is not None:
-            if not hasattr(self, "_batch_plan_cache"):
-                import collections
-
-                self._batch_plan_cache: dict = collections.OrderedDict()
-            hit = self._batch_plan_cache.get(cache_key)
-            if hit is not None:
-                self._batch_plan_cache.move_to_end(cache_key)
-                return hit
-        kk = int(k)
-        per_seg = self._plan(list(queries.values()), kk, stats)
-        if per_seg is None:
-            return spark.createDataFrame(
-                [], ("qidx int" if _raw else "qid string")
-                    + ", docid long, score float, rn int")
-        from pyspark.sql.window import Window
-
-        win = Window.partitionBy("qidx").orderBy(
-            F.desc("score"), F.asc("docid"))
-        topk = (per_seg.select(
-            "qidx", "docid", "score", F.row_number().over(win).alias("rn"))
-            .where(F.col("rn") <= kk))
-        if _raw:
-            out = topk
-        else:
-            qmap_df = spark.createDataFrame(pd.DataFrame(
-                {"qidx": pd.array(range(len(qid_list)), dtype="int32"),
-                 "qid": qid_list}))
-            out = (topk.join(F.broadcast(qmap_df), "qidx")
-                   .select("qid", "docid", "score", "rn"))
-        self._plan_cache_put(cache_key, out)
-        return out
-
     def search_many(self, queries: dict[str, Query], k: int = 10,
                     stats: dict[str, int] | None = None
                     ) -> dict[str, list[TopDoc]]:
-        rows = self.search_many_df(queries, k, _raw=True,
-                                   stats=stats).collect()
-        qid_list = list(queries)
-        out: dict[str, list[TopDoc]] = {qid: [] for qid in queries}
-        for r in sorted(rows, key=lambda r: (r["qidx"], r["rn"])):
-            out[qid_list[r["qidx"]]].append(TopDoc(r["docid"], r["score"]))
-        return out
+        """Evaluate MANY queries in ONE job over the compressed index —
+        the throughput path.
+
+        The same plan and leaf as :meth:`search`: per live segment ONE
+        ``mapInPandas`` task reads that segment's block rows for the
+        batch's whole term set from its own files, decodes every
+        (term, segment) once and evaluates every query's compiled tree;
+        no row crosses an exchange. The driver then merges the <=
+        segments * |queries| * k leaf rows (TopDocs.merge,
+        :func:`_merge_topk`). ``stats``: see :meth:`_compile`."""
+        return _hits_by_qid(list(queries), _merge_topk(
+            *self._leaf_arrays(list(queries.values()), k, stats), k))
+
+    def search_many_df(self, queries: dict[str, Query],
+                       k: int = 10) -> DataFrame:
+        """:meth:`search_many`'s hits as a local DataFrame (qid, docid,
+        score, rn), rn the 1-based rank. Only perfbench's traced batch
+        path reads it; it goes once that path traces ``search_many``."""
+        qids = list(queries)
+        qidx, d, s = _merge_topk(
+            *self._leaf_arrays(list(queries.values()), k), k)
+        rn = np.arange(qidx.size) - np.searchsorted(qidx, qidx) + 1
+        return self.index.spark.createDataFrame(pd.DataFrame({
+            "qid": [qids[i] for i in qidx.tolist()], "docid": d,
+            "score": s, "rn": rn.astype(np.int32)}),
+            "qid string, docid long, score float, rn int")
 
 
 # ---------------------------------------------------------------------------
@@ -1125,6 +1098,29 @@ def _topk_arrays(d: np.ndarray, s: np.ndarray, k: int):
         return d[sel], s[sel]
     order = np.lexsort((d, -s.astype(np.float64)))[:k]
     return d[order], s[order]
+
+
+def _merge_topk(qidx: np.ndarray, docid: np.ndarray, score: np.ndarray,
+                k: int | None) -> tuple:
+    """TopDocs.merge (TopDocs.java:188-230) of per-leaf top-k rows:
+    one lexsort by (qidx, score desc, docid asc), then each qidx group
+    cut at rank k (``k=None`` keeps every row). Returns the merged
+    (qidx, docid, score), grouped by qidx in rank order."""
+    order = np.lexsort((docid, -score.astype(np.float64), qidx))
+    qidx, docid, score = qidx[order], docid[order], score[order]
+    if k is not None:
+        keep = np.arange(qidx.size) - np.searchsorted(qidx, qidx) < k
+        qidx, docid, score = qidx[keep], docid[keep], score[keep]
+    return qidx, docid, score
+
+
+def _hits_by_qid(qids: list[str], merged: tuple) -> dict[str, list[TopDoc]]:
+    """{qid: [TopDoc]} of :func:`_merge_topk`'s output for a batch."""
+    out: dict[str, list[TopDoc]] = {qid: [] for qid in qids}
+    qidx, d, s = merged
+    for qi, di, si in zip(qidx.tolist(), d.tolist(), s.tolist()):
+        out[qids[qi]].append(TopDoc(di, si))
+    return out
 
 
 def _eval_node(node, get_tb, caches, get_norms=None):
@@ -1429,14 +1425,16 @@ _LEAF_SCHEMA = "qidx int, docid long, score float"
 
 
 def _segment_topk(trees: list, get_tb, caches, k: int | None,
-                  deleted: np.ndarray | None, get_norms=None) -> list:
+                  deleted: np.ndarray | None, get_norms=None) -> tuple:
     """Per-segment evaluate → tombstone mask → top-k of every compiled
-    tree: [(qidx, docids, scores)] for the trees with hits. Deleted
+    tree: the (qidx, docid, score) arrays of their hits. Deleted
     docs are masked BEFORE the cut — masking after the per-segment
     truncation would drop docs that should be promoted — and the
     survivors are cut to k by (score desc, docid asc); ``k=None`` keeps
     every hit."""
-    out = []
+    qs = [np.empty(0, np.int32)]
+    ds = [np.empty(0, np.int64)]
+    ss = [np.empty(0, np.float32)]
     for qi, tree in enumerate(trees):
         if tree[0] == "none":
             continue
@@ -1445,9 +1443,10 @@ def _segment_topk(trees: list, get_tb, caches, k: int | None,
             live = ~np.isin(d, deleted)
             d, sc = d[live], sc[live]
         d, sc = _topk_arrays(d, sc, k)
-        if d.size:
-            out.append((qi, d, sc))
-    return out
+        qs.append(np.full(d.size, qi, np.int32))
+        ds.append(d)
+        ss.append(sc)
+    return np.concatenate(qs), np.concatenate(ds), np.concatenate(ss)
 
 
 def segment_eval_topk(pdf: pd.DataFrame, trees: list, caches,
@@ -1467,16 +1466,7 @@ def segment_eval_topk(pdf: pd.DataFrame, trees: list, caches,
     if norm_fields:
         get_norms = _norm_maps_from_rows(pdf, norm_fields).get
         pdf = pdf[pdf["kind"] == 0]
-    hits = _segment_topk(trees, _SegGroups(pdf, caches).get, caches, k,
-                         deleted, get_norms)
-    if not hits:
-        return pd.DataFrame({
-            "qidx": pd.Series([], dtype="int32"),
-            "docid": pd.Series([], dtype="int64"),
-            "score": pd.Series([], dtype="float32")})
-    return pd.DataFrame({
-        "qidx": np.concatenate([np.full(d.size, qi, dtype=np.int32)
-                                for qi, d, _s in hits]),
-        "docid": np.concatenate([d for _qi, d, _s in hits]),
-        "score": pd.Series(np.concatenate([sc for _qi, _d, sc in hits]),
-                           dtype="float32")})
+    qidx, d, s = _segment_topk(trees, _SegGroups(pdf, caches).get, caches,
+                               k, deleted, get_norms)
+    return pd.DataFrame({"qidx": qidx, "docid": d,
+                         "score": s.astype(np.float32, copy=False)})

@@ -454,9 +454,13 @@ def compact_segments(idx: SegmentIndex, min_fill: float = 0.5,
     segments are physically dropped (deletes applied at merge,
     FreqProxTermsWriter applyDeletes role) and their tombstones
     retired; their docids are never handed out again (``next_docid``).
-    The rewrite stages and swaps in, as open searchers may still read
-    the segments it replaces, and ends in the full form of
-    :func:`..index.segments._derive_tables`. Returns the segment count
+    Merged docs take segment ids of the segments they replace, so the
+    ``blooms/`` table (per-segment filters keyed by id) is dropped
+    before the rewrite: a segment without a filter is never excluded,
+    and ``build_segment_blooms`` rebuilds it. The rewrite ends in the
+    full form of :func:`..index.segments._derive_tables`. Searchers
+    opened before a compaction must be reopened after it: their listed
+    segment files may be gone or rewritten. Returns the segment count
     after compaction."""
     m = idx.manifest()
     dps = int(m["docs_per_segment"])
@@ -518,6 +522,7 @@ def compact_segments(idx: SegmentIndex, min_fill: float = 0.5,
             F.element_at(seg_ids, (F.col("_rk") / dps).cast("int") + 1))
         .drop("_rk")
     )
+    shutil.rmtree(os.path.join(idx.root, "blooms"), ignore_errors=True)
     tmp = os.path.join(idx.root, "blocks.compact.tmp")
     shutil.rmtree(tmp, ignore_errors=True)  # a crashed run's staging
     _write_analyzed(w_ids, tmp, tmp, stop, int(m["max_token_length"]))

@@ -147,3 +147,28 @@ def test_batch_marker_only_prunes_when_all_queries_agree(built):
     exp_h = oracle.search(TermQuery(hot), 30)
     assert [(d.docid, np.float32(d.score)) for d in got["h"]] == [
         (d.docid, np.float32(d.score)) for d in exp_h]
+
+
+def test_compaction_drops_stale_blooms(spark, tmp_path):
+    """compact_segments reuses segment ids: a filter built before it
+    would exclude a reused id that now holds the term. It drops
+    blooms/, so search keeps every hit, as search_local does."""
+    from lucene_solr_spark.streaming import (IncrementalIndexer,
+                                             compact_segments)
+
+    pdf = (corpus_pandas(120)
+           .sort_values(["repo", "path", "commit"]).reset_index(drop=True))
+    pdf.loc[108:, "content"] = pdf.loc[108:, "content"] + " zzmarkerzz"
+    root = str(tmp_path / "idx")
+    indexer = IncrementalIndexer(root, stop_words=ENGLISH_STOP_WORDS,
+                                 docs_per_segment=48)
+    indexer.process_batch(spark.createDataFrame(pdf.iloc[:60]), 0)
+    indexer.process_batch(spark.createDataFrame(pdf.iloc[60:]), 1)
+    build_segment_blooms(SegmentIndex(root, spark))
+    compact_segments(SegmentIndex(root, spark), min_fill=1.0)
+    searcher = SegmentSearcher(SegmentIndex(root, spark), cache=True)
+    q = TermQuery("zzmarkerzz")
+    got = [(d.docid, np.float32(d.score)) for d in searcher.search(q, 20)]
+    assert len(got) == 12
+    assert got == [(d.docid, np.float32(d.score))
+                   for d in searcher.search_local(q, 20)]

@@ -103,10 +103,10 @@ def test_k_sweep_identical_to_oracle(built):
 
 
 def test_single_query_plan_has_no_window(built):
-    """A single query merges with ONE orderBy.limit(k), not the batch
-    path's per-query window (a batch of one through the window merge
-    measured 10-14% slower per query); k=None returns every hit. Both
-    paths run the leaf as MapInPandas with no Exchange below it and no
+    """search_df merges with ONE orderBy.limit(k); k=None returns every
+    hit. The batch leaf plan that search/search_many collect has no
+    Window and no Exchange anywhere (the merge runs in the driver).
+    Both run the leaf as MapInPandas with no Exchange below it and no
     Spark-side parquet scan: each task reads its own segment's files."""
     import re
 
@@ -131,9 +131,9 @@ def test_single_query_plan_has_no_window(built):
         return sub
 
     single = plan(searcher.search_df(q, 10))
-    batch = plan(searcher.search_many_df({"q": q}, 10))
+    batch = plan(searcher._plan([q], 10))
     assert "Window" not in single
-    assert "Window" in batch
+    assert "Window" not in batch and "Exchange" not in batch, batch
     for text in (single, batch):
         assert "MapInPandas" in text, text
         under = below(text, "MapInPandas")
@@ -141,6 +141,78 @@ def test_single_query_plan_has_no_window(built):
         assert "FileScan" not in text, text
     every = searcher.search_df(q, None).collect()
     assert len(every) == len(oracle.search(q, N_DOCS))
+
+
+def test_search_many_is_one_job_without_shuffle(built, spark):
+    """A batch over a multi-segment index runs ONE Spark job of one
+    stage — the leaf rows come back as Arrow and merge in the driver,
+    so no stage writes shuffle bytes (read from the status store)."""
+    _, searcher, oracle, _ = built
+    assert len(searcher.seg_files) > 1
+    terms = _terms_by_df(oracle, 6)
+    batch = {f"q{i}": BooleanQuery.of(should=[TermQuery(t),
+                                              TermQuery(terms[-1])])
+             for i, t in enumerate(terms)}
+    sc = spark.sparkContext
+    sc.setJobGroup("search_many_one_job", "search_many")
+    try:
+        got = searcher.search_many(batch, 10)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup("search_many_one_job")
+    assert len(jobs) == 1, jobs
+    stages = sc.statusTracker().getJobInfo(jobs[0]).stageIds
+    assert len(stages) == 1, stages
+    store = sc._jsc.sc().statusStore()
+    assert store.lastStageAttempt(stages[0]).shuffleWriteBytes() == 0
+    for qid, q in batch.items():
+        assert [(d.docid, np.float32(d.score)) for d in got[qid]] == [
+            (d.docid, np.float32(d.score)) for d in oracle.search(q, 10)]
+
+
+def test_tie_group_across_segments_and_shards(spark, tmp_path_factory):
+    """Identical docs straddle segment boundaries (and the shard
+    boundary of a 2-way split), so the tie group at rank k spans
+    segments: search, search_many, search_local and a 2-shard
+    ShardedSearcher all keep TopDocs.merge's docid-asc tie order."""
+    from lucene_solr_spark.index.segments import split_index
+    from lucene_solr_spark.search.sharded import ShardedSearcher
+
+    pdf = (corpus_pandas(96).sort_values(["repo", "path", "commit"])
+           .reset_index(drop=True))
+    for lo, hi in ((20, 28), (44, 52)):  # across docids 24 and 48
+        pdf.loc[lo:hi - 1, "content"] = "zztiezz twin words"
+    pdf.loc[60:61, "content"] = "zztiezz zztiezz twin"
+    root = str(tmp_path_factory.mktemp("tie_idx"))
+    build_segment_index(spark.createDataFrame(pdf), root,
+                        stop_words=ENGLISH_STOP_WORDS, docs_per_segment=24)
+    searcher = SegmentSearcher(SegmentIndex(root, spark), cache=True)
+    parts = [str(tmp_path_factory.mktemp(f"tie_part{i}")) for i in range(2)]
+    split_index(root, parts, spark)
+    sharded = ShardedSearcher(parts, spark, stats="exact", cache=True)
+    oracle = OracleIndex(
+        analyzer=StandardAnalyzer(stop_words=ENGLISH_STOP_WORDS))
+    oracle.add_all(pdf["content"])
+    queries = {"tie": TermQuery("zztiezz"),
+               "or": BooleanQuery.of(should=[TermQuery("zztiezz"),
+                                             TermQuery("twin")])}
+
+    def hits(r):
+        return [(d.docid, np.float32(d.score)) for d in r]
+
+    for k in (3, 8, 12, 16):
+        many = searcher.search_many(queries, k)
+        smany = sharded.search_many(queries, k)
+        for qid, q in queries.items():
+            exp = hits(oracle.search(q, k))
+            assert len({sc for _d, sc in exp}) < len(exp), (qid, k)
+            assert hits(searcher.search(q, k)) == exp, (qid, k)
+            assert hits(many[qid]) == exp, (qid, k)
+            assert hits(searcher.search_local(q, k)) == exp, (qid, k)
+            assert hits(sharded.search(q, k)) == exp, (qid, k)
+            assert hits(smany[qid]) == exp, (qid, k)
 
 
 def test_search_many_identical_to_solo(built):

@@ -202,3 +202,40 @@ def test_pk_split_source_untouched(spark, tmp_path_factory):
     import pytest as _pytest
     with _pytest.raises(ValueError):
         pk_split_index(src, out_pass, out_fail, spark, F.col("lang") == "py")
+
+
+def test_split_after_compaction_keeps_tombstones(spark, tmp_path):
+    """Compaction leaves docid holes and interleaves merged segments'
+    docid ranges, so tombstones route to parts by their doc's segment:
+    a doc deleted after a compaction stays deleted in its part."""
+    from pyspark.sql import functions as F
+
+    from lucene_solr_spark.streaming import (IncrementalIndexer,
+                                             compact_segments)
+
+    pk = ["repo", "path", "commit"]
+    pdf = corpus_pandas(96).sort_values(pk).reset_index(drop=True)
+    root = str(tmp_path / "src")
+    indexer = IncrementalIndexer(root, stop_words=ENGLISH_STOP_WORDS,
+                                 docs_per_segment=24)
+    indexer.process_batch(spark.createDataFrame(pdf.iloc[:48]), 0)
+    indexer.process_batch(spark.createDataFrame(pdf.iloc[48:]), 1)
+    append_deletes(root, [3, 10, 60])
+    compact_segments(SegmentIndex(root, spark), min_fill=0.5)
+    append_deletes(root, [95])
+
+    def live_keys(idx):
+        dels = set(idx.deleted_docids().tolist())
+        return {tuple(r[c] for c in pk) for r in idx.docmap().collect()
+                if r["docid"] not in dels}
+
+    src = SegmentIndex(root, spark)
+    gone = tuple(src.docmap().where(F.col("docid") == 95)
+                 .select(*pk).first())
+    parts = [str(tmp_path / f"p{i}") for i in range(2)]
+    split_index(root, parts, spark)
+    part_live = set()
+    for p in parts:
+        part_live |= live_keys(SegmentIndex(p, spark))
+    assert gone not in part_live
+    assert part_live == live_keys(src)
