@@ -34,6 +34,11 @@ become the partition spec, manifest.json becomes snapshot metadata):
   stats/     single row (doc_count, sum_ttf)
   manifest.json  build config + invariants
 
+Inversion is one kernel for both formats: :func:`invert_tokens`
+(StopFilter, factorize, one stable sort → posting runs) feeds this
+builder's posting rows and the compressed builder's blocks
+(segments.py), as Lucene's indexing chain inverts once for every codec.
+
 Norm bytes are denormalized into posting rows: BM25 scoring needs
 (tf, norm) per hit (BM25Similarity.java:223-226), and colocating them
 removes a docs-join from every query — 1 logical byte per row.
@@ -128,58 +133,55 @@ def assign_docids(corpus: DataFrame, num_partitions: int | None = None) -> DataF
     return result
 
 
-def _invert_field(docids, toks_col, null_mask, stop_arr):
-    """Vectorized inversion of ONE analyzed field over a doc batch:
-    numpy StopFilter (position = raw token index → gaps preserved, dl
-    counts survivors), factorize, ONE stable sort → posting runs.
-    Returns (dls, posting frame columns) — posting cols None when the
-    field has no tokens in the batch. Docs where the field is null get
-    dl −1 (field absent: no norm, excluded from field stats —
-    FieldInfos semantics, index/FieldInfo.java:31-71)."""
-    ndocs = len(docids)
+def invert_tokens(toks_col, stop_arr):
+    """The one inversion kernel of both index formats (Lucene inverts
+    once for every codec: DefaultIndexingChain → FreqProxTermsWriter):
+    ONE field's gap-shaped token arrays over a doc batch → posting runs.
+
+    numpy StopFilter (position = raw token index, so stopword gaps are
+    preserved and dl counts survivors only — FilteringTokenFilter.java:
+    47-57) over ``pd.factorize(sort=True)``'s vocabulary, then ONE stable
+    sort by term code: tokens arrive in (doc, position) order, so it
+    yields the (term, doc, position) stream.
+
+    Returns ``(dls, inv)``: dls = surviving tokens per doc (int64); inv
+    is None when no token survives, else ``(uniq, codes, didx, pos,
+    starts)`` — the sorted stream's term codes into ``uniq``, doc
+    indexes and positions (int32), and the first token of each (term,
+    doc) posting run. v1 (:func:`_make_segment_fn`) and v2
+    (``segments._invert_segment_field``) encode the runs their own way."""
+    ndocs = len(toks_col)
     raw_lens = np.fromiter((len(t) for t in toks_col), dtype=np.int64,
                            count=ndocs)
     total_raw = int(raw_lens.sum())
     if not total_raw:
-        dls = np.zeros(ndocs, dtype=np.int64)
-        dls[null_mask] = -1
-        return dls, None
+        return np.zeros(ndocs, dtype=np.int64), None
     flat_raw = np.concatenate([np.asarray(t, dtype=object) for t in toks_col])
-    doc_of_tok = np.repeat(np.arange(ndocs), raw_lens)
+    doc_of_tok = np.repeat(np.arange(ndocs, dtype=np.int32), raw_lens)
     starts = np.zeros(ndocs, dtype=np.int64)
     np.cumsum(raw_lens[:-1], out=starts[1:])
-    pos_raw = np.arange(total_raw, dtype=np.int64) - starts[doc_of_tok]
-    codes_all, uniq = pd.factorize(flat_raw, sort=False)
-    codes_all = np.asarray(codes_all)
+    pos_raw = (np.arange(total_raw, dtype=np.int64)
+               - starts[doc_of_tok]).astype(np.int32)
+    codes_all, uniq = pd.factorize(flat_raw, sort=True)
+    codes_all = np.asarray(codes_all).astype(np.int32, copy=False)
     uniq = np.asarray(uniq, dtype=object)
     if stop_arr is not None and len(uniq):
         keep = ~np.isin(uniq, stop_arr)[codes_all]
-        codes = codes_all[keep]
-        tok_didx = doc_of_tok[keep]
-        flat_pos = pos_raw[keep]
+        codes, tok_didx, flat_pos = (codes_all[keep], doc_of_tok[keep],
+                                     pos_raw[keep])
     else:
         codes, tok_didx, flat_pos = codes_all, doc_of_tok, pos_raw
     dls = np.bincount(tok_didx, minlength=ndocs).astype(np.int64)
-    dls[null_mask] = -1
-    total = int(codes.size)
-    if total == 0:
+    if not codes.size:
         return dls, None
-
     order = np.argsort(codes, kind="stable")
-    codes_s, didx_s, pos_s = codes[order], tok_didx[order], flat_pos[order]
-    new_post = np.empty(total, dtype=bool)
+    codes_s = codes[order]
+    didx_s = tok_didx[order]
+    new_post = np.empty(codes_s.size, dtype=bool)
     new_post[0] = True
     new_post[1:] = (codes_s[1:] != codes_s[:-1]) | (didx_s[1:] != didx_s[:-1])
-    post_starts = np.flatnonzero(new_post)
-    tf = np.append(post_starts[1:], total) - post_starts
-    post_didx = didx_s[post_starts]
-    return dls, {
-        "term": uniq[codes_s[post_starts]],
-        "docid": docids[post_didx],
-        "tf": tf,
-        "positions": np.split(pos_s, post_starts[1:]),
-        "post_didx": post_didx,
-    }
+    return dls, (uniq, codes_s, didx_s, flat_pos[order],
+                 np.flatnonzero(new_post))
 
 
 def _make_segment_fn(stop_words: frozenset[str] = frozenset(),
@@ -195,7 +197,9 @@ def _make_segment_fn(stop_words: frozenset[str] = frozenset(),
     :func:`..analysis.jvm.analyzed_deferred` (tokenization is
     JVM-side; the rare rows it defers are finished here by
     :func:`..analysis.jvm.finish_python_rows`); the rest of this worker
-    is pure vectorized numpy per field (see :func:`_invert_field`)."""
+    is pure vectorized numpy per field: the shared inverter
+    (:func:`invert_tokens`) plus v1's own null rule (dl −1) and
+    per-posting position lists."""
     stop_arr = np.asarray(sorted(stop_words), dtype=object) if stop_words else None
     passes = [(f"tokens_{f}", f"_lss_py_{f}", f == sha_field) for f in fields]
 
@@ -214,7 +218,10 @@ def _make_segment_fn(stop_words: frozenset[str] = frozenset(),
                 null_mask = (pdf[nullcol].to_numpy(dtype=bool)
                              if nullcol in pdf.columns
                              else np.zeros(ndocs, dtype=bool))
-                dls, post = _invert_field(docids, toks_col, null_mask, stop_arr)
+                dls, inv = invert_tokens(toks_col, stop_arr)
+                # field absent (null): dl −1 — no norm, excluded from
+                # field stats (FieldInfos semantics, FieldInfo.java:31-71)
+                dls[null_mask] = -1
                 present = dls >= 0
                 norms_doc = int_to_byte4_np(np.maximum(dls, 0)).astype(np.int64)
                 summary = pd.DataFrame({
@@ -227,14 +234,16 @@ def _make_segment_fn(stop_words: frozenset[str] = frozenset(),
                     "kind": 1,
                 })
                 frames.append(summary)
-                if post is not None:
+                if inv is not None:
+                    uniq, codes, didx, pos, starts = inv
+                    post_didx = didx[starts]
                     frames.append(pd.DataFrame({
                         "field": f,
-                        "term": post["term"],
-                        "docid": post["docid"],
-                        "tf": post["tf"],
-                        "positions": post["positions"],
-                        "norm": norms_doc[post["post_didx"]],
+                        "term": uniq[codes[starts]],
+                        "docid": docids[post_didx],
+                        "tf": np.diff(starts, append=codes.size),
+                        "positions": np.split(pos, starts[1:]),
+                        "norm": norms_doc[post_didx],
                         "kind": 0,
                     }))
             yield pd.concat(frames, ignore_index=True)
@@ -304,7 +313,7 @@ def _analyzer_tokens_udf(analyzer):
     """Custom-analyzer front end for the build path: ``analyze(text)``
     → a gap-shaped ``array<string>`` where array index = Lucene
     position and removed tokens (stop gaps) leave ``""`` holes — the
-    exact contract :func:`_invert_field` consumes (position = raw
+    exact contract :func:`invert_tokens` consumes (position = raw
     index, ``""`` stop-filtered). Analyzers that STACK tokens at one
     position (synonym/WDGF graphs) can't be flattened to this layout
     and are rejected."""

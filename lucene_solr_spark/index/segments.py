@@ -20,9 +20,10 @@ Build plan (content crosses one exchange, the docid range exchange):
            layout-determined.
   stage 1  blocks/   _write_segments, the one segment writer (Lucene's
            per-DWPT flush): one task per segment reads its slice of
-           the spill, finishes the rare Python-analyzer rows, encodes
-           128-doc posting blocks (delta+varbyte/FOR, codec.py) and
-           writes its one file. Each task appends its checkpoint row
+           the spill, finishes the rare Python-analyzer rows, inverts
+           each field with the inverter v1 shares (builder.invert_tokens),
+           encodes 128-doc posting blocks (delta+varbyte/FOR, codec.py)
+           and writes its one file. Each task appends its checkpoint row
            after its rename; a killed build resumes by skipping
            checkpointed segments (the others' dirs are removed first).
   stage 2  docs/ dict/ stats/ + the manifest's collection stats —
@@ -64,7 +65,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..analysis import ENGLISH_STOP_WORDS
 from ..analysis.jvm import PY_CONTENT_COL, analyzed_deferred, finish_python_rows
 from . import codec
-from .builder import PK, assign_docids
+from .builder import PK, assign_docids, invert_tokens
 
 BLOCKS_SCHEMA = (
     "segment int, kind int, term string, block_ord int, n int, "
@@ -94,65 +95,23 @@ FIELD_SEP = "\x1f"
 
 def _invert_segment_field(toks_col, docids_doc: np.ndarray,
                           stop_arr, prefix: str):
-    """Vectorized inversion of ONE field's token arrays over one
-    segment: numpy StopFilter (position = raw token index → gaps
-    preserved), factorize, ONE stable sort → posting runs → encoded
-    128-blocks. Returns ``(dls, norms_doc, blocks_pdf_or_None)``; block
-    terms carry ``prefix`` ("" for the content field)."""
+    """ONE field's token arrays over one segment → encoded 128-blocks:
+    the shared inverter (builder.invert_tokens) gives the posting runs,
+    this encodes them. Returns ``(dls, norms_doc, blocks_pdf_or_None)``;
+    block terms carry ``prefix`` ("" for the content field)."""
     from ..util.smallfloat import int_to_byte4_np
 
-    ndocs = len(docids_doc)
-    raw_lens = np.fromiter((len(t) for t in toks_col), dtype=np.int64,
-                           count=ndocs)
-    total_raw = int(raw_lens.sum())
-
-    if total_raw:
-        flat_raw = np.concatenate(
-            [np.asarray(t, dtype=object) for t in toks_col])
-        doc_of_tok = np.repeat(np.arange(ndocs, dtype=np.int32), raw_lens)
-        starts = np.zeros(ndocs, dtype=np.int64)
-        np.cumsum(raw_lens[:-1], out=starts[1:])
-        pos_raw = (np.arange(total_raw, dtype=np.int64)
-                   - starts[doc_of_tok]).astype(np.int32)
-        codes_all, uniq = pd.factorize(flat_raw, sort=True)
-        codes_all = np.asarray(codes_all).astype(np.int32, copy=False)
-        uniq = np.asarray(uniq, dtype=object)
-        if stop_arr is not None and len(uniq):
-            keep = ~np.isin(uniq, stop_arr)[codes_all]
-            codes = codes_all[keep]
-            tok_didx = doc_of_tok[keep]
-            flat_pos = pos_raw[keep]
-        else:
-            codes, tok_didx, flat_pos = codes_all, doc_of_tok, pos_raw
-        dls = np.bincount(tok_didx, minlength=ndocs).astype(np.int64)
-    else:
-        dls = np.zeros(ndocs, dtype=np.int64)
+    dls, inv = invert_tokens(toks_col, stop_arr)
     norms_doc = int_to_byte4_np(dls).astype(np.int16)
-
-    total = int(dls.sum())
-    if total == 0:
+    if inv is None:
         return dls, norms_doc, None
-
-    # --- invert: ONE stable sort by term code ----------------------
-    # tokens are already in (doc, position) order → stable sort by
-    # term code yields the (term, docid, position) stream
-    order = np.argsort(codes, kind="stable")
-    codes_s = codes[order]
-    didx_s = tok_didx[order]
-    pos_s = flat_pos[order]
-    doc_s = docids_doc[didx_s]
-
-    # posting boundaries: (term, doc) runs in token space
-    new_post = np.empty(total, dtype=bool)
-    new_post[0] = True
-    new_post[1:] = (codes_s[1:] != codes_s[:-1]) | (didx_s[1:] != didx_s[:-1])
-    post_starts = np.flatnonzero(new_post)
+    uniq, codes_s, didx_s, pos_s, post_starts = inv
     nposts = len(post_starts)
-    post_ends = np.append(post_starts[1:], total)
-    tf = post_ends - post_starts
+    tf = np.diff(post_starts, append=codes_s.size)
     post_code = codes_s[post_starts]
-    post_doc = doc_s[post_starts]
-    post_norm = norms_doc[didx_s[post_starts]]
+    post_didx = didx_s[post_starts]
+    post_doc = docids_doc[post_didx]
+    post_norm = norms_doc[post_didx]
 
     # position deltas (first of each posting absolute)
     pdelta = pos_s.copy()
@@ -233,16 +192,13 @@ def _segment_builder(stop_words: frozenset[str] = frozenset(),
 
     Input rows carry ``tokens``/``content_sha256`` from the analyzed
     spill (:func:`_analyzed_segment`) — tokenization happened JVM-side
-    before the spill, so this worker is pure
-    vectorized numpy: the StopFilter is one isin mask over the
-    factorized vocabulary (position = raw token index, so stopword
-    gaps are preserved and BM25 dl counts survivors only —
-    FilteringTokenFilter.java:47-57), then ONE stable sort produces
-    the (term, docid, position) stream; posting/block boundaries, tfs,
-    docid/position deltas and the varbyte streams are all whole-segment
-    numpy passes (grouped_varbyte slices one encoded stream into
-    per-block buffers). Per-block Python touches only full
-    128-blocks (FOR bit-packing, a small minority).
+    before the spill, so this worker is pure vectorized numpy: the
+    shared inverter (builder.invert_tokens) gives the (term, docid,
+    position) stream, then block boundaries, tfs, docid/position deltas
+    and the varbyte streams are whole-segment numpy passes
+    (grouped_varbyte slices one encoded stream into per-block buffers).
+    Per-block Python touches only full 128-blocks (FOR bit-packing, a
+    small minority).
     """
     stop_arr = np.asarray(sorted(stop_words), dtype=object) if stop_words else None
 
@@ -281,7 +237,7 @@ def _segment_builder(stop_words: frozenset[str] = frozenset(),
             present = ~null_mask
             # kind=2: per-(doc, field) dl/norm — field absent (NULL) docs
             # get no row, mirroring v1's dl=-1 exclusion
-            # (builder.py _invert_field; FieldInfos semantics)
+            # (builder.py _make_segment_fn; FieldInfos semantics)
             frames.append(pd.DataFrame({
                 "kind": 2, "term": f, "block_ord": 0,
                 "n": fdls[present],
@@ -799,12 +755,12 @@ def add_indexes(dst_root: str, src_root: str,
     token it merged, so the re-run leaves exactly what one fold leaves
     (the production seam is one Iceberg append commit).
 
-    Reopen contract: a searcher lists its segment files when built, so
-    one opened BEFORE the fold keeps the pre-fold view (Lucene's
-    stale-reader semantics); open a NEW one to see the fold. Only
-    ``cache=True``'s dictionary is persisted: in the same session run
-    ``spark.catalog.clearCache()`` first, or Spark's cache (keyed on
-    the parquet plan) hands the new searcher the pre-fold dict."""
+    Reopen contract: open a NEW searcher to see the fold. A searcher
+    lists its segment files when built; a ``cache=True`` one also loads
+    its term → df map then, so it keeps the pre-fold view (Lucene's
+    stale-reader semantics). A ``cache=False`` searcher reads ``dict/``
+    per query, and the fold replaces ``dict/``: its next query that the
+    plan cache does not serve fails on a removed dict file."""
     dst = SegmentIndex(dst_root, spark)
     src_idx = SegmentIndex(src_root, spark)
     man_d, man_s = dst.manifest(), src_idx.manifest()

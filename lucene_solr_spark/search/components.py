@@ -35,11 +35,12 @@ from pyspark.sql.window import Window
 
 from ..analysis.tokenizer import StandardAnalyzer
 from .executor import IndexSearcher
-from .multiterm import osa_distance
+from .multiterm import dict_prefilter, osa_distance
 from .queries import (
     BooleanClause,
     BooleanQuery,
     DisjunctionMaxQuery,
+    FuzzyQuery,
     PhraseQuery,
     Query,
     TermQuery,
@@ -426,9 +427,8 @@ def spellcheck(searcher: IndexSearcher, word: str, n: int = 5,
         df_floor = max(df_floor,
                        int(threshold_frequency * searcher.doc_count) - 1)
 
-    cond = (F.levenshtein(F.col("term"), F.lit(word)) <= 2 * max_edits)
-    if min_prefix > 0:
-        cond = cond & F.col("term").startswith(word[:min_prefix])
+    cond = dict_prefilter(FuzzyQuery(word, max_edits, min_prefix),
+                          F.col("term"))
     cands = _field_dict(searcher).where(cond).select("term", "df").collect()
     out = []
     for r in cands:

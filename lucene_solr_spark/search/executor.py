@@ -40,7 +40,7 @@ from pyspark.sql.window import Window
 
 from ..index.builder import IndexTables
 from . import bm25
-from .multiterm import expand_terms, wildcard_to_regex
+from .multiterm import dict_prefilter, expand_terms
 from .queries import (
     BlendedTermLeaf,
     BlendedTermQuery,
@@ -57,15 +57,10 @@ from .queries import (
     MultiPhraseQuery,
     MultiTermQuery,
     PhraseQuery,
-    PrefixQuery,
     Query,
-    RegexpQuery,
     SynonymQuery,
-    TermInSetQuery,
     TermQuery,
-    TermRangeQuery,
     TopDoc,
-    WildcardQuery,
     build_common_terms,
 )
 
@@ -78,69 +73,26 @@ def term_bucket(term: str, n_buckets: int) -> int:
 def _phrase_verify_fn(offs, slop, nterms, w, scorer):
     """mapInPandas verifier shared by PhraseQuery and MultiPhraseQuery:
     input rows carry per-slot position arrays pos0..pos{n-1} + norm.
-
-    slop=0 — ExactPhraseMatcher (ExactPhraseMatcher.java:93-126):
-    freq = #alignments, verified VECTORIZED across the whole Arrow
-    batch (positions flattened with per-row strides, one intersect1d
-    per slot — no per-row Python).
-
-    slop>0 — SloppyPhraseMatcher (SloppyPhraseMatcher.java:119-152):
-    float32 freq = Σ 1/(1+matchLength) over the greedy pq traversal
-    (search/sloppy.py), sequential per doc, conjunction survivors only.
-    """
+    The frequency is the shared phrase kernel (sloppy._phrase_freqs,
+    also the v2 evaluator's): exact phrases vectorized across the whole
+    Arrow batch, sloppy ones sequential per conjunction survivor."""
     offs = tuple(offs)
-    max_off = max(offs)
 
     def verify(batches):
-        from .sloppy import sloppy_freq
+        from .sloppy import _phrase_freqs
 
         for pdf in batches:
-            nrows = len(pdf)
-            if nrows == 0:
+            if len(pdf) == 0:
                 continue
-            docids = pdf["docid"].to_numpy(dtype=np.int64)
-            norms = pdf["norm"].to_numpy(dtype=np.int64)
-            cols = [pdf[f"pos{i}"].to_numpy() for i in range(nterms)]
-            if slop == 0:
-                # flatten with a per-row stride so ONE intersect1d
-                # per slot verifies the whole batch
-                flats, lens = [], []
-                maxpos = 0
-                for i in range(nterms):
-                    ln = np.fromiter((len(a) for a in cols[i]), dtype=np.int64,
-                                     count=nrows)
-                    fl = np.concatenate([np.asarray(a, dtype=np.int64)
-                                         for a in cols[i]]) if ln.sum() else \
-                        np.empty(0, dtype=np.int64)
-                    if fl.size:
-                        maxpos = max(maxpos, int(fl.max()))
-                    flats.append(fl)
-                    lens.append(ln)
-                stride = maxpos + max_off + 2
-                cand = None
-                for i in range(nterms):
-                    base = np.repeat(np.arange(nrows, dtype=np.int64),
-                                     lens[i]) * stride
-                    adj = flats[i] - offs[i] + max_off + base
-                    cand = adj if cand is None else np.intersect1d(
-                        cand, adj, assume_unique=True)
-                    if cand.size == 0:
-                        break
-                if cand is None or cand.size == 0:
-                    yield pd.DataFrame({"docid": pd.Series([], dtype="int64"),
-                                        "score": pd.Series([], dtype="float32")})
-                    continue
-                freqs = np.bincount(cand // stride, minlength=nrows).astype(np.float64)
-            else:
-                freqs = np.empty(nrows, dtype=np.float64)
-                for r in range(nrows):
-                    freqs[r] = sloppy_freq([cols[i][r] for i in range(nterms)],
-                                           offs, slop)
+            freqs = _phrase_freqs(
+                [list(pdf[f"pos{i}"]) for i in range(nterms)], offs, slop)
             hit = freqs > 0
             if not hit.any():
                 yield pd.DataFrame({"docid": pd.Series([], dtype="int64"),
                                     "score": pd.Series([], dtype="float32")})
                 continue
+            docids = pdf["docid"].to_numpy(dtype=np.int64)
+            norms = pdf["norm"].to_numpy(dtype=np.int64)
             s = scorer.partial(freqs[hit], norms[hit], np.float32(w))
             yield pd.DataFrame({"docid": docids[hit], "score": s})
 
@@ -504,12 +456,8 @@ class IndexSearcher:
                         for (f, t), df in self._df_map.items()
                         if f == field and t.startswith(term[:prefix_length])
                         and abs(len(t) - len(term)) <= max_edits]
-            col = F.col("term")
-            # classic levenshtein >= OSA; one transposition <= 2
-            # classic edits (same prefilter as FuzzyQuery._expand)
-            pred = F.levenshtein(col, F.lit(term)) <= 2 * max_edits
-            if prefix_length:
-                pred = pred & col.startswith(term[:prefix_length])
+            pred = dict_prefilter(
+                FuzzyQuery(term, max_edits, prefix_length), F.col("term"))
             rows = (self.dict
                     .where(pred & (F.col("field") == field))
                     .select("term", "df")
@@ -559,37 +507,7 @@ class IndexSearcher:
         if self._df_map is not None:
             return expand_terms(
                 (t for f, t in self._df_map.keys() if f == qfield), q)
-        col = F.col("term")
-        if isinstance(q, PrefixQuery):
-            pred = col.startswith(q.prefix)
-        elif isinstance(q, WildcardQuery):
-            pred = col.rlike("^(?s)" + wildcard_to_regex(q.pattern) + "$")
-        elif isinstance(q, RegexpQuery):
-            from .multiterm import java_safe_regex
-
-            if java_safe_regex(q.pattern):
-                pred = col.rlike("^(?s)(?:" + q.pattern + ")$")
-            else:
-                # dialect-divergent pattern: scan the dict unpruned and
-                # rely on the exact Python refinement (expand_terms) —
-                # a Java-side rlike could throw or silently drop terms
-                pred = F.lit(True)
-        elif isinstance(q, FuzzyQuery):
-            # classic levenshtein >= OSA; one transposition <= 2 classic
-            # edits, so this prefilter admits every OSA match
-            pred = F.levenshtein(col, F.lit(q.term)) <= 2 * q.max_edits
-            if q.prefix_length:
-                pred = pred & col.startswith(q.term[: q.prefix_length])
-        elif isinstance(q, TermRangeQuery):
-            pred = F.lit(True)
-            if q.lower is not None:
-                pred = pred & (col >= q.lower if q.include_lower else col > q.lower)
-            if q.upper is not None:
-                pred = pred & (col <= q.upper if q.include_upper else col < q.upper)
-        elif isinstance(q, TermInSetQuery):
-            pred = col.isin(list(q.terms))
-        else:
-            raise TypeError(f"unknown multi-term query {type(q)}")
+        pred = dict_prefilter(q, F.col("term"))
         scan = (self.dict.where(pred & (F.col("field") == qfield))
                 .select("term").limit(self.MAX_EXPANSION_SCAN + 1).collect())
         if len(scan) > self.MAX_EXPANSION_SCAN:

@@ -70,6 +70,49 @@ def java_safe_regex(pattern: str) -> bool:
     return _JAVA_DIVERGENT_RE.search(pattern) is None
 
 
+def dict_prefilter(q, col):
+    """The coarse Spark predicate over a dictionary's bare-term column
+    ``col`` that admits every term :func:`expand_terms` accepts for
+    ``q`` — the dictionary-scan pushdown of both engines; expand_terms
+    then refines the scanned candidates exactly. Wildcard and regexp
+    patterns push down as ``rlike`` only when :func:`java_safe_regex`;
+    otherwise the scan is unpruned."""
+    from pyspark.sql import functions as F
+
+    from .queries import (
+        FuzzyQuery, PrefixQuery, RegexpQuery, TermInSetQuery,
+        TermRangeQuery, WildcardQuery,
+    )
+
+    if isinstance(q, PrefixQuery):
+        return col.startswith(q.prefix)
+    if isinstance(q, (WildcardQuery, RegexpQuery)):
+        rx = (wildcard_to_regex(q.pattern) if isinstance(q, WildcardQuery)
+              else q.pattern)
+        if not java_safe_regex(rx):
+            return F.lit(True)
+        return col.rlike("^(?s)(?:" + rx + ")$")
+    if isinstance(q, FuzzyQuery):
+        # classic levenshtein >= OSA; one transposition <= 2 classic
+        # edits, so this admits every OSA match
+        pred = F.levenshtein(col, F.lit(q.term)) <= 2 * q.max_edits
+        if q.prefix_length:
+            pred = pred & col.startswith(q.term[: q.prefix_length])
+        return pred
+    if isinstance(q, TermRangeQuery):
+        pred = F.lit(True)
+        if q.lower is not None:
+            pred = pred & (col >= q.lower if q.include_lower
+                           else col > q.lower)
+        if q.upper is not None:
+            pred = pred & (col <= q.upper if q.include_upper
+                           else col < q.upper)
+        return pred
+    if isinstance(q, TermInSetQuery):
+        return col.isin(list(q.terms))
+    raise TypeError(f"unknown multi-term query {type(q)}")
+
+
 def osa_distance(a: str, b: str, cap: int | None = None) -> int:
     """Optimal-string-alignment distance (Levenshtein + adjacent
     transposition as one edit) — FuzzyQuery's transpositions=true

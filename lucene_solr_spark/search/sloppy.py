@@ -25,6 +25,11 @@ search/PhraseQueue.java:30-43):
 
 A document matches the sloppy phrase iff the traversal records >= 1
 match (PhraseScorer.twoPhaseIterator().matches() calls nextMatch once).
+
+``_phrase_freqs`` is the one phrase-frequency kernel of both engines
+(the relational verifier in executor.py and the compressed evaluator in
+wand.py): exact alignment counts vectorized over a batch of docs, and
+this matcher per doc for slop > 0.
 """
 
 from __future__ import annotations
@@ -86,3 +91,47 @@ def sloppy_freq(pos_lists, offsets, slop: int) -> float:
                 if ml2 < match_len:
                     match_len = ml2
     return float(freq) if matched_any else 0.0
+
+
+def _phrase_freqs(pos_lists: list[list[np.ndarray]], offs, slop: int) -> np.ndarray:
+    """Phrase frequency per candidate doc. ``pos_lists[i][d]`` = term
+    i's positions in doc d (docs aligned across terms; int arrays).
+
+    slop=0 — ExactPhraseMatcher (ExactPhraseMatcher.java:93-126):
+    freq = #alignments, vectorized across all docs at once: positions
+    are offset-adjusted, flattened with a per-doc stride, and ONE
+    intersect1d per term narrows the alignment set.
+
+    slop>0 — SloppyPhraseMatcher (SloppyPhraseMatcher.java:119-152):
+    float freq = Σ 1/(1+matchLength), sequential per doc."""
+    nd = len(pos_lists[0])
+    if slop > 0:
+        freqs = np.empty(nd, dtype=np.float64)
+        for d in range(nd):
+            freqs[d] = sloppy_freq([pos_lists[i][d]
+                                    for i in range(len(pos_lists))],
+                                   tuple(offs), slop)
+        return freqs
+    max_off = max(offs)
+    flats, lens = [], []
+    maxpos = 0
+    for pl in pos_lists:
+        ln = np.fromiter((a.size for a in pl), dtype=np.int64, count=nd)
+        fl = (np.concatenate(pl) if int(ln.sum())
+              else np.empty(0, dtype=np.int64))
+        if fl.size:
+            maxpos = max(maxpos, int(fl.max()))
+        flats.append(fl)
+        lens.append(ln)
+    stride = maxpos + max_off + 2
+    cand = None
+    for i in range(len(pos_lists)):
+        base = np.repeat(np.arange(nd, dtype=np.int64), lens[i]) * stride
+        adj = flats[i] - offs[i] + max_off + base
+        cand = adj if cand is None else np.intersect1d(
+            cand, adj, assume_unique=True)
+        if cand.size == 0:
+            break
+    if cand is None or cand.size == 0:
+        return np.zeros(nd, dtype=np.float64)
+    return np.bincount(cand // stride, minlength=nd).astype(np.float64)

@@ -47,7 +47,8 @@ from pyspark.sql import DataFrame, functions as F
 from ..index import codec
 from ..index.segments import FIELD_SEP, SegmentIndex
 from . import bm25
-from .executor import _str_in
+from .executor import _collect_terms, _str_in
+from .sloppy import _phrase_freqs
 from .queries import (
     BooleanQuery,
     ConstantScoreQuery,
@@ -182,53 +183,6 @@ def _own(e: list) -> list:
     return [a.copy() for a in e[:5]] + e[5:]
 
 
-def _phrase_freqs(pos_lists: list[list[np.ndarray]], offs, slop: int) -> np.ndarray:
-    """Phrase frequency per candidate doc. ``pos_lists[i][d]`` = term
-    i's positions in doc d (docs aligned across terms).
-
-    slop=0 — ExactPhraseMatcher (ExactPhraseMatcher.java:93-126):
-    freq = #alignments, vectorized across all docs at once: positions
-    are offset-adjusted, flattened with a per-doc stride, and ONE
-    intersect1d per term narrows the alignment set (same shape as the
-    uncompressed engine's _phrase_verify_fn).
-
-    slop>0 — SloppyPhraseMatcher (SloppyPhraseMatcher.java:119-152):
-    float freq = Σ 1/(1+matchLength), sequential per doc."""
-    nd = len(pos_lists[0])
-    if slop > 0:
-        from .sloppy import sloppy_freq
-
-        freqs = np.empty(nd, dtype=np.float64)
-        for d in range(nd):
-            freqs[d] = sloppy_freq([pos_lists[i][d]
-                                    for i in range(len(pos_lists))],
-                                   tuple(offs), slop)
-        return freqs
-    max_off = max(offs)
-    flats, lens = [], []
-    maxpos = 0
-    for pl in pos_lists:
-        ln = np.fromiter((a.size for a in pl), dtype=np.int64, count=nd)
-        fl = (np.concatenate(pl) if int(ln.sum())
-              else np.empty(0, dtype=np.int64))
-        if fl.size:
-            maxpos = max(maxpos, int(fl.max()))
-        flats.append(fl)
-        lens.append(ln)
-    stride = maxpos + max_off + 2
-    cand = None
-    for i in range(len(pos_lists)):
-        base = np.repeat(np.arange(nd, dtype=np.int64), lens[i]) * stride
-        adj = flats[i] - offs[i] + max_off + base
-        cand = adj if cand is None else np.intersect1d(
-            cand, adj, assume_unique=True)
-        if cand.size == 0:
-            break
-    if cand is None or cand.size == 0:
-        return np.zeros(nd, dtype=np.float64)
-    return np.bincount(cand // stride, minlength=nd).astype(np.float64)
-
-
 class SegmentSearcher:
     """IndexSearcher over the compressed segment index — the 100-TB
     query path.
@@ -253,7 +207,7 @@ class SegmentSearcher:
       segments with the same ``_merge_topk``, with no Spark job.
 
     ``cache=True`` only loads the dictionary's term → df map into the
-    driver (the dictionary stays persisted).
+    driver (nothing is persisted).
 
     Multi-term queries (prefix/wildcard/regexp/fuzzy/range/set and
     span wrappers) rewrite against the v2 dictionary first
@@ -313,7 +267,9 @@ class SegmentSearcher:
         self._batch_plan_cache: collections.OrderedDict = (
             collections.OrderedDict())
         if cache:
-            self.dict.persist()
+            # read straight from the files and never persisted: Spark's
+            # cache would hand this dictionary to every later read of
+            # dict/ in the session, a flush's or fold's delta merge too
             if self.dict.count() <= self.DICT_CACHE_MAX:
                 pdf = self.dict.select("term", "df").toPandas()
                 self._df_map = dict(zip(pdf["term"], pdf["df"].astype(int)))
@@ -436,7 +392,7 @@ class SegmentSearcher:
         return sorted(r["term"][len(pfx):] for r in rows)
 
     def _expand_multiterm(self, q) -> list[str]:
-        from .multiterm import expand_terms
+        from .multiterm import dict_prefilter, expand_terms
 
         field = getattr(q, "field", "content")
         pfx = "" if field == "content" else field + FIELD_SEP
@@ -447,41 +403,13 @@ class SegmentSearcher:
             else:
                 vocab = (t for t in self._df_map if FIELD_SEP not in t)
             return expand_terms(vocab, q)
-        # dict scan with a coarse JVM-side predicate on the BARE term,
-        # exact refinement in Python (shared with the oracle)
-        from .queries import (
-            FuzzyQuery,
-            PrefixQuery,
-            RegexpQuery,
-            TermInSetQuery,
-            TermRangeQuery,
-            WildcardQuery,
-        )
-
+        # dict scan with the shared coarse JVM-side predicate on the
+        # BARE term, exact refinement in Python (shared with the oracle)
         bare = (F.expr(f"substring(term, {len(pfx) + 1})") if pfx
                 else F.col("term"))
         scope = (F.col("term").startswith(pfx) if pfx
                  else ~F.col("term").contains(FIELD_SEP))
-        if isinstance(q, PrefixQuery):
-            pred = bare.startswith(q.prefix)
-        elif isinstance(q, TermInSetQuery):
-            pred = bare.isin(list(q.terms))
-        elif isinstance(q, FuzzyQuery):
-            pred = F.levenshtein(bare, F.lit(q.term)) <= 2 * q.max_edits
-            if q.prefix_length:
-                pred = pred & bare.startswith(q.term[: q.prefix_length])
-        elif isinstance(q, TermRangeQuery):
-            pred = F.lit(True)
-            if q.lower is not None:
-                pred = pred & (bare >= q.lower if q.include_lower
-                               else bare > q.lower)
-            if q.upper is not None:
-                pred = pred & (bare <= q.upper if q.include_upper
-                               else bare < q.upper)
-        elif isinstance(q, (WildcardQuery, RegexpQuery)):
-            pred = F.lit(True)  # refined exactly in Python below
-        else:
-            raise TypeError(f"unknown multi-term query {type(q)}")
+        pred = dict_prefilter(q, bare)
         rows = (self.dict.where(scope & pred).select("term")
                 .limit(self.MAX_EXPANSION_SCAN + 1).collect())
         if len(rows) > self.MAX_EXPANSION_SCAN:
@@ -492,46 +420,10 @@ class SegmentSearcher:
     # -- general compiled-tree path (dismax / nested boolean / ...) -----
     @staticmethod
     def _general_terms(q: Query) -> set[str]:
-        """All qualified leaf terms of a general query tree."""
-        if isinstance(q, TermQuery):
-            return {_qual(q.field, q.term)}
-        if isinstance(q, SynonymQuery):
-            return {_qual(q.field, t) for t in q.terms}
-        if isinstance(q, PhraseQuery):
-            return {_qual(q.field, t) for t in q.terms}
-        if isinstance(q, MultiPhraseQuery):
-            return {_qual(q.field, t) for slot in q.termss for t in slot}
-        if isinstance(q, BooleanQuery):
-            out: set[str] = set()
-            for c in q.clauses:
-                out |= SegmentSearcher._general_terms(c.query)
-            return out
-        if isinstance(q, DisjunctionMaxQuery):
-            out = set()
-            for d in q.disjuncts:
-                out |= SegmentSearcher._general_terms(d)
-            return out
-        if isinstance(q, ConstantScoreQuery):
-            return SegmentSearcher._general_terms(q.query)
-        if isinstance(q, MatchNoDocsQuery):
-            return set()
-        from .intervals import IntervalQuery, interval_terms
-        from .spans import SpanQuery, span_field_terms
-
-        if isinstance(q, SpanQuery):
-            return {_qual(f, t) for f, t in span_field_terms(q)}
-        if isinstance(q, IntervalQuery):
-            fld = getattr(q, "field", "content")
-            return {_qual(fld, t) for t in interval_terms(q)}
-        from .term_automaton import TermAutomatonQuery
-
-        if isinstance(q, TermAutomatonQuery):
-            return {_qual(q.field, t) for t in q.terms().values()
-                    if t is not None}
-        raise TypeError(
-            f"SegmentSearcher cannot evaluate {type(q).__name__}; "
-            "rewrite it first (IndexSearcher.rewrite) or use "
-            "IndexSearcher")
+        """All qualified leaf terms of a (rewritten) query tree: the
+        (field, term) pairs of the v1 engine's :func:`_collect_terms`,
+        rendered as postings keys."""
+        return {_qual(f, t) for f, t in _collect_terms(q)}
 
     def _compile_general(self, q: Query, boost: float,
                          stats: dict[str, int]):
@@ -673,7 +565,9 @@ class SegmentSearcher:
             w = float(fsc.weight_from_idf_sum(idf_sum, boost * q.boost))
             return ("automaton", det, int(q.any_id), id_terms, w)
         raise TypeError(
-            f"SegmentSearcher cannot evaluate {type(q).__name__}")
+            f"SegmentSearcher cannot evaluate {type(q).__name__}; "
+            "rewrite it first (IndexSearcher.rewrite) or use "
+            "IndexSearcher")
 
     # -- one evaluator: plan, leaf, one driver merge ---------------------
     def _compile(self, queries: list[Query],

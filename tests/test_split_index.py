@@ -69,10 +69,6 @@ def test_part_bit_identical_to_fresh_build(split, spark):
 def test_split_then_add_round_trips(split, spark):
     pdf, _src, p0, p1, _mans = split
     add_indexes(p0, p1, spark)
-    # reopen-after-addIndexes: earlier searchers' persisted scans over
-    # p0's path would otherwise serve the pre-fold view (the Lucene
-    # stale-reader contract; see add_indexes docstring)
-    spark.catalog.clearCache()
     oracle = OracleIndex(
         analyzer=StandardAnalyzer(stop_words=ENGLISH_STOP_WORDS))
     oracle.add_all(pdf["content"])

@@ -146,3 +146,24 @@ def test_older_docs_layout_flushes_clean(spark, tmp_path):
     assert idx.manifest()["doc_count"] == idx.docs().count() == 60
     st = check_segment_index(idx, decode=False)
     assert st.clean, st.failed()
+
+
+def test_cached_searcher_between_flushes_keeps_dict_exact(spark, tmp_path):
+    """A ``cache=True`` searcher opened between flushes must not hand
+    its dictionary to later writes: each flush merges its delta into
+    ``dict/`` as read from the files, so a Spark-cached pre-flush
+    dictionary would give every later flush wrong df/ttf."""
+    root = str(tmp_path / "idx")
+    corpus = corpus_df(spark, 90, partitions=3)
+    indexer = IncrementalIndexer(root, stop_words=ENGLISH_STOP_WORDS,
+                                 docs_per_segment=24)
+    for b in range(3):
+        indexer.process_batch(corpus.where(f"pmod(crc32(path), 3) = {b}"), b)
+        if b == 0:
+            SegmentSearcher(SegmentIndex(root, spark), cache=True)
+    idx = SegmentIndex(root, spark)
+    st = check_segment_index(idx, decode=False)
+    assert st.clean, st.failed()
+    # a searcher opened after the writes sees every term on disk
+    s = SegmentSearcher(idx, cache=True)
+    assert len(s._df_map) == idx.dict().count()
