@@ -23,8 +23,9 @@ Two entry points, one per index layout:
   SmallFloat norm encoding, and (given the source corpus) the per-row
   content-sha256 invariant from BASELINE's input contract.
 * :func:`check_segment_index` — the v2 compressed segment index
-  (``segments.py::build_segment_index``): docmap/summary/dict/stats
-  and manifest-count reconciliation, block-structure discipline
+  (``segments.py::build_segment_index``): the manifest's segment list,
+  docmap/summary/dict/stats and manifest-count reconciliation,
+  block-structure discipline
   (ordinals contiguous, non-last blocks exactly BLOCK_SIZE, docid
   ranges disjoint and ascending across a term's blocks), and a full
   decode pass re-deriving every block's metadata from its encoded
@@ -273,6 +274,9 @@ def check_segment_index(idx: SegmentIndex, decode: bool = True,
     ).collect()[0]
     n_docs = int(d["n"])
     st.checks["docmap_docid_unique"] = n_docs - int(d["nd"])
+    # no hole below maxDoc: stricter than the docid contract (unique,
+    # below next_docid; segments.py), so it fails, by design, on every
+    # index whose compaction dropped a deleted doc
     st.checks["docmap_docid_contiguous"] = _bool(
         n_docs == 0 or (int(d["lo"]) == 0
                         and int(d["hi"]) == int(d["nd"]) - 1))
@@ -282,6 +286,15 @@ def check_segment_index(idx: SegmentIndex, decode: bool = True,
     if "next_docid" in manifest:
         st.checks["manifest_next_docid"] = _bool(
             int(manifest["next_docid"]) == next_docid)
+
+    # --- the commit's segment list: each listed id has a block file and
+    # summary rows, and is below the id counter
+    listed = set(manifest["segments"])
+    summarized = {r[0] for r in
+                  idx.summaries().select("segment").distinct().collect()}
+    st.checks["manifest_segments"] = (
+        len(listed - set(idx.segment_files())) + len(listed ^ summarized)
+        + sum(s >= int(manifest["next_segment"]) for s in listed))
 
     # --- docs (summaries) vs docmap ---------------------------------------
     st.checks["docs_count"] = abs(docs.count() - n_docs)

@@ -25,7 +25,7 @@ Build plan (content crosses one exchange, the docid range exchange):
            encodes 128-doc posting blocks (delta+varbyte/FOR, codec.py)
            and writes its one file. Each task appends its checkpoint row
            after its rename; a killed build resumes by skipping
-           checkpointed segments (the others' dirs are removed first).
+           checkpointed segments (the others' files are replaced).
   stage 2  docs/ dict/ stats/ + the manifest's collection stats —
            _derive_tables, the one derive step every index write
            (build, streaming flush, compaction, split, addIndexes)
@@ -35,6 +35,16 @@ Build plan (content crosses one exchange, the docid range exchange):
            reduce to one row per segment before the exchange, so no
            salting needed here), stats/ and per-field stats = one
            aggregate over the kind=1/kind=2 rows.
+
+Commits (SegmentInfos): ``manifest.json`` lists the live ``segments``,
+the id counter ``next_segment`` and the ``dict/<name>``; every write
+adds segments and a dictionary under fresh names, and only
+:func:`_commit_manifest` changes the live set and deletes files.
+
+Docid contract: docids are unique and below the manifest's
+``next_docid``. Compaction drops deleted docs without renumbering, so it
+leaves holes by design and CheckIndex's ``docmap_docid_contiguous``
+fails on every index whose compaction dropped a deleted doc.
 
 At 10^12-file scale: docs_per_segment is the DWPT RAM-budget knob
 (IndexWriterConfig.java:93 — 16 MB buffer ≙ segment sized to executor
@@ -367,20 +377,25 @@ def _analyzed_segment(spill_dir: str, stop_words: frozenset[str],
     return produce
 
 
-def _write_analyzed(df: DataFrame, work_dir: str, blocks_dir: str,
-                    stop_words: frozenset[str],
+def _flush_segments(df: DataFrame, root: str, stop_words: frozenset[str],
                     max_token_length: int) -> list[int]:
-    """Flush and compaction: analyze ``df`` (docid, segment, content,
-    doc columns), spill it by segment under ``work_dir``, write every
-    segment through :func:`_write_segments`; returns their ids."""
-    spill = os.path.join(work_dir, "spill")
+    """Flush and compaction: analyze ``df`` (docid, fresh segment id,
+    doc columns, content), spill it by segment, write every segment
+    through :func:`_write_segments` and its ``docmap/segment=<s>``
+    partition (content kept for compaction); returns their ids."""
+    work = os.path.join(root, "flush.tmp")
+    spill = os.path.join(work, "spill")
     analyzed_deferred(df, max_token_length=max_token_length).write.mode(
         "overwrite").partitionBy("segment").parquet(spill)
     segs = sorted(int(d[len("segment="):]) for d in os.listdir(spill)
                   if d.startswith("segment="))
-    _write_segments(df.sparkSession, blocks_dir, [(s, s) for s in segs],
+    _write_segments(df.sparkSession, os.path.join(root, "blocks"),
+                    [(s, s) for s in segs],
                     _analyzed_segment(spill, stop_words, max_token_length))
-    shutil.rmtree(spill)
+    df.repartition(F.col("segment")).write.mode("overwrite").partitionBy(
+        "segment").parquet(os.path.join(work, "docmap"))
+    _move_in(os.path.join(work, "docmap"), os.path.join(root, "docmap"))
+    shutil.rmtree(work)
     return segs
 
 
@@ -415,11 +430,15 @@ class SegmentIndex:
         return os.path.join(self.root, "docmap")
 
     def block_rows(self) -> DataFrame:
-        """Every ``blocks/`` row, all kinds, read with the pinned
-        BLOCKS_SCHEMA: older files' extra columns are never read, and
-        ``segment`` comes from the directories, whatever file Spark
+        return self._block_rows(self.manifest()["segments"])
+
+    def _block_rows(self, segments) -> DataFrame:
+        """The ``blocks/`` rows of ``segments``, all kinds, read with the
+        pinned BLOCKS_SCHEMA: older files' extra columns are never read,
+        and ``segment`` comes from the directories, whatever file Spark
         would sample for an inferred schema."""
-        return self.spark.read.schema(BLOCKS_SCHEMA).parquet(self.blocks_path)
+        return (self.spark.read.schema(BLOCKS_SCHEMA).parquet(self.blocks_path)
+                .where(F.col("segment").isin([int(s) for s in segments])))
 
     def blocks(self) -> DataFrame:
         return self.block_rows().where(F.col("kind") == 0)
@@ -428,16 +447,20 @@ class SegmentIndex:
         return self.block_rows().where(F.col("kind") == 1)
 
     def segment_files(self) -> dict[int, list[str]]:
-        """{segment: [parquet paths]} — ``blocks/segment=N/*.parquet``."""
+        """{segment: [parquet paths]} of the manifest's live segments:
+        each listed ``blocks/segment=<s>/`` directory's files."""
+        blocks = os.path.abspath(self.blocks_path)
         out: dict[int, list[str]] = {}
-        for f in sorted(glob.glob(os.path.join(
-                os.path.abspath(self.blocks_path), "segment=*", "*.parquet"))):
-            seg = os.path.basename(os.path.dirname(f))[len("segment="):]
-            out.setdefault(int(seg), []).append(f)
+        for s in self.manifest()["segments"]:
+            files = sorted(glob.glob(os.path.join(
+                blocks, f"segment={s}", "*.parquet")))
+            if files:
+                out[s] = files
         return out
 
     def docmap(self) -> DataFrame:
-        return self.spark.read.parquet(self.docmap_path)
+        return self.spark.read.parquet(self.docmap_path).where(
+            F.col("segment").isin(self.manifest()["segments"]))
 
     def docs(self) -> DataFrame:
         df = self.spark.read.parquet(os.path.join(self.root, "docs"))
@@ -446,7 +469,8 @@ class SegmentIndex:
         return df.drop("batch")
 
     def dict(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.root, "dict"))
+        return self.spark.read.parquet(
+            os.path.join(self.root, "dict", self.manifest()["dict"]))
 
     def stats(self) -> dict:
         return self.spark.read.parquet(os.path.join(self.root, "stats")).collect()[0].asDict()
@@ -463,7 +487,7 @@ class SegmentIndex:
         Lucene50LiveDocsFormat.java:38-48) — None when nothing is
         deleted. Applied as an anti-join/mask at query time and
         physically dropped at compaction."""
-        if not os.path.exists(self.deletes_path):
+        if not glob.glob(os.path.join(self.deletes_path, "*.parquet")):
             return None
         return self.spark.read.parquet(self.deletes_path).select("docid").distinct()
 
@@ -474,8 +498,29 @@ class SegmentIndex:
         return np.array(sorted(r["docid"] for r in d.collect()), dtype=np.int64)
 
     def manifest(self) -> dict:
-        with open(os.path.join(self.root, "manifest.json")) as f:
-            return json.load(f)
+        return _read_manifest(self.root)
+
+
+def _read_manifest(root: str) -> dict:
+    """The one manifest read. A manifest written before segment ids were
+    kept gets its live list from the ``blocks/segment=*`` directories,
+    ``next_segment`` above them and ``dict`` "" (the flat ``dict/``);
+    its next commit records all three."""
+    with open(os.path.join(root, "manifest.json")) as f:
+        m = json.load(f)
+    if "segments" not in m:
+        _list_segments(m, [d.rsplit("=", 1)[1] for d in glob.glob(
+            os.path.join(root, "blocks", "segment=*"))])
+        m.setdefault("dict", "")
+    return m
+
+
+def _list_segments(manifest: dict, segments) -> None:
+    """Set the manifest's live segment list and ``n_segments`` (its
+    length); ``next_segment`` stays above every id ever listed."""
+    segs = sorted({int(s) for s in segments})
+    manifest.update(segments=segs, n_segments=len(segs), next_segment=max(
+        [int(manifest.get("next_segment", 0))] + [s + 1 for s in segs]))
 
 
 def _swap(stage: str, final: str) -> None:
@@ -510,12 +555,29 @@ def _move_in(stage: str, table_root: str, token=None) -> None:
 
 
 def _commit_manifest(root: str, manifest: dict) -> None:
-    """Write ``manifest.json`` through a temp name (the commit record;
-    replacing the name keeps a hardlinked commit point's copy)."""
-    tmp = os.path.join(root, "manifest.json.tmp")
-    with open(tmp, "w") as f:
+    """The commit: write ``manifest.json`` through a temp name (replacing
+    the name keeps a hardlinked commit point's copy), then delete each
+    segment's ``blocks/``/``docmap/`` directory and each dictionary that
+    neither this commit nor the one it replaced lists (IndexFileDeleter
+    keeping two commits), which also clears crashed writes' leftovers."""
+    path = os.path.join(root, "manifest.json")
+    prev = _read_manifest(root) if os.path.exists(path) else {}
+    with open(path + ".tmp", "w") as f:
         json.dump(manifest, f, indent=1)
-    os.replace(tmp, os.path.join(root, "manifest.json"))
+    os.replace(path + ".tmp", path)
+    segs = {*prev.get("segments", ()), *manifest["segments"]}
+    for table in ("blocks", "docmap"):
+        for d in glob.glob(os.path.join(root, table, "segment=*")):
+            if int(os.path.basename(d)[len("segment="):]) not in segs:
+                shutil.rmtree(d)
+    dicts = {prev.get("dict"), manifest.get("dict")}
+    dict_root = os.path.join(root, "dict")
+    for name in os.listdir(dict_root) if os.path.isdir(dict_root) else ():
+        p = os.path.join(dict_root, name)
+        if os.path.isdir(p) and name not in dicts:
+            shutil.rmtree(p)
+        elif not os.path.isdir(p) and "" not in dicts:
+            os.remove(p)  # the flat dict/ of an older manifest
 
 
 def _derive_tables(idx: SegmentIndex, manifest: dict, token=None,
@@ -523,19 +585,21 @@ def _derive_tables(idx: SegmentIndex, manifest: dict, token=None,
     """The one derive step: ``docs/``, ``dict/``, ``stats/`` and the
     manifest's ``doc_count``/``sum_ttf``/``field_stats``/``next_docid``
     follow from ``blocks/`` — Lucene recomputing SegmentInfos/FieldInfos
-    on flush, merge and addIndexes. Every index write ends here.
+    on flush, merge and addIndexes. Every index write ends here, with
+    ``manifest`` listing the segments it commits.
 
-    Full form (``token=None``): recompute all of them from every block
-    row — the build, each split part, the compaction refresh.
+    Full form (``token=None``): recompute all of them from the block
+    rows of the manifest's segments — the build, each split part, the
+    compaction refresh.
 
     Delta form: apply only ``segments``' rows on top of the committed
-    counts in ``manifest``, keyed by ``token`` (a streaming batch id,
-    an addIndexes fold token). The token's docs files replace whatever
-    an earlier attempt under it left, and ``dict/`` records the token
-    it last merged, so a re-run after a crash before the manifest
-    commit never merges a token twice. A ``docs/`` still in the older
-    ``batch=<id>`` partition layout gets the full form (rewritten
-    flat).
+    counts and dictionary ``manifest`` names, keyed by ``token`` (a
+    streaming batch id, an addIndexes fold token). The token's docs
+    files replace whatever an earlier attempt under it left, and a
+    re-run after a crash before the manifest commit merges into the same
+    committed base, so nothing counts twice. A ``docs/`` still in the
+    older ``batch=<id>`` partition layout gets the full form (rewritten
+    flat). The dictionary goes to a fresh ``dict/<name>``.
 
     Collection stats are per field: content from the kind=1 rows,
     every extra field from its kind=2 per-(doc, field) rows —
@@ -551,13 +615,10 @@ def _derive_tables(idx: SegmentIndex, manifest: dict, token=None,
 
     root = idx.root
     docs_root = os.path.join(root, "docs")
-    dict_root = os.path.join(root, "dict")
     delta = token is not None and not (
         os.path.isdir(docs_root)
         and any(n.startswith("batch=") for n in os.listdir(docs_root)))
-    rows = idx.block_rows()
-    if delta:
-        rows = rows.where(F.col("segment").isin([int(s) for s in segments]))
+    rows = idx._block_rows(segments if delta else manifest["segments"])
     kind = F.col("kind")
 
     # docs: a select over the summary rows, which carry the doc metadata
@@ -574,25 +635,16 @@ def _derive_tables(idx: SegmentIndex, manifest: dict, token=None,
         _swap(stage, docs_root)
 
     # dict: df = Σ n, ttf = Σ sum_tf per term over the block rows
-    marker = os.path.join(dict_root, "_delta_token")
-    merged = None
-    if delta and os.path.exists(marker):
-        with open(marker) as f:
-            merged = f.read()
-    if merged != str(token):
-        post = rows.where(kind == 0).select("term", "n", "sum_tf")
-        if delta and os.path.isdir(dict_root):
-            # the committed dict joins as pre-aggregated rows
-            post = post.unionByName(idx.dict().select(
-                "term", F.col("df").alias("n"), F.col("ttf").alias("sum_tf")))
-        stage = os.path.join(root, "dict.tmp")
-        post.groupBy("term").agg(
-            F.sum("n").alias("df"), F.sum("sum_tf").alias("ttf")
-        ).write.mode("overwrite").parquet(stage)
-        if delta:
-            with open(os.path.join(stage, "_delta_token"), "w") as f:
-                f.write(str(token))
-        _swap(stage, dict_root)
+    post = rows.where(kind == 0).select("term", "n", "sum_tf")
+    if delta and manifest.get("dict") is not None:
+        # the committed dict joins as pre-aggregated rows
+        post = post.unionByName(idx.dict().select(
+            "term", F.col("df").alias("n"), F.col("ttf").alias("sum_tf")))
+    name = uuid.uuid4().hex
+    post.groupBy("term").agg(
+        F.sum("n").alias("df"), F.sum("sum_tf").alias("ttf")
+    ).write.parquet(os.path.join(root, "dict", name))
+    manifest["dict"] = name
 
     # collection stats: one aggregate over the kind=1/kind=2 rows
     prev = manifest if delta else {}
@@ -749,18 +801,18 @@ def add_indexes(dst_root: str, src_root: str,
     Both indexes must share the analyzer config and field list (same
     contract as Lucene); collection stats, per-field ones included,
     add up. Tombstones carry over shifted. Returns the new manifest.
-    Crash mid-fold: rerun with the same src. Every output of the fold
-    is keyed by a token of (src, the destination's committed
-    ``next_docid``) and replaced as a whole, and the dict records the
-    token it merged, so the re-run leaves exactly what one fold leaves
-    (the production seam is one Iceberg append commit).
+    Crash mid-fold: rerun with the same src. The source's segments take
+    fresh ids from the destination's ``next_segment``, the docs, docmap
+    and tombstone files are keyed by a token of (src, the destination's
+    committed ``next_docid``) and replaced as a whole, and the
+    dictionary merges into the committed one under a fresh name, so the
+    re-run leaves exactly what one fold leaves (the production seam is
+    one Iceberg append commit).
 
     Reopen contract: open a NEW searcher to see the fold. A searcher
-    lists its segment files when built; a ``cache=True`` one also loads
-    its term → df map then, so it keeps the pre-fold view (Lucene's
-    stale-reader semantics). A ``cache=False`` searcher reads ``dict/``
-    per query, and the fold replaces ``dict/``: its next query that the
-    plan cache does not serve fails on a removed dict file."""
+    opened before it keeps the pre-fold view (Lucene's stale-reader
+    semantics): the fold adds segments and a dictionary under fresh
+    names and removes none the previous commit lists."""
     dst = SegmentIndex(dst_root, spark)
     src_idx = SegmentIndex(src_root, spark)
     man_d, man_s = dst.manifest(), src_idx.manifest()
@@ -769,16 +821,14 @@ def add_indexes(dst_root: str, src_root: str,
             raise ValueError(f"addIndexes config mismatch on {k!r}: "
                              f"{man_d.get(k)} vs {man_s.get(k)}")
     D = _next_docid(dst, man_d)
-    S = int(man_d["n_segments"])
+    S = int(man_d["next_segment"])
     token = f"addidx-{os.path.basename(os.path.normpath(src_root))}-{D}"
 
     # -- blocks: one copy task per source segment, headers shifted -----
     jobs = [(s + S, (files, D))
             for s, files in sorted(src_idx.segment_files().items())]
-    for s, _ in jobs:  # what an earlier attempt of this fold left
-        shutil.rmtree(os.path.join(dst.blocks_path, f"segment={s}"),
-                      ignore_errors=True)
     _write_segments(spark, dst.blocks_path, jobs, _shifted_segment)
+    new = [s for s, _ in jobs]
 
     # -- docmap (lineage): match the destination's layout -------------
     sm = (src_idx.docmap()
@@ -796,9 +846,9 @@ def add_indexes(dst_root: str, src_root: str,
                    f"{token}.parquet")
 
     # -- docs/dict/stats delta + manifest (the commit) -----------------
-    man_d.update(n_segments=S + int(man_s["n_segments"]),
-                 updated_wall=round(time.time(), 3))
-    _derive_tables(dst, man_d, token=token, segments=[s for s, _ in jobs])
+    _list_segments(man_d, man_d["segments"] + new)
+    man_d["updated_wall"] = round(time.time(), 3)
+    _derive_tables(dst, man_d, token=token, segments=new)
     _commit_manifest(dst_root, man_d)
     return man_d
 
@@ -870,8 +920,8 @@ def split_index(src_root: str, out_roots: list[str],
             append_deletes(out_root, part_dels)
         pman = dict(man)
         pman.pop("last_batch_id", None)
-        pman.update(n_segments=len(seg_ids),
-                    split_from=os.path.basename(os.path.normpath(src_root)),
+        _list_segments(pman, [s - seg_off for s in seg_ids])
+        pman.update(split_from=os.path.basename(os.path.normpath(src_root)),
                     updated_wall=round(time.time(), 3))
         _derive_tables(SegmentIndex(out_root, spark), pman)
         _commit_manifest(out_root, pman)
@@ -883,6 +933,16 @@ def append_deletes(root: str, docids) -> int:
     """Append tombstone docids (driver-side pyarrow write — tombstone
     batches are small relative to the index; compaction empties them)."""
     return _write_deletes(root, docids, f"part-{uuid.uuid4().hex}.parquet")
+
+
+def _replace_deletes(root: str, docids) -> None:
+    """Replace the tombstone set by ``docids``: the new file is written
+    before the old ones go, so no reader sees a deleted doc come back."""
+    d = os.path.join(root, "deletes")
+    old = [os.path.join(d, n) for n in os.listdir(d)]
+    append_deletes(root, docids)
+    for p in old:
+        os.remove(p)
 
 
 def _write_deletes(root: str, docids, name: str) -> int:
@@ -955,7 +1015,7 @@ def build_segment_index(
         # 'blocks' checkpoint rows would otherwise mark segments done
         # whose data was just deleted, silently truncating a later
         # resume of this build
-        for sub in ("blocks", "checkpoints"):
+        for sub in ("blocks", "checkpoints", "dict"):
             p = os.path.join(out_root, sub)
             if os.path.exists(p):
                 shutil.rmtree(p)
@@ -1006,7 +1066,7 @@ def build_segment_index(
                            ("docmap", -1, 0, 0, 0, 0, 0, 0,
                             round(time.time() - t0, 3), 0.0))
 
-    n_segments = int(np.ceil(n_docs_total / docs_per_segment)) or 1
+    n_segments = -(-n_docs_total // docs_per_segment)
 
     # ---- stage 1: one writer task per segment not yet checkpointed ----
     done: set[int] = set()
@@ -1014,9 +1074,6 @@ def build_segment_index(
         done = {int(r["chunk"]) for r in idx.checkpoints()
                 .where(F.col("stage") == "blocks").collect()}
     pending = [s for s in range(n_segments) if s not in done]
-    for s in pending:  # partial output of an uncheckpointed segment
-        shutil.rmtree(os.path.join(idx.blocks_path, f"segment={s}"),
-                      ignore_errors=True)
     _write_segments(
         spark, idx.blocks_path, [(s, s) for s in pending],
         _analyzed_segment(spill_path, stop_words, max_token_length,
@@ -1027,13 +1084,13 @@ def build_segment_index(
     manifest = {
         "format_version": 2,
         "docs_per_segment": docs_per_segment,
-        "n_segments": n_segments,
         "block_size": codec.BLOCK_SIZE,
         "stop_words": sorted(stop_words),
         "max_token_length": max_token_length,
     }
     if extra_fields:
         manifest["fields"] = list(fields)
+    _list_segments(manifest, range(n_segments))
     _derive_tables(idx, manifest)
     manifest["build_wall_sec"] = round(time.time() - t0, 3)
     _commit_manifest(out_root, manifest)
@@ -1078,9 +1135,7 @@ def pk_split_index(src_root: str, out_pass: str, out_fail: str,
          .write.mode("append").parquet(os.path.join(out_root, "deletes")))
     outs = []
     for out_root, tag in ((out_pass, "pass"), (out_fail, "fail")):
-        man_path = os.path.join(out_root, "manifest.json")
-        with open(man_path) as f:
-            man = json.load(f)
+        man = _read_manifest(out_root)
         man.update(pk_split_from=os.path.basename(os.path.normpath(src_root)),
                    pk_split_side=tag, updated_wall=round(time.time(), 3))
         # the hardlinked manifest's name is replaced, never its content

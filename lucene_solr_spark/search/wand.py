@@ -243,8 +243,11 @@ class SegmentSearcher:
         #: indexes (bit-stable historic path), {field: cache} otherwise
         self.caches = (self.scorer.cache if len(self.scorers) == 1
                        else {f: sc.cache for f, sc in self.scorers.items()})
-        self.seg_files = index.segment_files()  # listed once: snapshot-bound
+        # this commit's files (the next commit still keeps them), the
+        # dictionary and docmap listed once, as Spark lists a frame's files
+        self.seg_files = index.segment_files()
         self.dict = index.dict()
+        self.docmap = index.docmap()
         # tombstones, masked inside each leaf BEFORE its top-k cut
         # (masking after the per-segment truncation would drop docs
         # that should be promoted); collection stats keep counting
@@ -261,9 +264,9 @@ class SegmentSearcher:
         # compiled leaf plans by (queries, k) — the queryResultCache
         # role at plan granularity: a re-submitted identical batch skips
         # rewrite, tree compile and Catalyst planning. Safe because the
-        # searcher is snapshot-bound (segment files and deletes are
-        # listed above); a new snapshot means a new searcher, Solr's
-        # cache-per-searcher lifecycle.
+        # searcher reads one commit (segment files, dictionary and
+        # deletes are resolved above); a new commit means a new
+        # searcher, Solr's cache-per-searcher lifecycle.
         self._batch_plan_cache: collections.OrderedDict = (
             collections.OrderedDict())
         if cache:
@@ -696,7 +699,7 @@ class SegmentSearcher:
         keeps only blocks whose docid range covers the doc, and only
         those decode (a few per term region). Feeds MoreLikeThis on
         the compressed path."""
-        seg_row = (self.index.docmap().where(F.col("docid") == docid)
+        seg_row = (self.docmap.where(F.col("docid") == docid)
                    .select("segment").collect())
         if not seg_row:
             return []

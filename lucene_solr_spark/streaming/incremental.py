@@ -16,20 +16,21 @@ Spark-first rendering:
     (index/segments.py `_write_segments`, one task per segment).
   * the checkpointLocation is the transaction log: restart resumes
     the stream exactly-once, so no docid is assigned twice.
-  * `compact_segments` is the TieredMergePolicy analogue: segments
-    smaller than `docs_per_segment/2` are re-keyed and re-encoded into
-    full segments (a SegmentMerger.java:96-177 merge — docids are
-    global, so merging is a re-bucket + re-encode with NO remapping).
+  * `compact_segments` is the TieredMergePolicy analogue: the docs of
+    segments smaller than `docs_per_segment/2` are flushed again as
+    full segments under fresh ids (a SegmentMerger.java:96-177 merge —
+    docids are global, so merging is a re-bucket + re-encode with NO
+    remapping), and the manifest commit swaps them for the segments
+    they replace.
   * searchers (`SegmentSearcher`) see each commit atomically on
-    re-open — the Iceberg-snapshot role; with plain Parquet we append
-    segment partitions then refresh.
+    re-open — the Iceberg-snapshot role: every write adds segment
+    files under fresh ids and changes the live set only in the
+    manifest commit, so a searcher opened before it keeps its view.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 import time
 
 from pyspark.sql import DataFrame, functions as F
@@ -42,10 +43,11 @@ from ..index.segments import (
     SegmentIndex,
     _commit_manifest,
     _derive_tables,
-    _move_in,
+    _flush_segments,
+    _list_segments,
     _next_docid,
-    _swap,
-    _write_analyzed,
+    _read_manifest,
+    _replace_deletes,
     append_deletes,
 )
 
@@ -64,16 +66,11 @@ class IncrementalIndexer:
         os.makedirs(root, exist_ok=True)
 
     # -- state ----------------------------------------------------------
-    @property
-    def manifest_path(self):
-        return os.path.join(self.root, "manifest.json")
-
     def _load_state(self) -> dict:
-        if os.path.exists(self.manifest_path):
-            with open(self.manifest_path) as f:
-                return json.load(f)
+        if os.path.exists(os.path.join(self.root, "manifest.json")):
+            return _read_manifest(self.root)
         return {"format_version": 2, "doc_count": 0, "sum_ttf": 0,
-                "next_docid": 0,
+                "next_docid": 0, "segments": [], "next_segment": 0,
                 "n_segments": 0, "docs_per_segment": self.docs_per_segment,
                 "block_size": codec.BLOCK_SIZE,
                 "stop_words": sorted(self.stop_words),
@@ -86,15 +83,21 @@ class IncrementalIndexer:
         foreachBatch's at-least-once contract: already-committed batch
         ids (recorded in the manifest at refresh time) are skipped. Its
         docids (from ``next_docid``) and segment ids (from
-        ``n_segments``) are the batch's alone, so the segment writer
+        ``next_segment``) are the batch's alone, so the segment writer
         puts its files straight into ``blocks/`` under fixed names: a
-        retried batch replaces them instead of appending rows."""
+        retried batch replaces them instead of appending rows. The
+        commit, the delta form of :func:`..index.segments._derive_tables`
+        (O(batch + vocabulary)) plus the manifest write, adds to the
+        committed manifest the batch was numbered from, and records
+        ``last_batch_id`` in the same atomic write: a retried
+        half-applied batch never counts twice. Tombstoned docs keep
+        counting until compaction (Lucene docCount-vs-liveDocs)."""
         spark = batch_df.sparkSession
         state = self._load_state()
         if batch_id <= int(state.get("last_batch_id", -1)):
             return  # retry of a committed batch (at-least-once replay)
         base_docid = _next_docid(SegmentIndex(self.root, spark), state)
-        base_segment = int(state["n_segments"])
+        base_segment = int(state["next_segment"])
         dps = int(state["docs_per_segment"])
 
         rows = batch_df.select(*PK, "lang", "content")
@@ -121,65 +124,31 @@ class IncrementalIndexer:
                 # new segments never share ids with existing ones
                 base_segment - base_docid // dps),
         )
-        tmp = os.path.join(self.root, f"batch-{batch_id}.tmp")
-        new_segments = _write_analyzed(
-            with_ids, tmp, os.path.join(self.root, "blocks"),
-            self.stop_words, self.max_token_length)
-        # docmap (lineage, with content for compaction) — segment-pure
-        # files, staged and moved in per segment dir
-        with_ids.repartition(F.col("segment")).write.mode("overwrite").partitionBy(
-            "segment").parquet(os.path.join(tmp, "docmap"))
-        _move_in(os.path.join(tmp, "docmap"), os.path.join(self.root, "docmap"))
-        shutil.rmtree(tmp)
-
-        idx = SegmentIndex(self.root, spark)
-        self._refresh_derived(idx, batch_id, new_segments)
+        new = _flush_segments(with_ids, self.root, self.stop_words,
+                              self.max_token_length)
+        _list_segments(state, state["segments"] + new)
+        state.update(last_batch_id=int(batch_id),
+                     updated_wall=round(time.time(), 3))
+        _derive_tables(SegmentIndex(self.root, spark), state,
+                       token=batch_id, segments=new)
+        _commit_manifest(self.root, state)
         if parent is not None:
             parent.unpersist()
 
-    def _refresh_derived(self, idx: SegmentIndex, batch_id: int,
-                         new_segments: list[int]) -> None:
-        """The reopen after a flush: the delta form of
-        :func:`..index.segments._derive_tables` keyed by ``batch_id``
-        (docs/dict/stats cost O(batch + vocabulary), not O(index)), then
-        the manifest commit. What is streaming's own is the commit
-        record: the running counters the delta adds to are the
-        committed manifest's, and ``last_batch_id`` lands in the same
-        atomic write, so a retried half-applied batch adds its delta to
-        the PRE-batch base — never twice. Tombstoned docs keep counting
-        until compaction (Lucene docCount-vs-liveDocs)."""
-        state = self._load_state()
-        state.update(n_segments=max(int(state["n_segments"]),
-                                    max(new_segments) + 1),
-                     last_batch_id=int(batch_id),
-                     updated_wall=round(time.time(), 3))
-        _derive_tables(idx, state, token=batch_id, segments=new_segments)
-        _commit_manifest(self.root, state)
-
     # -- updates / deletes ----------------------------------------------
     def delete_by_key(self, spark, keys_df: DataFrame,
-                      key_cols: tuple[str, ...] = ("repo", "path"),
-                      max_docid: int | None = None) -> int:
+                      key_cols: tuple[str, ...] = ("repo", "path")) -> int:
         """Tombstone every indexed doc whose key matches a row of
         ``keys_df`` (delete-by-term, index/DocumentsWriter.java:476-494
         semantics): resolve docids from the docmap, append to the
         tombstone table. Deleted docs stop matching immediately
         (liveDocs anti-join/mask in both searchers); their postings are
-        physically dropped at the next compaction.
-
-        ``max_docid`` bounds the resolution to docids < max_docid —
-        upsert_batch passes the manifest's committed ``next_docid`` so
-        a retried half-applied batch never tombstones its own rows (a
-        crashed attempt may have moved docmap segment dirs into place
-        before committing; those rows carry docids >= the committed
-        ``next_docid``)."""
+        physically dropped at the next compaction. Only committed
+        segments resolve: the docmap lists the manifest's."""
         idx = SegmentIndex(self.root, spark)
         if not os.path.exists(idx.docmap_path):
             return 0
-        dm = idx.docmap()
-        if max_docid is not None:
-            dm = dm.where(F.col("docid") < int(max_docid))
-        hits = (dm
+        hits = (idx.docmap()
                 .join(keys_df.select(*key_cols).distinct(),
                       list(key_cols), "left_semi")
                 .select("docid").collect())
@@ -242,22 +211,15 @@ class IncrementalIndexer:
         `MERGE INTO` role keyed on ``key_cols``): tombstone any older
         version of each incoming doc, then flush the batch as new
         segments with fresh docids. Idempotent like process_batch —
-        a committed batch_id is skipped entirely, and tombstone
-        resolution is bounded to docids below the COMMITTED
-        ``next_docid`` (not ``doc_count``, which compaction lowers
-        below surviving docids):
-        a retry of a half-applied batch (crash after the docmap
-        segment dirs moved into place, before the manifest commit)
-        would otherwise resolve the batch's own just-ingested rows and
-        tombstone the very docids process_batch deterministically
-        re-assigns."""
+        a committed batch_id is skipped entirely, and a retry of a
+        half-applied batch (crash after its segment and docmap files
+        were written, before the manifest commit) never tombstones the
+        batch's own rows: tombstones resolve through the docmap of the
+        committed segments only."""
         state = self._load_state()
         if batch_id <= int(state.get("last_batch_id", -1)):
             return
-        spark = batch_df.sparkSession
-        self.delete_by_key(
-            spark, batch_df, key_cols,
-            max_docid=_next_docid(SegmentIndex(self.root, spark), state))
+        self.delete_by_key(batch_df.sparkSession, batch_df, key_cols)
         self.process_batch(batch_df, batch_id)
 
     def atomic_update(self, spark, ops_df: DataFrame, batch_id: int,
@@ -448,20 +410,17 @@ def compact_segments(idx: SegmentIndex, min_fill: float = 0.5,
     """Tiered-merge analogue: re-encode underfull segments into full
     ones (TieredMergePolicy.java:97-101 role). docids are global, so a
     merge packs the merged docs by docid into the fewest segments and
-    re-encodes them through the segment writer — no docID remapping
-    (unlike SegmentMerger.java:96-177, whose remap exists only because
-    Lucene docids are per-segment). Tombstoned docs inside the merged
-    segments are physically dropped (deletes applied at merge,
-    FreqProxTermsWriter applyDeletes role) and their tombstones
-    retired; their docids are never handed out again (``next_docid``).
-    Merged docs take segment ids of the segments they replace, so the
-    ``blooms/`` table (per-segment filters keyed by id) is dropped
-    before the rewrite: a segment without a filter is never excluded,
-    and ``build_segment_blooms`` rebuilds it. The rewrite ends in the
-    full form of :func:`..index.segments._derive_tables`. Searchers
-    opened before a compaction must be reopened after it: their listed
-    segment files may be gone or rewritten. Returns the segment count
-    after compaction."""
+    re-encodes them through the flush step under fresh segment ids — no
+    docID remapping (SegmentMerger.java:96-177 remaps only because
+    Lucene docids are per-segment) — then runs the full
+    :func:`..index.segments._derive_tables` and commits the new segments
+    in place of the replaced ones, which stay on disk through the next
+    commit: a searcher opened before keeps its view, a killed compaction
+    changes nothing, no Bloom filter of a retired id covers a fresh one.
+    Tombstoned docs in the merged segments are dropped (deletes applied
+    at merge, FreqProxTermsWriter applyDeletes role), their tombstones
+    retired after the commit and their docids never handed out again
+    (``next_docid``). Returns the segment count after compaction."""
     m = idx.manifest()
     dps = int(m["docs_per_segment"])
     seg_sizes = {
@@ -480,21 +439,17 @@ def compact_segments(idx: SegmentIndex, min_fill: float = 0.5,
         small = sorted({s for g in plan for s in g})
     else:
         small = sorted(s for s, n in seg_sizes.items() if n < dps * min_fill)
+    docmap = idx.docmap()
     if deletes is not None:
         # segments holding tombstoned docs must be rewritten too
-        docmap_all = idx.docmap()
         del_segs = sorted(
-            int(r["segment"]) for r in docmap_all
+            int(r["segment"]) for r in docmap
             .join(deletes, "docid", "left_semi")
             .select("segment").distinct().collect())
         small = sorted(set(small) | set(del_segs))
-    if len(small) <= 1 and deletes is None:
-        return len(seg_sizes)
-    if not small:
+    if not small or (len(small) == 1 and deletes is None):
         return len(seg_sizes)
 
-    stop = frozenset(m.get("stop_words", ()))
-    docmap = idx.docmap()
     if "content" not in docmap.columns:
         raise ValueError(
             "compaction needs document content: this index's docmap is "
@@ -509,52 +464,23 @@ def compact_segments(idx: SegmentIndex, min_fill: float = 0.5,
             merged_src.join(deletes, "docid", "left_semi")
             .select("docid").collect()]
         merged_src = merged_src.join(deletes, "docid", "left_anti")
-    # re-key: pack the merged docs into the FEWEST segments, reusing
-    # ids from `small` (never colliding with surviving full segments).
-    # The global row_number window is safe here: only underfull
-    # segments flow through it (bounded rows), not the whole index.
-    seg_ids = F.array(*[F.lit(s) for s in small])
-    w_ids = (
-        merged_src.withColumn(
-            "_rk", F.row_number().over(Window.orderBy("docid")) - 1)
-        .withColumn(
-            "segment",
-            F.element_at(seg_ids, (F.col("_rk") / dps).cast("int") + 1))
-        .drop("_rk")
-    )
-    shutil.rmtree(os.path.join(idx.root, "blooms"), ignore_errors=True)
-    tmp = os.path.join(idx.root, "blocks.compact.tmp")
-    shutil.rmtree(tmp, ignore_errors=True)  # a crashed run's staging
-    _write_analyzed(w_ids, tmp, tmp, stop, int(m["max_token_length"]))
-    # swap: drop old small segment dirs, move in compacted ones
-    for s in small:
-        p = os.path.join(idx.blocks_path, f"segment={s}")
-        if os.path.exists(p):
-            shutil.rmtree(p)
-    _move_in(tmp, idx.blocks_path)
-    # docmap segment column is stale for moved docs; rebuild it
-    new_map = docmap.drop("segment").join(
-        idx.summaries().select(F.col("first_docid").alias("docid"),
-                               F.col("segment")),
-        "docid",
-    )
-    new_map.repartition(F.col("segment")).write.mode("overwrite").partitionBy(
-        "segment").parquet(os.path.join(idx.root, "docmap.tmp"))
-    _swap(os.path.join(idx.root, "docmap.tmp"), idx.docmap_path)
-
-    if applied_del_ids:
-        # retire the tombstones that were physically applied; keep the
-        # rest (docs living in surviving segments)
-        remaining = sorted(
-            set(int(d) for d in idx.deleted_docids()) - set(applied_del_ids))
-        shutil.rmtree(idx.deletes_path)
-        if remaining:
-            append_deletes(idx.root, remaining)
+    # re-key: pack the merged docs into the FEWEST segments, under
+    # fresh ids. The global row_number window is safe here: only
+    # underfull segments flow through it (bounded rows), not the whole
+    # index.
+    rank = F.row_number().over(Window.orderBy("docid")) - 1
+    w_ids = merged_src.withColumn(
+        "segment", (rank / dps).cast("int") + F.lit(int(m["next_segment"])))
+    new = _flush_segments(w_ids, idx.root, frozenset(m["stop_words"]),
+                          int(m["max_token_length"]))
+    _list_segments(m, [s for s in m["segments"] if s not in small] + new)
+    m["updated_wall"] = round(time.time(), 3)
     # the refresh: docs/dict/stats + manifest counts recomputed from the
-    # rewritten blocks (Lucene: merged segments lose deletions and
+    # committed segments (Lucene: merged segments lose deletions and
     # docCount drops to numDocs; docs rows follow their new segment)
-    m.update(n_segments=max(idx.segment_files()) + 1,
-             updated_wall=round(time.time(), 3))
     _derive_tables(idx, m)
     _commit_manifest(idx.root, m)
-    return len(idx.segment_files())
+    if applied_del_ids:
+        _replace_deletes(idx.root, sorted(
+            set(idx.deleted_docids().tolist()) - set(applied_del_ids)))
+    return m["n_segments"]

@@ -150,9 +150,10 @@ def test_batch_marker_only_prunes_when_all_queries_agree(built):
 
 
 def test_compaction_drops_stale_blooms(spark, tmp_path):
-    """compact_segments reuses segment ids: a filter built before it
-    would exclude a reused id that now holds the term. It drops
-    blooms/, so search keeps every hit, as search_local does."""
+    """compact_segments writes merged docs under fresh segment ids and
+    leaves blooms/ in place: the filters of the retired ids never match
+    a fresh id, and a segment without a filter is never excluded, so
+    search keeps every hit, as search_local does."""
     from lucene_solr_spark.streaming import (IncrementalIndexer,
                                              compact_segments)
 

@@ -216,3 +216,14 @@ def test_v2_detects_manifest_stats_drift(spark, v2_root, tmp_path):
         json.dump(man, f)
     st = check_segment_index(SegmentIndex(root, spark), decode=False)
     assert st.failed() == {"manifest_sum_ttf": 1}
+
+
+def test_v2_detects_missing_listed_segment(spark, v2_root, tmp_path):
+    """The manifest lists a segment whose block directory is gone: no
+    block file and no summary rows for a listed id."""
+    root = _copy(v2_root, tmp_path, "v2_segments")
+    assert SegmentIndex(root, spark).manifest()["segments"] == [0, 1, 2, 3]
+    shutil.rmtree(os.path.join(root, "blocks", "segment=1"))
+    st = check_segment_index(SegmentIndex(root, spark), decode=False)
+    assert st.checks["manifest_segments"] == 2
+    assert not st.clean

@@ -106,14 +106,18 @@ def py_corpus():
 
 def _block_rows(idx):
     """Content-field block rows (kind=0 unqualified terms) and the
-    kind=1 doc rows, as sortable tuples."""
+    kind=1 doc rows, as sortable tuples; ``segment`` as its rank in the
+    manifest's segment list (a compaction writes under fresh ids)."""
+    rank = {s: i for i, s in enumerate(idx.manifest()["segments"])}
     rows = (idx.block_rows()
             .where((F.col("kind") == 1)
                    | ((F.col("kind") == 0)
                       & ~F.col("term").contains(FIELD_SEP)))
             .drop("repo", "path", "commit", "lang").collect())
-    return sorted(tuple(bytes(v) if isinstance(v, (bytes, bytearray))
-                        else v for v in r) for r in rows)
+    return sorted(tuple(rank[v] if c == "segment"
+                        else bytes(v) if isinstance(v, (bytes, bytearray))
+                        else v for c, v in r.asDict().items())
+                  for r in rows)
 
 
 def _queries(oracle):
