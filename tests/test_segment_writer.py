@@ -36,7 +36,13 @@ def _hits(rows):
 
 def _jobs_since(sc, mark):
     """[(description, [(tasks, shuffle_read_bytes)])] of the jobs newer
-    than ``mark``, from the application status store."""
+    than ``mark``, from the application status store. Skipped stages
+    are left out, and so are stages the store no longer holds: past
+    ``spark.ui.retainedStages`` it evicts by completion time, skipped
+    stages (no completion time) first, so a long session loses the
+    skipped stages of jobs this recent."""
+    from py4j.protocol import Py4JJavaError
+
     jsc = sc._jsc.sc()
     jsc.listenerBus().waitUntilEmpty()
     store = jsc.statusStore()
@@ -50,7 +56,12 @@ def _jobs_since(sc, mark):
         sids = j.stageIds()
         stages = []
         for k in range(sids.size()):
-            s = store.lastStageAttempt(int(sids.apply(k)))
+            try:
+                s = store.lastStageAttempt(int(sids.apply(k)))
+            except Py4JJavaError as e:
+                if "NoSuchElementException" not in str(e.java_exception):
+                    raise
+                continue
             if s.status().toString() != "SKIPPED":
                 stages.append((int(s.numTasks()),
                                int(s.shuffleReadBytes())))
