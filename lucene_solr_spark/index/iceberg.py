@@ -2,9 +2,11 @@
 substrate SURVEY §1/§2.1 names (the north rule's "Iceberg-backed index
 tables at 10^12-file scale").
 
-Design: the index is five logical tables (blocks, docmap, docs, dict,
-stats). The Parquet-directory layout (`SegmentIndex`) and this module
-are two PHYSICAL bindings of the same schema:
+Design: the index is three logical tables (blocks, docmap, dict); the
+docs surface and the collection stats derive from the blocks' summary
+rows and the engine manifest the same way in both bindings. The
+Parquet-directory layout (`SegmentIndex`) and this module are two
+PHYSICAL bindings of the same schema:
 
   * `publish_index(idx, namespace)` registers/overwrites each table of
     a built index as an Iceberg table via Spark's DataFrameWriterV2
@@ -24,8 +26,8 @@ are two PHYSICAL bindings of the same schema:
     `read_snapshot(namespace, snapshot_id)` uses `VERSION AS OF` /
     `option("snapshot-id", ...)`; `keep_last_n` maps onto
     `expire_snapshots`. The manifest JSON (engine metadata: stop
-    words, block size, docs_per_segment) rides as Iceberg table
-    properties on `stats`.
+    words, block size, docs_per_segment, collection stats) rides as
+    Iceberg table properties on `blocks`.
 
 Environment gating: this container ships no Iceberg runtime (no
 iceberg-spark jar, no pyiceberg), so `iceberg_available(spark)` is
@@ -47,9 +49,7 @@ from .segments import SegmentIndex
 INDEX_TABLES: dict[str, tuple[str, ...]] = {
     "blocks": ("segment",),
     "docmap": (),
-    "docs": (),
     "dict": (),
-    "stats": (),
 }
 
 
@@ -72,15 +72,13 @@ def publish_index(idx: SegmentIndex, namespace: str,
     """Publish a built directory-layout index as Iceberg tables
     ``<catalog>.<namespace>.<table>``. Partitioning mirrors the
     directory layout (blocks by segment); the engine manifest becomes
-    table properties on ``stats``."""
+    table properties on ``blocks``."""
     spark = idx.spark
     spark.sql(f"CREATE NAMESPACE IF NOT EXISTS {catalog}.{namespace}")
     raw = {
         "blocks": idx.block_rows(),  # all kinds
         "docmap": idx.docmap(),
-        "docs": spark.read.parquet(idx.root + "/docs"),
         "dict": idx.dict(),
-        "stats": spark.read.parquet(idx.root + "/stats"),
     }
     for name, df in raw.items():
         writer = df.writeTo(f"{catalog}.{namespace}.{name}")
@@ -90,7 +88,7 @@ def publish_index(idx: SegmentIndex, namespace: str,
     props = {f"lss.{k}": json.dumps(v) for k, v in idx.manifest().items()}
     sets = ", ".join(f"'{k}' = '{v}'" for k, v in props.items())
     spark.sql(
-        f"ALTER TABLE {catalog}.{namespace}.stats SET TBLPROPERTIES ({sets})")
+        f"ALTER TABLE {catalog}.{namespace}.blocks SET TBLPROPERTIES ({sets})")
 
 
 class IcebergSegmentIndex:
@@ -118,6 +116,10 @@ class IcebergSegmentIndex:
     def block_rows(self) -> DataFrame:
         return self._table("blocks")
 
+    def _block_rows(self, segments) -> DataFrame:
+        return self.block_rows().where(
+            F.col("segment").isin([int(s) for s in segments]))
+
     def blocks(self) -> DataFrame:
         return self.block_rows().where(F.col("kind") == 0)
 
@@ -135,14 +137,13 @@ class IcebergSegmentIndex:
     def docmap(self) -> DataFrame:
         return self._table("docmap")
 
-    def docs(self) -> DataFrame:
-        return self._table("docs").drop("batch")
+    # the docs surface (the blocks' summary rows) and the collection
+    # stats (the manifest's) derive as in the directory binding
+    docs = SegmentIndex.docs
+    stats = SegmentIndex.stats
 
     def dict(self) -> DataFrame:
         return self._table("dict")
-
-    def stats(self) -> dict:
-        return self._table("stats").collect()[0].asDict()
 
     def deletes(self) -> DataFrame | None:
         return None  # deletes compact before publish (or add a table)
@@ -154,7 +155,7 @@ class IcebergSegmentIndex:
 
     def manifest(self) -> dict:
         rows = self.spark.sql(
-            f"SHOW TBLPROPERTIES {self.catalog}.{self.namespace}.stats"
+            f"SHOW TBLPROPERTIES {self.catalog}.{self.namespace}.blocks"
         ).collect()
         out = {}
         for r in rows:

@@ -26,15 +26,22 @@ Build plan (content crosses one exchange, the docid range exchange):
            and writes its one file. Each task appends its checkpoint row
            after its rename; a killed build resumes by skipping
            checkpointed segments (the others' files are replaced).
-  stage 2  docs/ dict/ stats/ + the manifest's collection stats —
-           _derive_tables, the one derive step every index write
-           (build, streaming flush, compaction, split, addIndexes)
-           ends in: docs/ is a select over the kind=1 summary rows
-           (they carry the doc metadata, so no join), dict =
-           blocks.groupBy(term).agg (map-side partial agg; hot terms
-           reduce to one row per segment before the exchange, so no
-           salting needed here), stats/ and per-field stats = one
-           aggregate over the kind=1/kind=2 rows.
+  stage 2  dict/ + the manifest's collection stats — _derive_tables,
+           the one derive step every index write (build, streaming
+           flush, compaction, split, addIndexes) ends in: it applies
+           the write's segment diff (the added segments' rows minus the
+           removed ones') to the commit it starts from. dict = one
+           groupBy(term).agg over those block rows and the committed
+           dictionary (map-side partial agg; hot terms reduce to one
+           row per segment before the exchange, so no salting needed
+           here); collection stats = one aggregate over the
+           kind=1/kind=2 rows.
+
+The segment files are the index: per-document data is never copied
+out of them. ``docs()`` is a select over the live segments' kind=1
+summary rows (they carry the doc metadata, so no join) and ``stats()``
+reads the manifest. An older index's ``docs/`` and ``stats/``
+directories are ignored.
 
 Commits (SegmentInfos): ``manifest.json`` lists the live ``segments``,
 the id counter ``next_segment`` and the ``dict/<name>``; every write
@@ -82,7 +89,7 @@ BLOCKS_SCHEMA = (
     "first_docid long, last_docid long, sum_tf long, "
     "docids binary, tfs binary, norms binary, positions binary, "
     # doc metadata, populated on kind=1 summary rows only (null on
-    # block rows — RLE'd away by parquet): lets the docs table derive
+    # block rows — RLE'd away by parquet): lets the docs surface derive
     # straight from summaries with NO join back to the docmap
     "repo string, path string, commit string, lang string"
 )
@@ -463,17 +470,15 @@ class SegmentIndex:
             F.col("segment").isin(self.manifest()["segments"]))
 
     def docs(self) -> DataFrame:
-        df = self.spark.read.parquet(os.path.join(self.root, "docs"))
-        # streaming indexes partition docs by ingest batch (idempotent
-        # delta appends, streaming/incremental.py); batch builds don't
-        return df.drop("batch")
+        return summary_docs(self.block_rows())
 
     def dict(self) -> DataFrame:
         return self.spark.read.parquet(
             os.path.join(self.root, "dict", self.manifest()["dict"]))
 
     def stats(self) -> dict:
-        return self.spark.read.parquet(os.path.join(self.root, "stats")).collect()[0].asDict()
+        m = self.manifest()
+        return {"doc_count": int(m["doc_count"]), "sum_ttf": int(m["sum_ttf"])}
 
     def checkpoints(self) -> DataFrame:
         return self.spark.read.parquet(os.path.join(self.root, "checkpoints"))
@@ -501,6 +506,17 @@ class SegmentIndex:
         return _read_manifest(self.root)
 
 
+def summary_docs(rows: DataFrame) -> DataFrame:
+    """The docs surface of block rows (docid, repo/path/commit, lang,
+    segment, dl, norm, content_sha256): a select over their kind=1
+    summary rows, which carry the doc metadata."""
+    return rows.where(F.col("kind") == 1).select(
+        F.col("first_docid").alias("docid"), *PK, "lang", "segment",
+        F.col("n").alias("dl"),
+        F.conv(F.hex(F.col("norms")), 16, 10).cast("int").alias("norm"),
+        F.col("term").alias("content_sha256"))
+
+
 def _read_manifest(root: str) -> dict:
     """The one manifest read. A manifest written before segment ids were
     kept gets its live list from the ``blocks/segment=*`` directories,
@@ -523,21 +539,14 @@ def _list_segments(manifest: dict, segments) -> None:
         [int(manifest.get("next_segment", 0))] + [s + 1 for s in segs]))
 
 
-def _swap(stage: str, final: str) -> None:
-    """Replace directory ``final`` by ``stage`` — a name swap, so files
-    a commit point hardlinks are never rewritten in place."""
-    if os.path.exists(final):
-        shutil.rmtree(final)
-    os.rename(stage, final)
-
-
 def _move_in(stage: str, table_root: str, token=None) -> None:
     """Move a staged Spark output into ``table_root`` so that a re-run
     replaces what an earlier attempt left: partition dirs (``k=v``)
-    replace their namesakes; with a ``token``, flat part files are
-    renamed under a fixed-width tag of it (fixed width: no tag is a
-    prefix of another's) after every file carrying that tag is
-    removed."""
+    replace their namesakes by a name swap (files a commit point
+    hardlinks are never rewritten in place); with a ``token``, flat
+    part files are renamed under a fixed-width tag of it (fixed width:
+    no tag is a prefix of another's) after every file carrying that tag
+    is removed."""
     os.makedirs(table_root, exist_ok=True)
     tag = None
     if token is not None:
@@ -548,7 +557,10 @@ def _move_in(stage: str, table_root: str, token=None) -> None:
     for name in os.listdir(stage):
         src = os.path.join(stage, name)
         if "=" in name:
-            _swap(src, os.path.join(table_root, name))
+            final = os.path.join(table_root, name)
+            if os.path.exists(final):
+                shutil.rmtree(final)
+            os.rename(src, final)
         elif tag and name.endswith(".parquet"):
             os.rename(src, os.path.join(table_root, tag + name))
     shutil.rmtree(stage)
@@ -580,99 +592,71 @@ def _commit_manifest(root: str, manifest: dict) -> None:
             os.remove(p)  # the flat dict/ of an older manifest
 
 
-def _derive_tables(idx: SegmentIndex, manifest: dict, token=None,
-                  segments=None) -> dict:
-    """The one derive step: ``docs/``, ``dict/``, ``stats/`` and the
-    manifest's ``doc_count``/``sum_ttf``/``field_stats``/``next_docid``
-    follow from ``blocks/`` — Lucene recomputing SegmentInfos/FieldInfos
-    on flush, merge and addIndexes. Every index write ends here, with
-    ``manifest`` listing the segments it commits.
+def _derive_tables(idx: SegmentIndex, manifest: dict, added,
+                   removed=()) -> dict:
+    """The one derive step: ``dict/`` and the manifest's
+    ``doc_count``/``sum_ttf``/``field_stats``/``next_docid`` follow
+    from the block rows — Lucene recomputing SegmentInfos/FieldInfos on
+    flush, merge and addIndexes. Every index write ends here, with
+    ``manifest`` holding the commit the write starts from (empty for a
+    build or a split part) and listing the segments it commits.
 
-    Full form (``token=None``): recompute all of them from the block
-    rows of the manifest's segments — the build, each split part, the
-    compaction refresh.
-
-    Delta form: apply only ``segments``' rows on top of the committed
-    counts and dictionary ``manifest`` names, keyed by ``token`` (a
-    streaming batch id, an addIndexes fold token). The token's docs
-    files replace whatever an earlier attempt under it left, and a
-    re-run after a crash before the manifest commit merges into the same
-    committed base, so nothing counts twice. A ``docs/`` still in the
-    older ``batch=<id>`` partition layout gets the full form (rewritten
-    flat). The dictionary goes to a fresh ``dict/<name>``.
+    It applies the write's segment diff: the rows of the ``added``
+    segments count in and those of the ``removed`` ones count out, in
+    one aggregate over both sets' rows (with the committed dictionary's
+    rows for ``dict/``); terms whose df reaches 0 drop out. A re-run
+    after a crash before the manifest commit starts from the same
+    committed manifest, so nothing counts twice. The dictionary goes to
+    a fresh ``dict/<name>``.
 
     Collection stats are per field: content from the kind=1 rows,
     every extra field from its kind=2 per-(doc, field) rows —
     doc_count = docs with the field, sum_ttf = Σ dl
     (BM25Similarity.java:79). ``field_stats`` is kept when the
-    manifest lists ``fields``. ``next_docid`` = max docid + 1 (delta:
-    never below the committed value) is where the next flush or fold
-    numbers from — compaction leaves holes below ``doc_count``.
-    Returns ``manifest`` updated; the caller commits it
-    (:func:`_commit_manifest`)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    root = idx.root
-    docs_root = os.path.join(root, "docs")
-    delta = token is not None and not (
-        os.path.isdir(docs_root)
-        and any(n.startswith("batch=") for n in os.listdir(docs_root)))
-    rows = idx._block_rows(segments if delta else manifest["segments"])
+    manifest lists ``fields``. ``next_docid`` = max(the committed one,
+    the highest added docid + 1) is where the next flush or fold
+    numbers from: it never goes down, so a docid that compaction
+    dropped is never handed out again. Returns ``manifest`` updated;
+    the caller commits it (:func:`_commit_manifest`)."""
+    removed = [int(s) for s in removed]
+    rows = idx._block_rows([*added, *removed])
     kind = F.col("kind")
+    sign = F.when(F.col("segment").isin(removed), -1).otherwise(1)
 
-    # docs: a select over the summary rows, which carry the doc metadata
-    stage = os.path.join(root, "docs.tmp")
-    rows.where(kind == 1).select(
-        F.col("first_docid").alias("docid"), *PK, "lang", "segment",
-        F.col("n").alias("dl"),
-        F.conv(F.hex(F.col("norms")), 16, 10).cast("int").alias("norm"),
-        F.col("term").alias("content_sha256"),
-    ).write.mode("overwrite").parquet(stage)
-    if delta:
-        _move_in(stage, docs_root, token)
-    else:
-        _swap(stage, docs_root)
-
-    # dict: df = Σ n, ttf = Σ sum_tf per term over the block rows
-    post = rows.where(kind == 0).select("term", "n", "sum_tf")
-    if delta and manifest.get("dict") is not None:
-        # the committed dict joins as pre-aggregated rows
-        post = post.unionByName(idx.dict().select(
+    # dict: df = Σ n, ttf = Σ sum_tf per term over the signed block
+    # rows; the committed dict joins as pre-aggregated rows
+    post = rows.where(kind == 0).select(
+        "term", (F.col("n") * sign).alias("n"),
+        (F.col("sum_tf") * sign).alias("sum_tf"))
+    if manifest.get("dict") is not None:
+        post = post.unionByName(idx.spark.read.parquet(
+            os.path.join(idx.root, "dict", manifest["dict"])).select(
             "term", F.col("df").alias("n"), F.col("ttf").alias("sum_tf")))
     name = uuid.uuid4().hex
     post.groupBy("term").agg(
         F.sum("n").alias("df"), F.sum("sum_tf").alias("ttf")
-    ).write.parquet(os.path.join(root, "dict", name))
+    ).where(F.col("df") > 0).write.parquet(
+        os.path.join(idx.root, "dict", name))
     manifest["dict"] = name
 
-    # collection stats: one aggregate over the kind=1/kind=2 rows
-    prev = manifest if delta else {}
+    # collection stats: one signed aggregate over the kind=1/kind=2 rows
     acc = {f: [int(v["doc_count"]), int(v["sum_ttf"])]
-           for f, v in (prev.get("field_stats") or {}).items()}
-    acc["content"] = [int(prev.get("doc_count", 0)),
-                      int(prev.get("sum_ttf", 0))]
-    next_docid = int(prev.get("next_docid", 0))
+           for f, v in (manifest.get("field_stats") or {}).items()}
+    acc["content"] = [int(manifest.get("doc_count", 0)),
+                      int(manifest.get("sum_ttf", 0))]
+    next_docid = int(manifest.get("next_docid", 0))
     field = F.when(kind == 1, F.lit("content")).otherwise(F.col("term"))
     for r in (rows.where(kind > 0).groupBy(field.alias("field"))
-              .agg(F.count("*").alias("dc"), F.sum("n").alias("st"),
-                   F.max("first_docid").alias("hi"))
+              .agg(F.sum(sign).alias("dc"),
+                   F.sum(F.col("n") * sign).alias("st"),
+                   F.max(F.when(sign > 0, F.col("first_docid"))).alias("hi"))
               .collect()):
         a = acc.setdefault(r["field"], [0, 0])
         a[0] += int(r["dc"])
         a[1] += int(r["st"] or 0)
-        if r["field"] == "content":
+        if r["field"] == "content" and r["hi"] is not None:
             next_docid = max(next_docid, int(r["hi"]) + 1)
     doc_count, sum_ttf = acc["content"]
-    stage = os.path.join(root, "stats.tmp")
-    if os.path.exists(stage):
-        shutil.rmtree(stage)
-    os.makedirs(stage)
-    pq.write_table(
-        pa.table({"doc_count": pa.array([doc_count], pa.int64()),
-                  "sum_ttf": pa.array([sum_ttf], pa.int64())}),
-        os.path.join(stage, "part-0.parquet"))
-    _swap(stage, os.path.join(root, "stats"))
     manifest.update(doc_count=doc_count, sum_ttf=sum_ttf,
                     next_docid=next_docid)
     if manifest.get("fields"):
@@ -682,21 +666,19 @@ def _derive_tables(idx: SegmentIndex, manifest: dict, token=None,
 
 
 def _next_docid(idx: SegmentIndex, manifest: dict) -> int:
-    """The manifest's ``next_docid``; for a manifest written before it
-    was kept, the docmap's max docid + 1 (one read)."""
-    if "next_docid" in manifest:
-        return int(manifest["next_docid"])
-    if not os.path.exists(idx.docmap_path):
-        return 0
-    hi = idx.docmap().agg(F.max("docid")).collect()[0][0]
-    return 0 if hi is None else int(hi) + 1
+    """The manifest's ``next_docid``; a manifest written before it was
+    kept gets the docmap's max docid + 1 (one read), so the write's
+    derive step starts from it."""
+    if "next_docid" not in manifest:
+        hi = (idx.docmap().agg(F.max("docid")).collect()[0][0]
+              if os.path.exists(idx.docmap_path) else None)
+        manifest["next_docid"] = 0 if hi is None else int(hi) + 1
+    return int(manifest["next_docid"])
 
 
 #: table dirs a commit point pins (analyzed_spill/checkpoints are
 #: build-scoped lineage, not part of the readable commit)
-_SNAPSHOT_DIRS = ("blocks", "docmap", "docs", "dict", "stats", "deletes",
-                  "field_postings", "field_dict", "field_docs",
-                  "field_stats")
+_SNAPSHOT_DIRS = ("blocks", "docmap", "dict", "deletes")
 
 
 def create_snapshot(idx: SegmentIndex, note: str = "") -> int:
@@ -795,15 +777,15 @@ def add_indexes(dst_root: str, src_root: str,
     This is the 100-TB build topology: shard the corpus, build every
     shard's index in parallel (separate jobs, zero coordination), then
     addIndexes them — each fold is one copy task per source segment
-    (:func:`_write_segments`) plus the delta form of
-    :func:`_derive_tables`, never a global re-sort.
+    (:func:`_write_segments`) plus :func:`_derive_tables` over the
+    copied segments, never a global re-sort.
 
     Both indexes must share the analyzer config and field list (same
     contract as Lucene); collection stats, per-field ones included,
     add up. Tombstones carry over shifted. Returns the new manifest.
     Crash mid-fold: rerun with the same src. The source's segments take
-    fresh ids from the destination's ``next_segment``, the docs, docmap
-    and tombstone files are keyed by a token of (src, the destination's
+    fresh ids from the destination's ``next_segment``, the docmap and
+    tombstone files are keyed by a token of (src, the destination's
     committed ``next_docid``) and replaced as a whole, and the
     dictionary merges into the committed one under a fresh name, so the
     re-run leaves exactly what one fold leaves (the production seam is
@@ -845,10 +827,10 @@ def add_indexes(dst_root: str, src_root: str,
     _write_deletes(dst_root, (src_idx.deleted_docids() + D).tolist(),
                    f"{token}.parquet")
 
-    # -- docs/dict/stats delta + manifest (the commit) -----------------
+    # -- dict + manifest counts (the commit) ---------------------------
     _list_segments(man_d, man_d["segments"] + new)
     man_d["updated_wall"] = round(time.time(), 3)
-    _derive_tables(dst, man_d, token=token, segments=new)
+    _derive_tables(dst, man_d, new)
     _commit_manifest(dst_root, man_d)
     return man_d
 
@@ -863,15 +845,15 @@ def split_index(src_root: str, out_roots: list[str],
     copy-with-shift task per segment as :func:`add_indexes`, no posting
     re-encode; a never-compacted index gives dense 0..n-1 parts.
 
-    Per-part docs/dict/stats are RECOMPUTED from the part's blocks by
-    the full form of :func:`_derive_tables` (a standalone index owns its
-    own global term statistics — a split-then-search gives each shard
-    its local BM25 stats, exactly like independent Lucene indexes;
-    distributed-search stat merging is the shard-merge path in
-    search/sharded.py). Each tombstone goes to the part whose segments
-    hold its doc (the docmap's segment column): a compaction leaves
-    docid holes and interleaves merged segments' docid ranges, so no
-    docid range can route them.
+    Each part's dict and collection stats are RECOMPUTED from its
+    blocks by :func:`_derive_tables` from an empty commit (a standalone
+    index owns its own global term statistics — a split-then-search
+    gives each shard its local BM25 stats, exactly like independent
+    Lucene indexes; distributed-search stat merging is the shard-merge
+    path in search/sharded.py). Each tombstone goes to the part whose
+    segments hold its doc (the docmap's segment column): a compaction
+    leaves docid holes and interleaves merged segments' docid ranges,
+    so no docid range can route them.
     Inverse of add_indexes: ``add_indexes(split(A)...)`` reproduces
     A's results."""
     src_idx = SegmentIndex(src_root, spark)
@@ -918,12 +900,15 @@ def split_index(src_root: str, out_roots: list[str],
         part_dels = sorted(d - base for d, s in del_segs if s in seg_ids)
         if part_dels:
             append_deletes(out_root, part_dels)
-        pman = dict(man)
-        pman.pop("last_batch_id", None)
+        # the source's config over an empty commit
+        pman = {k: v for k, v in man.items() if k not in (
+            "doc_count", "sum_ttf", "field_stats", "next_docid", "dict",
+            "last_batch_id")}
         _list_segments(pman, [s - seg_off for s in seg_ids])
         pman.update(split_from=os.path.basename(os.path.normpath(src_root)),
                     updated_wall=round(time.time(), 3))
-        _derive_tables(SegmentIndex(out_root, spark), pman)
+        _derive_tables(SegmentIndex(out_root, spark), pman,
+                       pman["segments"])
         _commit_manifest(out_root, pman)
         outs.append(pman)
     return outs
@@ -1080,7 +1065,7 @@ def build_segment_index(
                           extra_fields),
         checkpoint_root=out_root)
 
-    # ---- stage 2: derived tables + manifest -----------------------------
+    # ---- stage 2: dictionary + manifest ---------------------------------
     manifest = {
         "format_version": 2,
         "docs_per_segment": docs_per_segment,
@@ -1091,7 +1076,7 @@ def build_segment_index(
     if extra_fields:
         manifest["fields"] = list(fields)
     _list_segments(manifest, range(n_segments))
-    _derive_tables(idx, manifest)
+    _derive_tables(idx, manifest, manifest["segments"])
     manifest["build_wall_sec"] = round(time.time() - t0, 3)
     _commit_manifest(out_root, manifest)
     shutil.rmtree(spill_path, ignore_errors=True)  # build-scoped spill
@@ -1113,7 +1098,7 @@ def pk_split_index(src_root: str, out_pass: str, out_fail: str,
     ``compact_segments`` later drops the masked docs physically and
     refreshes stats.
 
-    The two tombstone sets are written with Spark (one docs-table
+    The two tombstone sets are written with Spark (one summary-row
     scan each, no driver materialization), so the split is a pure
     metadata operation at any index size — the 100-TB variant of the
     reference's per-segment bitset build."""

@@ -45,7 +45,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..index import codec
-from ..index.segments import FIELD_SEP, SegmentIndex
+from ..index.segments import FIELD_SEP, SegmentIndex, summary_docs
 from . import bm25
 from .executor import _collect_terms, _str_in
 from .sloppy import _phrase_freqs
@@ -243,11 +243,10 @@ class SegmentSearcher:
         #: indexes (bit-stable historic path), {field: cache} otherwise
         self.caches = (self.scorer.cache if len(self.scorers) == 1
                        else {f: sc.cache for f, sc in self.scorers.items()})
-        # this commit's files (the next commit still keeps them), the
-        # dictionary and docmap listed once, as Spark lists a frame's files
+        # this commit's files (the next commit still keeps them) and
+        # dictionary listed once, as Spark lists a frame's files
         self.seg_files = index.segment_files()
         self.dict = index.dict()
-        self.docmap = index.docmap()
         # tombstones, masked inside each leaf BEFORE its top-k cut
         # (masking after the per-segment truncation would drop docs
         # that should be promoted); collection stats keep counting
@@ -292,9 +291,10 @@ class SegmentSearcher:
     @property
     def docs(self) -> DataFrame:
         """Stored-fields surface (docid, repo/path/commit, lang, dl,
-        norm, sha) — lets doc-joining components (highlight, collapse
-        keyed on metadata) run over this searcher too."""
-        return self.index.docs()
+        norm, sha) of this searcher's commit: the summary rows of the
+        segments it opened — lets doc-joining components (highlight,
+        collapse keyed on metadata) run over this searcher too."""
+        return summary_docs(self.index._block_rows(self.seg_files))
 
     def manifest(self) -> dict:
         return self.index.manifest()
@@ -695,11 +695,11 @@ class SegmentSearcher:
                     field: str = "content") -> list[tuple[str, int]]:
         """(term, tf) pairs of ONE document — the term-vectors read
         (TermVectorsReader role) the v2 codec serves by reading the
-        doc's OWN segment only: docmap resolves the segment, the read
+        doc's OWN segment only: ``docs`` resolves the segment, the read
         keeps only blocks whose docid range covers the doc, and only
         those decode (a few per term region). Feeds MoreLikeThis on
         the compressed path."""
-        seg_row = (self.docmap.where(F.col("docid") == docid)
+        seg_row = (self.docs.where(F.col("docid") == docid)
                    .select("segment").collect())
         if not seg_row:
             return []

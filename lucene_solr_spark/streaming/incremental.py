@@ -86,9 +86,9 @@ class IncrementalIndexer:
         ``next_segment``) are the batch's alone, so the segment writer
         puts its files straight into ``blocks/`` under fixed names: a
         retried batch replaces them instead of appending rows. The
-        commit, the delta form of :func:`..index.segments._derive_tables`
-        (O(batch + vocabulary)) plus the manifest write, adds to the
-        committed manifest the batch was numbered from, and records
+        commit, :func:`..index.segments._derive_tables` over the new
+        segments (O(batch + vocabulary)) plus the manifest write, adds to
+        the committed manifest the batch was numbered from, and records
         ``last_batch_id`` in the same atomic write: a retried
         half-applied batch never counts twice. Tombstoned docs keep
         counting until compaction (Lucene docCount-vs-liveDocs)."""
@@ -129,8 +129,7 @@ class IncrementalIndexer:
         _list_segments(state, state["segments"] + new)
         state.update(last_batch_id=int(batch_id),
                      updated_wall=round(time.time(), 3))
-        _derive_tables(SegmentIndex(self.root, spark), state,
-                       token=batch_id, segments=new)
+        _derive_tables(SegmentIndex(self.root, spark), state, new)
         _commit_manifest(self.root, state)
         if parent is not None:
             parent.unpersist()
@@ -162,8 +161,7 @@ class IncrementalIndexer:
         boolean expression over docid/repo/path/commit/lang/dl) is
         tombstoned. One filtered scan; postings drop at compaction."""
         idx = SegmentIndex(self.root, spark)
-        docs_root = os.path.join(self.root, "docs")
-        if not os.path.exists(docs_root):
+        if not os.path.exists(os.path.join(self.root, "manifest.json")):
             return 0
         hits = idx.docs().where(F.expr(predicate)).select("docid")
         dels = idx.deletes()
@@ -192,8 +190,7 @@ class IncrementalIndexer:
         w = Window.partitionBy("_sig").orderBy(*key_cols)
         rows = (rows.withColumn("_rn", F.row_number().over(w))
                 .where(F.col("_rn") == 1).drop("_rn"))
-        docs_root = os.path.join(self.root, "docs")
-        if os.path.exists(docs_root):
+        if os.path.exists(os.path.join(self.root, "manifest.json")):
             idx = SegmentIndex(self.root, batch_df.sparkSession)
             existing = idx.docs().select(
                 F.col("content_sha256").alias("_sig"))
@@ -412,11 +409,13 @@ def compact_segments(idx: SegmentIndex, min_fill: float = 0.5,
     merge packs the merged docs by docid into the fewest segments and
     re-encodes them through the flush step under fresh segment ids — no
     docID remapping (SegmentMerger.java:96-177 remaps only because
-    Lucene docids are per-segment) — then runs the full
-    :func:`..index.segments._derive_tables` and commits the new segments
-    in place of the replaced ones, which stay on disk through the next
-    commit: a searcher opened before keeps its view, a killed compaction
-    changes nothing, no Bloom filter of a retired id covers a fresh one.
+    Lucene docids are per-segment) — then
+    :func:`..index.segments._derive_tables` applies the diff (the new
+    segments' rows in, the replaced ones' out; no other segment is
+    read) and the commit lists the new segments in place of the
+    replaced ones, which stay on disk through the next commit: a
+    searcher opened before keeps its view, a killed compaction changes
+    nothing, no Bloom filter of a retired id covers a fresh one.
     Tombstoned docs in the merged segments are dropped (deletes applied
     at merge, FreqProxTermsWriter applyDeletes role), their tombstones
     retired after the commit and their docids never handed out again
@@ -475,10 +474,11 @@ def compact_segments(idx: SegmentIndex, min_fill: float = 0.5,
                           int(m["max_token_length"]))
     _list_segments(m, [s for s in m["segments"] if s not in small] + new)
     m["updated_wall"] = round(time.time(), 3)
-    # the refresh: docs/dict/stats + manifest counts recomputed from the
-    # committed segments (Lucene: merged segments lose deletions and
-    # docCount drops to numDocs; docs rows follow their new segment)
-    _derive_tables(idx, m)
+    # the refresh: dict + manifest counts move by the segment diff
+    # (Lucene: merged segments lose deletions and docCount drops to
+    # numDocs); an older manifest's next_docid is read first
+    _next_docid(idx, m)
+    _derive_tables(idx, m, new, small)
     _commit_manifest(idx.root, m)
     if applied_del_ids:
         _replace_deletes(idx.root, sorted(

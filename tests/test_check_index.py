@@ -87,8 +87,8 @@ def test_v2_clean(spark, v2_root):
     assert st.notes["maxDoc"] == N_DOCS
     for k in ("docmap_docid_unique", "docmap_docid_contiguous",
               "docs_count", "docs_keys_match_docmap",
-              "docs_norm_encoding", "dict_df_ttf", "stats_doc_count",
-              "stats_sum_ttf", "manifest_doc_count", "manifest_sum_ttf",
+              "docs_norm_encoding", "dict_df_ttf",
+              "manifest_doc_count", "manifest_sum_ttf",
               "block_ordinals_contiguous",
               "block_full_size", "block_docid_ranges_ascend",
               "decode_docids", "decode_tfs", "decode_norms",

@@ -20,8 +20,8 @@ def test_not_available_in_container(spark):
 
 
 #: the SegmentIndex accessors IcebergSegmentIndex must also expose
-NEEDED = ["blocks", "summaries", "segment_files", "docmap", "docs",
-          "dict", "stats", "deletes", "deleted_docids", "manifest"]
+NEEDED = ["blocks", "_block_rows", "summaries", "segment_files", "docmap",
+          "docs", "dict", "stats", "deletes", "deleted_docids", "manifest"]
 
 
 def test_accessor_surface_matches_segment_index():
@@ -30,8 +30,7 @@ def test_accessor_surface_matches_segment_index():
     for name in NEEDED:
         assert callable(getattr(IcebergSegmentIndex, name, None)), name
         assert callable(getattr(SegmentIndex, name, None)), name
-    assert set(INDEX_TABLES) == {"blocks", "docmap", "docs", "dict",
-                                 "stats"}
+    assert set(INDEX_TABLES) == {"blocks", "docmap", "dict"}
 
 
 class _SurfaceOnly:

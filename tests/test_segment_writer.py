@@ -223,3 +223,31 @@ def test_flush_after_compaction_never_reuses_docids(spark, tmp_path):
     st = check_segment_index(idx, decode=False)
     assert st.checks["manifest_next_docid"] == 0
     assert st.failed() == {"docmap_docid_contiguous": 1}
+
+
+def test_compacting_away_the_highest_docid_keeps_next_docid(spark, tmp_path):
+    """``next_docid`` never goes down: a compaction that drops the
+    highest docid leaves it in place, so the next flush does not hand
+    that docid to a new doc."""
+    pdf = (corpus_pandas(49)
+           .sort_values(["repo", "path", "commit"]).reset_index(drop=True))
+    cols = ["repo", "path", "commit", "lang", "content"]
+    root = str(tmp_path / "idx")
+    indexer = IncrementalIndexer(root, stop_words=ENGLISH_STOP_WORDS,
+                                 docs_per_segment=24)
+    indexer.process_batch(spark.createDataFrame(pdf.iloc[:48][cols]), 0)
+    append_deletes(root, [47])
+    compact_segments(SegmentIndex(root, spark), min_fill=2.0)
+    m = SegmentIndex(root, spark).manifest()
+    assert (m["doc_count"], m["next_docid"]) == (47, 48)
+    indexer.process_batch(spark.createDataFrame(pdf.iloc[48:][cols]), 1)
+
+    idx = SegmentIndex(root, spark)
+    got = idx.docmap().where(F.col("path") == pdf.iloc[48]["path"]).collect()
+    assert [r["docid"] for r in got] == [48]
+    ids = sorted(r["docid"] for r in idx.docmap().select("docid").collect())
+    assert ids == [*range(47), 48]
+    assert idx.manifest()["next_docid"] == 49
+    st = check_segment_index(idx, decode=False)
+    assert st.checks["manifest_next_docid"] == 0
+    assert st.failed() == {"docmap_docid_contiguous": 1}

@@ -2,7 +2,6 @@
 the same searchable state as a one-shot batch build (Lucene NRT
 reopen semantics), and tiered compaction must preserve results."""
 
-import glob
 import os
 
 import numpy as np
@@ -127,23 +126,26 @@ def test_tiered_compaction_preserves_results(spark, streamed):
     assert streamed.docs().count() == N_DOCS
 
 
-def test_older_docs_layout_flushes_clean(spark, tmp_path):
-    """Older streaming indexes keep docs under ``docs/batch=<id>/``;
-    the next flush rewrites docs flat from blocks, and the index
-    counts every doc once."""
+def test_leftover_docs_and_stats_dirs_are_ignored(spark, tmp_path):
+    """An index written when docs and collection stats were copied out
+    of the segment files carries ``docs/`` (a streaming one under
+    ``docs/batch=<id>/``) and ``stats/``; nothing reads them, so the
+    next flush counts every doc once and CheckIndex stays clean."""
     root = str(tmp_path / "idx")
     corpus = corpus_df(spark, 60, partitions=2)
     indexer = IncrementalIndexer(root, stop_words=ENGLISH_STOP_WORDS,
                                  docs_per_segment=24)
     indexer.process_batch(corpus.where("pmod(crc32(path), 2) = 0"), 0)
-    older = os.path.join(root, "docs", "batch=0")
-    os.makedirs(older)
-    for f in glob.glob(os.path.join(root, "docs", "*.parquet")):
-        os.rename(f, os.path.join(older, os.path.basename(f)))
+    idx = SegmentIndex(root, spark)
+    first = idx.stats()
+    idx.docs().write.parquet(os.path.join(root, "docs", "batch=0"))
+    spark.createDataFrame([first]).write.parquet(os.path.join(root, "stats"))
     indexer.process_batch(corpus.where("pmod(crc32(path), 2) = 1"), 1)
     idx = SegmentIndex(root, spark)
-    assert not glob.glob(os.path.join(root, "docs", "batch=*"))
+    assert 0 < first["doc_count"] < 60
     assert idx.manifest()["doc_count"] == idx.docs().count() == 60
+    assert idx.docs().select("docid").distinct().count() == 60
+    assert idx.stats()["doc_count"] == 60
     st = check_segment_index(idx, decode=False)
     assert st.clean, st.failed()
 

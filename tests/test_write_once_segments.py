@@ -153,6 +153,53 @@ def test_compaction_killed_before_commit_keeps_previous_commit(
     assert st.failed() == {"docmap_docid_contiguous": 1}
 
 
+def test_compaction_killed_after_derive_keeps_previous_commit(
+        spark, pdf, tmp_path, monkeypatch):
+    """A compaction killed after its derive step, before its commit:
+    the docs surface, the collection stats and CheckIndex still read
+    the previous commit, since nothing outside the commit moved."""
+    root = str(tmp_path / "idx")
+    _streamed(spark, pdf, root)
+    idx = SegmentIndex(root, spark)
+    manifest = idx.manifest()
+    docs = sorted(map(tuple, idx.docs().collect()))
+    assert len(docs) == 90
+
+    def crash(*_args, **_kwargs):
+        raise RuntimeError("killed before the commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(incremental, "_commit_manifest", crash)
+        with pytest.raises(RuntimeError):
+            compact_segments(SegmentIndex(root, spark), min_fill=1.0)
+
+    idx = SegmentIndex(root, spark)
+    assert idx.manifest() == manifest
+    assert sorted(map(tuple, idx.docs().collect())) == docs
+    assert idx.stats() == {"doc_count": 90, "sum_ttf": manifest["sum_ttf"]}
+    st = check_segment_index(idx, decode=False)
+    assert st.clean, st.failed()
+
+
+def test_searcher_docs_shows_its_own_commit(spark, pdf, tmp_path):
+    """A searcher's ``docs`` are the summary rows of the segments it
+    opened: after a flush it still lists its own commit's docs, and
+    ``term_vector`` still finds each doc's segment through them."""
+    root = str(tmp_path / "idx")
+    indexer = _streamed(spark, pdf, root)
+    searcher = SegmentSearcher(SegmentIndex(root, spark))
+    vectors = _vectors(searcher)
+
+    indexer.process_batch(spark.createDataFrame(pdf.iloc[90:]), 2)
+
+    assert SegmentIndex(root, spark).docs().count() == 96
+    docs = searcher.docs
+    assert searcher.doc_count == docs.count() == 90
+    assert ({r[0] for r in docs.select("segment").distinct().collect()}
+            == set(searcher.seg_files))
+    assert _vectors(searcher) == vectors
+
+
 def test_commit_deletes_what_two_commits_do_not_list(spark, pdf, tmp_path):
     root = str(tmp_path / "idx")
     indexer = IncrementalIndexer(root, stop_words=ENGLISH_STOP_WORDS,
