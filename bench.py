@@ -213,6 +213,9 @@ def bench_engine(spark) -> tuple[dict[str, float], dict[str, float]]:
         wand = SegmentSearcher(segidx, cache=True)
         wq = BooleanQuery.of(should=[TermQuery("int"), TermQuery("return"),
                                      TermQuery("class")])
+        # a hot routed call: search serves the query in the driver
+        # when its postings fit the serving budget (no Spark job),
+        # else it runs the distributed leaf
         wand.search(wq, 10)  # warm
         t0 = time.time()
         wand.search(wq, 10)

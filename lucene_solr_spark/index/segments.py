@@ -66,6 +66,7 @@ merge SegmentMerger.java:96-177, commit SegmentInfos/IndexCommit.
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import hashlib
 import json
@@ -343,12 +344,20 @@ def _write_segments(spark: SparkSession, blocks_dir: str, jobs, produce,
                         round(docs.size / wall, 1) if wall > 0 else 0.0))
                 yield pd.DataFrame({"segment": [seg]})
 
-    sc = spark.sparkContext
-    prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(f"write {len(jobs)} segment files")
-    try:
+    with job_description(spark, f"write {len(jobs)} segment files"):
         spark.range(len(jobs), numPartitions=len(jobs)).mapInPandas(
             task, "segment int").collect()
+
+
+@contextlib.contextmanager
+def job_description(spark, text: str):
+    """Name the Spark jobs this thread starts inside the block
+    (``setJobDescription``), then restore the previous description."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(text)
+    try:
+        yield
     finally:
         sc.setLocalProperty("spark.job.description", prev)
 

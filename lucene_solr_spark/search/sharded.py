@@ -24,9 +24,12 @@ mode bit-identical end-to-end.
 
 Scale shape: the stats round is one tiny dictionary lookup per shard
 (bucket-pruned scan or driver cache hit); each shard runs the normal
-one-job compressed-path leaf; the merge touches at most segments *
-queries * k rows per shard on the driver. Shards never talk to each
-other — the same topology as SolrCloud's scatter-gather.
+one-job compressed-path leaf for a batch, and for a single query the
+same rendering choice as ``SegmentSearcher.search`` (driver-local when
+the shard's own postings of the query fit its serving budget); the
+merge touches at most segments * queries * k rows per shard on the
+driver. Shards never talk to each other — the same topology as
+SolrCloud's scatter-gather.
 """
 
 from __future__ import annotations
@@ -37,7 +40,7 @@ from pyspark.sql import SparkSession
 from ..index.segments import SegmentIndex, _next_docid
 from . import bm25
 from .queries import Query, TopDoc
-from .wand import SegmentSearcher, _hits_by_qid, _merge_topk
+from .wand import SegmentSearcher, _hits_by_qid, _merge_topk, _top_docs
 
 
 class ShardedSearcher:
@@ -91,29 +94,24 @@ class ShardedSearcher:
             out |= SegmentSearcher._general_terms(s.rewrite(q))
         return out
 
-    def _global_dfs(self, q: Query) -> dict[str, int]:
-        """Per-term global docFreq = Σ shard docFreq (the stats
-        round-trip; ExactStatsCache.returnLocalStats → merge)."""
-        terms = self._query_terms(q)
+    def _exact_stats(self, terms: set[str]) -> tuple:
+        """(global term → docFreq = Σ shard docFreq, each shard's own
+        term → docFreq): the stats round-trip
+        (ExactStatsCache.returnLocalStats → merge)."""
+        own = [s._stats(terms) for s in self.shards]
         out: dict[str, int] = {}
-        for s in self.shards:
-            for t, df in s._stats(terms).items():
+        for dfs in own:
+            for t, df in dfs.items():
                 out[t] = out.get(t, 0) + df
-        return out
+        return out, own
 
-    def _topk(self, queries: list[Query], k: int,
-              stats: dict[str, int] | None) -> tuple:
-        """Every shard's leaf rows, docids shifted to global ids, merged
-        once: (qidx, global docid, score). Global stats thread through
-        each searcher's stats override — never by mutating the shared
-        _df_map, which is both non-reentrant and the multi-term rewrite
-        dictionary."""
-        parts = [s._leaf_arrays(queries, k, stats) for s in self.shards]
-        return _merge_topk(
-            np.concatenate([p[0] for p in parts]),
-            np.concatenate([p[1] + off
-                            for p, off in zip(parts, self.offsets)]),
-            np.concatenate([p[2] for p in parts]), k)
+    def _global_rows(self, parts: list) -> tuple:
+        """Every shard's leaf rows (qidx, docid, score), docids shifted
+        to global ids: one TopDocs.merge input."""
+        return (np.concatenate([p[0] for p in parts]),
+                np.concatenate([p[1] + off
+                                for p, off in zip(parts, self.offsets)]),
+                np.concatenate([p[2] for p in parts]))
 
     def search_many(self, queries: dict[str, Query], k: int = 10
                     ) -> dict[str, list[TopDoc]]:
@@ -121,20 +119,29 @@ class ShardedSearcher:
         shard-side leaf amortizes decodes across the whole batch),
         exact-stats mode resolves the batch's full term set in one
         global round, and one driver merge with the TopDocs.merge
-        comparator."""
+        comparator. Global stats thread through each searcher's stats
+        override — never by mutating the shared _df_map, which is both
+        non-reentrant and the multi-term rewrite dictionary."""
+        qs = list(queries.values())
         stats = None
         if self.stats_mode == "exact":
             term_set: set[str] = set()
-            for q in queries.values():
+            for q in qs:
                 term_set |= self._query_terms(q)
-            stats = {}
-            for s in self.shards:
-                for t, df in s._stats(term_set).items():
-                    stats[t] = stats.get(t, 0) + df
+            stats, _own = self._exact_stats(term_set)
+        parts = [s._leaf_arrays(qs, k, stats) for s in self.shards]
         return _hits_by_qid(list(queries),
-                            self._topk(list(queries.values()), k, stats))
+                            _merge_topk(*self._global_rows(parts), k))
 
     def search(self, q: Query, k: int = 10) -> list[TopDoc]:
-        stats = self._global_dfs(q) if self.stats_mode == "exact" else None
-        _qi, d, sc = self._topk([q], k, stats)
-        return [TopDoc(di, si) for di, si in zip(d.tolist(), sc.tolist())]
+        """One query over every shard, each rendered as
+        ``SegmentSearcher.search`` renders it: driver-local when the
+        shard's OWN postings of the query fit its serving budget
+        (global stats only set the weights), else one job."""
+        if self.stats_mode == "exact":
+            stats, own = self._exact_stats(self._query_terms(q))
+            parts = [s._query_arrays(q, k, stats, dfs)
+                     for s, dfs in zip(self.shards, own)]
+        else:
+            parts = [s._query_arrays(q, k) for s in self.shards]
+        return _top_docs(self._global_rows(parts), k)

@@ -14,7 +14,8 @@ Spark), and ``_SegGroups`` decodes them in one vectorized pass into
 per-term arrays (docids, unit scores, tfs, norms; positions on first
 use). Two renderings read through them.
 
-Distributed rendering (``search`` / ``search_many`` / ``search_df``):
+Distributed rendering (``search_many`` / ``search_df``, and ``search``
+for a query whose postings exceed the serving budget):
 
   * leaves = segments (contiguous docID ranges). After Bloom
     exclusion, one ``mapInPandas`` task per live segment — no exchange
@@ -27,10 +28,13 @@ Distributed rendering (``search`` / ``search_many`` / ``search_df``):
     ``search_df`` is the lazy DataFrame form (``orderBy.limit(k)``)
     that components join against.
 
-Driver-local rendering (``search_local``): a bytes-capped per-term
+Driver-local rendering (``search`` for a query whose postings fit the
+serving budget, ``search_local`` always): a bytes-capped per-term
 cache filled per segment by the same reader and ``_SegGroups``, the
 same ``_segment_topk`` per segment, and the same ``_merge_topk`` —
-no Spark job, cold or hot.
+no Spark job, cold or hot. ``search`` picks its rendering per query:
+Σ df of the compiled tree's terms × the decoded bytes per posting
+(``POSTING_BYTES``) against ``LOCAL_CACHE_BYTES``.
 
 Scoring float discipline: per-term float32 scores, per-doc sums
 accumulated in float64 and cast to float32 once (WANDScorer.java:445-453).
@@ -45,7 +49,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..index import codec
-from ..index.segments import FIELD_SEP, SegmentIndex, summary_docs
+from ..index.segments import (FIELD_SEP, SegmentIndex, job_description,
+                               summary_docs)
 from . import bm25
 from .executor import _collect_terms, _str_in
 from .sloppy import _phrase_freqs
@@ -199,12 +204,19 @@ class SegmentSearcher:
 
     * distributed — one plan (``_plan``: Bloom segment exclusion, one
       ``segment_eval_topk`` task per live segment reading its own
-      files); ``search``/``search_many`` collect its rows in one job
-      and merge them in the driver (``_merge_topk``), ``search_df``
-      keeps them as a DataFrame ordered by ``orderBy.limit(k)``;
-    * driver-local — ``search_local`` reads a bytes-capped per-term
-      cache filled through the same reader and merges across
-      segments with the same ``_merge_topk``, with no Spark job.
+      files); ``search_many`` collects its rows in one job and merges
+      them in the driver (``_merge_topk``), ``search_df`` keeps them
+      as a DataFrame ordered by ``orderBy.limit(k)``;
+    * driver-local — a bytes-capped per-term cache filled through the
+      same reader, merged across segments with the same
+      ``_merge_topk``, with no Spark job.
+
+    ``search`` serves a query driver-locally when the postings its
+    tree reads fit the serving budget (``LOCAL_CACHE_BYTES``) and
+    distributed otherwise (``_query_arrays``); ``search_local`` is the
+    forced driver-local form. Batches (``search_many``) and the
+    lazy/all-hits forms (``search_df``, ``search_after``) always run
+    distributed.
 
     ``cache=True`` only loads the dictionary's term → df map into the
     driver (nothing is persisted).
@@ -281,12 +293,17 @@ class SegmentSearcher:
         """Swap one field's scorer (the distributed ExactStatsCache
         hook — sharded.py installs a GLOBAL-collection-stats scorer so
         every shard scores with corpus-wide avgdl/docCount), keeping
-        the per-field cache map consistent."""
+        the per-field cache map consistent. Cached plans carry weights,
+        and serving-cache entries unit scores, of the old scorer, so
+        both caches are dropped."""
         self.scorers[field] = scorer
         if field == "content":
             self.scorer = scorer
         self.caches = (self.scorer.cache if len(self.scorers) == 1
                        else {f: sc.cache for f, sc in self.scorers.items()})
+        self._batch_plan_cache.clear()
+        self._local_cache = collections.OrderedDict()
+        self._local_cache_bytes = 0
 
     @property
     def docs(self) -> DataFrame:
@@ -574,8 +591,9 @@ class SegmentSearcher:
 
     # -- one evaluator: plan, leaf, one driver merge ---------------------
     def _compile(self, queries: list[Query],
-                 stats: dict[str, int] | None = None) -> list:
-        """Rewrite → term stats → compiled tree, one per query. The
+                 stats: dict[str, int] | None = None) -> tuple:
+        """Rewrite → term stats → compiled tree, one per query; returns
+        (trees, the term → df map they were compiled with). The
         batch's term set resolves in ONE stats lookup; ``stats`` is the
         optional (term → df) override of the distributed ExactStatsCache
         hook (search/sharded.py injects GLOBAL term stats so a shard
@@ -586,12 +604,11 @@ class SegmentSearcher:
             for q in queries:
                 term_set |= self._general_terms(q)
             stats = self._stats(term_set)
-        return [self._compile_general(q, 1.0, stats) for q in queries]
+        return [self._compile_general(q, 1.0, stats) for q in queries], stats
 
-    def _plan(self, queries: list[Query], k: int | None,
-              stats: dict[str, int] | None = None) -> DataFrame | None:
+    def _plan(self, trees: list, k: int | None) -> DataFrame | None:
         """Per-segment top-k rows (qidx, docid, score) of a batch of
-        queries — None when no query can match anything.
+        compiled trees — None when no tree can match anything.
 
         A segment is dropped when EVERY query's Bloom sets exclude it.
         Each live segment is one :func:`segment_eval_topk` task (a
@@ -599,7 +616,6 @@ class SegmentSearcher:
         reads ONLY its block rows of the trees' terms, with positions
         only for positional trees and norm rows only for cross-field
         spans (:func:`_read_segment`)."""
-        trees = self._compile(queries, stats)
         live = [t for t in trees if t[0] != "none"]
         if not live:
             return None
@@ -640,9 +656,12 @@ class SegmentSearcher:
         ONE global ``orderBy(score desc, docid asc).limit(k)`` =
         TopDocs.merge (TopDocs.java:188-230). ``k=None`` is all-hits
         mode (collapse/rescore two-phase components): every match, no
-        truncation."""
+        truncation. Jobs the call itself starts (dictionary lookups of
+        an uncached searcher) carry its job description; the frame's
+        own job runs when the caller collects it."""
         kk = None if k is None else int(k)
-        per_seg = self._plan([q], kk)
+        with job_description(self.index.spark, "search_df: 1 query"):
+            per_seg = self._plan(self._compile([q])[0], kk)
         if per_seg is None:
             return self.index.spark.createDataFrame(
                 [], "docid long, score float")
@@ -651,31 +670,62 @@ class SegmentSearcher:
         return ordered if kk is None else ordered.limit(kk)
 
     def _leaf_arrays(self, queries: list[Query], k: int | None,
-                     stats: dict[str, int] | None = None) -> tuple:
+                     stats: dict[str, int] | None = None,
+                     trees: list | None = None,
+                     call: str = "search_many") -> tuple:
         """The batch's per-segment top-k rows as numpy arrays (qidx,
         docid, score), collected from :meth:`_plan` with ``toArrow`` —
-        one Spark job, no exchange. Plans are cached per (queries, k)
-        unless ``stats`` overrides the term stats (see :meth:`_compile`)."""
+        one Spark job, no exchange, described as ``call`` and the
+        query count. Plans are cached per (queries, k) unless ``stats``
+        overrides the term stats (see :meth:`_compile`); ``trees`` are
+        the queries already compiled."""
         k = None if k is None else int(k)
         key = (tuple(queries), k) if stats is None else None
-        try:
-            plan = self._batch_plan_cache.pop(key, None)
-        except TypeError:  # unhashable custom query: no cache
-            key = plan = None
-        if plan is None:
-            plan = self._plan(queries, k, stats)
-            if plan is None:  # no query can match: no rows
-                return _segment_topk([], None, None, k, None)
-        if key is not None:  # (re)insert as the most recent, LRU 32
-            self._batch_plan_cache[key] = plan
-            while len(self._batch_plan_cache) > 32:
-                self._batch_plan_cache.popitem(last=False)
-        t = plan.toArrow()
+        n = len(queries)
+        with job_description(self.index.spark,
+                             f"{call}: {n} {'query' if n == 1 else 'queries'}"):
+            try:
+                plan = self._batch_plan_cache.pop(key, None)
+            except TypeError:  # unhashable custom query: no cache
+                key = plan = None
+            if plan is None:
+                plan = self._plan(trees or self._compile(queries, stats)[0], k)
+                if plan is None:  # no query can match: no rows
+                    return _segment_topk([], None, None, k, None)
+            if key is not None:  # (re)insert as the most recent, LRU 32
+                self._batch_plan_cache[key] = plan
+                while len(self._batch_plan_cache) > 32:
+                    self._batch_plan_cache.popitem(last=False)
+            t = plan.toArrow()
         return tuple(t.column(c).to_numpy() for c in ("qidx", "docid", "score"))
 
+    #: driver bytes per posting of a serving-cache entry (:func:`_own`:
+    #: int64 docid, float32 unit score, int64 tf, int64 norm)
+    POSTING_BYTES = 28
+
+    def _query_arrays(self, q: Query, k: int | None,
+                      stats: dict[str, int] | None = None,
+                      dfs: dict[str, int] | None = None) -> tuple:
+        """One query's per-segment top-k rows (qidx, docid, score),
+        rendered by its size: when the postings its compiled tree reads
+        (Σ df × POSTING_BYTES) fit the serving budget
+        (LOCAL_CACHE_BYTES), in the driver (:meth:`_local_arrays`, no
+        Spark job); otherwise by the distributed leaf
+        (:meth:`_leaf_arrays`, one job). The query compiles once and the
+        df values come from its compile's stats; under a ``stats``
+        override (see :meth:`_compile`) ``dfs`` gives this searcher's
+        own term → df, the postings it would read."""
+        trees, fetched = self._compile([q], stats)
+        own = fetched if dfs is None else dfs
+        postings = sum(own.get(t, 0) for t in _tree_terms(trees[0]))
+        if postings * self.POSTING_BYTES <= self.LOCAL_CACHE_BYTES:
+            return self._local_arrays(trees[0], k)
+        return self._leaf_arrays([q], k, stats, trees, call="search")
+
     def search(self, q: Query, k: int = 10) -> list[TopDoc]:
-        _qi, d, s = _merge_topk(*self._leaf_arrays([q], k), k)
-        return [TopDoc(di, si) for di, si in zip(d.tolist(), s.tolist())]
+        """Top-k of one query: driver-local when its postings fit the
+        serving budget, else one distributed job (:meth:`_query_arrays`)."""
+        return _top_docs(self._query_arrays(q, k), k)
 
     def search_after(self, q: Query, after: TopDoc,
                      k: int = 10) -> list[TopDoc]:
@@ -687,8 +737,9 @@ class SegmentSearcher:
         sv = float(np.float32(after.score))
         pred = ((F.col("score") < sv)
                 | ((F.col("score") == sv) & (F.col("docid") > after.docid)))
-        rows = (scored.where(pred)
-                .orderBy(F.desc("score"), F.asc("docid")).limit(k).collect())
+        with job_description(self.index.spark, "search_after: 1 query"):
+            rows = (scored.where(pred).orderBy(F.desc("score"), F.asc("docid"))
+                    .limit(k).collect())
         return [TopDoc(r["docid"], r["score"]) for r in rows]
 
     def term_vector(self, docid: int,
@@ -727,7 +778,9 @@ class SegmentSearcher:
     #: same way — an unbounded cache would accumulate the postings of
     #: every term ever queried for the searcher's lifetime). Each term's
     #: decoded arrays are its own copies and die with it on eviction;
-    #: evict-and-refetch is one filtered read per segment.
+    #: evict-and-refetch is one filtered read per segment. ``search``
+    #: serves a query in the driver only when its decoded postings
+    #: (df × POSTING_BYTES) fit this budget.
     LOCAL_CACHE_BYTES = 256 << 20
 
     def _local_tbs(self, qterms: set[str]) -> dict:
@@ -788,34 +841,38 @@ class SegmentSearcher:
             self._local_norm_cache[field] = nm
         return nm
 
+    def _local_arrays(self, tree, k: int | None) -> tuple:
+        """One compiled tree's per-segment top-k rows (qidx, docid,
+        score), evaluated in the driver over the serving cache
+        (:meth:`_local_tbs`) — no Spark job, cold or hot. The same
+        decoded-segment structure (:class:`_SegGroups`) and per-segment
+        step (:func:`_segment_topk`) the distributed leaf runs, so the
+        rows are the leaf's rows."""
+        parts = [_segment_topk([], None, None, k, None)]
+        if tree[0] != "none":
+            per_term = self._local_tbs(_tree_terms(tree))
+            norm_maps = {f: self._local_norms(f)
+                         for f in _tree_norm_fields(tree)}
+            get_norms = norm_maps.get if norm_maps else None
+            deleted = self.deleted if self.deleted.size else None
+            for seg in {s for m in per_term.values() for s in m}:
+                seg_terms = {t: m[seg] for t, m in per_term.items()
+                             if seg in m}
+                parts.append(_segment_topk([tree], seg_terms.get,
+                                           self.caches, k, deleted,
+                                           get_norms))
+        return tuple(map(np.concatenate, zip(*parts)))
+
     def search_local(self, q: Query, k: int = 10) -> list[TopDoc]:
-        """Single-query SERVING path: evaluate entirely in the driver
-        over cached decoded postings — no Spark job once the query's
-        terms are hot. This is the latency answer to the per-job floor
-        of the distributed paths (a Solr core serving reads from its
-        own block cache the same way); the distributed paths remain
-        the throughput/batch answer. Rank/score-identical: the same
-        compile step (:meth:`_compile`), decoded-segment structure
-        (:class:`_SegGroups`) and per-segment evaluation
-        (:func:`_segment_topk`) the leaf runs, and the same merge
+        """The forced driver-local form of :meth:`search`: evaluate in
+        the driver over the serving cache whatever the query's size —
+        no Spark job, cold or hot (a Solr core serves from its own
+        block cache the same way). ``search`` takes this rendering
+        whenever the query's postings fit the serving budget.
+        Rank/score-identical to the distributed leaf: the same compile
+        step (:meth:`_compile`), :meth:`_local_arrays` and merge
         (:func:`_merge_topk`)."""
-        tree = self._compile([q])[0]
-        if tree[0] == "none":
-            return []
-        per_term = self._local_tbs(_tree_terms(tree))
-        norm_maps = {f: self._local_norms(f)
-                     for f in _tree_norm_fields(tree)}
-        get_norms = norm_maps.get if norm_maps else None
-        deleted = self.deleted if self.deleted.size else None
-        parts = []
-        for seg in {s for m in per_term.values() for s in m}:
-            seg_terms = {t: m[seg] for t, m in per_term.items() if seg in m}
-            parts.append(_segment_topk([tree], seg_terms.get, self.caches,
-                                       k, deleted, get_norms))
-        if not parts:
-            return []
-        _qi, d, s = _merge_topk(*map(np.concatenate, zip(*parts)), k)
-        return [TopDoc(di, si) for di, si in zip(d.tolist(), s.tolist())]
+        return _top_docs(self._local_arrays(self._compile([q])[0][0], k), k)
 
     # -- batched execution ---------------------------------------------
     def search_many(self, queries: dict[str, Query], k: int = 10,
@@ -1009,6 +1066,13 @@ def _merge_topk(qidx: np.ndarray, docid: np.ndarray, score: np.ndarray,
         keep = np.arange(qidx.size) - np.searchsorted(qidx, qidx) < k
         qidx, docid, score = qidx[keep], docid[keep], score[keep]
     return qidx, docid, score
+
+
+def _top_docs(rows: tuple, k: int | None) -> list[TopDoc]:
+    """[TopDoc] of one query's per-leaf rows (qidx, docid, score),
+    merged by :func:`_merge_topk`."""
+    _qi, d, s = _merge_topk(*rows, k)
+    return [TopDoc(di, si) for di, si in zip(d.tolist(), s.tolist())]
 
 
 def _hits_by_qid(qids: list[str], merged: tuple) -> dict[str, list[TopDoc]]:

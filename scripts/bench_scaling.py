@@ -13,13 +13,7 @@ can't change master in-process), measuring:
 
 Prints one JSON object and appends a row to BENCH_SCALING.json.
 
-Default pair is local[4] vs local[16], NOT 8 vs 32: a pure-CPU probe
-(scripts/probe_host_scaling.py — pinned numpy workers, no Spark/JVM)
-shows this box scales ~1.0 up to 16 workers and only ~0.62 from 8→32,
-i.e. the 32 advertised CPUs back roughly 16 cores' worth of delivered
-cycles/bandwidth. 4→16 is the faithful "N vs 4N cores" rendering the
-driver instruction permits; the 8→32 pair is kept as saturation
-evidence alongside the probe numbers (both embedded in the output).
+Default pair is local[4] vs local[16], the "N vs 4N cores" rendering.
 
 Usage:  python scripts/bench_scaling.py [--docs 60000] [--queries 2048]
         [--low 4] [--high 16] [--runs 1]
@@ -280,29 +274,6 @@ def main() -> int:
                       for k in rs[0]}
     lo, hi = med(lo_rs), med(hi_rs)
 
-    # host-capacity probe at the same widths: what efficiency could a
-    # PERFECT job reach on this box? Pure pinned numpy workers, no
-    # Spark/JVM — the job's efficiency should be read against this
-    # ceiling (a shared VM does not add memory bandwidth with cores
-    # the way a real N→4N cluster does).
-    probe = None
-    try:
-        sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-        from probe_host_scaling import measure as _probe_measure
-
-        pe = []
-        for _ in range(2):
-            plo = _probe_measure(args.low, 6.0)
-            phi = _probe_measure(args.high, 6.0)
-            pe.append((phi / plo) / ratio)
-        probe = {
-            "kernel": "pinned numpy hash+sort, no Spark/JVM",
-            "pair_efficiencies": [round(x, 3) for x in pe],
-            "host_ceiling": round(statistics.median(pe), 3),
-        }
-    except Exception as e:  # pragma: no cover - diagnostics only
-        probe = {"error": str(e)}
-
     result = {
         "protocol": f"local[{args.low}] vs local[{args.high}], same input "
                     f"({args.docs} docs), fresh JVM per level, "
@@ -317,7 +288,6 @@ def main() -> int:
         "scaling_efficiency_build": round(statistics.median(pair_eff_b), 3),
         "scaling_efficiency_query": round(statistics.median(pair_eff_q), 3),
         "target": 0.8,
-        "host_capacity_probe": probe,
     }
     print(json.dumps(result, indent=1))
     with open(args.out, "w") as f:

@@ -1,7 +1,8 @@
 """Codec-v2 segment index + compiled-tree search: rank/score identity
 vs the pure-Python oracle (SURVEY §4.2 oracle) for solo, batched and
-driver-local evaluation, the single-query plan shape, and
-kill-and-resume resumability (BASELINE.md resumability row)."""
+driver-local evaluation on both sides of the serving budget, the
+single-query plan shape, and kill-and-resume resumability
+(BASELINE.md resumability row)."""
 
 import numpy as np
 import pytest
@@ -10,7 +11,7 @@ from lucene_solr_spark.analysis import ENGLISH_STOP_WORDS, StandardAnalyzer
 from lucene_solr_spark.corpus import corpus_df, corpus_pandas
 from lucene_solr_spark.index.segments import SegmentIndex, build_segment_index
 from lucene_solr_spark.oracle import OracleIndex
-from lucene_solr_spark.search.queries import BooleanQuery, TermQuery
+from lucene_solr_spark.search.queries import BooleanQuery, TermQuery, TopDoc
 from lucene_solr_spark.search.wand import SegmentSearcher
 
 N_DOCS = 240
@@ -35,6 +36,26 @@ def _terms_by_df(oracle, n=6):
     by_df = sorted((t for _f, t in oracle.postings), key=lambda t: (oracle.doc_freq(t), t))
     step = max(len(by_df) // n, 1)
     return [by_df[i] for i in range(0, len(by_df), step)][:n] + [by_df[-1]]
+
+
+def _hits(rows):
+    return [(d.docid, np.float32(d.score)) for d in rows]
+
+
+def _search(searcher, q, k):
+    """``searcher.search`` on both sides of the serving budget: at the
+    default budget (driver-local for this module's small queries) and
+    with ``LOCAL_CACHE_BYTES`` at 0 (the distributed leaf). Asserts the
+    two agree and returns the driver-local hits."""
+    local = searcher.search(q, k)
+    default = SegmentSearcher.LOCAL_CACHE_BYTES
+    SegmentSearcher.LOCAL_CACHE_BYTES = 0
+    try:
+        dist = searcher.search(q, k)
+    finally:
+        SegmentSearcher.LOCAL_CACHE_BYTES = default
+    assert _hits(dist) == _hits(local), q
+    return local
 
 
 def test_stats_and_sha(built):
@@ -76,7 +97,7 @@ def test_term_topk_identical_to_oracle(built):
     _, searcher, oracle, _ = built
     for t in _terms_by_df(oracle):
         exp = oracle.search(TermQuery(t), 10)
-        got = searcher.search(TermQuery(t), 10)
+        got = _search(searcher, TermQuery(t), 10)
         assert [(d.docid, np.float32(d.score)) for d in got] == [
             (d.docid, np.float32(d.score)) for d in exp], t
 
@@ -86,7 +107,7 @@ def test_disjunction_topk_identical_to_oracle(built):
     terms = _terms_by_df(oracle, 4)
     q = BooleanQuery.of(should=[TermQuery(t) for t in terms[:4]])
     exp = oracle.search(q, 15)
-    got = searcher.search(q, 15)
+    got = _search(searcher, q, 15)
     assert [(d.docid, np.float32(d.score)) for d in got] == [
         (d.docid, np.float32(d.score)) for d in exp]
 
@@ -96,7 +117,7 @@ def test_k_sweep_identical_to_oracle(built):
     terms = _terms_by_df(oracle, 5)
     q = BooleanQuery.of(should=[TermQuery(t) for t in terms[:5]])
     for k in (1, 3, 10, 50):
-        a = searcher.search(q, k)
+        a = _search(searcher, q, k)
         b = oracle.search(q, k)
         assert [(d.docid, np.float32(d.score)) for d in a] == [
             (d.docid, np.float32(d.score)) for d in b], k
@@ -104,8 +125,9 @@ def test_k_sweep_identical_to_oracle(built):
 
 def test_single_query_plan_has_no_window(built):
     """search_df merges with ONE orderBy.limit(k); k=None returns every
-    hit. The batch leaf plan that search/search_many collect has no
-    Window and no Exchange anywhere (the merge runs in the driver).
+    hit. The batch leaf plan that search_many (and search beyond the
+    serving budget) collect has no Window and no Exchange anywhere (the
+    merge runs in the driver).
     Both run the leaf as MapInPandas with no Exchange below it and no
     Spark-side parquet scan: each task reads its own segment's files."""
     import re
@@ -131,7 +153,7 @@ def test_single_query_plan_has_no_window(built):
         return sub
 
     single = plan(searcher.search_df(q, 10))
-    batch = plan(searcher._plan([q], 10))
+    batch = plan(searcher._plan(searcher._compile([q])[0], 10))
     assert "Window" not in single
     assert "Window" not in batch and "Exchange" not in batch, batch
     for text in (single, batch):
@@ -175,8 +197,9 @@ def test_search_many_is_one_job_without_shuffle(built, spark):
 def test_tie_group_across_segments_and_shards(spark, tmp_path_factory):
     """Identical docs straddle segment boundaries (and the shard
     boundary of a 2-way split), so the tie group at rank k spans
-    segments: search, search_many, search_local and a 2-shard
-    ShardedSearcher all keep TopDocs.merge's docid-asc tie order."""
+    segments: search (on both sides of the serving budget),
+    search_many, search_local and a 2-shard ShardedSearcher all keep
+    TopDocs.merge's docid-asc tie order."""
     from lucene_solr_spark.index.segments import split_index
     from lucene_solr_spark.search.sharded import ShardedSearcher
 
@@ -208,10 +231,10 @@ def test_tie_group_across_segments_and_shards(spark, tmp_path_factory):
         for qid, q in queries.items():
             exp = hits(oracle.search(q, k))
             assert len({sc for _d, sc in exp}) < len(exp), (qid, k)
-            assert hits(searcher.search(q, k)) == exp, (qid, k)
+            assert hits(_search(searcher, q, k)) == exp, (qid, k)
             assert hits(many[qid]) == exp, (qid, k)
             assert hits(searcher.search_local(q, k)) == exp, (qid, k)
-            assert hits(sharded.search(q, k)) == exp, (qid, k)
+            assert hits(_search(sharded, q, k)) == exp, (qid, k)
             assert hits(smany[qid]) == exp, (qid, k)
 
 
@@ -234,7 +257,7 @@ def test_search_many_identical_to_solo(built):
     }
     got = searcher.search_many(batch, 12)
     for qid, q in batch.items():
-        exp = searcher.search(q, 12)
+        exp = _search(searcher, q, 12)
         assert [(d.docid, np.float32(d.score)) for d in got[qid]] == [
             (d.docid, np.float32(d.score)) for d in exp], qid
         if qid != "absent":
@@ -249,7 +272,7 @@ def test_msm_disjunction(built):
     q = BooleanQuery.of(should=[TermQuery(t) for t in terms[:4]],
                         minimum_should_match=2)
     exp = oracle.search(q, 10)
-    got = searcher.search(q, 10)
+    got = _search(searcher, q, 10)
     assert [(d.docid, np.float32(d.score)) for d in got] == [
         (d.docid, np.float32(d.score)) for d in exp]
 
@@ -341,7 +364,7 @@ def test_boolean_mixes_identical_to_oracle(built):
     }
     for name, q in cases.items():
         exp = oracle.search(q, 12)
-        got = searcher.search(q, 12)
+        got = _search(searcher, q, 12)
         assert [(d.docid, np.float32(d.score)) for d in got] == [
             (d.docid, np.float32(d.score)) for d in exp], name
 
@@ -363,7 +386,7 @@ def test_boolean_mixes_batched_identical(built):
     }
     got = searcher.search_many(batch, 12)
     for qid, q in batch.items():
-        exp = searcher.search(q, 12)
+        exp = _search(searcher, q, 12)
         assert [(d.docid, np.float32(d.score)) for d in got[qid]] == [
             (d.docid, np.float32(d.score)) for d in exp], qid
         oexp = oracle.search(q, 12)
@@ -381,7 +404,7 @@ def test_segment_dict_cache_guard(built, monkeypatch):
     assert s._df_map is None
     t = _terms_by_df(oracle, 2)[-1]
     exp = oracle.search(TermQuery(t), 5)
-    got = s.search(TermQuery(t), 5)  # dictionary-scan _stats path
+    got = _search(s, TermQuery(t), 5)  # dictionary-scan _stats path
     assert [(d.docid, np.float32(d.score)) for d in got] == [
         (d.docid, np.float32(d.score)) for d in exp]
 
@@ -429,7 +452,7 @@ def test_phrase_identical_to_oracle(built):
     }
     for name, q in cases.items():
         exp = oracle.search(q, 12)
-        got = searcher.search(q, 12)
+        got = _search(searcher, q, 12)
         assert [(d.docid, np.float32(d.score)) for d in got] == [
             (d.docid, np.float32(d.score)) for d in exp], name
 
@@ -452,7 +475,7 @@ def test_phrase_batched_identical(built):
     }
     got = searcher.search_many(batch, 12)
     for qid, q in batch.items():
-        exp = searcher.search(q, 12)
+        exp = _search(searcher, q, 12)
         assert [(d.docid, np.float32(d.score)) for d in got[qid]] == [
             (d.docid, np.float32(d.score)) for d in exp], qid
         oexp = oracle.search(q, 12)
@@ -487,7 +510,7 @@ def test_batch_identical_to_solo_and_oracle(built):
     batched = searcher.search_many(qs, 10)
     for qid, q in qs.items():
         got = [(d.docid, np.float32(d.score)) for d in batched[qid]]
-        solo = searcher.search(q, 10)
+        solo = _search(searcher, q, 10)
         assert got == [(d.docid, np.float32(d.score)) for d in solo], qid
         exp = oracle.search(q, 10)
         assert got == [(d.docid, np.float32(d.score)) for d in exp], qid
@@ -512,7 +535,7 @@ def test_multi_phrase_on_v2(built):
         MultiPhraseQuery(((a,), (b,)), slop=2),
         MultiPhraseQuery(((a, c), (b, a)), slop=1, boost=1.5),
     ):
-        got = searcher.search(q, 10)
+        got = _search(searcher, q, 10)
         exp = oracle.search(q, 10)
         assert [(d.docid, np.float32(d.score)) for d in got] == [
             (d.docid, np.float32(d.score)) for d in exp], q
@@ -544,7 +567,7 @@ def test_multiterm_rewrite_on_v2(built):
                         should=[PrefixQuery(t[:3])]),
     ]
     for q in queries:
-        got = searcher.search(q, 10)
+        got = _search(searcher, q, 10)
         exp = oracle.search(q, 10)
         assert [(d.docid, np.float32(d.score)) for d in got] == [
             (d.docid, np.float32(d.score)) for d in exp], q
@@ -593,7 +616,7 @@ def test_spans_and_intervals_on_v2(built):
         IntervalQuery(IOrdered((ITerm(a), ITerm(b)))),
     ]
     for q in queries:
-        got = searcher.search(q, 10)
+        got = _search(searcher, q, 10)
         exp = oracle.search(q, 10)
         assert [(d.docid, np.float32(d.score)) for d in got] == [
             (d.docid, np.float32(d.score)) for d in exp], q
@@ -612,7 +635,7 @@ def test_common_terms_and_blooms_general(built):
     terms = _terms_by_df(oracle, 8)
     q = CommonTermsQuery(tuple(terms[:3]) + (terms[-1],),
                          max_term_frequency=0.3)
-    got = searcher.search(q, 10)
+    got = _search(searcher, q, 10)
     exp = oracle.search(q, 10)
     assert [(d.docid, np.float32(d.score)) for d in got] == [
         (d.docid, np.float32(d.score)) for d in exp]
@@ -628,7 +651,7 @@ def test_common_terms_and_blooms_general(built):
     a, b = pairs[0]
     sq = SpanNearQuery((SpanTermQuery(a), SpanTermQuery(b)),
                        slop=1, in_order=True)
-    got = sb.search(sq, 10)
+    got = _search(sb, sq, 10)
     exp = oracle.search(sq, 10)
     assert [(d.docid, np.float32(d.score)) for d in got] == [
         (d.docid, np.float32(d.score)) for d in exp]
@@ -667,7 +690,7 @@ def test_term_automaton_on_v2(built):
         return q.finish()
 
     for q in (phrase_q(a, b), phrase_q(a), gap_q(c, d)):
-        got = searcher.search(q, 10)
+        got = _search(searcher, q, 10)
         exp = oracle.search(q, 10)
         assert [(dd.docid, np.float32(dd.score)) for dd in got] == [
             (dd.docid, np.float32(dd.score)) for dd in exp], q
@@ -729,6 +752,139 @@ def _newest_job(spark) -> int:
     jsc.listenerBus().waitUntilEmpty()
     jobs = jsc.statusStore().jobsList(None)  # newest first
     return int(jobs.apply(0).jobId()) if jobs.size() else -1
+
+
+def _newest_job_description(spark) -> str | None:
+    """The newest Spark job's description, read from the status store."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    desc = jsc.statusStore().jobsList(None).apply(0).description()
+    return desc.get() if desc.isDefined() else None
+
+
+def test_search_routes_by_serving_budget(built, monkeypatch):
+    """search serves a query in the driver when its postings (Σ df ×
+    POSTING_BYTES) fit LOCAL_CACHE_BYTES — no Spark job, cold or hot —
+    and runs the distributed leaf, exactly one job, when they do not;
+    the hits are the oracle's either way."""
+    from lucene_solr_spark.search.queries import PhraseQuery
+
+    idx, _shared, oracle, pdf = built
+    spark = idx.spark
+    (a, b), (pa, pb) = _bigram(pdf)
+    terms = _terms_by_df(oracle, 6)
+    queries = [
+        TermQuery(terms[-1]),
+        BooleanQuery.of(should=[TermQuery(t) for t in terms[:4]]),
+        PhraseQuery((a, b), positions=(pa, pb)),
+    ]
+    want = [_hits(oracle.search(q, 10)) for q in queries]
+    searcher = SegmentSearcher(SegmentIndex(idx.root, spark), cache=True)
+    for rep in ("cold", "hot"):
+        for q, exp in zip(queries, want):
+            mark = _newest_job(spark)
+            assert _hits(searcher.search(q, 10)) == exp, (rep, q)
+            assert _newest_job(spark) == mark, f"{rep} search ran a job: {q}"
+    # the rule's edge: a budget of exactly the disjunction's decoded
+    # postings serves it locally, one byte less sends it to the leaf
+    need = SegmentSearcher.POSTING_BYTES * sum(
+        searcher._df_map[t] for t in set(terms[:4]))
+    for budget, jobs in ((need, 0), (need - 1, 1)):
+        monkeypatch.setattr(SegmentSearcher, "LOCAL_CACHE_BYTES", budget)
+        mark = _newest_job(spark)
+        assert _hits(searcher.search(queries[1], 10)) == want[1], budget
+        assert _newest_job(spark) - mark == jobs, budget
+    monkeypatch.setattr(SegmentSearcher, "LOCAL_CACHE_BYTES", 0)
+    for q, exp in zip(queries, want):
+        mark = _newest_job(spark)
+        assert _hits(searcher.search(q, 10)) == exp, q
+        assert _newest_job(spark) - mark == 1, q
+
+
+def test_sharded_search_routes_by_serving_budget(built, spark,
+                                                 tmp_path_factory,
+                                                 monkeypatch):
+    """ShardedSearcher.search (exact stats) applies the rule per shard,
+    sized by the shard's OWN df: no job at the default budget, one job
+    per shard at budget 0, one job when only the smaller shard's
+    postings fit — and the oracle's hits every time."""
+    from lucene_solr_spark.index.segments import split_index
+    from lucene_solr_spark.search.sharded import ShardedSearcher
+
+    idx, _shared, oracle, _pdf = built
+    parts = [str(tmp_path_factory.mktemp(f"route_part{i}"))
+             for i in range(2)]
+    split_index(idx.root, parts, spark)
+    sharded = ShardedSearcher(parts, spark, stats="exact", cache=True)
+    terms = _terms_by_df(oracle, 6)
+    q = BooleanQuery.of(should=[TermQuery(t) for t in terms[-3:]])
+    exp = _hits(oracle.search(q, 10))
+    needs = [SegmentSearcher.POSTING_BYTES
+             * sum(s._stats(set(terms[-3:])).values())
+             for s in sharded.shards]
+    assert needs[0] != needs[1], needs
+    for budget, jobs in ((SegmentSearcher.LOCAL_CACHE_BYTES, 0),
+                         (min(needs), 1), (0, 2)):
+        monkeypatch.setattr(SegmentSearcher, "LOCAL_CACHE_BYTES", budget)
+        mark = _newest_job(spark)
+        assert _hits(sharded.search(q, 10)) == exp, budget
+        assert _newest_job(spark) - mark == jobs, budget
+
+
+def test_set_scorer_drops_caches_of_the_old_scorer(built):
+    """set_scorer drops the cached plans (weights compiled with the old
+    scorer) and the serving cache (unit scores from the old norm
+    cache): afterwards search_many, search and search_local return
+    what a searcher opened with the new scorer returns."""
+    from lucene_solr_spark.search import bm25
+
+    idx, _shared, oracle, _pdf = built
+    terms = _terms_by_df(oracle, 6)
+    q = BooleanQuery.of(should=[TermQuery(t) for t in terms[-3:]])
+
+    def fresh():
+        return SegmentSearcher(SegmentIndex(idx.root, idx.spark), cache=True)
+
+    searcher = fresh()
+    searcher.search_many({"q": q}, 10)
+    searcher.search_local(q, 10)
+    scorer = bm25.BM25Scorer(3 * searcher.doc_count, 7 * searcher.sum_ttf)
+    searcher.set_scorer(scorer)
+    ref = fresh()
+    ref.set_scorer(scorer)
+    want = _hits(ref.search_many({"q": q}, 10)["q"])
+    assert want != _hits(oracle.search(q, 10))
+    assert _hits(searcher.search_many({"q": q}, 10)["q"]) == want
+    assert _hits(searcher.search_local(q, 10)) == want
+    assert _hits(_search(searcher, q, 10)) == want
+
+
+def test_job_descriptions_name_the_call(built, monkeypatch):
+    """Each call that starts a Spark job describes it as the call and
+    its query count (read back from the status store), then restores
+    the caller's description."""
+    idx, _shared, oracle, _pdf = built
+    spark = idx.spark
+    sc = spark.sparkContext
+    terms = _terms_by_df(oracle, 4)
+    # uncached: search_df's compile looks the terms up with a job
+    searcher = SegmentSearcher(SegmentIndex(idx.root, spark), cache=False)
+    monkeypatch.setattr(SegmentSearcher, "LOCAL_CACHE_BYTES", 0)
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription("caller")
+    try:
+        searcher.search(TermQuery(terms[-1]), 10)
+        assert _newest_job_description(spark) == "search: 1 query"
+        searcher.search_many({f"q{i}": TermQuery(t)
+                              for i, t in enumerate(terms[:3])}, 10)
+        assert _newest_job_description(spark) == "search_many: 3 queries"
+        searcher.search_df(TermQuery(terms[0]), 10)
+        assert _newest_job_description(spark) == "search_df: 1 query"
+        searcher.search_after(TermQuery(terms[-1]), TopDoc(0, 1e9), 5)
+        assert _newest_job_description(spark) == "search_after: 1 query"
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
 
 
 def test_search_local_cache_bounded_lru(built):
@@ -866,7 +1022,7 @@ def test_term_vector_and_mlt_over_v2(built, spark):
 
     q = C.more_like_this(searcher, docid, max_query_terms=15)
     assert q.clauses, "MLT built an empty query"
-    got_hits = searcher.search(q, 10)
+    got_hits = _search(searcher, q, 10)
     exp_hits = oracle.search(q, 10)
     assert [(d.docid, np.float32(d.score)) for d in got_hits] == [
         (d.docid, np.float32(d.score)) for d in exp_hits]
