@@ -92,7 +92,7 @@ def _seg_searcher(spark: SparkSession, sf_dir: str) -> SegmentSearcher:
         if not os.path.exists(os.path.join(root, "manifest.json")):
             build_segment_index(_documents_as_corpus(spark, sf_dir), root,
                                 docs_per_segment=2048)
-        _SEG_SEARCHERS[key] = SegmentSearcher(SegmentIndex(root, spark), cache=True)
+        _SEG_SEARCHERS[key] = SegmentSearcher(SegmentIndex(root, spark))
     return _SEG_SEARCHERS[key]
 
 
@@ -218,8 +218,7 @@ def _mf_seg_searcher(spark: SparkSession, sf_dir: str) -> SegmentSearcher:
             )
             build_segment_index(corpus, root, docs_per_segment=2048,
                                 fields=("content", "title"))
-        _MF_SEG_SEARCHERS[key] = SegmentSearcher(
-            SegmentIndex(root, spark), cache=True)
+        _MF_SEG_SEARCHERS[key] = SegmentSearcher(SegmentIndex(root, spark))
     return _MF_SEG_SEARCHERS[key]
 
 

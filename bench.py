@@ -210,7 +210,7 @@ def bench_engine(spark) -> tuple[dict[str, float], dict[str, float]]:
         extras["index_build_v2_reps"] = [round(s, 3) for s in secs]
         extras["build_v2_docs_per_sec"] = round(N_BUILD_DOCS / v2_sec, 1)
 
-        wand = SegmentSearcher(segidx, cache=True)
+        wand = SegmentSearcher(segidx)
         wq = BooleanQuery.of(should=[TermQuery("int"), TermQuery("return"),
                                      TermQuery("class")])
         # a hot routed call: search serves the query in the driver

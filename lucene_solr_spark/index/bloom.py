@@ -29,6 +29,7 @@ from __future__ import annotations
 import os
 
 import numpy as np
+import pyarrow.parquet as pq
 
 from ..analysis.minhash import murmur3_x64_128
 
@@ -97,7 +98,7 @@ class SegmentBlooms:
         path = os.path.join(index.root, "blooms")
         if not os.path.exists(path):
             return None
-        return cls(index.spark.read.parquet(path).collect())
+        return cls(pq.read_table(path, use_threads=False).to_pylist())
 
     def maybe_contains(self, segment: int, term: str) -> bool:
         f = self.filters.get(segment)

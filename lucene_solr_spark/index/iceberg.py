@@ -18,8 +18,8 @@ PHYSICAL bindings of the same schema:
     with O(manifests) metadata reads.
   * `IcebergSegmentIndex(namespace, spark)` is a drop-in
     `SegmentIndex`: same accessors, reading `spark.table(...)` instead
-    of `spark.read.parquet(dir)` (`segment_files()`: the `files`
-    metadata table). `SegmentSearcher` takes either — nothing
+    of `spark.read.parquet(dir)` (`segment_files()`/`dict_files()`:
+    the `files` metadata tables). `SegmentSearcher` takes either — nothing
     downstream changes (the seam the round-3 VERDICT asked to close).
   * Commit points / time travel: `create_snapshot`'s hardlink
     generations map onto Iceberg's native snapshot log —
@@ -133,6 +133,10 @@ class IcebergSegmentIndex:
                   .select("file_path", "partition.segment").collect()):
             out.setdefault(int(r["segment"]), []).append(r["file_path"])
         return out
+
+    def dict_files(self) -> list[str]:
+        return [r["file_path"] for r in self._table("dict.files")
+                .where(F.col("content") == 0).select("file_path").collect()]
 
     def docmap(self) -> DataFrame:
         return self._table("docmap")

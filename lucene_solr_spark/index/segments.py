@@ -78,6 +78,8 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..analysis import ENGLISH_STOP_WORDS
@@ -293,8 +295,6 @@ _BLOCK_WRITE = {
 
 def _arrow_schema(ddl: str, drop=()):
     """pyarrow schema of a Spark DDL string of atomic types."""
-    import pyarrow as pa
-
     types = {"string": pa.string(), "int": pa.int32(), "long": pa.int64(),
              "double": pa.float64(), "binary": pa.binary()}
     return pa.schema([(n, types[t]) for n, t in
@@ -318,8 +318,6 @@ def _write_segments(spark: SparkSession, blocks_dir: str, jobs, produce,
     schema = _arrow_schema(BLOCKS_SCHEMA, drop=("segment",))
 
     def task(batches):
-        import pyarrow.parquet as pq
-
         for b in batches:
             for i in b["id"].tolist():
                 seg, arg = jobs[i]
@@ -377,9 +375,6 @@ def _analyzed_segment(spill_dir: str, stop_words: frozenset[str],
             *[f"null_{f}" for f in extra_fields]]
 
     def produce(seg: int):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
         files = sorted(glob.glob(os.path.join(
             spill_dir, f"segment={seg}", "*.parquet")))
         if not files:
@@ -419,9 +414,7 @@ def _shifted_segment(arg):
     """Copy-with-shift ``produce`` (arg: ``(files, shift)``): the pinned
     columns of a segment's rows, docid headers shifted — payloads are
     deltas, so nothing is re-encoded."""
-    import pyarrow as pa
     import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
     files, shift = arg
     names = _arrow_schema(BLOCKS_SCHEMA, drop=("segment",)).names
@@ -485,6 +478,12 @@ class SegmentIndex:
         return self.spark.read.parquet(
             os.path.join(self.root, "dict", self.manifest()["dict"]))
 
+    def dict_files(self) -> list[str]:
+        """The parquet paths of the manifest's ``dict/<name>/``."""
+        return sorted(glob.glob(os.path.join(
+            os.path.abspath(self.root), "dict", self.manifest()["dict"],
+            "*.parquet")))
+
     def stats(self) -> dict:
         m = self.manifest()
         return {"doc_count": int(m["doc_count"]), "sum_ttf": int(m["sum_ttf"])}
@@ -506,13 +505,22 @@ class SegmentIndex:
         return self.spark.read.parquet(self.deletes_path).select("docid").distinct()
 
     def deleted_docids(self) -> "np.ndarray":
-        d = self.deletes()
-        if d is None:
-            return np.zeros(0, dtype=np.int64)
-        return np.array(sorted(r["docid"] for r in d.collect()), dtype=np.int64)
+        """Sorted distinct tombstoned docids, read with pyarrow."""
+        files = glob.glob(os.path.join(self.deletes_path, "*.parquet"))
+        return np.unique(read_files(files, ["docid"])["docid"].to_numpy()
+                         .astype(np.int64, copy=False))
 
     def manifest(self) -> dict:
         return _read_manifest(self.root)
+
+
+def read_files(files, columns, where=None):
+    """``columns`` of Parquet files (paths or URIs) as one pyarrow
+    table, rows kept by the pyarrow expression ``where`` when given:
+    a driver read, no Spark job."""
+    return pa.concat_tables(
+        [pq.read_table(f, columns=columns, filters=where, use_threads=False)
+         for f in files] or [pa.table({c: [] for c in columns})])
 
 
 def summary_docs(rows: DataFrame) -> DataFrame:
@@ -942,9 +950,6 @@ def _replace_deletes(root: str, docids) -> None:
 def _write_deletes(root: str, docids, name: str) -> int:
     """Tombstone docids as ``deletes/<name>``, replacing what an earlier
     write under that name left (a retried addIndexes fold)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     ids = sorted({int(d) for d in docids})
     path = os.path.join(root, "deletes", name)
     if os.path.exists(path):
@@ -961,9 +966,6 @@ def _append_checkpoint(root: str, row: tuple):
     through a hidden temp name — by the driver, or by the writer task
     that just finished a segment. Layout-compatible with
     spark.read.parquet over the directory."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     schema = _arrow_schema(CHECKPOINT_SCHEMA)
     table = pa.table({f.name: pa.array([v], type=f.type)
                       for f, v in zip(schema, row)})

@@ -22,8 +22,8 @@ order = slice order), the (shard, local-docid) tie-break is EXACTLY
 the monolithic docid tie-break, which is what makes the exact-stats
 mode bit-identical end-to-end.
 
-Scale shape: the stats round is one tiny dictionary lookup per shard
-(bucket-pruned scan or driver cache hit); each shard runs the normal
+Scale shape: the stats round is one driver-side dictionary lookup per
+shard (no Spark job); each shard runs the normal
 one-job compressed-path leaf for a batch, and for a single query the
 same rendering choice as ``SegmentSearcher.search`` (driver-local when
 the shard's own postings of the query fit its serving budget); the
@@ -53,12 +53,11 @@ class ShardedSearcher:
     """
 
     def __init__(self, roots: list[str], spark: SparkSession,
-                 stats: str = "exact", cache: bool = False):
+                 stats: str = "exact"):
         if stats not in ("exact", "local"):
             raise ValueError(f"unknown stats cache {stats!r}")
         self.stats_mode = stats
-        self.shards = [SegmentSearcher(SegmentIndex(r, spark), cache=cache)
-                       for r in roots]
+        self.shards = [SegmentSearcher(SegmentIndex(r, spark)) for r in roots]
         self.offsets = []
         off = 0
         for s in self.shards:

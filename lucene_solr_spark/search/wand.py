@@ -43,16 +43,20 @@ accumulated in float64 and cast to float32 once (WANDScorer.java:445-453).
 from __future__ import annotations
 
 import collections
+import functools
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, functions as F
 
 from ..index import codec
 from ..index.segments import (FIELD_SEP, SegmentIndex, job_description,
-                               summary_docs)
+                               read_files, summary_docs)
 from . import bm25
-from .executor import _collect_terms, _str_in
+from .executor import _collect_terms
 from .sloppy import _phrase_freqs
 from .queries import (
     BooleanQuery,
@@ -182,10 +186,11 @@ def _positions(e: list) -> list:
 
 
 def _own(e: list) -> list:
-    """A term entry holding COPIES of its group's array slices, so a
-    term evicted from the serving cache frees its decoded arrays
-    instead of pinning the whole segment's."""
-    return [a.copy() for a in e[:5]] + e[5:]
+    """A serving-cache term entry: COPIES of its group's array slices
+    (an evicted term frees its arrays instead of pinning the segment's)
+    and decoded positions in place of their buffers, if read."""
+    pos = _positions(e) if e[5] is not None else None
+    return [a.copy() for a in e[:5]] + [None, pos]
 
 
 class SegmentSearcher:
@@ -218,8 +223,9 @@ class SegmentSearcher:
     lazy/all-hits forms (``search_df``, ``search_after``) always run
     distributed.
 
-    ``cache=True`` only loads the dictionary's term → df map into the
-    driver (nothing is persisted).
+    Open reads the term → df map, tombstones and Bloom filters with
+    pyarrow: neither open nor a point read starts a Spark job.
+    ``cache`` is ignored (the benchmark harness still passes it).
 
     Multi-term queries (prefix/wildcard/regexp/fuzzy/range/set and
     span wrappers) rewrite against the v2 dictionary first
@@ -227,10 +233,10 @@ class SegmentSearcher:
     Per-field postings/norms/stats (manifest ``field_stats``) give
     per-field BM25 scorers and caches."""
 
-    #: driver-side term→df cache cap: a real-corpus vocabulary can be
-    #: billions of terms — beyond this the searcher falls back to the
-    #: pushed-down dictionary scan per query (same guard as
-    #: IndexSearcher.DICT_CACHE_MAX, executor.py)
+    #: driver-side term→df map cap, in dictionary rows (footer counts):
+    #: a real-corpus vocabulary can be billions of terms — beyond this
+    #: term stats are a filtered pyarrow read of the dictionary files and
+    #: multi-term expansion a pruned Spark scan (IndexSearcher's guard)
     DICT_CACHE_MAX = 5_000_000
 
     def __init__(self, index: SegmentIndex, cache: bool = False):
@@ -255,10 +261,10 @@ class SegmentSearcher:
         #: indexes (bit-stable historic path), {field: cache} otherwise
         self.caches = (self.scorer.cache if len(self.scorers) == 1
                        else {f: sc.cache for f, sc in self.scorers.items()})
-        # this commit's files (the next commit still keeps them) and
-        # dictionary listed once, as Spark lists a frame's files
+        # this commit's segment and dictionary files (the next commit
+        # still keeps them), listed once
         self.seg_files = index.segment_files()
-        self.dict = index.dict()
+        self.dict_files = index.dict_files()
         # tombstones, masked inside each leaf BEFORE its top-k cut
         # (masking after the per-segment truncation would drop docs
         # that should be promoted); collection stats keep counting
@@ -271,7 +277,9 @@ class SegmentSearcher:
         from ..index.bloom import SegmentBlooms
 
         self.blooms = SegmentBlooms.load(index)
-        self._df_map: dict[str, int] | None = None
+        rows = sum(pq.read_metadata(f).num_rows for f in self.dict_files)
+        self._df_map = (self._read_dict() if rows <= self.DICT_CACHE_MAX
+                        else None)
         # compiled leaf plans by (queries, k) — the queryResultCache
         # role at plan granularity: a re-submitted identical batch skips
         # rewrite, tree compile and Catalyst planning. Safe because the
@@ -280,13 +288,9 @@ class SegmentSearcher:
         # searcher, Solr's cache-per-searcher lifecycle.
         self._batch_plan_cache: collections.OrderedDict = (
             collections.OrderedDict())
-        if cache:
-            # read straight from the files and never persisted: Spark's
-            # cache would hand this dictionary to every later read of
-            # dict/ in the session, a flush's or fold's delta merge too
-            if self.dict.count() <= self.DICT_CACHE_MAX:
-                pdf = self.dict.select("term", "df").toPandas()
-                self._df_map = dict(zip(pdf["term"], pdf["df"].astype(int)))
+        self._local_cache = collections.OrderedDict()
+        self._local_cache_bytes = 0
+        self._local_norm_cache: dict = {}
 
     def set_scorer(self, scorer: "bm25.BM25Scorer",
                    field: str = "content") -> None:
@@ -304,6 +308,12 @@ class SegmentSearcher:
         self._batch_plan_cache.clear()
         self._local_cache = collections.OrderedDict()
         self._local_cache_bytes = 0
+
+    @functools.cached_property
+    def dict(self) -> DataFrame:
+        """This commit's dictionary (term, df, ttf) for components; built
+        on first use, as reading its schema is a Spark job."""
+        return self.index.spark.read.parquet(*self.dict_files)
 
     @property
     def docs(self) -> DataFrame:
@@ -335,8 +345,11 @@ class SegmentSearcher:
             return {}
         if self._df_map is not None:
             return {t: self._df_map[t] for t in terms if t in self._df_map}
-        rows = self.dict.where(_str_in("term", terms)).collect()
-        return {r["term"]: int(r["df"]) for r in rows}
+        return self._read_dict(pc.field("term").isin(sorted(terms)))
+
+    def _read_dict(self, where=None) -> dict[str, int]:
+        t = read_files(self.dict_files, ["term", "df"], where)
+        return dict(zip(t["term"].to_pylist(), t["df"].to_pylist()))
 
     # -- multi-term rewrite (dictionary expansion on the v2 dict) -------
     #: driver-safety valve for degenerate expansions (IndexSearcher's
@@ -354,8 +367,8 @@ class SegmentSearcher:
         from .queries import BooleanClause, MultiTermQuery
 
         if isinstance(q, MultiTermQuery):
-            terms = self._expand_multiterm(q)
             qfield = getattr(q, "field", "content")
+            terms = self._expand(q, qfield)
             inner = BooleanQuery(
                 tuple(BooleanClause(TermQuery(t, field=qfield), "SHOULD")
                       for t in terms))
@@ -379,7 +392,8 @@ class SegmentSearcher:
 
         if isinstance(q, SpanQuery):
             field = getattr(q, "field", "content")
-            return expand_span_multiterm(q, self._field_vocab(field))
+            return expand_span_multiterm(
+                q, lambda mq: self._expand(mq, field))
         from .queries import CommonTermsQuery, build_common_terms
 
         if isinstance(q, CommonTermsQuery):
@@ -393,28 +407,13 @@ class SegmentSearcher:
             return self.rewrite(build_common_terms(q, dfs, dc))
         return q
 
-    def _field_vocab(self, field: str) -> list[str]:
-        """Sorted bare-term vocabulary of one field (span wrapper
-        expansion; bounded by MAX_EXPANSION_SCAN like _expand)."""
-        pfx = "" if field == "content" else field + FIELD_SEP
-        if self._df_map is not None:
-            if pfx:
-                return sorted(t[len(pfx):] for t in self._df_map
-                              if t.startswith(pfx))
-            return sorted(t for t in self._df_map
-                          if FIELD_SEP not in t)
-        scope = (F.col("term").startswith(pfx) if pfx
-                 else ~F.col("term").contains(FIELD_SEP))
-        rows = (self.dict.where(scope).select("term")
-                .limit(self.MAX_EXPANSION_SCAN + 1).collect())
-        if len(rows) > self.MAX_EXPANSION_SCAN:
-            raise ValueError("vocabulary exceeds MAX_EXPANSION_SCAN")
-        return sorted(r["term"][len(pfx):] for r in rows)
-
-    def _expand_multiterm(self, q) -> list[str]:
+    def _expand(self, q, field: str) -> list[str]:
+        """The bare terms of ``field`` that multi-term query ``q``
+        matches: the shared ``expand_terms`` over the field's terms in
+        the df map or, above DICT_CACHE_MAX, over a dictionary scan
+        pruned by ``dict_prefilter`` (bounded by MAX_EXPANSION_SCAN)."""
         from .multiterm import dict_prefilter, expand_terms
 
-        field = getattr(q, "field", "content")
         pfx = "" if field == "content" else field + FIELD_SEP
         if self._df_map is not None:
             if pfx:
@@ -423,15 +422,12 @@ class SegmentSearcher:
             else:
                 vocab = (t for t in self._df_map if FIELD_SEP not in t)
             return expand_terms(vocab, q)
-        # dict scan with the shared coarse JVM-side predicate on the
-        # BARE term, exact refinement in Python (shared with the oracle)
         bare = (F.expr(f"substring(term, {len(pfx) + 1})") if pfx
                 else F.col("term"))
         scope = (F.col("term").startswith(pfx) if pfx
                  else ~F.col("term").contains(FIELD_SEP))
-        pred = dict_prefilter(q, bare)
-        rows = (self.dict.where(scope & pred).select("term")
-                .limit(self.MAX_EXPANSION_SCAN + 1).collect())
+        rows = (self.dict.where(scope & dict_prefilter(q, bare))
+                .select("term").limit(self.MAX_EXPANSION_SCAN + 1).collect())
         if len(rows) > self.MAX_EXPANSION_SCAN:
             raise ValueError(
                 "multi-term expansion exceeds MAX_EXPANSION_SCAN")
@@ -656,8 +652,8 @@ class SegmentSearcher:
         ONE global ``orderBy(score desc, docid asc).limit(k)`` =
         TopDocs.merge (TopDocs.java:188-230). ``k=None`` is all-hits
         mode (collapse/rescore two-phase components): every match, no
-        truncation. Jobs the call itself starts (dictionary lookups of
-        an uncached searcher) carry its job description; the frame's
+        truncation. A job the call itself starts (a multi-term expansion
+        above DICT_CACHE_MAX) carries its job description; the frame's
         own job runs when the caller collects it."""
         kk = None if k is None else int(k)
         with job_description(self.index.spark, "search_df: 1 query"):
@@ -746,17 +742,17 @@ class SegmentSearcher:
                     field: str = "content") -> list[tuple[str, int]]:
         """(term, tf) pairs of ONE document — the term-vectors read
         (TermVectorsReader role) the v2 codec serves by reading the
-        doc's OWN segment only: ``docs`` resolves the segment, the read
-        keeps only blocks whose docid range covers the doc, and only
-        those decode (a few per term region). Feeds MoreLikeThis on
-        the compressed path."""
-        seg_row = (self.docs.where(F.col("docid") == docid)
-                   .select("segment").collect())
-        if not seg_row:
+        doc's OWN segment (found on its kind=1 row by a filtered pyarrow
+        read, which skips files by footer statistics), then only blocks
+        whose docid range covers the doc, and only those decode. No
+        Spark job. Feeds MoreLikeThis on the compressed path."""
+        hit = (pc.field("kind") == 1) & (pc.field("first_docid") == docid)
+        seg = next((s for s, fs in sorted(self.seg_files.items())
+                    if read_files(fs, ["kind"], hit).num_rows), None)
+        if seg is None:
             return []
         cols = ["term", "n", "first_docid", "docids", "tfs"]
-        pdf = _read_segment(self.seg_files[int(seg_row[0]["segment"])],
-                            None, cols, docid=docid)
+        pdf = _read_segment(self.seg_files[seg], None, cols, docid=docid)
         pfx = "" if field == "content" else field + FIELD_SEP
         pdf = pdf[pdf["term"].str.startswith(pfx) if pfx
                   else ~pdf["term"].str.contains(FIELD_SEP, regex=False)]
@@ -773,43 +769,40 @@ class SegmentSearcher:
 
     # -- serving mode (driver-local evaluation) -------------------------
 
-    #: serving-mode block cache budget, in bytes of ENCODED posting
-    #: buffers (a Solr serving core's block cache is bounded/LRU the
-    #: same way — an unbounded cache would accumulate the postings of
-    #: every term ever queried for the searcher's lifetime). Each term's
-    #: decoded arrays are its own copies and die with it on eviction;
-    #: evict-and-refetch is one filtered read per segment. ``search``
-    #: serves a query in the driver only when its decoded postings
-    #: (df × POSTING_BYTES) fit this budget.
+    #: serving-mode block cache budget, in ``nbytes`` of the arrays the
+    #: cached terms hold (a Solr serving core's block cache is
+    #: bounded/LRU the same way — an unbounded cache would accumulate
+    #: the postings of every term ever queried for the searcher's
+    #: lifetime). Each term's arrays are its own copies and die with it
+    #: on eviction; evict-and-refetch is one filtered read per segment.
+    #: ``search`` serves a query in the driver only when its decoded
+    #: postings (df × POSTING_BYTES) fit this budget.
     LOCAL_CACHE_BYTES = 256 << 20
 
-    def _local_tbs(self, qterms: set[str]) -> dict:
+    def _local_tbs(self, qterms: set[str], positions: bool = False) -> dict:
         """Fetch (and cache) the given terms' decoded postings
-        driver-side: {qterm: {segment: _SegGroups entry}}. A cache-miss
-        batch reads each segment's rows of the missing terms
-        (:func:`_read_segment`) and decodes them by
+        driver-side: {qterm: {segment: _SegGroups entry}}, positions
+        included when ``positions`` (a term cached without them is then
+        a miss). A cache-miss batch reads each segment's rows of the
+        missing terms (:func:`_read_segment`) and decodes them by
         :class:`_SegGroups` — no Spark job; bytes-capped LRU over terms
         (LOCAL_CACHE_BYTES) — the live query's own terms are never
         evicted."""
-        if not hasattr(self, "_local_cache"):
-            self._local_cache: dict = collections.OrderedDict()
-            self._local_cache_bytes = 0
         cache = self._local_cache
-        missing = sorted(t for t in qterms if t not in cache)
+        missing = sorted(t for t in qterms if t not in cache or positions
+                         and any(e[6] is None for e in cache[t][1].values()))
         if missing:
-            bufs = ["docids", "tfs", "norms", "positions"]
+            cols = [*_BLOCK_COLS, *(["positions"] if positions else [])]
             maps: dict[str, dict] = {t: {} for t in missing}
-            sizes = dict.fromkeys(missing, 0)
             for seg, fs in self.seg_files.items():
-                pdf = _read_segment(fs, missing, [*_BLOCK_COLS, "positions"])
+                pdf = _read_segment(fs, missing, cols)
                 for t, e in _SegGroups(pdf, self.caches).items():
                     maps[t][seg] = _own(e)
-                nbytes = pdf[bufs].map(len, na_action="ignore").sum(axis=1)
-                for t, sz in nbytes.groupby(pdf["term"]).sum().items():
-                    sizes[t] += int(sz)
             for t in missing:
-                cache[t] = (sizes[t], maps[t])
-                self._local_cache_bytes += sizes[t]
+                self._local_cache_bytes -= cache.pop(t, (0,))[0]
+                cache[t] = (sum(a.nbytes for e in maps[t].values()
+                                for a in [*e[:5], *(e[6] or ())]), maps[t])
+                self._local_cache_bytes += cache[t][0]
         # LRU touch, then evict cold terms beyond the budget
         for t in qterms:
             if t in cache:
@@ -829,8 +822,6 @@ class SegmentSearcher:
         ``_norm_maps_from_rows``). One byte per (doc, field) — the
         .nvd-file role; cached for the searcher's lifetime like a Solr
         core's norms reader."""
-        if not hasattr(self, "_local_norm_cache"):
-            self._local_norm_cache: dict = {}
         nm = self._local_norm_cache.get(field)
         if nm is None:
             nm = {}
@@ -850,7 +841,8 @@ class SegmentSearcher:
         rows are the leaf's rows."""
         parts = [_segment_topk([], None, None, k, None)]
         if tree[0] != "none":
-            per_term = self._local_tbs(_tree_terms(tree))
+            per_term = self._local_tbs(_tree_terms(tree),
+                                       _tree_has_phrase(tree))
             norm_maps = {f: self._local_norms(f)
                          for f in _tree_norm_fields(tree)}
             get_norms = norm_maps.get if norm_maps else None
@@ -951,17 +943,13 @@ def _read_segment(files: list[str], terms, cols: list[str],
     are read one at a time, single-threaded, and cut to the matching
     rows, so the reader (the driver, when serving) never holds a whole
     decoded segment."""
-    import pyarrow as pa
-    import pyarrow.dataset as ds
-    import pyarrow.parquet as pq
-
-    kind, term = ds.field("kind"), ds.field("term")
+    kind, term = pc.field("kind"), pc.field("term")
     pred = kind == 0
     if terms is not None:
         pred &= term.isin(pa.array(sorted(terms), pa.string()))
     if docid is not None:
-        pred &= ((ds.field("first_docid") <= docid)
-                 & (ds.field("last_docid") >= docid))
+        pred &= ((pc.field("first_docid") <= docid)
+                 & (pc.field("last_docid") >= docid))
     for f in norm_fields:
         pred |= (kind == 1) if f == "content" else (kind == 2) & (term == f)
     keys = ["kind", "term", "first_docid", "last_docid"]

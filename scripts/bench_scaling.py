@@ -143,7 +143,7 @@ def child(cpus: int, docs: int, queries: int) -> None:
     from lucene_solr_spark.search.wand import SegmentSearcher
 
     spark.conf.set("spark.sql.shuffle.partitions", "128")
-    seg_searcher = SegmentSearcher(seg_idx, cache=True)
+    seg_searcher = SegmentSearcher(seg_idx)
     hi_rows = seg_searcher.dict.orderBy(F.desc("df"), "term").limit(512).collect()
     # low-df partner terms: at large corpus sizes the fixed synthetic
     # vocabulary saturates (every term's df grows with docs), so an

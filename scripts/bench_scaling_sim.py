@@ -210,7 +210,7 @@ def child(cpus: int, docs: int, queries: int, sync_dir: str,
 
     # ---- query prep (untimed): deterministic query set from the dict
     spark.conf.set("spark.sql.shuffle.partitions", "128")
-    seg_searcher = SegmentSearcher(seg_idx, cache=True)
+    seg_searcher = SegmentSearcher(seg_idx)
     hi_rows = seg_searcher.dict.orderBy(F.desc("df"), "term").limit(512).collect()
     mid_rows = (seg_searcher.dict.where(F.col("df") >= 2)
                 .orderBy(F.asc("df"), "term").limit(512).collect())

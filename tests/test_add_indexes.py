@@ -40,7 +40,7 @@ def merged(spark, tmp_path_factory):
     build_segment_index(hi, src_root, stop_words=ENGLISH_STOP_WORDS,
                         docs_per_segment=32)   # different seg sizing ok
     man = add_indexes(dst_root, src_root, spark)
-    searcher = SegmentSearcher(SegmentIndex(dst_root, spark), cache=True)
+    searcher = SegmentSearcher(SegmentIndex(dst_root, spark))
     oracle = OracleIndex(
         analyzer=StandardAnalyzer(stop_words=ENGLISH_STOP_WORDS))
     oracle.add_all(pdf["content"])
@@ -97,7 +97,7 @@ def test_deletes_carry_over_shifted(spark, tmp_path_factory):
     add_indexes(dst_root, src_root, spark)
     idx = SegmentIndex(dst_root, spark)
     assert set(idx.deleted_docids()) == {50, 53}
-    s = SegmentSearcher(idx, cache=True)
+    s = SegmentSearcher(idx)
     live = {r["docid"] for r in
             s.search_df(TermQuery("class"), 10**6).collect()}
     assert not live & {50, 53}
@@ -138,9 +138,9 @@ def test_multifield_fold_matches_full_build(spark, tmp_path_factory):
     build_segment_index(spark.createDataFrame(pdf.iloc[60:]), roots["src"],
                         **kw)
     man = add_indexes(roots["dst"], roots["src"], spark)
-    full = SegmentSearcher(SegmentIndex(roots["full"], spark), cache=True)
+    full = SegmentSearcher(SegmentIndex(roots["full"], spark))
     assert man["field_stats"] == full.manifest()["field_stats"]
-    folded = SegmentSearcher(SegmentIndex(roots["dst"], spark), cache=True)
+    folded = SegmentSearcher(SegmentIndex(roots["dst"], spark))
     langs = sorted(set(pdf["lang"]))
     queries = [TermQuery(t, field="title") for t in ["file", *langs]]
     queries.append(BooleanQuery.of(should=[
@@ -191,13 +191,13 @@ def test_fold_rerun_after_crash_is_safe(spark, tmp_path_factory):
     st = check_segment_index(idx, decode=False)
     assert st.clean, st.failed()
     assert idx.docs().count() == idx.docmap().count() == N_DOCS
-    full = SegmentSearcher(SegmentIndex(roots["full"], spark), cache=True)
+    full = SegmentSearcher(SegmentIndex(roots["full"], spark))
     assert {k: man[k] for k in ("doc_count", "sum_ttf")} == {
         k: full.manifest()[k] for k in ("doc_count", "sum_ttf")}
     assert idx.stats() == SegmentIndex(roots["full"], spark).stats()
     assert sorted(map(tuple, idx.dict().collect())) == sorted(
         map(tuple, full.index.dict().collect()))
-    folded = SegmentSearcher(idx, cache=True)
+    folded = SegmentSearcher(idx)
     oracle = OracleIndex(
         analyzer=StandardAnalyzer(stop_words=ENGLISH_STOP_WORDS))
     oracle.add_all(pdf["content"])

@@ -37,7 +37,7 @@ def built(spark, tmp_path_factory):
     n_segments = idx.summaries().select("segment").distinct().count()
     n = build_segment_blooms(idx)
     assert n == n_segments
-    searcher = SegmentSearcher(SegmentIndex(root, spark), cache=True)
+    searcher = SegmentSearcher(SegmentIndex(root, spark))
     assert searcher.blooms is not None
     oracle = OracleIndex(
         analyzer=StandardAnalyzer(stop_words=ENGLISH_STOP_WORDS))
@@ -71,7 +71,7 @@ def test_ab_identity_with_and_without_blooms(built, spark):
     shutil.copytree(searcher.index.root, root2, dirs_exist_ok=True,
                     copy_function=__import__("os").link)
     shutil.rmtree(f"{root2}/blooms")
-    off = SegmentSearcher(SegmentIndex(root2, spark), cache=False)
+    off = SegmentSearcher(SegmentIndex(root2, spark))
     assert off.blooms is None
 
     terms = sorted(t for _f, t in oracle.postings)
@@ -167,7 +167,7 @@ def test_compaction_drops_stale_blooms(spark, tmp_path):
     indexer.process_batch(spark.createDataFrame(pdf.iloc[60:]), 1)
     build_segment_blooms(SegmentIndex(root, spark))
     compact_segments(SegmentIndex(root, spark), min_fill=1.0)
-    searcher = SegmentSearcher(SegmentIndex(root, spark), cache=True)
+    searcher = SegmentSearcher(SegmentIndex(root, spark))
     q = TermQuery("zzmarkerzz")
     got = [(d.docid, np.float32(d.score)) for d in searcher.search(q, 20)]
     assert len(got) == 12

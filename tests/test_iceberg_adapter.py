@@ -20,8 +20,9 @@ def test_not_available_in_container(spark):
 
 
 #: the SegmentIndex accessors IcebergSegmentIndex must also expose
-NEEDED = ["blocks", "_block_rows", "summaries", "segment_files", "docmap",
-          "docs", "dict", "stats", "deletes", "deleted_docids", "manifest"]
+NEEDED = ["blocks", "_block_rows", "summaries", "segment_files",
+          "dict_files", "docmap", "docs", "dict", "stats", "deletes",
+          "deleted_docids", "manifest"]
 
 
 def test_accessor_surface_matches_segment_index():
@@ -36,8 +37,8 @@ def test_accessor_surface_matches_segment_index():
 class _SurfaceOnly:
     """A directory index seen only through the ``NEEDED`` accessors
     (plus ``spark``/``root``, which IcebergSegmentIndex also has), its
-    segment files given as ``file:`` URIs the way Iceberg's ``files``
-    table lists them."""
+    segment and dictionary files given as ``file:`` URIs the way
+    Iceberg's ``files`` tables list them."""
 
     def __init__(self, idx):
         self._idx = idx
@@ -52,17 +53,20 @@ class _SurfaceOnly:
         return {s: ["file:" + f for f in fs]
                 for s, fs in self._idx.segment_files().items()}
 
+    def dict_files(self):
+        return ["file:" + f for f in self._idx.dict_files()]
+
 
 def test_searcher_runs_on_the_needed_surface(spark, tmp_path_factory):
     """SegmentSearcher over an index that offers only the drop-in
     accessors: a cross-field span (search and search_local, which read
-    per-doc norm rows) and a term batch equal the plain searcher's
-    results."""
+    per-doc norm rows), a term batch and the dictionary reads (term
+    stats, a prefix rewrite) equal the plain searcher's results."""
     from pyspark.sql import functions as F
 
     from lucene_solr_spark.corpus import corpus_df
     from lucene_solr_spark.index.segments import build_segment_index
-    from lucene_solr_spark.search.queries import TermQuery
+    from lucene_solr_spark.search.queries import PrefixQuery, TermQuery
     from lucene_solr_spark.search.spans import (
         FieldMaskingSpanQuery,
         SpanNearQuery,
@@ -74,8 +78,8 @@ def test_searcher_runs_on_the_needed_surface(spark, tmp_path_factory):
         "title", F.concat_ws(" ", F.col("lang"), F.lit("file")))
     idx = build_segment_index(corpus, root, docs_per_segment=32,
                               fields=("content", "title"))
-    plain = SegmentSearcher(idx, cache=True)
-    narrow = SegmentSearcher(_SurfaceOnly(idx), cache=True)
+    plain = SegmentSearcher(idx)
+    narrow = SegmentSearcher(_SurfaceOnly(idx))
     q = SpanNearQuery(
         (SpanTermQuery("file", field="title"),
          FieldMaskingSpanQuery(SpanTermQuery("return", field="content"),
@@ -96,6 +100,11 @@ def test_searcher_runs_on_the_needed_surface(spark, tmp_path_factory):
     assert any(want_b.values())
     for qid in batch:
         assert rows(got_b[qid]) == rows(want_b[qid]), qid
+    assert narrow._df_map == plain._df_map and plain._df_map
+    pairs = [("content", "return"), ("title", "file"), ("title", "nope")]
+    assert narrow.term_stats(pairs) == plain.term_stats(pairs)
+    pq = PrefixQuery("re")
+    assert narrow.rewrite(pq) == plain.rewrite(pq)
 
 
 import os
@@ -116,8 +125,8 @@ def test_publish_and_search_e2e(spark, tmp_path_factory):
                               docs_per_segment=64)
     publish_index(idx, "lss_test")
     ice = IcebergSegmentIndex("lss_test", spark)
-    a = SegmentSearcher(idx, cache=True)
-    b = SegmentSearcher(ice, cache=True)
+    a = SegmentSearcher(idx)
+    b = SegmentSearcher(ice)
     qa = a.search(TermQuery("return"), 10)
     qb = b.search(TermQuery("return"), 10)
     assert [(d.docid, np.float32(d.score)) for d in qa] == [

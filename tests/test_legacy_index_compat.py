@@ -115,8 +115,8 @@ def _queries(oracle):
 
 
 def _assert_same_results(spark, root, fresh_root, oracle):
-    legacy = SegmentSearcher(SegmentIndex(root, spark), cache=True)
-    fresh = SegmentSearcher(SegmentIndex(fresh_root, spark), cache=True)
+    legacy = SegmentSearcher(SegmentIndex(root, spark))
+    fresh = SegmentSearcher(SegmentIndex(fresh_root, spark))
     qs = _queries(oracle)
     batched = legacy.search_many(qs, 10)
     for name, q in qs.items():

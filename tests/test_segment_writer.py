@@ -178,7 +178,7 @@ def test_python_analyzer_rows_through_writer(spark, tmp_path, py_corpus):
     # encoded content postings and doc rows are the same bytes
     assert _block_rows(full) == _block_rows(nrt)
 
-    fs, ns = SegmentSearcher(full, cache=True), SegmentSearcher(nrt, cache=True)
+    fs, ns = SegmentSearcher(full), SegmentSearcher(nrt)
     for name, q in _queries(single).items():
         exp = _hits(single.search(q, 10))
         assert exp, name

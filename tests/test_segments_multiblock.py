@@ -38,7 +38,7 @@ def built(spark, tmp_path_factory):
     idx = build_segment_index(
         corpus_df(spark, N_DOCS, partitions=4), root,
         stop_words=ENGLISH_STOP_WORDS, docs_per_segment=DOCS_PER_SEGMENT)
-    searcher = SegmentSearcher(idx, cache=True)
+    searcher = SegmentSearcher(idx)
     pdf = corpus_pandas(N_DOCS).sort_values(
         ["repo", "path", "commit"]).reset_index(drop=True)
     oracle = OracleIndex(

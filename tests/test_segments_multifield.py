@@ -45,7 +45,7 @@ def built(spark, tmp_path_factory):
         docs_per_segment=32,
         fields=("content", "title"),
     )
-    searcher = SegmentSearcher(idx, cache=True)
+    searcher = SegmentSearcher(idx)
     pdf = corpus_pandas(N_DOCS).sort_values(
         ["repo", "path", "commit"]).reset_index(drop=True)
     oracle = OracleIndex(

@@ -25,7 +25,7 @@ def built(spark, tmp_path_factory):
         corpus, root, stop_words=ENGLISH_STOP_WORDS,
         docs_per_segment=48,
     )
-    searcher = SegmentSearcher(idx, cache=True)
+    searcher = SegmentSearcher(idx)
     pdf = corpus_pandas(N_DOCS).sort_values(["repo", "path", "commit"]).reset_index(drop=True)
     oracle = OracleIndex(analyzer=StandardAnalyzer(stop_words=ENGLISH_STOP_WORDS))
     oracle.add_all(pdf["content"])
@@ -211,10 +211,10 @@ def test_tie_group_across_segments_and_shards(spark, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("tie_idx"))
     build_segment_index(spark.createDataFrame(pdf), root,
                         stop_words=ENGLISH_STOP_WORDS, docs_per_segment=24)
-    searcher = SegmentSearcher(SegmentIndex(root, spark), cache=True)
+    searcher = SegmentSearcher(SegmentIndex(root, spark))
     parts = [str(tmp_path_factory.mktemp(f"tie_part{i}")) for i in range(2)]
     split_index(root, parts, spark)
-    sharded = ShardedSearcher(parts, spark, stats="exact", cache=True)
+    sharded = ShardedSearcher(parts, spark, stats="exact")
     oracle = OracleIndex(
         analyzer=StandardAnalyzer(stop_words=ENGLISH_STOP_WORDS))
     oracle.add_all(pdf["content"])
@@ -396,17 +396,30 @@ def test_boolean_mixes_batched_identical(built):
 
 def test_segment_dict_cache_guard(built, monkeypatch):
     """A vocabulary larger than DICT_CACHE_MAX must not be pulled to
-    the driver: the searcher leaves _df_map unset and falls back to
-    the pushed-down dictionary scan (VERDICT r2 wrong #4)."""
-    idx, cached_searcher, oracle, _ = built
+    the driver: the searcher leaves _df_map unset, term stats come from
+    a filtered read of the dictionary files (no Spark job) and a
+    prefix rewrite from the pruned dictionary scan (VERDICT r2 wrong
+    #4)."""
+    from lucene_solr_spark.search.queries import PrefixQuery
+
+    idx, _shared, oracle, _ = built
+    spark = idx.spark
     monkeypatch.setattr(SegmentSearcher, "DICT_CACHE_MAX", 1)
-    s = SegmentSearcher(idx, cache=True)
+    s = SegmentSearcher(idx)
     assert s._df_map is None
     t = _terms_by_df(oracle, 2)[-1]
-    exp = oracle.search(TermQuery(t), 5)
-    got = _search(s, TermQuery(t), 5)  # dictionary-scan _stats path
-    assert [(d.docid, np.float32(d.score)) for d in got] == [
-        (d.docid, np.float32(d.score)) for d in exp]
+    exp = _hits(oracle.search(TermQuery(t), 5))
+    mark = _newest_job(spark)
+    assert _hits(s.search(TermQuery(t), 5)) == exp
+    assert s.term_stats([("content", t), ("content", "zzqqabsent")]) == {
+        ("content", t): oracle.doc_freq(t), ("content", "zzqqabsent"): 0}
+    assert _newest_job(spark) == mark, "above-cap point reads ran a job"
+    assert _hits(_search(s, TermQuery(t), 5)) == exp
+    q = PrefixQuery(t[:2])
+    want = sorted(v for f, v in oracle.postings
+                  if f == "content" and v.startswith(t[:2]))
+    got = [c.query.term for c in s.rewrite(q).query.clauses]
+    assert got == want and t in got
 
 
 def _bigram(pdf):
@@ -643,7 +656,7 @@ def test_common_terms_and_blooms_general(built):
     # blooms + general path: build per-segment blooms, re-open, and
     # check a span query and a dismax still match the oracle exactly
     build_segment_blooms(idx)
-    sb = SegmentSearcher(idx, cache=True)
+    sb = SegmentSearcher(idx)
     assert sb.blooms is not None
     toks = pdf["content"].iloc[0].lower().split()
     pairs = [(toks[i], toks[i + 1]) for i in range(len(toks) - 1)
@@ -735,7 +748,7 @@ def test_search_local_serving_path(built):
     assert hot < 0.05, f"hot serving eval took {hot:.3f}s"
     # cold: a fresh searcher fills its cache from the segment files,
     # still without a Spark job
-    fresh = SegmentSearcher(SegmentIndex(idx.root, spark), cache=True)
+    fresh = SegmentSearcher(SegmentIndex(idx.root, spark))
     for q in queries[:3]:
         mark = _newest_job(spark)
         got = fresh.search_local(q, 10)
@@ -779,7 +792,7 @@ def test_search_routes_by_serving_budget(built, monkeypatch):
         PhraseQuery((a, b), positions=(pa, pb)),
     ]
     want = [_hits(oracle.search(q, 10)) for q in queries]
-    searcher = SegmentSearcher(SegmentIndex(idx.root, spark), cache=True)
+    searcher = SegmentSearcher(SegmentIndex(idx.root, spark))
     for rep in ("cold", "hot"):
         for q, exp in zip(queries, want):
             mark = _newest_job(spark)
@@ -815,7 +828,7 @@ def test_sharded_search_routes_by_serving_budget(built, spark,
     parts = [str(tmp_path_factory.mktemp(f"route_part{i}"))
              for i in range(2)]
     split_index(idx.root, parts, spark)
-    sharded = ShardedSearcher(parts, spark, stats="exact", cache=True)
+    sharded = ShardedSearcher(parts, spark, stats="exact")
     terms = _terms_by_df(oracle, 6)
     q = BooleanQuery.of(should=[TermQuery(t) for t in terms[-3:]])
     exp = _hits(oracle.search(q, 10))
@@ -843,7 +856,7 @@ def test_set_scorer_drops_caches_of_the_old_scorer(built):
     q = BooleanQuery.of(should=[TermQuery(t) for t in terms[-3:]])
 
     def fresh():
-        return SegmentSearcher(SegmentIndex(idx.root, idx.spark), cache=True)
+        return SegmentSearcher(SegmentIndex(idx.root, idx.spark))
 
     searcher = fresh()
     searcher.search_many({"q": q}, 10)
@@ -867,8 +880,7 @@ def test_job_descriptions_name_the_call(built, monkeypatch):
     spark = idx.spark
     sc = spark.sparkContext
     terms = _terms_by_df(oracle, 4)
-    # uncached: search_df's compile looks the terms up with a job
-    searcher = SegmentSearcher(SegmentIndex(idx.root, spark), cache=False)
+    searcher = SegmentSearcher(SegmentIndex(idx.root, spark))
     monkeypatch.setattr(SegmentSearcher, "LOCAL_CACHE_BYTES", 0)
     prev = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription("caller")
@@ -878,13 +890,94 @@ def test_job_descriptions_name_the_call(built, monkeypatch):
         searcher.search_many({f"q{i}": TermQuery(t)
                               for i, t in enumerate(terms[:3])}, 10)
         assert _newest_job_description(spark) == "search_many: 3 queries"
+        # search_df starts no job until its frame is collected
+        mark = _newest_job(spark)
         searcher.search_df(TermQuery(terms[0]), 10)
-        assert _newest_job_description(spark) == "search_df: 1 query"
+        assert _newest_job(spark) == mark
         searcher.search_after(TermQuery(terms[-1]), TopDoc(0, 1e9), 5)
         assert _newest_job_description(spark) == "search_after: 1 query"
         assert sc.getLocalProperty("spark.job.description") == "caller"
     finally:
         sc.setLocalProperty("spark.job.description", prev)
+
+
+def test_default_searcher_point_reads_start_no_job(built,
+                                                   tmp_path_factory):
+    """A default-constructed searcher over an index with a tombstone
+    and Bloom filters starts no Spark job to open or for in-budget
+    search, search_local, term_stats, term_vector or a prefix rewrite;
+    the tombstoned doc is masked and the hits are the oracle's."""
+    import os
+    import shutil
+
+    from lucene_solr_spark.index.bloom import build_segment_blooms
+    from lucene_solr_spark.index.segments import append_deletes
+    from lucene_solr_spark.search.queries import PrefixQuery
+
+    idx, _shared, oracle, _pdf = built
+    spark = idx.spark
+    root = str(tmp_path_factory.mktemp("nojob"))
+    shutil.copytree(idx.root, root, dirs_exist_ok=True,
+                    copy_function=os.link)
+    t = _terms_by_df(oracle, 4)[-1]
+    gone = oracle.search(TermQuery(t), 1)[0].docid
+    append_deletes(root, [gone])
+    build_segment_blooms(SegmentIndex(root, spark))
+    mark = _newest_job(spark)
+    searcher = SegmentSearcher(SegmentIndex(root, spark))
+    assert searcher.blooms is not None and list(searcher.deleted) == [gone]
+    got = _hits(searcher.search(TermQuery(t), 10))
+    assert got == _hits(searcher.search_local(TermQuery(t), 10))
+    assert gone not in [d for d, _s in got]
+    assert got == [h for h in _hits(oracle.search(TermQuery(t), 11))
+                   if h[0] != gone]
+    assert searcher.term_stats([("content", t)]) == {
+        ("content", t): oracle.doc_freq(t)}
+    doc = got[0][0]
+    assert searcher.term_vector(doc) == sorted(
+        (v, tf) for (f, v), plist in oracle.postings.items()
+        if f == "content" for d, tf, _p in plist if d == doc)
+    terms = [c.query.term for c in
+             searcher.rewrite(PrefixQuery(t[:2])).query.clauses]
+    assert t in terms
+    assert _newest_job(spark) == mark, "a point read ran a Spark job"
+
+
+def test_serving_cache_charges_held_bytes(built, monkeypatch):
+    """The serving cache charges each term the nbytes of the arrays it
+    holds, reads positions only for a positional query (a term cached
+    without them is re-read), and at a small budget keeps the bytes of
+    every term but the live query's within the budget."""
+    from lucene_solr_spark.search.queries import PhraseQuery
+
+    idx, _shared, oracle, pdf = built
+    searcher = SegmentSearcher(SegmentIndex(idx.root, idx.spark))
+    cache = searcher._local_cache
+
+    def held():
+        return sum(a.nbytes for _sz, m in cache.values()
+                   for e in m.values() for a in [*e[:5], *(e[6] or ())])
+
+    (a, b), (pa, pb) = _bigram(pdf)
+    term = TermQuery(a)
+    assert _hits(searcher.search_local(term, 10)) == _hits(
+        oracle.search(term, 10))
+    assert all(e[6] is None for e in cache[a][1].values())
+    without = cache[a][0]
+    assert searcher._local_cache_bytes == held()
+    phrase = PhraseQuery((a, b), positions=(pa, pb))
+    want = _hits(oracle.search(phrase, 10))
+    assert want and _hits(searcher.search_local(phrase, 10)) == want
+    assert all(e[6] is not None for t in (a, b) for e in cache[t][1].values())
+    assert cache[a][0] > without
+    assert searcher._local_cache_bytes == held()
+    monkeypatch.setattr(searcher, "LOCAL_CACHE_BYTES", 3 * without)
+    for t in _terms_by_df(oracle, 12):
+        q = TermQuery(t)
+        assert _hits(searcher.search_local(q, 10)) == _hits(
+            oracle.search(q, 10)), t
+        assert searcher._local_cache_bytes == held()
+        assert held() - cache[t][0] <= searcher.LOCAL_CACHE_BYTES, t
 
 
 def test_search_local_cache_bounded_lru(built):
@@ -895,8 +988,7 @@ def test_search_local_cache_bounded_lru(built):
     from lucene_solr_spark.search.wand import SegmentSearcher
 
     idx, _shared, oracle, pdf = built
-    searcher = SegmentSearcher(SegmentIndex(idx.root, idx.spark),
-                               cache=True)
+    searcher = SegmentSearcher(SegmentIndex(idx.root, idx.spark))
     vocab = sorted({t for _f, t in oracle.postings})
     probe = vocab[:40]
     # size the cap to a handful of terms so the stream must evict
@@ -930,8 +1022,7 @@ def test_batch_plan_cache_identity_and_bound(built):
     idx, _shared, oracle, pdf = built
     from lucene_solr_spark.search.wand import SegmentSearcher
 
-    searcher = SegmentSearcher(SegmentIndex(idx.root, idx.spark),
-                               cache=True)
+    searcher = SegmentSearcher(SegmentIndex(idx.root, idx.spark))
     terms = _terms_by_df(oracle, 8)
     batch = {f"q{i}": TermQuery(terms[i % len(terms)])
              for i in range(18)}

@@ -37,7 +37,7 @@ def _probes(oracle):
 
 def test_exact_stats_bit_identical(sharded):
     roots, oracle, spark = sharded
-    s = ShardedSearcher(roots, spark, stats="exact", cache=True)
+    s = ShardedSearcher(roots, spark, stats="exact")
     assert s.doc_count == oracle.doc_count
     by_df = _probes(oracle)
     queries = [
@@ -83,7 +83,7 @@ def test_batched_scatter_gather_exact(sharded):
     from lucene_solr_spark.search.sharded import ShardedSearcher
 
     roots, oracle, spark = sharded
-    s = ShardedSearcher(roots, spark, stats="exact", cache=True)
+    s = ShardedSearcher(roots, spark, stats="exact")
     by_df = _probes(oracle)
     qs = {}
     for i in range(20):
@@ -133,7 +133,7 @@ def sharded_mf(spark, tmp_path_factory):
 
 def test_exact_stats_multifield_fielded_queries(sharded_mf):
     roots, oracle, spark = sharded_mf
-    s = ShardedSearcher(roots, spark, stats="exact", cache=True)
+    s = ShardedSearcher(roots, spark, stats="exact")
     by_df = _probes(oracle)
     queries = [
         TermQuery("file", field="title"),
@@ -152,7 +152,7 @@ def test_exact_stats_multifield_fielded_queries(sharded_mf):
 
 def test_exact_stats_multifield_batched(sharded_mf):
     roots, oracle, spark = sharded_mf
-    s = ShardedSearcher(roots, spark, stats="exact", cache=True)
+    s = ShardedSearcher(roots, spark, stats="exact")
     by_df = _probes(oracle)
     qs = {}
     for i in range(18):
@@ -171,7 +171,7 @@ def test_search_many_does_not_mutate_df_map(sharded):
     searcher's cached dictionary (_df_map) — it is shared state and
     the multi-term rewrite vocabulary."""
     roots, oracle, spark = sharded
-    s = ShardedSearcher(roots, spark, stats="exact", cache=True)
+    s = ShardedSearcher(roots, spark, stats="exact")
     saved = [dict(sh._df_map) if sh._df_map is not None else None
              for sh in s.shards]
     by_df = _probes(oracle)
@@ -191,7 +191,7 @@ def test_exact_stats_multiterm_expansion(sharded):
     from lucene_solr_spark.search.queries import PrefixQuery
 
     roots, oracle, spark = sharded
-    s = ShardedSearcher(roots, spark, stats="exact", cache=True)
+    s = ShardedSearcher(roots, spark, stats="exact")
     by_df = _probes(oracle)
     prefixes = sorted({t[:3] for t in by_df[-20:] if len(t) > 3})[:4]
     for p in prefixes:

@@ -54,7 +54,7 @@ def test_part_bit_identical_to_fresh_build(split, spark):
         oracle = OracleIndex(
             analyzer=StandardAnalyzer(stop_words=ENGLISH_STOP_WORDS))
         oracle.add_all(pdf.iloc[lo:hi]["content"])
-        s = SegmentSearcher(SegmentIndex(root, spark), cache=True)
+        s = SegmentSearcher(SegmentIndex(root, spark))
         assert s.doc_count == oracle.doc_count
         assert s.sum_ttf == oracle.sum_ttf
         st = check_segment_index(s.index, decode=False)
@@ -72,7 +72,7 @@ def test_split_then_add_round_trips(split, spark):
     oracle = OracleIndex(
         analyzer=StandardAnalyzer(stop_words=ENGLISH_STOP_WORDS))
     oracle.add_all(pdf["content"])
-    s = SegmentSearcher(SegmentIndex(p0, spark), cache=True)
+    s = SegmentSearcher(SegmentIndex(p0, spark))
     assert s.doc_count == N_DOCS
     q = BooleanQuery.of(should=[TermQuery(t) for t in _probe_terms(oracle)])
     exp = oracle.search(q, 20)
@@ -143,9 +143,9 @@ def test_pk_split_partition(spark, tmp_path_factory):
     man_p, man_f = pk_split_index(src, out_pass, out_fail, spark, pred)
     assert man_p["pk_split_side"] == "pass"
 
-    base = SegmentSearcher(SegmentIndex(src, spark), cache=True)
-    sp = SegmentSearcher(SegmentIndex(out_pass, spark), cache=True)
-    sf_ = SegmentSearcher(SegmentIndex(out_fail, spark), cache=True)
+    base = SegmentSearcher(SegmentIndex(src, spark))
+    sp = SegmentSearcher(SegmentIndex(out_pass, spark))
+    sf_ = SegmentSearcher(SegmentIndex(out_fail, spark))
 
     oracle = OracleIndex(
         analyzer=StandardAnalyzer(stop_words=ENGLISH_STOP_WORDS))
@@ -177,7 +177,7 @@ def test_pk_split_source_untouched(spark, tmp_path_factory):
     src = str(tmp_path_factory.mktemp("pk_src2"))
     build_segment_index(spark.createDataFrame(pdf), src,
                         stop_words=ENGLISH_STOP_WORDS, docs_per_segment=32)
-    before = SegmentSearcher(SegmentIndex(src, spark), cache=True)
+    before = SegmentSearcher(SegmentIndex(src, spark))
     oracle = OracleIndex(
         analyzer=StandardAnalyzer(stop_words=ENGLISH_STOP_WORDS))
     oracle.add_all(pdf["content"])
@@ -190,7 +190,7 @@ def test_pk_split_source_untouched(spark, tmp_path_factory):
 
     # the hardlinked split must not mutate the source (commit-point
     # inode rule); a fresh reader over src sees identical results
-    after = SegmentSearcher(SegmentIndex(src, spark), cache=True)
+    after = SegmentSearcher(SegmentIndex(src, spark))
     got = [(d.docid, np.float32(d.score)) for d in after.search(TermQuery(t), 60)]
     assert got == exp
 

@@ -151,8 +151,8 @@ def test_leftover_docs_and_stats_dirs_are_ignored(spark, tmp_path):
 
 
 def test_cached_searcher_between_flushes_keeps_dict_exact(spark, tmp_path):
-    """A ``cache=True`` searcher opened between flushes must not hand
-    its dictionary to later writes: each flush merges its delta into
+    """A searcher opened between flushes must not hand its dictionary
+    to later writes: each flush merges its delta into
     ``dict/`` as read from the files, so a Spark-cached pre-flush
     dictionary would give every later flush wrong df/ttf."""
     root = str(tmp_path / "idx")
@@ -162,10 +162,10 @@ def test_cached_searcher_between_flushes_keeps_dict_exact(spark, tmp_path):
     for b in range(3):
         indexer.process_batch(corpus.where(f"pmod(crc32(path), 3) = {b}"), b)
         if b == 0:
-            SegmentSearcher(SegmentIndex(root, spark), cache=True)
+            SegmentSearcher(SegmentIndex(root, spark))
     idx = SegmentIndex(root, spark)
     st = check_segment_index(idx, decode=False)
     assert st.clean, st.failed()
     # a searcher opened after the writes sees every term on disk
-    s = SegmentSearcher(idx, cache=True)
+    s = SegmentSearcher(idx)
     assert len(s._df_map) == idx.dict().count()

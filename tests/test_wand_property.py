@@ -33,7 +33,7 @@ def built(spark, tmp_path_factory):
     idx = build_segment_index(corpus, root,
                               stop_words=ENGLISH_STOP_WORDS,
                               docs_per_segment=32)
-    searcher = SegmentSearcher(idx, cache=True)
+    searcher = SegmentSearcher(idx)
     pdf = (corpus_pandas(N_DOCS)
            .sort_values(["repo", "path", "commit"]).reset_index(drop=True))
     oracle = OracleIndex(

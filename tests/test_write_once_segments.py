@@ -58,8 +58,8 @@ def _uncached(searcher):
     """Drop the searcher's plan and serving caches, so its next query
     reads the dictionary and the segment files again."""
     searcher._batch_plan_cache.clear()
-    if hasattr(searcher, "_local_cache"):
-        del searcher._local_cache
+    searcher._local_cache.clear()
+    searcher._local_cache_bytes = 0
 
 
 def _views(searcher):
@@ -108,7 +108,7 @@ def test_searcher_keeps_its_view_through_add_indexes(spark, pdf, tmp_path):
         build_segment_index(spark.createDataFrame(part), root,
                             stop_words=ENGLISH_STOP_WORDS,
                             docs_per_segment=DPS)
-    searcher = SegmentSearcher(SegmentIndex(roots[0], spark), cache=False)
+    searcher = SegmentSearcher(SegmentIndex(roots[0], spark))
     want = _hits(searcher.search(Q, 10))
     assert want
 
